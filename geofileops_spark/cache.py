@@ -9,7 +9,8 @@ cannot be freed inside the operator — but DataFrame persists are not
 GC-cleaned either, so a long-lived session running many ops accumulates
 executor storage until LRU eviction.
 
-Operators register such frames here; batch callers should invoke
+Operators register such frames here, along with their broadcasts
+(``index.pairing``) and local checkpoints; batch callers should invoke
 :func:`release_caches` once results are consumed (written / collected).
 """
 from __future__ import annotations
@@ -30,6 +31,16 @@ def track_release(fn) -> None:
     """Record an arbitrary cleanup callback (e.g. a broadcast unpersist)
     to run at the next :func:`release_caches`."""
     _RELEASERS.append(fn)
+
+
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` whose checkpoint blocks are
+    released at the next :func:`release_caches`. The returned frame
+    cannot be recomputed after that (its lineage is cut)."""
+    out = df.localCheckpoint(eager=True)
+    rdd = out._jdf.queryExecution().logical().rdd()
+    track_release(lambda: rdd.unpersist(False))
+    return out
 
 
 def release_caches() -> None:

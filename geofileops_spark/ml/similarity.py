@@ -134,10 +134,10 @@ def _bucket_join(q: DataFrame, c: DataFrame) -> DataFrame:
     unestimable query side (e.g. ``lsh_topk(corpus, corpus)`` self
     search) takes a shuffled hash join instead of broadcasting the whole
     corpus — the same guard pattern as the spatial joins
-    (join.py `_scan_size_bytes` + byte/row caps)."""
-    from ..operators.join import _scan_size_bytes
+    (``index.pairing.scan_size_bytes`` + a byte cap)."""
+    from ..index.pairing import scan_size_bytes
 
-    sz = _scan_size_bytes(q)
+    sz = scan_size_bytes(q)
     if sz is not None and 0 < sz <= _ANN_BCAST_BYTES:
         return F.broadcast(q).join(c, "_bucket")
     return q.hint("shuffle_hash").join(c, "_bucket")

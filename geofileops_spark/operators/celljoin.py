@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     LongType,
     StructField,
@@ -463,7 +462,6 @@ def candidate_pairs(
     adaptive: bool = False,
     hot_threshold: int = 100_000,
     split_levels: int = 3,
-    light_ids: tuple[str, str] | None = None,
 ) -> tuple[DataFrame, int]:
     """Candidate pairs whose bboxes overlap (within ``bbox_margin``).
 
@@ -471,56 +469,15 @@ def candidate_pairs(
     df2 prefixed ``l2_`` (bbox helper columns ``{p}_minx``.. retained for
     downstream refine). Returns (pairs, res).
 
-    ``light_ids=(id1, id2)`` (both columns ROW-UNIQUE in their layer)
-    enables the payload-light plan: only (id, bbox, cell) flows through
-    the cover explode + cell shuffle — the geometry blob and attribute
-    payload of each side is attached AFTER pair dedup by one equi-join
-    per side on the unshuffled base table. With a cover factor of k and
-    payload of p bytes/row this shuffles k*40 + p bytes per row instead
-    of k*p — the difference between a ~40 MB and a ~1.3 GB shuffle per
-    100k parcels, and the only shape that survives 100 TB.
+    This is the distributed plan: each side's cover explodes and
+    shuffles on the cell id, payload included. Operators take it when
+    the broadcast-grid probe does not fit ``GFO_BROADCAST_BYTES``
+    (``index.pairing.choose``).
     """
     if res is None:
         res = pick_join_res(df1, df2, geom_col1, geom_col2)
-    import os
-
-    light = (
-        light_ids is not None
-        and not adaptive
-        and not broadcast_right  # broadcast path streams df1 shuffle-free
-        and light_ids[0] in df1.columns
-        and light_ids[1] in df2.columns
-        # default OFF in this single-node sandbox: shuffle lands on tmpfs,
-        # so replicating payloads through the cover explode (3.4 GB at
-        # 500k parcels) measures FASTER than the two extra join barriers
-        # of the light plan (101 s vs 138 s). On a real cluster shuffle
-        # crosses the network and the payload-light plan wins — flip
-        # GFO_LIGHT_PAIRS=1 there.
-        and os.environ.get("GFO_LIGHT_PAIRS", "0") == "1"
-    )
-    if light:
-        id1, id2 = light_ids
-        # the payload re-attach is an inner equi-join on these ids: a
-        # non-unique id (fid after explodecollections / subdivide) would
-        # silently MULTIPLY pair rows. Guard with one column-only scan
-        # per side (cheap vs the join itself; only on this opt-in path).
-        for side, (frame, idc) in enumerate(((df1, id1), (df2, id2)), 1):
-            chk = frame.agg(
-                F.count(idc).alias("n"),
-                F.countDistinct(idc).alias("d"),
-            ).collect()[0]
-            if chk["n"] != chk["d"]:
-                raise ValueError(
-                    f"light_ids[{side - 1}]={idc!r} is not row-unique in "
-                    f"layer {side} ({chk['n']} rows, {chk['d']} distinct) "
-                    "— the payload-light plan would duplicate pairs. Use "
-                    "a unique key or unset GFO_LIGHT_PAIRS."
-                )
-        c1 = with_cover(df1.select(id1, geom_col1), res, geom_col1).drop(geom_col1)
-        c2 = with_cover(df2.select(id2, geom_col2), res, geom_col2).drop(geom_col2)
-    else:
-        c1 = with_cover(df1, res, geom_col1)
-        c2 = with_cover(df2, res, geom_col2)
+    c1 = with_cover(df1, res, geom_col1)
+    c2 = with_cover(df2, res, geom_col2)
     hot: list[int] = []
     fine_res = res
     if adaptive:
@@ -573,13 +530,6 @@ def candidate_pairs(
         ).otherwise(ref_cell)
     joined = joined.where(F.col(f"{prefix1}_cell") == ref_cell)
     joined = joined.drop(f"{prefix2}_cell")
-    if light:
-        # attach the payloads (geometry + attributes) by id — the base
-        # tables shuffle once, un-exploded
-        full1 = prefix_columns(df1, prefix1)
-        full2 = prefix_columns(df2, prefix2)
-        joined = joined.join(full1.hint("shuffle_hash"), on=f"{prefix1}{light_ids[0]}")
-        joined = joined.join(full2.hint("shuffle_hash"), on=f"{prefix2}{light_ids[1]}")
     return joined, res
 
 

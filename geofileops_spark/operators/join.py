@@ -9,14 +9,19 @@ cell-ring-expansion join + window top-k (SURVEY.md §2.4 mapping table).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, DoubleType, IntegerType, LongType
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from ..functions.st import _EARTH_RADIUS_M
 from ..geometry import geom as G
@@ -24,9 +29,9 @@ from ..geometry import kernels as K
 from ..geometry import predicates as P
 from ..geometry import wkb as W
 from ..index import cells as X
+from ..index import pairing
 from .celljoin import (
     candidate_pairs,
-    cell_expr,
     drop_helper_columns,
     estimate_res,
     prefix_columns,
@@ -425,10 +430,7 @@ def _join_broadcast_pairs(
     columns, ``geom_col``, l2_-prefixed attributes), or None when the
     broadcast cannot be built (empty layer 2 / NULL join keys) and the
     caller must use the distributed plan."""
-    from pyspark.sql.types import LongType
-
-    spark = df1.sparkSession
-    bc = _layer2_grid_broadcast(spark, df2, geom_col, id_col=id_col)
+    bc = pairing.build(df2, geom_col, id_col=id_col)
     if bc is None:
         return None
 
@@ -442,38 +444,18 @@ def _join_broadcast_pairs(
     schema = StructType(df1.schema.fields + [StructField("_l2id", LongType())])
 
     def _probe(batches):
-        (ukey, starts, ends, srow, big_rows), bbv, buf2, off2, csz, x0, y0, ids = (
-            bc.value
-        )
+        probe = pairing.Probe(bc)
+        bbv, ids, g2_at = probe.bb, probe.ids, probe.geom
         pred = P.PREDICATE_FNS[simple[0]] if simple else None
         want = simple[1] if simple else None
-        g2cache: dict[int, object] = {}
-
-        def g2_at(j):
-            g = g2cache.get(j)
-            if g is None:
-                g = W.loads(buf2[off2[j]:off2[j + 1]])
-                g2cache[j] = g
-            return g
 
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 yield pdf.assign(_l2id=pd.Series(dtype="int64"))
                 continue
-            g1s: list = [None] * n
-            B = np.full((n, 4), np.nan)
-            for i, b1 in enumerate(pdf[geom_col]):
-                if b1 is None:
-                    continue
-                g1 = W.loads(bytes(b1))
-                if g1.is_empty():
-                    continue
-                g1s[i] = g1
-                B[i] = K.bounds(g1)
-            pr, pl = _batch_candidates(
-                B, ukey, starts, ends, srow, big_rows, csz, x0, y0, bbv
-            )
+            g1s, B = probe.decode(pdf[geom_col])
+            pr, pl = probe.pairs(B)
             if len(pr) == 0:
                 yield pdf.iloc[0:0].assign(_l2id=pd.Series(dtype="int64"))
                 continue
@@ -585,37 +567,29 @@ def join_by_location(
     layer1 rows with NULL l2 columns (left-join semantics).
 
     Plan selection: when layer 2 fits the broadcast budget
-    (``GFO_EXPORT_BROADCAST_BYTES``) and no intersection-area column is
-    asked for, pairs generate map-side against a broadcast grid index —
-    zero shuffles (the reference's per-worker rtree shape). Otherwise
-    (or with ``broadcast_right`` set, which keeps its cell-join
-    meaning): the distributed cell join — the 100-TB default."""
+    (``GFO_BROADCAST_BYTES``, see ``pairing.choose``) and no
+    intersection-area column is asked for, pairs generate map-side
+    against a broadcast grid index — zero shuffles (the reference's
+    per-worker rtree shape). Otherwise (or with ``broadcast_right`` set,
+    which keeps its cell-join meaning): the distributed cell join — the
+    100-TB default."""
     sq = SpatialQuery(spatial_relations_query).avoid_disjoint()
     matched = None
     if (
         broadcast_right is None
         and min_area_intersect is None
         and area_inters_column_name is None
-        and os.environ.get("GFO_JOIN_BROADCAST", "1") == "1"
         and id_col in df2.columns
         and isinstance(
             df2.schema[id_col].dataType, (LongType, IntegerType)
         )
+        and pairing.choose("pairs", df2).path == "broadcast"
     ):
-        sz = _scan_size_bytes(df2)
-        if (
-            sz is not None
-            and 0 < sz <= _EXPORT_BCAST_BYTES
-            # same row cap as export_by_location: a byte budget alone
-            # under-guards point layers (tiny rows), and the driver-side
-            # grid build is O(rows) regardless of bytes
-            and df2.count() <= _EXPORT_BCAST_MAX_ROWS
-        ):
-            matched = _join_broadcast_pairs(df1, df2, sq, geom_col, id_col)
+        matched = _join_broadcast_pairs(df1, df2, sq, geom_col, id_col)
     if matched is None:
         pairs, res = candidate_pairs(
             df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-            broadcast_right=broadcast_right, light_ids=(id_col, id_col),
+            broadcast_right=broadcast_right,
         )
         g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
         matched = pairs.where(query_match_udf(sq)(F.col(g1), F.col(g2)))
@@ -650,16 +624,18 @@ def join_by_location(
 def _sql_id_literal(v) -> str | None:
     """SQL literal for a polygon id in the inline-VALUES rect table —
     typed to match what createDataFrame's inference would produce
-    (int -> BIGINT, float -> DOUBLE, str quoted). None = type not
-    expressible; caller falls back to the Row-list path."""
+    (int -> BIGINT, float -> DOUBLE, str quoted; Spark's parser treats a
+    backslash as an escape, so it is escaped too). None = not
+    expressible (bool, ints outside int64, other types); the caller
+    falls back to the Row-list path."""
     if isinstance(v, bool):
         return None
     if isinstance(v, int):
-        return f"CAST({v} AS BIGINT)"
+        return f"CAST({v} AS BIGINT)" if -(2**63) <= v < 2**63 else None
     if isinstance(v, float):
         return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
     return None
 
 
@@ -675,7 +651,7 @@ def join_points_in_polygons(
 ) -> DataFrame:
     """Vectorized broadcast point-in-polygon join: the fast path for the
     canonical "billions of points x small polygon dimension" shape (pages
-    x zones). Polygons are collected once and shipped in the UDF closure;
+    x zones). Polygons are collected once and broadcast;
     every Arrow batch tests all points against all polygons with numpy
     ray-casting (``kernels.points_in_multipolygon``) — no shuffle at all,
     the scan streams map-side. Falls back to ``join_by_location`` when
@@ -768,20 +744,19 @@ def join_points_in_polygons(
         )
         return out.drop("_rx0", "_ry0", "_rx1", "_ry1")
 
-    # ship the polygon payload as a Spark broadcast variable (sent to
-    # each executor once) instead of in every task's UDF closure; built
-    # lazily so the default rect/BNLJ path never pays the broadcast
-    bc_payload = points.sparkSession.sparkContext.broadcast(payload)
+    spark = points.sparkSession
     if len(payload) <= 63:
         # bitmask path: the UDF returns one int64 whose bit z says "inside
         # polygon z" — zero Python objects per row, explode happens JVM-side
+        bc = pairing.broadcast(spark, payload)
+
         @pandas_udf(LongType())
         def _matchbits(xs: pd.Series, ys: pd.Series) -> pd.Series:
             pts = np.column_stack(
                 [xs.to_numpy(np.float64), ys.to_numpy(np.float64)]
             )
             out = np.zeros(len(pts), dtype=np.int64)
-            for z, (pid, blob) in enumerate(bc_payload.value):
+            for z, (pid, blob) in enumerate(bc.value):
                 g = W.loads(blob)
                 bx0, by0, bx1, by1 = K.bounds(g)
                 bb = (
@@ -817,352 +792,58 @@ def join_points_in_polygons(
             poly_id_col, F.element_at(ids_arr, F.col("_pidx") + 1)
         ).drop("_pidx")
 
-    if len(payload) > 256:
-        # grid-indexed path for large irregular polygon sides: the plain
-        # fallback below scans every polygon per batch (O(polys x batch)
-        # — a 100k-polygon layer would crawl). Same bbox grid the export
-        # broadcast probe uses; per batch, candidates come from one
-        # vectorized probe and each polygon tests only ITS candidate
-        # points.
-        bbs = np.ascontiguousarray(
-            np.asarray([K.bounds(W.loads(b)) for _, b in payload], dtype=np.float64)
-        )
-        ext = np.maximum(bbs[:, 2] - bbs[:, 0], bbs[:, 3] - bbs[:, 1])
-        med = float(np.median(ext))
-        span = max(
-            float(bbs[:, 2].max() - bbs[:, 0].min()),
-            float(bbs[:, 3].max() - bbs[:, 1].min()),
-            1e-9,
-        )
-        cellsz = max(2.0 * med if med > 0 else span / 256.0, span / 4096.0)
-        gx0 = float(bbs[:, 0].min())
-        gy0 = float(bbs[:, 1].min())
-        grid = _grid_index(bbs, cellsz, gx0, gy0)
-        bc_grid = points.sparkSession.sparkContext.broadcast(
-            (grid, bbs, cellsz, gx0, gy0)
-        )
-
-        @pandas_udf("array<long>")
-        def _match_grid(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            (ukey, starts, ends, srow, big_rows), bbv, csz, x0, y0 = bc_grid.value
-            payload_v = bc_payload.value
-            pts = np.column_stack(
-                [xs.to_numpy(np.float64), ys.to_numpy(np.float64)]
-            )
-            hit_lists: list = [None] * len(pts)
-            B = np.column_stack([pts, pts])  # degenerate point bboxes
-            pr, pl = _batch_candidates(
-                B, ukey, starts, ends, srow, big_rows, csz, x0, y0, bbv
-            )
-            if len(pr) == 0:
-                return pd.Series(hit_lists)
-            # group candidate pairs by POLYGON (ascending index == the
-            # payload order the plain path appends in) so each polygon
-            # runs ONE vectorized PIP over just its candidate points
-            order = np.argsort(pl, kind="stable")
-            pl_s, pr_s = pl[order], pr[order]
-            pstarts = np.concatenate(
-                ([0], np.nonzero(np.diff(pl_s))[0] + 1, [len(pl_s)])
-            )
-            for s, e in zip(pstarts[:-1], pstarts[1:]):
-                j = int(pl_s[s])
-                pid, blob = payload_v[j]
-                g = W.loads(blob)
-                sub = pr_s[s:e]
-                inside = K.points_in_multipolygon(pts[sub], g) >= 1
-                for i in sub[inside]:
-                    if hit_lists[i] is None:
-                        hit_lists[i] = []
-                    hit_lists[i].append(pid)
-            return pd.Series(hit_lists)
-
-        _match_grid = _match_grid.asNondeterministic()
-        out = points.withColumn(
-            "_hits", _match_grid(F.col(x_col), F.col(y_col))
-        )
-        out = out.where(F.col("_hits").isNotNull())
-        return out.withColumn(poly_id_col, F.explode("_hits")).drop("_hits")
+    # larger irregular polygon sides: the bbox grid of the pairing
+    # module; per batch, candidates come from one vectorized probe and
+    # each polygon tests only ITS candidate points
+    bbs = np.asarray([K.bounds(W.loads(b)) for _, b in payload], dtype=np.float64)
+    valid = np.isfinite(bbs[:, 0])
+    if not valid.any():  # only EMPTY polygons: nothing contains a point
+        return points.withColumn(poly_id_col, F.lit(None).cast("long")).limit(0)
+    bc = pairing.broadcast(
+        spark,
+        pairing.Index(
+            bbs[valid],
+            wkbs=[b for (_, b), v in zip(payload, valid) if v],
+            ids=[pid for (pid, _), v in zip(payload, valid) if v],
+            point_cells=256,
+        ),
+    )
 
     @pandas_udf("array<long>")
-    def _match(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        geoms = [(pid, W.loads(b)) for pid, b in bc_payload.value]
-        pre = []
-        for pid, g in geoms:
-            b = K.bounds(g)
-            pre.append((pid, g, b))
-        pts = np.column_stack([xs.to_numpy(np.float64), ys.to_numpy(np.float64)])
-        hit_lists: list[list[int]] = [[] for _ in range(len(pts))]
-        for pid, g, (bx0, by0, bx1, by1) in pre:
-            bb = (
-                (pts[:, 0] >= bx0)
-                & (pts[:, 0] <= bx1)
-                & (pts[:, 1] >= by0)
-                & (pts[:, 1] <= by1)
-            )
-            idx = np.nonzero(bb)[0]
-            if len(idx) == 0:
-                continue
-            # classification: 0=outside, 1=boundary, 2=interior; boundary
-            # counts as intersects (matching join_by_location semantics)
-            inside = K.points_in_multipolygon(pts[idx], g) >= 1
-            for i in idx[inside]:
-                hit_lists[i].append(pid)
-        return pd.Series([h if h else None for h in hit_lists])
+    def _match_grid(xs: pd.Series, ys: pd.Series) -> pd.Series:
+        probe = pairing.Probe(bc)
+        pts = np.column_stack(
+            [xs.to_numpy(np.float64), ys.to_numpy(np.float64)]
+        )
+        hit_lists: list = [None] * len(pts)
+        # degenerate point bboxes
+        pr, pl = probe.pairs(np.column_stack([pts, pts]))
+        if len(pr) == 0:
+            return pd.Series(hit_lists)
+        # group candidate pairs by POLYGON so each polygon runs ONE
+        # vectorized PIP over just its candidate points
+        order = np.argsort(pl, kind="stable")
+        pl_s, pr_s = pl[order], pr[order]
+        pstarts = np.concatenate(
+            ([0], np.nonzero(np.diff(pl_s))[0] + 1, [len(pl_s)])
+        )
+        for s, e in zip(pstarts[:-1], pstarts[1:]):
+            j = int(pl_s[s])
+            sub = pr_s[s:e]
+            inside = K.points_in_multipolygon(pts[sub], probe.geom(j)) >= 1
+            for i in sub[inside]:
+                if hit_lists[i] is None:
+                    hit_lists[i] = []
+                hit_lists[i].append(probe.ids[j])
+        return pd.Series(hit_lists)
 
-    _match = _match.asNondeterministic()
-    out = points.withColumn("_hits", _match(F.col(x_col), F.col(y_col)))
+    _match_grid = _match_grid.asNondeterministic()
+    out = points.withColumn("_hits", _match_grid(F.col(x_col), F.col(y_col)))
     out = out.where(F.col("_hits").isNotNull())
     return out.withColumn(poly_id_col, F.explode("_hits")).drop("_hits")
 
 
 # ------------------------------------------------------ export_by_location
-_EXPORT_BCAST_BYTES = int(
-    os.environ.get("GFO_EXPORT_BROADCAST_BYTES", str(256 * 1024 * 1024))
-)
-_EXPORT_BCAST_MAX_ROWS = int(
-    os.environ.get("GFO_EXPORT_BROADCAST_MAX_ROWS", "4000000"))
-
-
-from pyspark.sql.types import StructField, StructType  # noqa: E402
-
-_BOUNDS_SCHEMA = StructType(
-    [StructField(n, DoubleType()) for n in ("minx", "miny", "maxx", "maxy")]
-)
-
-
-@pandas_udf(_BOUNDS_SCHEMA)
-def _bounds_udf(wkb: pd.Series) -> pd.DataFrame:
-    # whole-batch vectorized decode (bit-identical to per-row
-    # loads+bounds; corrupt rows yield NaN like before)
-    bb = W.bounds_from_wkb_batch(wkb.tolist())
-    return pd.DataFrame(
-        {"minx": bb[:, 0], "miny": bb[:, 1], "maxx": bb[:, 2],
-         "maxy": bb[:, 3]}
-    )
-
-
-_bounds_udf = _bounds_udf.asNondeterministic()
-
-
-def _grid_index(bb: np.ndarray, cellsz: float, gx0: float, gy0: float,
-                cap: int = 4096):
-    """Flat sorted grid index over bboxes, built with pure numpy (no
-    per-row Python): returns (ukey, starts, ends, srow, big_rows). Rows
-    whose cover would exceed ``cap`` cells go to the ``big_rows``
-    always-check list instead of flooding the grid."""
-    ix0 = np.floor((bb[:, 0] - gx0) / cellsz).astype(np.int64)
-    iy0 = np.floor((bb[:, 1] - gy0) / cellsz).astype(np.int64)
-    ix1 = np.floor((bb[:, 2] - gx0) / cellsz).astype(np.int64)
-    iy1 = np.floor((bb[:, 3] - gy0) / cellsz).astype(np.int64)
-    w = ix1 - ix0 + 1
-    h = iy1 - iy0 + 1
-    counts = w * h
-    big = counts > cap
-    small = ~big
-    rows = np.nonzero(small)[0]
-    counts = counts[small]
-    total = int(counts.sum())
-    row_ids = np.repeat(rows, counts)
-    block_start = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    offs = np.arange(total, dtype=np.int64) - np.repeat(block_start, counts)
-    wrep = np.repeat(w[small], counts)
-    cx = np.repeat(ix0[small], counts) + offs % wrep
-    cy = np.repeat(iy0[small], counts) + offs // wrep
-    key = cx * np.int64(1) * (np.int64(1) << np.int64(32)) + cy
-    order = np.argsort(key, kind="stable")
-    skey = key[order]
-    srow = row_ids[order]
-    ukey, starts = np.unique(skey, return_index=True)
-    ends = np.concatenate((starts[1:], [len(skey)]))
-    return ukey, starts, ends, srow, np.nonzero(big)[0]
-
-
-def _grid_probe(ukey, starts, ends, srow, big_rows, cellsz, gx0, gy0,
-                b0, b1, b2, b3, bb):
-    """Candidate row indices whose bbox overlaps (b0,b1,b2,b3)."""
-    kx0 = int(np.floor((b0 - gx0) / cellsz))
-    ky0 = int(np.floor((b1 - gy0) / cellsz))
-    kx1 = int(np.floor((b2 - gx0) / cellsz))
-    ky1 = int(np.floor((b3 - gy0) / cellsz))
-    chunks = []
-    shift = np.int64(1) << np.int64(32)
-    for kx in range(kx0, kx1 + 1):
-        base = np.int64(kx) * shift
-        lo = int(np.searchsorted(ukey, base + ky0))
-        hi = int(np.searchsorted(ukey, base + ky1, side="right"))
-        for p in range(lo, hi):
-            chunks.append(srow[starts[p]:ends[p]])
-    if len(big_rows):
-        chunks.append(big_rows)
-    if not chunks:
-        return None
-    # cells hold disjoint row sets only when a bbox spans one cell; rows
-    # spanning cells appear in several chunks -> dedup only then
-    cand = chunks[0] if len(chunks) == 1 else np.unique(np.concatenate(chunks))
-    m = (
-        (bb[cand, 0] <= b2)
-        & (bb[cand, 2] >= b0)
-        & (bb[cand, 1] <= b3)
-        & (bb[cand, 3] >= b1)
-    )
-    cand = cand[m]
-    return cand if len(cand) else None
-
-
-def _flat_ranges(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Flatten many [lo_i, hi_i) integer ranges into one array plus the
-    owning range's index per element — pure numpy (the repeat/arange
-    trick used throughout the batched kernels)."""
-    counts = np.maximum(hi - lo, 0)
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    start = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    owner = np.repeat(np.arange(len(lo), dtype=np.int64), counts)
-    vals = np.arange(total, dtype=np.int64) - np.repeat(start, counts) + np.repeat(lo, counts)
-    return vals, owner
-
-
-def _batch_candidates(B: np.ndarray, ukey, starts, ends, srow, big_rows,
-                      cellsz: float, gx0: float, gy0: float,
-                      bbv: np.ndarray):
-    """Bbox-overlap candidate (row, l2) pairs for a WHOLE batch of probe
-    bboxes ``B`` (n, 4; NaN rows skipped) against the broadcast grid —
-    fully vectorized (no per-row searchsorted/unique/concat calls).
-    Returns (pair_rows, pair_l2), deduped, bbox-filtered, sorted by row.
-    """
-    n = len(B)
-    alive = np.isfinite(B[:, 0])
-    rows = np.nonzero(alive)[0]
-    if len(rows) == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    kx0 = np.floor((B[rows, 0] - gx0) / cellsz).astype(np.int64)
-    ky0 = np.floor((B[rows, 1] - gy0) / cellsz).astype(np.int64)
-    kx1 = np.floor((B[rows, 2] - gx0) / cellsz).astype(np.int64)
-    ky1 = np.floor((B[rows, 3] - gy0) / cellsz).astype(np.int64)
-    # flatten (row, kx) pairs
-    kxs, owner = _flat_ranges(kx0, kx1 + 1)
-    shift = np.int64(1) << np.int64(32)
-    base = kxs * shift
-    lo = np.searchsorted(ukey, base + ky0[owner])
-    hi = np.searchsorted(ukey, base + ky1[owner], side="right")
-    # flatten matched grid-cell positions
-    ps, cell_owner = _flat_ranges(lo, hi)
-    row_of_cell = owner[cell_owner]
-    # flatten each cell's stored row slice
-    ent, ent_owner = _flat_ranges(starts[ps], ends[ps])
-    pr = rows[row_of_cell[ent_owner]]
-    pl = srow[ent]
-    if len(big_rows):
-        big_pr = np.repeat(rows, len(big_rows))
-        big_pl = np.tile(big_rows, len(rows))
-        pr = np.concatenate((pr, big_pr))
-        pl = np.concatenate((pl, big_pl))
-    if len(pr) == 0:
-        return pr, pl
-    # dedup (row, l2) pairs spanning several cells
-    key = pr * np.int64(len(bbv) + 1) + pl
-    key = np.unique(key)
-    pr = key // np.int64(len(bbv) + 1)
-    pl = key % np.int64(len(bbv) + 1)
-    # exact bbox-overlap filter
-    m = (
-        (bbv[pl, 0] <= B[pr, 2])
-        & (bbv[pl, 2] >= B[pr, 0])
-        & (bbv[pl, 1] <= B[pr, 3])
-        & (bbv[pl, 3] >= B[pr, 1])
-    )
-    return pr[m], pl[m]
-
-
-# one (layer-2 plan, geom col) -> built grid broadcast; repeat probes of
-# the same layer (common: several export/extract calls against one
-# registry) skip the collect+index+broadcast build (~60% of a warm call
-# at 500k rows). Released via cache.release_caches().
-_EXPORT_GRID_CACHE: dict = {}
-
-
-def _layer2_grid_broadcast(spark, df2: DataFrame, geom_col: str,
-                           id_col: str | None = None):
-    """Build (or reuse) the broadcast grid index over layer 2.
-    Returns the Broadcast, or None when layer 2 has no valid geometry.
-    With ``id_col`` the broadcast tuple gains an int64 ids array aligned
-    to the grid's row order (the pairs-join path needs the l2 key to
-    attach attributes; the export path ships geometry only)."""
-    try:
-        key = (df2.semanticHash(), geom_col, id_col)
-    except Exception:  # pragma: no cover - exotic plans
-        key = None
-    if key is not None and key in _EXPORT_GRID_CACHE:
-        return _EXPORT_GRID_CACHE[key]
-    sel = [
-        _bounds_udf(F.col(geom_col)).alias("_b"),
-        F.col(geom_col).alias("_wkb"),
-    ]
-    if id_col is not None:
-        sel.append(F.col(id_col).cast("long").alias("_id"))
-    pdf2 = (
-        df2.select(*sel)
-        .select(
-            "_b.minx", "_b.miny", "_b.maxx", "_b.maxy", "_wkb",
-            *(["_id"] if id_col is not None else []),
-        )
-        .toPandas()
-    )
-    bb_all = pdf2[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-    valid = np.isfinite(bb_all[:, 0])
-    bb = np.ascontiguousarray(bb_all[valid])
-    wkbs = pdf2["_wkb"].to_numpy(object)[valid]
-    if len(bb) == 0:
-        bc = None
-    else:
-        ext = np.maximum(bb[:, 2] - bb[:, 0], bb[:, 3] - bb[:, 1])
-        med = float(np.median(ext))
-        span = max(
-            float(bb[:, 2].max() - bb[:, 0].min()),
-            float(bb[:, 3].max() - bb[:, 1].min()),
-            1e-9,
-        )
-        # grid cell ~2 median extents; floor keeps the grid under ~4k
-        # cells per axis for point-like layers
-        cellsz = max(2.0 * med, span / 4096.0)
-        gx0 = float(bb[:, 0].min())
-        gy0 = float(bb[:, 1].min())
-        index = _grid_index(bb, cellsz, gx0, gy0)
-        # pack WKBs into ONE buffer + offsets: unpickling a single bytes
-        # blob is a memcpy, while 500k separate bytes objects cost
-        # seconds per Python worker (measured 55 s cold vs 13 s warm)
-        lens = np.fromiter(
-            (len(w) for w in wkbs), dtype=np.int64, count=len(wkbs)
-        )
-        offs = np.concatenate(([0], np.cumsum(lens)))
-        buf = b"".join(bytes(w) for w in wkbs)
-        payload = (index, bb, buf, offs, cellsz, gx0, gy0)
-        if id_col is not None:
-            idser = pdf2["_id"][valid]
-            if idser.isna().any():
-                # NULL join keys can't attach attributes — signal the
-                # caller to fall back to the distributed plan
-                bc = None
-                if key is not None:
-                    _EXPORT_GRID_CACHE.clear()
-                    _EXPORT_GRID_CACHE[key] = bc
-                return bc
-            payload = payload + (idser.to_numpy(np.int64),)
-        bc = spark.sparkContext.broadcast(payload)
-    if key is not None:
-        _EXPORT_GRID_CACHE.clear()
-        _EXPORT_GRID_CACHE[key] = bc
-
-        def _release(k=key, b=bc):
-            _EXPORT_GRID_CACHE.pop(k, None)
-            if b is not None:
-                b.unpersist()
-
-        cache.track_release(_release)
-    return bc
-
-
 def _export_broadcast(
     df1: DataFrame,
     df2: DataFrame,
@@ -1175,12 +856,12 @@ def _export_broadcast(
     streams through ONE mapInPandas with zero shuffles — the Spark twin
     of the reference's in-process rtree probe (each gfo worker process
     holds layer 2's rtree in RAM, ``_geoops_sql.py:1541-1736``). Guarded
-    by ``GFO_EXPORT_BROADCAST_BYTES``: a layer 2 past the reference's own
-    in-memory operating envelope falls back to the distributed cell join.
+    by ``GFO_BROADCAST_BYTES`` (``pairing.choose``): a layer 2 past the
+    reference's own in-memory operating envelope falls back to the
+    distributed cell join.
     """
-    spark = df1.sparkSession
     anti = sq.true_for_disjoint
-    bc = _layer2_grid_broadcast(spark, df2, geom_col)
+    bc = pairing.build(df2, geom_col)
     if bc is None:
         # empty layer 2: EXISTS fails everywhere; the for-ALL (disjoint)
         # filter holds vacuously everywhere
@@ -1206,22 +887,10 @@ def _export_broadcast(
     def _probe(batches):
         from ..geometry import clip as C
 
-        (ukey, starts, ends, srow, big_rows), bbv, buf2, off2, csz, x0, y0 = (
-            bc.value
-        )
+        probe = pairing.Probe(bc)
+        bbv, g2_at = probe.bb, probe.geom
         pred = P.PREDICATE_FNS[simple[0]] if simple else None
         want = simple[1] if simple else None
-        # per-TASK decode cache: a worker-lifetime cache (1 Geometry per
-        # l2 row x 32 workers) measured SLOWER at 500k rows — allocator/
-        # GC pressure beat the saved decodes
-        cacheg: dict[int, object] = {}
-
-        def g2_at(j):
-            g = cacheg.get(j)
-            if g is None:
-                g = W.loads(buf2[off2[j]:off2[j + 1]])
-                cacheg[j] = g
-            return g
 
         def row_hit(g1, cand):
             """Early-exit: does any candidate witness (semi) / violate
@@ -1242,24 +911,12 @@ def _export_broadcast(
             if n == 0:
                 yield pdf
                 continue
-            keep = np.zeros(n, dtype=bool)
-            g1s: list = [None] * n
-            B = np.full((n, 4), np.nan)
-            for i, b1 in enumerate(pdf[geom_col]):
-                if b1 is None:
-                    continue
-                g1 = W.loads(bytes(b1))
-                if g1.is_empty():
-                    continue
-                g1s[i] = g1
-                B[i] = K.bounds(g1)
+            g1s, B = probe.decode(pdf[geom_col])
             # rows with NULL/empty geometry or zero candidates: EXISTS
             # fails, the for-ALL filter holds vacuously (matches the
             # cell-join plan where such rows never enter the pair stream)
-            keep[:] = anti
-            pr, pl = _batch_candidates(
-                B, ukey, starts, ends, srow, big_rows, csz, x0, y0, bbv
-            )
+            keep = np.full(n, anti, dtype=bool)
+            pr, pl = probe.pairs(B)
             if len(pr) == 0:
                 yield pdf[keep]
                 continue
@@ -1356,10 +1013,10 @@ def export_by_location(
 
     Two physical plans:
 
-    - **broadcast probe** (default when layer 2 scans under
-      ``GFO_EXPORT_BROADCAST_BYTES``): layer 2 grid-indexed in RAM,
-      layer 1 streamed map-side, zero shuffles — the reference's
-      in-process-rtree shape.
+    - **broadcast probe** (default when layer 2 fits
+      ``GFO_BROADCAST_BYTES``, see ``pairing.choose``): layer 2
+      grid-indexed in RAM, layer 1 streamed map-side, zero shuffles —
+      the reference's in-process-rtree shape.
     - **distributed cell join** (the 100-TB shape): payload-trimmed
       cover explode → cell hash join → per-(cell, l1) early-exit EXISTS
       aggregate (no re-shuffle: the aggregate reuses the join's hash
@@ -1369,10 +1026,7 @@ def export_by_location(
     if broadcast is None:
         # decide on the RAW layer-2 scan — subdivision rewrites the plan
         # and would hide the scan-size statistic from the sizer
-        sz = _scan_size_bytes(df2)
-        broadcast = sz is not None and 0 < sz <= _EXPORT_BCAST_BYTES
-        if broadcast and df2.count() > _EXPORT_BCAST_MAX_ROWS:
-            broadcast = False
+        broadcast = pairing.choose("pairs", df2).path == "broadcast"
     if subdivide_coords is not None and subdivide_coords > 0:
         qp = sq.query.lower().split()
         if len(qp) == 3 and qp[0] in ("intersects", "disjoint") and qp[1] == "is":
@@ -1534,7 +1188,7 @@ def export_by_distance(
     against a broadcast-small layer 2, so the same plan constraints as
     ``join_nearest(metric="sphere")`` apply."""
     if metric == "sphere":
-        if df2.count() > _BROADCAST_MAX_ROWS:
+        if pairing.choose("sphere", df2).path != "broadcast":
             # the sphere probe collects layer 2 onto the driver; refuse a
             # layer that would not broadcast rather than OOM silently
             raise ValueError(
@@ -1581,21 +1235,6 @@ def export_by_distance(
 
 
 # ------------------------------------------------------------ join_nearest
-def _scan_size_bytes(df: DataFrame):
-    """Catalyst's size estimate of the UN-transformed plan (for a parquet
-    scan this is file-size based — unlike post-UDF/explode estimates,
-    which misjudge wildly on this engine's plans). None when unavailable."""
-    try:
-        jstats = df._jdf.queryExecution().optimizedPlan().stats()
-        return int(str(jstats.sizeInBytes()))
-    except Exception:  # pragma: no cover - py4j detail
-        return None
-
-
-_BROADCAST_BYTES = int(os.environ.get("GFO_BROADCAST_BYTES", str(32 * 1024 * 1024)))
-_BROADCAST_MAX_ROWS = int(os.environ.get("GFO_BROADCAST_MAX_ROWS", "2000000"))
-
-
 def _broadcast_knn(
     df1: DataFrame,
     df2: DataFrame,
@@ -1632,8 +1271,8 @@ def _broadcast_knn(
     l2_rows = l2_prefixed.collect()
     l2_geom = f"l2_{geom_col}"
     l2_id = f"l2_{id_col}"
-    bc = spark.sparkContext.broadcast(
-        [tuple(r[c] for c in l2_cols) for r in l2_rows]
+    bc = pairing.broadcast(
+        spark, [tuple(r[c] for c in l2_cols) for r in l2_rows]
     )
     c1 = prefix_columns(df1, "l1_")
     out_schema = StructType(
@@ -1902,25 +1541,19 @@ def join_nearest(
 
     Scale shape: the expansion ring is exploded on the REMAINING layer-1
     side (which shrinks every round); layer 2 keeps its one-time cover
-    cells. When the un-exploded layer 2 scan is measurably small
-    (``GFO_BROADCAST_BYTES``, default 32 MB) the candidate join
-    broadcasts it — a dimension-sized l2 must not pay a shuffle per
-    round (the r2 bench regression); big l2 sides get a forced
-    shuffle-hash join (never an implicit broadcast of a UDF-exploded
-    plan, whose size Catalyst misestimates).
+    cells. When the un-exploded layer 2 scan fits an eighth of
+    ``GFO_BROADCAST_BYTES`` (32 MB by default; see ``pairing.choose``)
+    layer 2 is broadcast whole and no candidate join runs at all — a
+    dimension-sized l2 must not pay a shuffle per round; big l2 sides
+    get a forced shuffle-hash join (never an implicit broadcast of a
+    UDF-exploded plan, whose size Catalyst misestimates).
     """
     if distance is None:
         raise ValueError("join_nearest requires a search `distance`")
     if metric not in ("planar", "sphere"):
         raise ValueError(f"metric must be 'planar' or 'sphere', got {metric!r}")
     if broadcast is None:
-        small_l2 = _scan_size_bytes(df2)
-        bcast = small_l2 is not None and 0 < small_l2 <= _BROADCAST_BYTES
-        if bcast and df2.count() > _BROADCAST_MAX_ROWS:
-            # Catalyst sizes BinaryType built by UDFs at ~100 B/row —
-            # a byte misestimate must not collect() a big layer onto
-            # the driver. One cheap count() guards the opt-in.
-            bcast = False
+        bcast = pairing.choose("knn", df2).path == "broadcast"
     else:
         bcast = broadcast
     if bcast:

@@ -37,6 +37,7 @@ from .. import cache
 from ..geometry import clip as C
 from ..geometry import geom as G
 from ..geometry import wkb as W
+from ..index import pairing
 from .celljoin import candidate_pairs, drop_helper_columns, prefix_columns
 from .join import query_match_udf
 from .relation import SpatialQuery
@@ -354,7 +355,6 @@ def intersection(
     s2 = subdivide_layer(df2, subdivide_coords, geom_col) if sub else df2
     pairs, _ = candidate_pairs(
         s1, s2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-        light_ids=None if sub else (id_col, id_col),
     )
     g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
     # no separate `intersects` refine: the intersection kernel itself
@@ -414,60 +414,11 @@ def _collect_candidates(
     per candidate pair (measured 500k parcels: difference 94 -> ~70 s)."""
     pairs, _ = candidate_pairs(
         df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-        light_ids=(id_col, id_col),
     )
     g2 = f"l2_{geom_col}"
     return pairs.groupBy(F.col(f"l1_{id_col}").alias(id_col)).agg(
         F.collect_list(F.col(g2)).alias("_others")
     )
-
-
-def _broadcast_eligible(df2: DataFrame) -> bool:
-    from .join import (
-        _EXPORT_BCAST_BYTES,
-        _EXPORT_BCAST_MAX_ROWS,
-        _scan_size_bytes,
-    )
-
-    sz = _scan_size_bytes(df2)
-    if sz is None or sz <= 0 or sz > _EXPORT_BCAST_BYTES:
-        return False
-    return df2.count() <= _EXPORT_BCAST_MAX_ROWS
-
-
-import os as _os  # noqa: E402
-
-_COMBINE_BCAST_BYTES = int(
-    _os.environ.get("GFO_COMBINE_BROADCAST_BYTES", str(64 * 1024 * 1024))
-)
-
-
-def _combine_plan(df1: DataFrame, df2: DataFrame) -> str:
-    """Physical-plan pick for the blade-combine ops (difference/clip),
-    decided on the RAW layer scan sizes:
-
-    - ``reverse``: subjects MUCH smaller than blades (3 complex rings vs
-      500k parcels) — broadcast the subject BBOXES (tiny), stream the
-      blades map-side emitting (subject, blade) hits, group per subject.
-      Avoids both the candidate-join shuffle (which would replicate each
-      multi-KB subject per blade pair) and the forward build's full-blade
-      collect.
-    - ``forward``: blades much smaller than subjects — grid-index +
-      broadcast the blades, stream subjects, zero shuffle.
-    - ``shuffle``: comparable sizes — the distributed cell join (the
-      100-TB default shape).
-    """
-    from .join import _EXPORT_BCAST_BYTES, _scan_size_bytes
-
-    s1 = _scan_size_bytes(df1)
-    s2 = _scan_size_bytes(df2)
-    if s1 is None or s2 is None or s1 <= 0 or s2 <= 0:
-        return "shuffle"
-    if s1 * 4 <= s2 and s1 <= _EXPORT_BCAST_BYTES:
-        return "reverse"
-    if s2 <= _COMBINE_BCAST_BYTES and (s2 * 4 <= s1 or s2 <= 16 * 1024 * 1024):
-        return "forward"
-    return "shuffle"
 
 
 def _reverse_collect_candidates(
@@ -481,66 +432,44 @@ def _reverse_collect_candidates(
     groupBy shuffle."""
     from pyspark.sql.types import StructField, StructType
 
-    from ..geometry import kernels as K
-    from .join import _batch_candidates, _bounds_udf, _grid_index
-
     spark = df1.sparkSession
     pdf = (
         df1.select(F.col(id_col).alias("_sid"), geom_col)
-        .withColumn("_b", _bounds_udf(F.col(geom_col)))
+        .withColumn("_b", pairing._bounds_udf(F.col(geom_col)))
         .select("_sid", "_b.minx", "_b.miny", "_b.maxx", "_b.maxy")
         .toPandas()
     )
-    id_field = df1.schema[id_col]
     out_schema = StructType(
         [
-            StructField("_sid", id_field.dataType),
+            StructField("_sid", df1.schema[id_col].dataType),
             StructField("_blade", BinaryType()),
         ]
     )
-    bb_all = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-    valid = np.isfinite(bb_all[:, 0])
-    bb = np.ascontiguousarray(bb_all[valid])
-    sids = pdf["_sid"].to_numpy()[valid]
-    empty = spark.createDataFrame([], out_schema)
-    if len(bb) == 0:
+    bb = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
+    valid = np.isfinite(bb[:, 0])
+    if not valid.any():
+        empty = spark.createDataFrame([], out_schema)
         return empty.groupBy(F.col("_sid").alias(id_col)).agg(
             F.collect_list("_blade").alias("_others")
         )
-    ext = np.maximum(bb[:, 2] - bb[:, 0], bb[:, 3] - bb[:, 1])
-    med = float(np.median(ext))
-    span = max(
-        float(bb[:, 2].max() - bb[:, 0].min()),
-        float(bb[:, 3].max() - bb[:, 1].min()),
-        1e-9,
+    bc = pairing.broadcast(
+        spark,
+        pairing.Index(
+            bb[valid], ids=pdf["_sid"].to_numpy()[valid],
+            per_extent=0.5, point_cells=256,
+        ),
     )
-    cellsz = max(0.5 * med if med > 0 else span / 256.0, span / 4096.0)
-    gx0 = float(bb[:, 0].min())
-    gy0 = float(bb[:, 1].min())
-    index = _grid_index(bb, cellsz, gx0, gy0)
-    bc = spark.sparkContext.broadcast((index, bb, sids, cellsz, gx0, gy0))
 
     def _emit(batches):
-        import numpy as np
-        import pandas as pd
-
-        (ukey, starts, ends, srow, big_rows), bbv, ids, csz, x0, y0 = bc.value
+        probe = pairing.Probe(bc)
         for pdf2 in batches:
-            n = len(pdf2)
-            if n == 0:
+            if len(pdf2) == 0:
                 continue
             col = pdf2[geom_col].to_numpy(object)
-            # vectorized batch bounds (empty/None rows stay NaN, same as
-            # the old per-row loads+bounds loop)
-            B = W.bounds_from_wkb_batch(col.tolist())
-            pr, pl = _batch_candidates(
-                B, ukey, starts, ends, srow, big_rows, csz, x0, y0, bbv
-            )
-            if len(pr) == 0:
-                continue
-            yield pd.DataFrame(
-                {"_sid": ids[pl], "_blade": col[pr]}
-            )
+            # vectorized batch bounds (empty/None rows stay NaN)
+            pr, pl = probe.pairs(W.bounds_from_wkb_batch(col.tolist()))
+            if len(pr):
+                yield pd.DataFrame({"_sid": probe.ids[pl], "_blade": col[pr]})
 
     hits = df2.select(geom_col).mapInPandas(_emit, schema=out_schema)
     return hits.groupBy(F.col("_sid").alias(id_col)).agg(
@@ -570,14 +499,10 @@ def _broadcast_combine(
     ``keep_empty_geoms``) fully-erased rows; `intersection` (the clip
     shape) keeps only rows with a non-empty clipped result, unioning the
     per-blade fragments."""
-    import numpy as np  # noqa: F401 — rebound inside _probe for workers
-
-    from ..geometry import kernels as K
     from ..geometry.batchclip import batch_intersection
-    from .join import _batch_candidates, _layer2_grid_broadcast
 
     spark = df1.sparkSession
-    bc = _layer2_grid_broadcast(spark, df2, geom_col)
+    bc = pairing.build(df2, geom_col)
     if bc is None:  # empty blade layer
         return df1 if mode.startswith("difference") else df1.limit(0)
     # mapInPandas inherits the input partitioning: subjects that descend
@@ -593,20 +518,8 @@ def _broadcast_combine(
     union_first = mode == "difference_union"
 
     def _probe(batches):
-        import numpy as np
-
-        (ukey, starts, ends, srow, big_rows), bbv, buf2, off2, csz, x0, y0 = (
-            bc.value
-        )
-        cacheg: dict[int, object] = {}
-
-        def g2_at(j):
-            g = cacheg.get(j)
-            if g is None:
-                g = W.loads(buf2[off2[j] : off2[j + 1]])
-                cacheg[j] = g
-            return g
-
+        probe = pairing.Probe(bc)
+        g2_at = probe.geom
         blade_memo: dict[tuple, object] = {}
         for pdf in batches:
             n = len(pdf)
@@ -614,19 +527,8 @@ def _broadcast_combine(
                 yield pdf
                 continue
             col = pdf.iloc[:, gpos].to_numpy(object)
-            geoms: list = [None] * n
-            B = np.full((n, 4), np.nan)
-            for i, b1 in enumerate(col):
-                if b1 is None:
-                    continue
-                g1 = W.loads(bytes(b1))
-                if g1.is_empty():
-                    continue
-                geoms[i] = g1
-                B[i] = K.bounds(g1)
-            pr, pl = _batch_candidates(
-                B, ukey, starts, ends, srow, big_rows, csz, x0, y0, bbv
-            )
+            geoms, B = probe.decode(col)
+            pr, pl = probe.pairs(B)
             newg = col.copy() if is_diff else np.full(n, None, dtype=object)
             keep = (
                 np.ones(n, dtype=bool) if is_diff else np.zeros(n, dtype=bool)
@@ -806,9 +708,9 @@ def difference(
         if broadcast is True:
             _plan = "forward"
         elif broadcast is False:
-            _plan = "shuffle"
+            _plan = "cell"
         else:
-            _plan = _combine_plan(df1, df2)
+            _plan = pairing.choose("combine", df2, df1).path
     if subdivide_coords is not None:
         s1 = _subdivide_subject(df1, subdivide_coords, geom_col, id_col)
         if _plan == "reverse":
@@ -854,8 +756,9 @@ def difference(
         # stage wall the single worst row (measured 33 s -> 26 s on the
         # 329-part complex-difference stage at 500k; empty tasks from
         # over-partitioning cost microseconds).
-        n = joined.sparkSession.sparkContext.defaultParallelism * int(
-            _os.environ.get("GFO_REVERSE_SPREAD", "16")
+        n = (
+            joined.sparkSession.sparkContext.defaultParallelism
+            * pairing.REVERSE_SPREAD
         )
         joined = joined.repartition(n)
     # TWO branches, not a when() over the UDF: Catalyst evaluates a
@@ -929,13 +832,13 @@ def clip(
         if broadcast is True:
             _plan = "forward"
         elif broadcast is False:
-            _plan = "shuffle"
+            _plan = "cell"
         else:
             # clip has no reverse kernel shape: few-subjects-vs-many-
             # blades still runs the pairwise cell join
-            _plan = _combine_plan(df1, df2)
+            _plan = pairing.choose("combine", df2, df1).path
             if _plan == "reverse":
-                _plan = "shuffle"
+                _plan = "cell"
     if subdivide_coords is not None:
         s1 = subdivide_layer(df1, subdivide_coords, geom_col, with_pos=True)
         s1 = s1.withColumn(
@@ -1035,36 +938,20 @@ def _broadcast_pairs_matched(
     a post-hoc ``where(l1_uid < l2_uid)`` would compute every unordered
     pair's intersection twice and throw one away (requires
     ``with_l2=True`` so the broadcast carries the ids)."""
-    import os
-
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    from ..geometry import kernels as K
     from ..geometry.batchclip import batch_intersection
-    from .join import (
-        _EXPORT_BCAST_BYTES,
-        _EXPORT_BCAST_MAX_ROWS,
-        _batch_candidates,
-        _layer2_grid_broadcast,
-        _scan_size_bytes,
-    )
 
-    if os.environ.get("GFO_OVERLAY_BROADCAST", "1") != "1":
-        return None
+    if self_half_uid is not None and not with_l2:
+        raise ValueError("self_half_uid needs with_l2=True (the layer-2 ids)")
     if with_l2:
         if id_col not in df2.columns or not isinstance(
             df2.schema[id_col].dataType, (LongType, IntegerType)
         ):
             return None
-    sz = _scan_size_bytes(df2)
-    if sz is None or not (0 < sz <= _EXPORT_BCAST_BYTES):
+    if pairing.choose("pairs", df2).path != "broadcast":
         return None
-    if df2.count() > _EXPORT_BCAST_MAX_ROWS:
-        return None
-    spark = df1.sparkSession
-    bc = _layer2_grid_broadcast(
-        spark, df2, geom_col, id_col=id_col if with_l2 else None
-    )
+    bc = pairing.build(df2, geom_col, id_col=id_col if with_l2 else None)
     if bc is None:
         return None
 
@@ -1074,24 +961,8 @@ def _broadcast_pairs_matched(
     )
 
     def _probe(batches):
-        import numpy as np
-        import pandas as pd
-
-        val = bc.value
-        if with_l2:
-            (ukey, starts, ends, srow, big_rows), bbv, buf2, off2, csz, x0, y0, ids = val
-        else:
-            (ukey, starts, ends, srow, big_rows), bbv, buf2, off2, csz, x0, y0 = val
-            ids = None
-        g2cache: dict[int, object] = {}
-
-        def g2_at(j):
-            g = g2cache.get(j)
-            if g is None:
-                g = W.loads(buf2[off2[j] : off2[j + 1]])
-                g2cache[j] = g
-            return g
-
+        probe = pairing.Probe(bc)
+        ids = probe.ids
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -1100,20 +971,8 @@ def _broadcast_pairs_matched(
                     _piece=pd.Series(dtype=object),
                 )
                 continue
-            col = pdf[geom_col].to_numpy(object)
-            g1s: list = [None] * n
-            B = np.full((n, 4), np.nan)
-            for i, b1 in enumerate(col):
-                if b1 is None:
-                    continue
-                g1 = W.loads(bytes(b1))
-                if g1.is_empty():
-                    continue
-                g1s[i] = g1
-                B[i] = K.bounds(g1)
-            pr, pl = _batch_candidates(
-                B, ukey, starts, ends, srow, big_rows, csz, x0, y0, bbv
-            )
+            g1s, B = probe.decode(pdf[geom_col].to_numpy(object))
+            pr, pl = probe.pairs(B)
             if self_half_uid is not None and len(pr):
                 suid = pdf[self_half_uid].to_numpy(np.int64)
                 m = suid[pr] < ids[pl]
@@ -1125,7 +984,7 @@ def _broadcast_pairs_matched(
                 )
                 continue
             ga = [g1s[int(t)] for t in pr]
-            gb = [g2_at(int(j)) for j in pl]
+            gb = [probe.geom(j) for j in pl]
             inters = batch_intersection(ga, gb)
             pieces: list = [None] * len(pr)
             keep = np.zeros(len(pr), dtype=bool)
@@ -1191,7 +1050,6 @@ def _shared_overlay_parts(
     if matched is None:
         pairs, _ = candidate_pairs(
             df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-            light_ids=(id_col, id_col),
         )
         matched = pairs.withColumn(
             "_piece", _pair_intersection_udf(F.col(g1), F.col(g2))
@@ -1306,11 +1164,13 @@ def symmetric_difference(
         # frames hide size statistics from Catalyst's estimator)
         d12 = _difference_of_parts(
             s1, s2.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False, _combine_plan(df1, df2),
+            explodecollections, where_post, False,
+            pairing.choose("combine", df2, df1).path,
         )
         d21 = _difference_of_parts(
             s2, s1.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False, _combine_plan(df2, df1),
+            explodecollections, where_post, False,
+            pairing.choose("combine", df1, df2).path,
         )
         d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
         d21 = prefix_columns(d21, "l2_", exclude=(geom_col,))
@@ -1363,11 +1223,13 @@ def union(
         )
         d12 = _difference_of_parts(
             s1, s2.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False, _combine_plan(df1, df2),
+            explodecollections, where_post, False,
+            pairing.choose("combine", df2, df1).path,
         )
         d21 = _difference_of_parts(
             s2, s1.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False, _combine_plan(df2, df1),
+            explodecollections, where_post, False,
+            pairing.choose("combine", df1, df2).path,
         )
         d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
         d21 = prefix_columns(d21, "l2_", exclude=(geom_col,))

@@ -32,14 +32,14 @@ in polygon test is the same predicate, vectorized).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from ..geometry import clip as C
+from .. import cache
 from ..geometry import wkb as W
-from .celljoin import candidate_pairs, drop_helper_columns
+from .celljoin import candidate_pairs
 from .join import delete_duplicate_geometries, query_match_udf
 from .relation import SpatialQuery
 
@@ -202,8 +202,8 @@ def _attach_hits_fast(
     max_points: int = 4_000_000,
 ) -> DataFrame | None:
     """(face, contributor) pairs with the broadcast orientation INVERTED:
-    a grid over the interior POINTS (21 bytes each — ~25 MB for 561k
-    faces) is broadcast and the ORIGINAL layer streams map-side through
+    a grid over the interior POINTS (about 70 bytes each with bbox, id
+    and grid entry — ~40 MB for 561k faces) is broadcast and the ORIGINAL layer streams map-side through
     one vectorized PIP sweep. The previously-tried parcel-grid attach
     was reverted twice because packing+broadcasting 500k parcel
     geometries cost more than the candidate cell shuffle; the point
@@ -216,16 +216,15 @@ def _attach_hits_fast(
     intersects rejects too). The membership test is the same
     ``_pip_pairs_flat`` classification (>= 1 == intersects is True)
     the cell join's refine uses. Returns None (caller falls back to
-    the cell join) when the point side exceeds ``max_points``, a point
-    blob is not a plain little-endian POINT, or ids overflow the grid
-    key space."""
+    the cell join) when the point side exceeds ``max_points`` or a
+    point blob is not a plain little-endian POINT."""
     import numpy as np
 
     from ..geometry import predicates as P
     from ..geometry.geom import Geometry
+    from ..index import pairing
     from .join import _pip_pairs_flat
 
-    spark = faces.sparkSession
     pdf = (
         faces.select("_face_id", "_ip")
         .where(F.col("_ip").isNotNull())
@@ -236,22 +235,14 @@ def _attach_hits_fast(
     pts = W.points_from_wkb_list([bytes(b) for b in pdf["_ip"]])
     if pts is None or not np.isfinite(pts).all():
         return None
-    fids = pdf["_face_id"].to_numpy(np.int64)
-
-    xs = pts[:, 0]
-    ys = pts[:, 1]
-    gx0 = float(xs.min())
-    gy0 = float(ys.min())
-    span = max(float(xs.max() - gx0), float(ys.max() - gy0), 1e-9)
-    csz = span / 1024.0
-    cx = np.floor((xs - gx0) / csz).astype(np.int64)
-    cy = np.floor((ys - gy0) / csz).astype(np.int64)
-    ny = int(cy.max()) + 2
-    key = cx * ny + cy
-    order = np.argsort(key, kind="stable")
-    skey = key[order]
-    bc = spark.sparkContext.broadcast(
-        (fids, pts, order.astype(np.int64), skey, csz, gx0, gy0, ny)
+    # degenerate point bboxes; ~1024 cells per axis
+    bc = pairing.broadcast(
+        faces.sparkSession,
+        pairing.Index(
+            np.column_stack([pts, pts]),
+            ids=pdf["_face_id"].to_numpy(np.int64),
+            point_cells=1024,
+        ),
     )
 
     slim = original.select(id_col, *attr_cols, geom_col)
@@ -261,99 +252,38 @@ def _attach_hits_fast(
     )
 
     def _probe(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        fids_, pts_, order_, skey_, csz_, gx0_, gy0_, ny_ = bc.value
-        pxs = pts_[:, 0]
-        pys = pts_[:, 1]
+        probe = pairing.Probe(bc)
+        pts_ = probe.bb[:, :2]
         for pdfb in batches:
-            n = len(pdfb)
-            if n == 0:
-                yield pdfb.drop(columns=[geom_col]).assign(
-                    _face_id=_pd.Series(dtype="int64")
-                )
-                continue
             col = pdfb[geom_col].to_numpy(object)
-            B = W.bounds_from_wkb_batch(col.tolist())
-            ok = _np.isfinite(B[:, 0])
-            cx0 = _np.zeros(n, dtype=_np.int64)
-            cx1 = _np.full(n, -1, dtype=_np.int64)
-            cy0 = _np.zeros(n, dtype=_np.int64)
-            cy1 = _np.full(n, -1, dtype=_np.int64)
-            if ok.any():
-                cx0[ok] = _np.floor((B[ok, 0] - gx0_) / csz_).astype(_np.int64)
-                cx1[ok] = _np.floor((B[ok, 2] - gx0_) / csz_).astype(_np.int64)
-                cy0[ok] = _np.clip(
-                    _np.floor((B[ok, 1] - gy0_) / csz_).astype(_np.int64),
-                    0, ny_ - 1,
-                )
-                cy1[ok] = _np.clip(
-                    _np.floor((B[ok, 3] - gy0_) / csz_).astype(_np.int64),
-                    -1, ny_ - 1,
-                )
-            ncols = _np.maximum(cx1 - cx0 + 1, 0)
-            rows_rep = _np.repeat(_np.arange(n), ncols)
-            if len(rows_rep):
-                coff = _np.arange(len(rows_rep)) - _np.repeat(
-                    _np.concatenate(([0], _np.cumsum(ncols)))[:-1], ncols
-                )
-                cxx = cx0[rows_rep] + coff
-                lo = _np.searchsorted(skey_, cxx * ny_ + cy0[rows_rep])
-                hi = _np.searchsorted(
-                    skey_, cxx * ny_ + cy1[rows_rep], side="right"
-                )
-                m = _np.maximum(hi - lo, 0)
-                tot = int(m.sum())
-            else:
-                tot = 0
-            if tot == 0:
-                yield pdfb.iloc[0:0].drop(columns=[geom_col]).assign(
-                    _face_id=_pd.Series(dtype="int64")
-                )
-                continue
-            flat = _np.repeat(lo, m) + (
-                _np.arange(tot)
-                - _np.repeat(_np.concatenate(([0], _np.cumsum(m)))[:-1], m)
-            )
-            cand_pt = order_[flat]
-            cand_row = _np.repeat(rows_rep, m)
-            # exact bbox membership (boundary-inclusive)
-            keep = (
-                (pxs[cand_pt] >= B[cand_row, 0])
-                & (pxs[cand_pt] <= B[cand_row, 2])
-                & (pys[cand_pt] >= B[cand_row, 1])
-                & (pys[cand_pt] <= B[cand_row, 3])
-            )
-            cand_pt = cand_pt[keep]
-            cand_row = cand_row[keep]
+            cand_row, cand_pt = probe.pairs(W.bounds_from_wkb_batch(col.tolist()))
             if len(cand_pt) == 0:
                 yield pdfb.iloc[0:0].drop(columns=[geom_col]).assign(
-                    _face_id=_pd.Series(dtype="int64")
+                    _face_id=pd.Series(dtype="int64")
                 )
                 continue
             geoms = {}
-            for r in _np.unique(cand_row).tolist():
+            for r in np.unique(cand_row).tolist():
                 geoms[r] = W.loads(bytes(col[r]))
-            areal = _np.fromiter(
+            areal = np.fromiter(
                 (geoms[int(r)].dim() == 2 for r in cand_row),
                 dtype=bool, count=len(cand_row),
             )
-            hit = _np.zeros(len(cand_row), dtype=bool)
-            ai = _np.nonzero(areal)[0]
+            hit = np.zeros(len(cand_row), dtype=bool)
+            ai = np.nonzero(areal)[0]
             if len(ai):
                 cls = _pip_pairs_flat(
                     pts_[cand_pt[ai]], [geoms[int(r)] for r in cand_row[ai]]
                 )
                 hit[ai] = cls >= 1
-            for t in _np.nonzero(~areal)[0].tolist():
+            for t in np.nonzero(~areal)[0].tolist():
                 g_pt = Geometry.point(
-                    float(pxs[cand_pt[t]]), float(pys[cand_pt[t]])
+                    float(pts_[cand_pt[t], 0]), float(pts_[cand_pt[t], 1])
                 )
                 hit[t] = bool(P.intersects(g_pt, geoms[int(cand_row[t])]))
-            sel = _np.nonzero(hit)[0]
+            sel = np.nonzero(hit)[0]
             out = pdfb.iloc[cand_row[sel]].drop(columns=[geom_col]).copy()
-            out["_face_id"] = fids_[cand_pt[sel]]
+            out["_face_id"] = probe.ids[cand_pt[sel]]
             yield out
 
     return slim.mapInPandas(_probe, schema=out_schema)
@@ -384,7 +314,6 @@ def _overlap_half_pairs(cur: DataFrame, geom_col: str, res: int | None) -> DataF
         return matched.withColumnRenamed("_piece", "_inter")
     pairs, _ = candidate_pairs(
         cur, cur, res=res, geom_col1=geom_col, geom_col2=geom_col,
-        light_ids=("_uid", "_uid"),
     )
     half = pairs.where(F.col("l1__uid") < F.col("l2__uid"))
     half = half.withColumn(
@@ -445,7 +374,7 @@ def union_full_self(
     faces: DataFrame | None = None
 
     for pass_i in range(max_passes + 1):
-        cur = cur.localCheckpoint(eager=True)
+        cur = cache.local_checkpoint(cur)
         if cur.limit(1).count() == 0:
             break
         if pass_i == max_passes:
@@ -455,9 +384,7 @@ def union_full_self(
             )
         # one intersection kernel per unordered pair, materialized once
         # and consumed by BOTH the partner lists and the next-pass input
-        half = _overlap_half_pairs(cur, geom_col, res).localCheckpoint(
-            eager=True
-        )
+        half = cache.local_checkpoint(_overlap_half_pairs(cur, geom_col, res))
         partners = (
             half.select(
                 F.col("l1__uid").alias("_uid"),
@@ -474,8 +401,6 @@ def union_full_self(
         )
         # both face branches below consume the join — persist so the
         # partner aggregation runs once, not once per branch
-        from .. import cache
-
         joined = cache.track(cur.join(partners, on="_uid", how="left").persist())
 
         # lonely rows + (row minus partners) -> faces. TWO branches, not
@@ -520,9 +445,9 @@ def union_full_self(
     # and the faces side) — materialize so the non-deterministic id is
     # evaluated exactly once.
     faces = faces.withColumn("_ip", _interior_point_udf(F.col(geom_col)))
-    faces = faces.withColumn(
-        "_face_id", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
+    faces = cache.local_checkpoint(
+        faces.withColumn("_face_id", F.monotonically_increasing_id())
+    )
     # contributors: interior-point-in-original pairs. Fast path inverts
     # the broadcast orientation — the POINT side (21 B/row) is grid-
     # broadcast and the original layer streams map-side, so the parcels
@@ -587,8 +512,6 @@ def union_full_self(
         # execute `out` — persist it so the attach join (candidate PIP +
         # groupBy) runs once, not twice (measured ~8 s per execution at
         # 500k parcels)
-        from .. import cache
-
         out = cache.track(out.persist())
         max_k = out.agg(F.max(F.size("_contrib"))).collect()[0][0] or 0
         cols = [F.col(geom_col)]

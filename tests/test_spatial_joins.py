@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from tests import fixtures as FX
 
+from geofileops_spark.index import pairing
 from geofileops_spark.operators import join as J
 
 PARCEL_SCHEMA = "fid long; OIDN long; UIDN long; GEWASGROEP string; LENGTE double; OPPERVL double; wkt string"
@@ -128,20 +129,20 @@ def test_export_grid_cache_reuse_and_release(layers):
 
     parcels, zones, _ = layers
     gfo_cache.release_caches()
-    J._EXPORT_GRID_CACHE.clear()
+    pairing._GRID_CACHE.clear()
     a = {r[0] for r in
          J.export_by_location(parcels, zones, "intersects is True",
                               broadcast=True).select("fid").collect()}
-    assert len(J._EXPORT_GRID_CACHE) == 1
-    key = next(iter(J._EXPORT_GRID_CACHE))
+    assert len(pairing._GRID_CACHE) == 1
+    key = next(iter(pairing._GRID_CACHE))
     # same layer again: the built grid broadcast is reused (same entry)
     b = {r[0] for r in
          J.export_by_location(parcels, zones, "disjoint is True",
                               broadcast=True).select("fid").collect()}
-    assert next(iter(J._EXPORT_GRID_CACHE)) == key
+    assert next(iter(pairing._GRID_CACHE)) == key
     assert not (a & b)
     gfo_cache.release_caches()
-    assert len(J._EXPORT_GRID_CACHE) == 0
+    assert len(pairing._GRID_CACHE) == 0
 
 
 def test_export_by_distance(layers):
@@ -368,8 +369,8 @@ def test_export_by_distance_sphere(spark):
 
 
 def test_join_points_in_polygons_grid_path_matches_scan(spark):
-    """>256 irregular (non-rect) polygons engage the grid-indexed probe;
-    its (point, polygon) pairs must equal the plain per-polygon scan."""
+    """>63 irregular (non-rect) polygons engage the grid-indexed probe;
+    its (point, polygon) pairs must equal a driver-side per-polygon scan."""
     import numpy as np
 
     from geofileops_spark.functions.st import st_geomfromtext
@@ -416,7 +417,7 @@ def test_join_broadcast_pairs_row_cap_falls_back(layers, monkeypatch):
     be tens of millions of rows); the join routes to the distributed
     cell plan instead — same rows, Exchange present in the plan."""
     parcels, zones, _ = layers
-    monkeypatch.setattr(J, "_EXPORT_BCAST_MAX_ROWS", 1)
+    monkeypatch.setattr(pairing, "MAX_ROWS", 1)
     capped = J.join_by_location(parcels, zones, "intersects is True")
     p = capped._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" in p  # distributed cell join
