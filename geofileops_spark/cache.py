@@ -1,16 +1,19 @@
 """Registry of persisted intermediate DataFrames.
 
 Several operators persist an intermediate that the RETURNED (lazy)
-DataFrame still depends on (`_shared_overlay_parts`' refined candidate
-set, `join_nearest`'s exploded l2 side, dissolve's last merge round, the
+DataFrame still depends on (the shared pair pieces of
+`overlay._compose`, the joins and re-union groups of the overlay tails,
+`join_nearest`'s exploded l2 side, dissolve's last merge round, the
 dedup pipelines' doc-gram-hash tables). Unpersisting before the caller
-consumes the result would silently recompute the dominant stage, so they
-cannot be freed inside the operator — but DataFrame persists are not
-GC-cleaned either, so a long-lived session running many ops accumulates
-executor storage until LRU eviction.
+consumes the result would silently recompute the dominant stage, so
+they cannot be freed inside the operator — but DataFrame persists are
+not GC-cleaned either, so a long-lived session running many ops
+accumulates executor storage until LRU eviction.
 
 Operators register such frames here, along with their broadcasts
-(``index.pairing``) and local checkpoints; batch callers should invoke
+(``index.pairing``) and local checkpoints (union_full's passes,
+``dissolve_within_distance``, ``dup_clusters``' rounds); batch callers
+should invoke
 :func:`release_caches` once results are consumed (written / collected).
 """
 from __future__ import annotations
@@ -38,9 +41,14 @@ def local_checkpoint(df: DataFrame) -> DataFrame:
     released at the next :func:`release_caches`. The returned frame
     cannot be recomputed after that (its lineage is cut)."""
     out = df.localCheckpoint(eager=True)
-    rdd = out._jdf.queryExecution().logical().rdd()
-    track_release(lambda: rdd.unpersist(False))
+    track_release(lambda: release_checkpoint(out))
     return out
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a :func:`local_checkpoint` frame now, once no
+    live frame reads it any more (e.g. the previous round of a loop)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def release_caches() -> None:

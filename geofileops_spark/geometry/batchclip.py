@@ -577,7 +577,7 @@ def batch_difference_seq(subjects: list, blade_lists: list) -> list:
     """Elementwise sequential difference over one Arrow batch: row i's
     result is ``subjects[i] − blades[0] − blades[1] − …`` with per-blade
     semantics identical to a loop of ``clip.difference`` calls (the
-    ``_combine_vs_union_udf('difference')`` hot path). The (piece ×
+    ``overlay._combine_rows('difference')`` hot path). The (piece ×
     blade-part) single-ring clips of ALL rows are flattened into shared
     :func:`batch_ring_differences` sweeps — the per-pair linked-list
     clipper cost on parcel-sized rings was the measured dominant term of

@@ -406,11 +406,10 @@ def dup_clusters(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
     sym = _cache.track(sym.persist())
-    labels_p = _cache.track(
+    labels_p = _cache.local_checkpoint(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .persist()
     )
     labels = labels_p
     for _ in range(max_rounds):
@@ -444,7 +443,7 @@ def dup_clusters(
         # self-joins over the previous round's frame — without lineage
         # truncation the logical plan grows exponentially and the driver
         # OOMs on plan analysis after ~10 rounds
-        new_p = (
+        new_p = _cache.local_checkpoint(
             step1.join(jump, F.col("s._l1") == F.col("j._jid"), "left")
             .select(
                 F.col("s.id").alias("id"),
@@ -459,10 +458,10 @@ def dup_clusters(
                     < F.col("s._old")
                 ).alias("_moved"),
             )
-            .localCheckpoint(eager=True)
         )
         moved = new_p.where(F.col("_moved")).limit(1).count()
-        labels_p.unpersist()
+        # the new round is materialized and no longer reads the old one
+        _cache.release_checkpoint(labels_p)
         labels_p = new_p
         labels = new_p.drop("_moved")
         if moved == 0:

@@ -478,7 +478,7 @@ def dissolve_within_distance(
     diss = dissolve(
         df.select(geom_col), None, explodecollections=True, geom_col=geom_col
     ).withColumn("fid", F.xxhash64(F.col(geom_col)))
-    diss = diss.localCheckpoint(eager=True)
+    diss = cache.local_checkpoint(diss)
 
     closed = dissolve(
         _buf(diss, half), None, explodecollections=True, geom_col=geom_col

@@ -257,33 +257,28 @@ def query_match_udf(query: SpatialQuery):
     PIP path, and intersects/disjoint batches take the windowed batched
     segment-hit sweep (no per-pair numpy in the common case).
     """
-    q = query.query.lower().split()
-    simple = None
-    if len(q) == 3 and q[0] in P.PREDICATE_FNS and q[1] == "is":
-        simple = (q[0], P.PREDICATE_FNS[q[0]], q[2] == "true")
+    simple = query.simple
 
     @pandas_udf(BooleanType())
     def _match(wkb1: pd.Series, wkb2: pd.Series) -> pd.Series:
+        load = _geom_cache_loader()
+        out = []
         if simple is not None:
-            name, fn, want = simple
+            name, want = simple
             fast = _pip_fast_path(name, wkb1, wkb2)
             if fast is not None:
                 return pd.Series(fast == want, dtype="boolean")
-        load = _geom_cache_loader()
-        if simple is not None and simple[0] in ("intersects", "disjoint"):
-            name, fn, want = simple
-            inter = _batch_pair_intersects(wkb1, wkb2, load)
-            # NULL on either side stays False (matching the loop below)
-            nulls = np.array(
-                [b1 is None or b2 is None for b1, b2 in zip(wkb1, wkb2)],
-                dtype=bool,
-            )
-            res = inter if name == "intersects" else ~inter
-            res = (res == want) & ~nulls
-            return pd.Series(res, dtype="boolean")
-        out = []
-        if simple is not None:
-            _, fn, want = simple
+            if name in ("intersects", "disjoint"):
+                inter = _batch_pair_intersects(wkb1, wkb2, load)
+                # NULL on either side stays False (matching the loop below)
+                nulls = np.array(
+                    [b1 is None or b2 is None for b1, b2 in zip(wkb1, wkb2)],
+                    dtype=bool,
+                )
+                res = inter if name == "intersects" else ~inter
+                res = (res == want) & ~nulls
+                return pd.Series(res, dtype="boolean")
+            fn = P.PREDICATE_FNS[name]
             for b1, b2 in zip(wkb1, wkb2):
                 if b1 is None or b2 is None:
                     out.append(False)
@@ -306,10 +301,8 @@ def _any_match_udf(query: SpatialQuery, want_match: bool = True):
     / violate (``want_match=False``) the relation? EARLY EXIT at the
     first hit: the predicate kernel runs once per matching row instead
     of once per candidate pair."""
-    q = query.query.lower().split()
-    simple = None
-    if len(q) == 3 and q[0] in P.PREDICATE_FNS and q[1] == "is":
-        simple = (P.PREDICATE_FNS[q[0]], q[2] == "true")
+    simple = query.simple
+    fn = P.PREDICATE_FNS[simple[0]] if simple else None
 
     @pandas_udf(BooleanType())
     def _any(wkb1: pd.Series, others: pd.Series) -> pd.Series:
@@ -325,9 +318,8 @@ def _any_match_udf(query: SpatialQuery, want_match: bool = True):
                 if b2 is None:
                     continue
                 g2 = load(bytes(b2))
-                if simple is not None:
-                    fn, want = simple
-                    ok = bool(fn(g1, g2)) == want
+                if fn is not None:
+                    ok = bool(fn(g1, g2)) == simple[1]
                 else:
                     ok = query.matches(P.relate_matrix(g1, g2))
                 if ok == want_match:
@@ -434,10 +426,7 @@ def _join_broadcast_pairs(
     if bc is None:
         return None
 
-    q = sq.query.lower().split()
-    simple = None
-    if len(q) == 3 and q[0] in P.PREDICATE_FNS and q[1] == "is":
-        simple = (q[0], q[2] == "true")
+    simple = sq.simple
     # certain boundary crossings prove plain `intersects`: eligible
     # pairs short-circuit the exact predicate (batched segment sweep)
     fast_hit = simple is not None and simple[0] == "intersects"
@@ -867,10 +856,7 @@ def _export_broadcast(
         # filter holds vacuously everywhere
         return df1 if anti else df1.limit(0)
 
-    q = sq.query.lower().split()
-    simple = None
-    if len(q) == 3 and q[0] in P.PREDICATE_FNS and q[1] == "is":
-        simple = (q[0], q[2] == "true")
+    simple = sq.simple
     min_area = min_area_intersect
     schema = df1.schema
 
@@ -1028,8 +1014,7 @@ def export_by_location(
         # and would hide the scan-size statistic from the sizer
         broadcast = pairing.choose("pairs", df2).path == "broadcast"
     if subdivide_coords is not None and subdivide_coords > 0:
-        qp = sq.query.lower().split()
-        if len(qp) == 3 and qp[0] in ("intersects", "disjoint") and qp[1] == "is":
+        if sq.simple is not None and sq.simple[0] in ("intersects", "disjoint"):
             from .overlay import subdivide_layer
 
             df2 = subdivide_layer(

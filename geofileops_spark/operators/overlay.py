@@ -2,13 +2,22 @@
 symmetric_difference, union (geofileops ``geoops.py:2777,2138,1908,2525,
 3544,3695`` -> ``_geoops_sql.py:942-3292``).
 
-Spark-first shape shared by the family (SURVEY.md §2.5):
+Spark-first shape shared by the family (SURVEY.md §2.5), each step
+written once and called by every physical plan:
 
-    cell-equi candidate join (celljoin.py, the R-tree analogue)
-      -> exact ``intersects`` refine
-      -> GEOS-like combine kernel in an Arrow-batched pandas UDF
-      -> collection_extract(primitive) -> drop NULL/EMPTY
-      -> optional gridsize / explodecollections
+    bbox candidate pairs: broadcast-grid probe or cell join
+      (the R-tree analogue; ``index.pairing.choose`` picks)
+      -> pair piece kernel (:func:`_pieces`): the pairwise intersection
+         in the pair's lowest primitive, NULL/EMPTY dropped — it is also
+         the exact refine of the bbox candidates
+      -> row combine kernel (:func:`_combine_rows`): a row minus (the
+         union of) its candidate blades
+      -> re-union of subdivided parts (:func:`_reunion`)
+      -> optional gridsize / explodecollections / where_post
+
+:func:`_pair_pieces` is the one entry to the pieces of every candidate
+pair, on either plan. ``identity``, ``symmetric_difference`` and
+``union`` are compositions of the same steps (:func:`_compose`).
 
 ``difference`` and ``clip`` aggregate ALL intersecting layer-2 geometries
 per layer-1 row first (``groupBy(l1_id).agg(collect_list)``) and run a
@@ -39,19 +48,13 @@ from ..geometry import geom as G
 from ..geometry import wkb as W
 from ..index import pairing
 from .celljoin import candidate_pairs, drop_helper_columns, prefix_columns
-from .join import query_match_udf
+from .join import _geom_cache_loader, query_match_udf
 from .relation import SpatialQuery
 
 _INTERSECTS = SpatialQuery("intersects is True")
 
 
-def _min_primitive(g1: G.Geometry, g2: G.Geometry) -> int:
-    """Primitive type (1=point,2=line,3=poly) = min dim of the inputs
-    (geofileops keeps the lowest-dimension primitive for intersection,
-    ``_geoops_sql.py:1964-1968``)."""
-    return min(g1.dim(), g2.dim()) + 1
-
-
+# ---------------------------------------------------------------- kernels
 def _drop_degenerate(g: G.Geometry, prim: int) -> G.Geometry:
     """Drop zero-measure parts of the extracted primitive (edge-touching
     inputs yield degenerate slivers our clipper keeps as area-0 polygons;
@@ -69,27 +72,93 @@ def _drop_degenerate(g: G.Geometry, prim: int) -> G.Geometry:
     return G.Geometry.collect(kept)
 
 
+def _pieces(gs1: list, gs2: list) -> list:
+    """Pair piece kernel: the intersection of every ``(gs1[i], gs2[i])``
+    pair as a MULTI geometry, or None when it is empty. The piece keeps
+    the pair's lowest-dimension primitive (geofileops keeps min dim,
+    ``_geoops_sql.py:1964-1968``) with zero-measure parts dropped, so a
+    piece exists iff the pair overlaps in that primitive."""
+    from ..geometry.batchclip import batch_intersection
+
+    out = []
+    for g1, g2, inter in zip(gs1, gs2, batch_intersection(gs1, gs2)):
+        prim = min(g1.dim(), g2.dim()) + 1
+        if prim >= 1:
+            inter = _drop_degenerate(inter.collection_extract(prim), prim)
+        out.append(None if inter.is_empty() else inter.force_multi())
+    return out
+
+
+def _combine_rows(
+    subjects: list, blade_lists: list, mode: str, memo: dict | None = None
+) -> list:
+    """Row combine kernel: ``subjects[i]`` minus its blades
+    ``blade_lists[i]`` as MULTI WKB, or None when nothing is left.
+
+    mode='difference': the blades are subtracted in turn, every row's
+    clips flattened into shared sweep rounds
+    (``batchclip.batch_difference_seq``).
+    mode='difference_union': the blades are unioned FIRST, then one
+    subtraction — required when the blades are subdivided PARTS of one
+    original geometry: sequential subtraction leaves floating-point
+    slivers along the part seams, while the union heals them exactly
+    (the reference subtracts ``ST_Union(layer2_sub)``,
+    ``_geoops_sql.py:1234-1241``). ``memo`` keeps each distinct blade
+    set's union: neighbouring subjects collect the SAME few subdivided
+    parts. It is keyed on the blade objects' identity, so callers pass
+    the same object for the same blade (a decode cache), and it holds
+    the blades so no id is reused while the key lives.
+
+    A subject no blade touched comes back verbatim, like the reference's
+    ``IFNULL(..., g1)``: extract/degenerate filtering would silently
+    strip zero-measure or mixed-dim parts."""
+    from ..geometry.batchclip import batch_difference_seq
+
+    if mode == "difference":
+        results = batch_difference_seq(subjects, blade_lists)
+    elif mode == "difference_union":
+        memo = {} if memo is None else memo
+        results = []
+        for g1, g2s in zip(subjects, blade_lists):
+            key = tuple(sorted(map(id, g2s)))
+            hit = memo.get(key)
+            if hit is None:
+                hit = memo[key] = (g2s, C.union_geoms(g2s))
+            results.append(C.difference(g1, hit[1]))
+    else:
+        raise ValueError(f"unknown combine mode: {mode!r}")
+    out = []
+    for g1, res in zip(subjects, results):
+        if res is g1:
+            out.append(W.dumps(g1.force_multi()))
+            continue
+        prim = g1.dim() + 1
+        res = _drop_degenerate(res.collection_extract(prim), prim)
+        out.append(None if res.is_empty() else W.dumps(res.force_multi()))
+    return out
+
+
+def _union_wkb(geoms: list) -> bytes | None:
+    """Union of the pieces of one row as MULTI WKB; None when empty."""
+    merged = C.union_geoms(geoms)
+    return None if merged.is_empty() else W.dumps(merged.force_multi())
+
+
 @pandas_udf(BinaryType())
 def _pair_intersection_udf(wkb1: pd.Series, wkb2: pd.Series) -> pd.Series:
-    from ..geometry.batchclip import batch_intersection
-    from .join import _geom_cache_loader
-
     # decode each DISTINCT blob once per batch: after a cell join the same
     # geometry appears in many consecutive candidate pairs
     load = _geom_cache_loader()
-    rows = []  # (out_idx, g1, g2)
     out: list = [None] * len(wkb1)
+    idx, gs1, gs2 = [], [], []
     for i, (b1, b2) in enumerate(zip(wkb1, wkb2)):
-        if b1 is None or b2 is None:
-            continue
-        rows.append((i, load(bytes(b1)), load(bytes(b2))))
-    inters = batch_intersection([r[1] for r in rows], [r[2] for r in rows])
-    for (i, g1, g2), inter in zip(rows, inters):
-        prim = _min_primitive(g1, g2)
-        if prim >= 1:
-            inter = _drop_degenerate(inter.collection_extract(prim), prim)
-        if not inter.is_empty():
-            out[i] = W.dumps(inter.force_multi())
+        if b1 is not None and b2 is not None:
+            idx.append(i)
+            gs1.append(load(bytes(b1)))
+            gs2.append(load(bytes(b2)))
+    for i, piece in zip(idx, _pieces(gs1, gs2)):
+        if piece is not None:
+            out[i] = W.dumps(piece)
     return pd.Series(out)
 
 
@@ -98,117 +167,27 @@ _pair_intersection_udf = _pair_intersection_udf.asNondeterministic()
 
 
 def _combine_vs_union_udf(mode: str):
-    """(g1, array<g2>) -> g1 <op> union_all(g2s); None when empty.
-
-    mode='difference': the DIFF_EMPTY path — empty result means drop.
-    mode='difference_union': union the blades FIRST, then one subtraction
-    — required when the blades are subdivided PARTS of one original
-    geometry: sequential subtraction leaves floating-point slivers along
-    the part seams, while the union heals them exactly (the reference
-    subtracts ``ST_Union(layer2_sub)``, ``_geoops_sql.py:1234-1241``).
-    mode='intersection': the clip path — primitive of the *input* kept
-    (clip layer contributes no attributes, ``_geoops_sql.py:1000-1028``).
-    """
+    """(g1, array<g2>) -> :func:`_combine_rows` of the row; None when the
+    row has no blades or nothing is left (the DIFF_EMPTY drop). ``mode``
+    is ``difference`` or ``difference_union``."""
+    if mode not in ("difference", "difference_union"):
+        raise ValueError(f"unknown combine mode: {mode!r}")
 
     @pandas_udf(BinaryType())
     def _combine(wkb1: pd.Series, others: pd.Series) -> pd.Series:
-        if mode == "difference":
-            # whole-batch path: flatten every row's sequential blade
-            # subtraction into shared sweep-kernel rounds
-            # (batchclip.batch_difference_seq) — semantics identical to
-            # the per-row C.difference loop, including the pass-through
-            # identity for rows no blade touches
-            from ..geometry.batchclip import batch_difference_seq
-
-            geom_memo2: dict = {}
-
-            def _load2(b):
-                bb = bytes(b)
-                g = geom_memo2.get(bb)
-                if g is None:
-                    g = W.loads(bb)
-                    geom_memo2[bb] = g
-                return g
-
-            n = len(wkb1)
-            outv: list = [None] * n
-            idxs: list[int] = []
-            subs: list = []
-            blists: list = []
-            for k, (b1, arr) in enumerate(zip(wkb1, others)):
-                if b1 is None or arr is None or len(arr) == 0:
-                    continue
-                idxs.append(k)
-                subs.append(W.loads(bytes(b1)))
-                blists.append([_load2(b) for b in arr if b is not None])
-            results = batch_difference_seq(subs, blists)
-            for k, g1, res in zip(idxs, subs, results):
-                if res is g1:
-                    outv[k] = W.dumps(g1.force_multi())
-                    continue
-                res = _drop_degenerate(
-                    res.collection_extract(g1.dim() + 1), g1.dim() + 1
-                )
-                outv[k] = None if res.is_empty() else W.dumps(res.force_multi())
-            return pd.Series(outv)
-        out = []
-        # blade-union memo: neighbouring subjects collect the SAME blade
-        # candidate sets (e.g. thousands of parcels against the same 2-4
-        # subdivided ring parts) — union each distinct set once per batch
-        blade_memo: dict = {}
-        # blade DECODE memo: each blade geometry appears in every
-        # neighbouring subject's candidate list; ids are spatially
-        # correlated and the post-groupBy sort keeps neighbours in the
-        # same batch often enough that decoding each distinct blob once
-        # per batch beats re-parsing it per occurrence
-        geom_memo: dict = {}
-
-        def _load(b):
-            bb = bytes(b)
-            g = geom_memo.get(bb)
-            if g is None:
-                g = W.loads(bb)
-                geom_memo[bb] = g
-            return g
-
-        for b1, arr in zip(wkb1, others):
+        # blades are decoded once per distinct blob: each one appears in
+        # every neighbouring subject's candidate list
+        load = _geom_cache_loader()
+        out: list = [None] * len(wkb1)
+        idx, subjects, blades = [], [], []
+        for k, (b1, arr) in enumerate(zip(wkb1, others)):
             if b1 is None or arr is None or len(arr) == 0:
-                out.append(None)
                 continue
-            g1 = W.loads(bytes(b1))
-            g2s = [_load(b) for b in arr if b is not None]
-            if mode == "difference_union":
-                # key on the sorted byte tuple itself (NOT hash(): a 64-bit
-                # collision would silently reuse the wrong unioned blade)
-                key = tuple(sorted(bytes(b) for b in arr if b is not None))
-                blade = blade_memo.get(key)
-                if blade is None:
-                    blade = C.union_geoms(g2s)
-                    blade_memo[key] = blade
-                res = C.difference(g1, blade)
-                if res is g1:
-                    out.append(W.dumps(g1.force_multi()))
-                    continue
-                res = _drop_degenerate(res.collection_extract(g1.dim() + 1), g1.dim() + 1)
-            elif mode == "difference":
-                res = g1
-                for g2 in g2s:
-                    res = C.difference(res, g2)
-                    if res.is_empty():
-                        break
-                if res is g1:
-                    # nothing was subtracted (every blade bbox-disjoint):
-                    # pass the input through VERBATIM like the reference's
-                    # IFNULL(..., g1) — extract/degenerate filtering would
-                    # silently strip zero-measure or mixed-dim parts
-                    out.append(W.dumps(g1.force_multi()))
-                    continue
-                res = _drop_degenerate(res.collection_extract(g1.dim() + 1), g1.dim() + 1)
-            else:
-                blade = C.union_geoms(g2s)
-                res = C.intersection(g1, blade)
-                res = _drop_degenerate(res.collection_extract(g1.dim() + 1), g1.dim() + 1)
-            out.append(None if res.is_empty() else W.dumps(res.force_multi()))
+            idx.append(k)
+            subjects.append(W.loads(bytes(b1)))
+            blades.append([load(bytes(b)) for b in arr if b is not None])
+        for k, res in zip(idx, _combine_rows(subjects, blades, mode)):
+            out[k] = res
         return pd.Series(out)
 
     # nondeterministic: stop Catalyst duplicating the kernel into both a
@@ -216,6 +195,21 @@ def _combine_vs_union_udf(mode: str):
     return _combine.asNondeterministic()
 
 
+def _union_parts_udf():
+    @pandas_udf(BinaryType())
+    def _u(parts: pd.Series) -> pd.Series:
+        out = []
+        for arr in parts:
+            if arr is None or len(arr) == 0:
+                out.append(None)
+                continue
+            out.append(_union_wkb([W.loads(bytes(b)) for b in arr if b is not None]))
+        return pd.Series(out)
+
+    return _u.asNondeterministic()
+
+
+# ------------------------------------------------------------------ tails
 def _postprocess(
     df: DataFrame,
     geom_col: str,
@@ -251,6 +245,86 @@ def _postprocess(
     return df
 
 
+def _blade_lists(pairs: DataFrame, key: str, blade: str, id_col: str) -> DataFrame:
+    """(``id_col``, ``_others``): every ``blade`` paired with each ``key``."""
+    return pairs.groupBy(F.col(key).alias(id_col)).agg(
+        F.collect_list(F.col(blade)).alias("_others")
+    )
+
+
+def _subtract(
+    base: DataFrame,
+    others: DataFrame,
+    id_col: str,
+    geom_col: str,
+    mode: str,
+    keep_empty_geoms: bool = False,
+    spread: int | None = None,
+) -> DataFrame:
+    """``base`` rows minus their blade lists ``others`` (from
+    :func:`_blade_lists`) through the row combine kernel. Rows without
+    blades pass through verbatim; a row whose result is empty is dropped
+    (DIFF_EMPTY), or kept with NULL geometry under ``keep_empty_geoms``.
+    ``spread`` round-robins the joined rows over that many partitions.
+
+    TWO branches, not a when() over the UDF: Catalyst pulls Python UDFs
+    into an ArrowEvalPython node that evaluates them for EVERY row
+    regardless of the condition, so the single-branch shape shipped every
+    candidate-less subject (the vast majority when the erase layer is
+    localized, e.g. 500k parcels vs 3 complex rings) through the Python
+    worker just to pass its WKB back verbatim. The join is persisted so
+    both branches share one execution."""
+    joined = base.join(others, on=id_col, how="left")
+    if spread is not None:
+        joined = joined.repartition(spread)
+    joined = cache.track(joined.persist())
+    lonely = joined.where(F.col("_others").isNull()).drop("_others")
+    hit = joined.where(F.col("_others").isNotNull()).withColumn(
+        "_diff", _combine_vs_union_udf(mode)(F.col(geom_col), F.col("_others"))
+    )
+    if not keep_empty_geoms:
+        hit = hit.where(F.col("_diff").isNotNull())
+    hit = hit.withColumn(geom_col, F.col("_diff")).drop("_diff", "_others")
+    return lonely.unionByName(hit)
+
+
+def _reunion(df: DataFrame, keys: list[str], geom_col: str) -> DataFrame:
+    """Union the ``geom_col`` pieces of each ``keys`` group back into one
+    geometry; every other column takes the group's first value. A group
+    whose pieces were all NULL comes back with NULL geometry
+    (collect_list skips NULLs).
+
+    Rows that are their own group skip the union kernel in a second
+    branch over a persisted frame, NOT a when() (see :func:`_subtract`):
+
+    - with an ``_nparts`` column (subject parts from
+      :func:`_subdivide_subject`), the parts of one-part subjects — every
+      geometry under subdivide_coords, the whole layer when only the
+      OTHER side is complex — bypass the groupBy shuffle as well
+      (measured ~50 s of the 58 s d21 stage at 500k parcels);
+    - otherwise groups of at most one piece take it as is (``F.get`` is
+      NULL on an empty array even under ANSI)."""
+    attrs = [c for c in df.columns if c not in (*keys, geom_col, "_nparts")]
+
+    def grouped(frame: DataFrame) -> DataFrame:
+        return frame.groupBy(*keys).agg(
+            F.collect_list(geom_col).alias("_pieces"),
+            *[F.first(c).alias(c) for c in attrs],
+        )
+
+    union = _union_parts_udf()(F.col("_pieces"))
+    if "_nparts" in df.columns:
+        df = cache.track(df.persist())
+        singles = df.where(F.col("_nparts") <= 1).drop("_nparts")
+        multi = grouped(df.where(F.col("_nparts") > 1)).withColumn(geom_col, union)
+        return multi.drop("_pieces").unionByName(singles)
+    g = cache.track(grouped(df).persist())
+    singles = g.where(F.size("_pieces") <= 1).withColumn(geom_col, F.get("_pieces", 0))
+    multi = g.where(F.size("_pieces") > 1).withColumn(geom_col, union)
+    return singles.unionByName(multi).drop("_pieces")
+
+
+# ---------------------------------------------------------------- subdivide
 def subdivide_layer(
     df: DataFrame, max_coords: int, geom_col: str = "geom_wkb",
     with_pos: bool = False, split_at: int | None = None,
@@ -301,302 +375,6 @@ def subdivide_layer(
     return big.unionByName(sm.select(*big.columns))
 
 
-def _union_parts_udf():
-    @pandas_udf(BinaryType())
-    def _u(parts: pd.Series) -> pd.Series:
-        out = []
-        for arr in parts:
-            if arr is None or len(arr) == 0:
-                out.append(None)
-                continue
-            geoms = [W.loads(bytes(b)) for b in arr if b is not None]
-            merged = C.union_geoms(geoms)
-            out.append(None if merged.is_empty() else W.dumps(merged.force_multi()))
-        return pd.Series(out)
-
-    return _u.asNondeterministic()
-
-
-def intersection(
-    df1: DataFrame,
-    df2: DataFrame,
-    res: int | None = None,
-    geom_col: str = "geom_wkb",
-    gridsize: float = 0.0,
-    explodecollections: bool = False,
-    where_post: str | None = None,
-    subdivide_coords: int | None = None,
-    id_col: str = "fid",
-    keep_empty_geoms: bool = False,
-) -> DataFrame:
-    """Pairwise overlay intersection (geofileops ``geoops.py:2777`` ->
-    ``_geoops_sql.py:1805-2102``): one output row per intersecting
-    (l1, l2) pair carrying both sides' attributes prefixed l1_/l2_.
-
-    ``subdivide_coords``: complex geometries are first exploded into
-    parts (bounded vertex count — the reference's signature optimization
-    for huge polygons), pairwise-intersected per part, then re-unioned
-    ``GROUP BY (l1_id, l2_id)`` (``_geoops_sql.py:2027-2070``)."""
-    sub = subdivide_coords is not None
-    if not sub and not keep_empty_geoms:
-        # zero-shuffle broadcast-grid pairs plan (the join_by_location
-        # shape): pairing + the pair kernel fuse into one mapInPandas,
-        # layer 2 decoded once per task from the broadcast buffer
-        matched = _broadcast_pairs_matched(df1, df2, geom_col, id_col)
-        if matched is not None:
-            out = matched.withColumn(geom_col, F.col("_piece")).drop(
-                "_piece", f"l1_{geom_col}", f"l2_{geom_col}"
-            )
-            return _postprocess(
-                out, geom_col, gridsize, explodecollections, where_post,
-                keep_empty_geoms,
-            )
-    s1 = subdivide_layer(df1, subdivide_coords, geom_col) if sub else df1
-    s2 = subdivide_layer(df2, subdivide_coords, geom_col) if sub else df2
-    pairs, _ = candidate_pairs(
-        s1, s2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-    )
-    g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
-    # no separate `intersects` refine: the intersection kernel itself
-    # yields NULL for non-intersecting candidates (running the predicate
-    # first would pay the polygon-pair Python cost twice)
-    if keep_empty_geoms:
-        # reference keep_empty_geoms retains rows whose pairwise result is
-        # empty — but only for TRULY intersecting pairs (its candidate SQL
-        # carries an ST_Intersects prefilter, ``_geoops_sql.py:1964-2006``),
-        # so bbox-only cell candidates must still be refined away first.
-        # The predicate cost is only paid on this non-default path.
-        pairs = pairs.where(query_match_udf(_INTERSECTS)(F.col(g1), F.col(g2)))
-    out = pairs.withColumn(geom_col, _pair_intersection_udf(F.col(g1), F.col(g2)))
-    if not keep_empty_geoms:
-        out = out.where(F.col(geom_col).isNotNull())
-    out = drop_helper_columns(out).drop(g1, g2)
-    if sub:
-        # under subdivide, an all-empty pair survives as one NULL-geom row
-        # (collect_list skips NULL parts; [] maps to NULL in both branches)
-        keys = [f"l1_{id_col}", f"l2_{id_col}"]
-        attrs = [c for c in out.columns if c not in keys and c != geom_col]
-        grouped = cache.track(
-            out.groupBy(*keys)
-            .agg(
-                F.collect_list(geom_col).alias("_pieces"),
-                *[F.first(c).alias(c) for c in attrs],
-            )
-            .persist()
-        )
-        # <=1-piece groups skip the union kernel (identity); F.get is
-        # NULL on an empty array even under ANSI. Two branches, not a
-        # when(): Catalyst evaluates Python UDFs for every row otherwise
-        singles = grouped.where(F.size("_pieces") <= 1).withColumn(
-            geom_col, F.get("_pieces", 0)
-        )
-        multi = grouped.where(F.size("_pieces") > 1).withColumn(
-            geom_col, _union_parts_udf()(F.col("_pieces"))
-        )
-        out = singles.unionByName(multi).drop("_pieces")
-    return _postprocess(
-        out, geom_col, gridsize, explodecollections, where_post, keep_empty_geoms
-    )
-
-
-def _collect_candidates(
-    df1: DataFrame,
-    df2: DataFrame,
-    res: int | None,
-    geom_col: str,
-    id_col: str,
-) -> DataFrame:
-    """(l1_id, collect_list(l2 geom)) for bbox-candidate l2 geometries.
-
-    No intersects refine: every consumer feeds a DIFFERENCE-mode combine,
-    and subtracting a disjoint blade is a no-op — the kernel's internal
-    bbox short-circuit costs far less than a polygon-polygon predicate
-    per candidate pair (measured 500k parcels: difference 94 -> ~70 s)."""
-    pairs, _ = candidate_pairs(
-        df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-    )
-    g2 = f"l2_{geom_col}"
-    return pairs.groupBy(F.col(f"l1_{id_col}").alias(id_col)).agg(
-        F.collect_list(F.col(g2)).alias("_others")
-    )
-
-
-def _reverse_collect_candidates(
-    df1: DataFrame, df2: DataFrame, geom_col: str, id_col: str
-) -> DataFrame:
-    """(id, collect_list(blade geom)) — the reverse-broadcast twin of
-    :func:`_collect_candidates` for FEW subjects vs MANY blades: only the
-    subjects' (id, bbox) rows are collected and broadcast (a few dozen
-    bytes per subject); the blade layer streams through one mapInPandas
-    emitting its matches, and only matching blades enter the (small)
-    groupBy shuffle."""
-    from pyspark.sql.types import StructField, StructType
-
-    spark = df1.sparkSession
-    pdf = (
-        df1.select(F.col(id_col).alias("_sid"), geom_col)
-        .withColumn("_b", pairing._bounds_udf(F.col(geom_col)))
-        .select("_sid", "_b.minx", "_b.miny", "_b.maxx", "_b.maxy")
-        .toPandas()
-    )
-    out_schema = StructType(
-        [
-            StructField("_sid", df1.schema[id_col].dataType),
-            StructField("_blade", BinaryType()),
-        ]
-    )
-    bb = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-    valid = np.isfinite(bb[:, 0])
-    if not valid.any():
-        empty = spark.createDataFrame([], out_schema)
-        return empty.groupBy(F.col("_sid").alias(id_col)).agg(
-            F.collect_list("_blade").alias("_others")
-        )
-    bc = pairing.broadcast(
-        spark,
-        pairing.Index(
-            bb[valid], ids=pdf["_sid"].to_numpy()[valid],
-            per_extent=0.5, point_cells=256,
-        ),
-    )
-
-    def _emit(batches):
-        probe = pairing.Probe(bc)
-        for pdf2 in batches:
-            if len(pdf2) == 0:
-                continue
-            col = pdf2[geom_col].to_numpy(object)
-            # vectorized batch bounds (empty/None rows stay NaN)
-            pr, pl = probe.pairs(W.bounds_from_wkb_batch(col.tolist()))
-            if len(pr):
-                yield pd.DataFrame({"_sid": probe.ids[pl], "_blade": col[pr]})
-
-    hits = df2.select(geom_col).mapInPandas(_emit, schema=out_schema)
-    return hits.groupBy(F.col("_sid").alias(id_col)).agg(
-        F.collect_list("_blade").alias("_others")
-    )
-
-
-def _broadcast_combine(
-    df1: DataFrame,
-    df2: DataFrame,
-    mode: str,
-    geom_col: str,
-    keep_empty_geoms: bool = False,
-) -> DataFrame:
-    """Map-side difference/clip against a SMALL blade layer: layer 2 is
-    grid-indexed and broadcast once (same machinery as the export
-    broadcast probe, join.py `_layer2_grid_broadcast`), layer 1 streams
-    through ONE mapInPandas — no candidate join, no shuffle, and no
-    duplication of multi-KB blade blobs into every candidate pair (the
-    shuffle plan ships each subdivided 2000-coord blade part to every
-    nearby subject row: ~40 KB x 45k rows of pure serialization at 50k
-    parcels vs 3 giant rings).
-
-    Semantics identical to the `_collect_candidates` + combine plan:
-    candidates are bbox matches; `difference`/`difference_union` pass
-    non-matching rows through verbatim and drop (or NULL out, under
-    ``keep_empty_geoms``) fully-erased rows; `intersection` (the clip
-    shape) keeps only rows with a non-empty clipped result, unioning the
-    per-blade fragments."""
-    from ..geometry.batchclip import batch_intersection
-
-    spark = df1.sparkSession
-    bc = pairing.build(df2, geom_col)
-    if bc is None:  # empty blade layer
-        return df1 if mode.startswith("difference") else df1.limit(0)
-    # mapInPandas inherits the input partitioning: subjects that descend
-    # from a few huge rows (a subdivided 3-row complex layer explodes to
-    # hundreds of parts but keeps 3 partitions) would run on 3 cores —
-    # rebalance cheap subject rows across the executor width first
-    target = spark.sparkContext.defaultParallelism * 2
-    if df1.rdd.getNumPartitions() < max(2, target // 2):
-        df1 = df1.repartition(target)
-    schema = df1.schema
-    gpos = df1.columns.index(geom_col)
-    is_diff = mode.startswith("difference")
-    union_first = mode == "difference_union"
-
-    def _probe(batches):
-        probe = pairing.Probe(bc)
-        g2_at = probe.geom
-        blade_memo: dict[tuple, object] = {}
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf
-                continue
-            col = pdf.iloc[:, gpos].to_numpy(object)
-            geoms, B = probe.decode(col)
-            pr, pl = probe.pairs(B)
-            newg = col.copy() if is_diff else np.full(n, None, dtype=object)
-            keep = (
-                np.ones(n, dtype=bool) if is_diff else np.zeros(n, dtype=bool)
-            )
-            if len(pr):
-                row_start = np.concatenate(
-                    ([0], np.nonzero(np.diff(pr))[0] + 1, [len(pr)])
-                )
-                for s, e in zip(row_start[:-1], row_start[1:]):
-                    i = int(pr[s])
-                    g1 = geoms[i]
-                    if g1 is None:
-                        continue
-                    cand = pl[s:e]
-                    if is_diff:
-                        if union_first:
-                            # memo key: candidate-INDEX tuple — ints, not
-                            # the multi-KB byte blobs of the shuffle plan
-                            key = tuple(sorted(int(j) for j in cand))
-                            blade = blade_memo.get(key)
-                            if blade is None:
-                                blade = C.union_geoms(
-                                    [g2_at(int(j)) for j in cand]
-                                )
-                                blade_memo[key] = blade
-                            res = C.difference(g1, blade)
-                        else:
-                            res = g1
-                            for j in cand:
-                                res = C.difference(res, g2_at(int(j)))
-                                if res.is_empty():
-                                    break
-                        if res is g1:
-                            newg[i] = W.dumps(g1.force_multi())
-                            continue
-                        res = _drop_degenerate(
-                            res.collection_extract(g1.dim() + 1), g1.dim() + 1
-                        )
-                        if res.is_empty():
-                            newg[i] = None
-                            keep[i] = keep_empty_geoms
-                        else:
-                            newg[i] = W.dumps(res.force_multi())
-                    else:
-                        g2s = [g2_at(int(j)) for j in cand]
-                        pieces = []
-                        for g2, inter in zip(
-                            g2s, batch_intersection([g1] * len(g2s), g2s)
-                        ):
-                            prim = _min_primitive(g1, g2)
-                            if prim >= 1:
-                                inter = _drop_degenerate(
-                                    inter.collection_extract(prim), prim
-                                )
-                            if not inter.is_empty():
-                                pieces.append(inter)
-                        if pieces:
-                            merged = C.union_geoms(pieces)
-                            if not merged.is_empty():
-                                newg[i] = W.dumps(merged.force_multi())
-                                keep[i] = True
-            out = pdf.copy()
-            out.iloc[:, gpos] = newg
-            yield out[keep]
-
-    return df1.mapInPandas(_probe, schema=schema)
-
-
 def _subdivide_subject(
     df: DataFrame, subdivide_coords: int, geom_col: str, id_col: str
 ) -> DataFrame:
@@ -622,29 +400,325 @@ def _subdivide_subject(
     ).drop("_subpos")
 
 
+# ------------------------------------------------------------------ pairing
+def _broadcast_pairs_matched(
+    df1: DataFrame, df2: DataFrame, geom_col: str, id_col: str,
+    with_l2: bool = True,
+    self_half_uid: str | None = None,
+) -> DataFrame | None:
+    """Broadcast plan of :func:`_pair_pieces` — the overlay twin of
+    ``join._join_broadcast_pairs``: layer 2 is grid-indexed and
+    broadcast, layer 1 streams through ONE mapInPandas that runs the
+    pair piece kernel over every bbox candidate of a batch, and l2
+    attributes attach via a broadcast hash join on the l2 id. No cover
+    explode and no cell shuffle.
+
+    Output: l1_-prefixed df1 columns (geometry included), l2_-prefixed
+    df2 columns (geometry included), and ``_piece``. ``with_l2=False``
+    skips the attribute join and emits only df1 columns + ``_piece``
+    (the clip shape — the clip layer contributes no attributes).
+    Returns None when layer 2 is over budget / empty / has no usable
+    int id.
+
+    ``self_half_uid``: for SELF-pairings (df1 is df2), name of the
+    int64 row-id column; candidate pairs are pre-filtered to
+    ``uid1 < uid2`` INSIDE the probe, before the intersection kernel —
+    a post-hoc ``where(l1_uid < l2_uid)`` would compute every unordered
+    pair's intersection twice and throw one away (requires
+    ``with_l2=True`` so the broadcast carries the ids)."""
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    if self_half_uid is not None and not with_l2:
+        raise ValueError("self_half_uid needs with_l2=True (the layer-2 ids)")
+    if with_l2:
+        if id_col not in df2.columns or not isinstance(
+            df2.schema[id_col].dataType, (LongType, IntegerType)
+        ):
+            return None
+    if pairing.choose("pairs", df2).path != "broadcast":
+        return None
+    bc = pairing.build(df2, geom_col, id_col=id_col if with_l2 else None)
+    if bc is None:
+        return None
+
+    schema = StructType(
+        df1.schema.fields
+        + [StructField("_l2id", LongType()), StructField("_piece", BinaryType())]
+    )
+
+    def _probe(batches):
+        probe = pairing.Probe(bc)
+        ids = probe.ids
+        for pdf in batches:
+            g1s, B = probe.decode(pdf[geom_col].to_numpy(object))
+            pr, pl = probe.pairs(B)
+            if self_half_uid is not None and len(pr):
+                suid = pdf[self_half_uid].to_numpy(np.int64)
+                m = suid[pr] < ids[pl]
+                pr, pl = pr[m], pl[m]
+            pieces = _pieces([g1s[t] for t in pr], [probe.geom(j) for j in pl])
+            sel = np.array([p is not None for p in pieces], dtype=bool)
+            out = pdf.iloc[pr[sel]].copy()
+            out["_l2id"] = (ids[pl[sel]] if ids is not None else pl[sel]).astype(
+                np.int64
+            )
+            out["_piece"] = [W.dumps(p) for p in pieces if p is not None]
+            yield out
+
+    probe_out = df1.mapInPandas(_probe, schema=schema)
+    if with_l2:
+        l2a = prefix_columns(df2, "l2_")
+        matched = probe_out.join(
+            F.broadcast(l2a),
+            probe_out["_l2id"] == l2a[f"l2_{id_col}"],
+            "inner",
+        ).drop("_l2id")
+    else:
+        matched = probe_out.drop("_l2id")
+    for c in df1.columns:
+        matched = matched.withColumnRenamed(c, f"l1_{c}")
+    return matched
+
+
+def _pair_pieces(
+    df1: DataFrame,
+    df2: DataFrame,
+    res: int | None,
+    geom_col: str,
+    id_col: str,
+    with_l2: bool = True,
+    self_half_uid: str | None = None,
+    broadcast: bool = True,
+    keep_empty: bool = False,
+) -> DataFrame:
+    """Every intersecting (l1, l2) candidate pair with its intersection
+    ``_piece``, on the plan ``pairing.choose("pairs", df2)`` picks: the
+    broadcast-grid probe (:func:`_broadcast_pairs_matched`) or the
+    distributed cell join + :func:`_pair_intersection_udf`. Both plans
+    return the l1_-prefixed df1 columns, the l2_-prefixed df2 columns
+    (none with ``with_l2=False``) and ``_piece``; pairs whose piece is
+    empty are dropped.
+
+    ``self_half_uid`` keeps each unordered self-pair once (uid1 < uid2),
+    before the kernel runs. ``broadcast=False`` forces the cell join.
+    ``keep_empty`` (cell join only) keeps the pairs whose piece is empty,
+    with NULL ``_piece`` — but only TRULY intersecting ones: the
+    reference's candidate SQL carries an ST_Intersects prefilter
+    (``_geoops_sql.py:1964-2006``), so bbox-only candidates are refined
+    away first. The predicate cost is only paid on that path."""
+    if not with_l2:
+        df2 = df2.select(geom_col)
+    if broadcast and not keep_empty:
+        matched = _broadcast_pairs_matched(
+            df1, df2, geom_col, id_col, with_l2=with_l2,
+            self_half_uid=self_half_uid,
+        )
+        if matched is not None:
+            return matched
+    pairs, _ = candidate_pairs(
+        df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
+    )
+    g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
+    if self_half_uid is not None:
+        pairs = pairs.where(
+            F.col(f"l1_{self_half_uid}") < F.col(f"l2_{self_half_uid}")
+        )
+    if keep_empty:
+        pairs = pairs.where(query_match_udf(_INTERSECTS)(F.col(g1), F.col(g2)))
+    out = pairs.withColumn("_piece", _pair_intersection_udf(F.col(g1), F.col(g2)))
+    if not keep_empty:
+        out = out.where(F.col("_piece").isNotNull())
+    out = drop_helper_columns(out)
+    return out if with_l2 else out.drop(g2)
+
+
+def _reverse_collect_candidates(
+    df1: DataFrame, df2: DataFrame, geom_col: str, id_col: str
+) -> DataFrame:
+    """(id, collect_list(blade geom)) — the reverse-broadcast plan of the
+    blade lists for FEW subjects vs MANY blades: only the subjects'
+    (id, bbox) rows are collected and broadcast (a few dozen bytes per
+    subject); the blade layer streams through one mapInPandas emitting
+    its matches, and only matching blades enter the (small) groupBy
+    shuffle."""
+    from pyspark.sql.types import StructField, StructType
+
+    spark = df1.sparkSession
+    pdf = (
+        df1.select(F.col(id_col).alias("_sid"), geom_col)
+        .withColumn("_b", pairing._bounds_udf(F.col(geom_col)))
+        .select("_sid", "_b.minx", "_b.miny", "_b.maxx", "_b.maxy")
+        .toPandas()
+    )
+    out_schema = StructType(
+        [
+            StructField("_sid", df1.schema[id_col].dataType),
+            StructField("_blade", BinaryType()),
+        ]
+    )
+    bb = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
+    valid = np.isfinite(bb[:, 0])
+    if not valid.any():
+        return _blade_lists(
+            spark.createDataFrame([], out_schema), "_sid", "_blade", id_col
+        )
+    bc = pairing.broadcast(
+        spark,
+        pairing.Index(
+            bb[valid], ids=pdf["_sid"].to_numpy()[valid],
+            per_extent=0.5, point_cells=256,
+        ),
+    )
+
+    def _emit(batches):
+        probe = pairing.Probe(bc)
+        for pdf2 in batches:
+            if len(pdf2) == 0:
+                continue
+            col = pdf2[geom_col].to_numpy(object)
+            # vectorized batch bounds (empty/None rows stay NaN)
+            pr, pl = probe.pairs(W.bounds_from_wkb_batch(col.tolist()))
+            if len(pr):
+                yield pd.DataFrame({"_sid": probe.ids[pl], "_blade": col[pr]})
+
+    hits = df2.select(geom_col).mapInPandas(_emit, schema=out_schema)
+    return _blade_lists(hits, "_sid", "_blade", id_col)
+
+
+def _broadcast_combine(
+    df1: DataFrame,
+    df2: DataFrame,
+    mode: str,
+    geom_col: str,
+    keep_empty_geoms: bool = False,
+) -> DataFrame:
+    """Map-side difference/clip against a SMALL blade layer (the
+    ``forward`` plan): layer 2 is grid-indexed and broadcast once
+    (``index.pairing.build``), layer 1 streams through ONE mapInPandas —
+    no candidate join, no shuffle, and no duplication of multi-KB blade
+    blobs into every candidate pair (the cell plan ships each subdivided
+    2000-coord blade part to every nearby subject row: ~40 KB x 45k rows
+    of pure serialization at 50k parcels vs 3 giant rings).
+
+    Same kernels and results as the cell plans: ``difference`` /
+    ``difference_union`` run the row combine kernel over each batch's
+    matched rows, pass non-matching rows through verbatim and drop (or
+    NULL out, under ``keep_empty_geoms``) fully-erased rows; ``clip``
+    runs the pair piece kernel over every candidate of the batch and
+    keeps each row's pieces — unioned when there is more than one —
+    dropping rows without any."""
+    spark = df1.sparkSession
+    bc = pairing.build(df2, geom_col)
+    is_diff = mode.startswith("difference")
+    if bc is None:  # empty blade layer
+        return df1 if is_diff else df1.limit(0)
+    # mapInPandas inherits the input partitioning: subjects that descend
+    # from a few huge rows (a subdivided 3-row complex layer explodes to
+    # hundreds of parts but keeps 3 partitions) would run on 3 cores —
+    # rebalance cheap subject rows across the executor width first
+    target = spark.sparkContext.defaultParallelism * 2
+    if df1.rdd.getNumPartitions() < max(2, target // 2):
+        df1 = df1.repartition(target)
+    gpos = df1.columns.index(geom_col)
+
+    def _probe(batches):
+        probe = pairing.Probe(bc)
+        memo: dict = {}
+        for pdf in batches:
+            col = pdf.iloc[:, gpos].to_numpy(object)
+            geoms, B = probe.decode(col)
+            pr, pl = probe.pairs(B)
+            blades = [probe.geom(j) for j in pl]
+            # pairs are sorted by row: one [start, end) slice per hit row
+            rows, starts = np.unique(pr, return_index=True)
+            ends = np.append(starts[1:], len(pr)).astype(np.int64)
+            if is_diff:
+                newg = col.copy()
+                keep = np.ones(len(pdf), dtype=bool)
+                results = _combine_rows(
+                    [geoms[i] for i in rows],
+                    [blades[s:e] for s, e in zip(starts, ends)],
+                    mode, memo,
+                )
+                for i, res in zip(rows, results):
+                    newg[i] = res
+                    keep[i] = res is not None or keep_empty_geoms
+            else:
+                newg = np.full(len(pdf), None, dtype=object)
+                pieces = _pieces([geoms[i] for i in pr], blades)
+                for i, s, e in zip(rows, starts, ends):
+                    got = [p for p in pieces[s:e] if p is not None]
+                    if len(got) == 1:
+                        newg[i] = W.dumps(got[0])
+                    elif got:
+                        newg[i] = _union_wkb(got)
+                keep = np.array([g is not None for g in newg], dtype=bool)
+            out = pdf.copy()
+            out.iloc[:, gpos] = newg
+            yield out[keep]
+
+    return df1.mapInPandas(_probe, schema=df1.schema)
+
+
+# ---------------------------------------------------------------- operators
+def intersection(
+    df1: DataFrame,
+    df2: DataFrame,
+    res: int | None = None,
+    geom_col: str = "geom_wkb",
+    gridsize: float = 0.0,
+    explodecollections: bool = False,
+    where_post: str | None = None,
+    subdivide_coords: int | None = None,
+    id_col: str = "fid",
+    keep_empty_geoms: bool = False,
+) -> DataFrame:
+    """Pairwise overlay intersection (geofileops ``geoops.py:2777`` ->
+    ``_geoops_sql.py:1805-2102``): one output row per intersecting
+    (l1, l2) pair carrying both sides' attributes prefixed l1_/l2_.
+
+    ``subdivide_coords``: complex geometries are first exploded into
+    parts (bounded vertex count — the reference's signature optimization
+    for huge polygons), pairwise-intersected per part on the cell join,
+    then re-unioned ``GROUP BY (l1_id, l2_id)``
+    (``_geoops_sql.py:2027-2070``)."""
+    sub = subdivide_coords is not None
+    if sub:
+        df1 = subdivide_layer(df1, subdivide_coords, geom_col)
+        df2 = subdivide_layer(df2, subdivide_coords, geom_col)
+    out = _pair_pieces(
+        df1, df2, res, geom_col, id_col, broadcast=not sub,
+        keep_empty=keep_empty_geoms,
+    )
+    out = out.withColumn(geom_col, F.col("_piece")).drop(
+        "_piece", f"l1_{geom_col}", f"l2_{geom_col}"
+    )
+    if sub:
+        # under subdivide, an all-empty pair survives as one NULL-geom row
+        out = _reunion(out, [f"l1_{id_col}", f"l2_{id_col}"], geom_col)
+    return _postprocess(
+        out, geom_col, gridsize, explodecollections, where_post, keep_empty_geoms
+    )
+
+
 def _difference_of_parts(
     s1: DataFrame,
     s2_geoms: DataFrame,
     res: int | None,
     geom_col: str,
     id_col: str,
-    gridsize: float,
-    explodecollections: bool,
-    where_post: str | None,
-    keep_empty_geoms: bool,
     _plan: str | None,
 ) -> DataFrame:
     """Subdivided difference over PRE-SPLIT inputs: ``s1`` = subject
     parts from :func:`_subdivide_subject`, ``s2_geoms`` = geometry-only
-    blade parts. Shared by :func:`difference` and
-    :func:`symmetric_difference` (which subdivides each layer once and
-    feeds it to both branches).
+    blade parts. Shared by :func:`difference` and :func:`_compose`
+    (which subdivides each layer once and feeds it to both branches).
 
     The inner call keeps fully-erased parts as NULL-geometry rows so
     the per-id re-union sees EVERY part: a row whose parts were all
-    erased survives the groupBy with NULL geometry, and the shared
-    _postprocess applies the caller's keep_empty_geoms exactly like
-    the non-subdivide branch. blade_union: the erase candidates are
+    erased survives the groupBy with NULL geometry, and the caller's
+    _postprocess applies keep_empty_geoms exactly like the
+    non-subdivide branch. blade_union: the erase candidates are
     subdivided PARTS sharing seams — union them before the (single)
     subtraction or the sequential path leaves hairline slivers along
     each seam."""
@@ -652,24 +726,7 @@ def _difference_of_parts(
         s1, s2_geoms, res=res, geom_col=geom_col, id_col="_pid",
         keep_empty_geoms=True, blade_union=True, _plan=_plan,
     ).drop("_pid")
-    # single-part subjects (every geometry under subdivide_coords —
-    # the whole layer when only the OTHER side is complex) skip the
-    # re-union: subdivide produced exactly one part, so grouping it
-    # back is the identity and the groupBy would shuffle + run one
-    # union kernel per row for nothing (measured ~50 s of the 58 s
-    # d21 stage at 500k parcels)
-    parts = cache.track(parts.persist())
-    attrs = [c for c in parts.columns if c not in (id_col, geom_col, "_nparts")]
-    singles = parts.where(F.col("_nparts") <= 1).drop("_nparts")
-    multi = parts.where(F.col("_nparts") > 1).drop("_nparts")
-    out = multi.groupBy(id_col).agg(
-        _union_parts_udf()(F.collect_list(geom_col)).alias(geom_col),
-        *[F.first(c).alias(c) for c in attrs],
-    ).unionByName(singles.select(id_col, geom_col, *attrs))
-    return _postprocess(
-        out, geom_col, gridsize, explodecollections, where_post,
-        keep_empty_geoms,
-    )
+    return _reunion(parts, [id_col], geom_col)
 
 
 def difference(
@@ -723,62 +780,48 @@ def difference(
         # difference); no part id needed — the default candidate plan
         # dedups by reference point, not by id
         s2 = subdivide_layer(df2.select(geom_col), subdivide_coords, geom_col)
-        return _difference_of_parts(
-            s1, s2, res, geom_col, id_col, gridsize, explodecollections,
-            where_post, keep_empty_geoms, _plan,
-        )
-    diff_mode = "difference_union" if blade_union else "difference"
-    if _plan == "forward":
-        out = _broadcast_combine(
-            df1, df2, diff_mode, geom_col, keep_empty_geoms
-        )
-        return _postprocess(
-            out, geom_col, gridsize, explodecollections, where_post,
-            keep_empty_geoms,
-        )
-    if _plan == "reverse":
-        others = _reverse_collect_candidates(df1, df2, geom_col, id_col)
+        out = _difference_of_parts(s1, s2, res, geom_col, id_col, _plan)
     else:
-        others = _collect_candidates(df1, df2, res, geom_col, id_col)
-    joined = df1.join(others, on=id_col, how="left")
-    if _plan == "reverse":
-        # few-subjects path: the collect_list shuffle output is only a
-        # few dozen MB, so AQE coalesces it to a handful of partitions —
-        # but each row carries a MINUTES-scale combine kernel (one giant
-        # blade union + difference per subject part). Explicit
-        # round-robin repartition (AQE never coalesces an explicit
-        # repartition) spreads the ~hundreds of kernel rows across the
-        # executor width; the shuffled bytes are trivial by construction.
-        # 16x (not 2x) the width: per-row kernel cost is heavily skewed
-        # (parts over dense blade areas cost many seconds, sparse parts
-        # milliseconds), so at ~2 rows/partition a partition holding two
-        # heavy rows serializes them — near-one-row-per-task makes the
-        # stage wall the single worst row (measured 33 s -> 26 s on the
-        # 329-part complex-difference stage at 500k; empty tasks from
-        # over-partitioning cost microseconds).
-        n = (
-            joined.sparkSession.sparkContext.defaultParallelism
-            * pairing.REVERSE_SPREAD
-        )
-        joined = joined.repartition(n)
-    # TWO branches, not a when() over the UDF: Catalyst evaluates a
-    # Python UDF inside when() for EVERY row, so the single-branch shape
-    # shipped every candidate-less subject (the vast majority when the
-    # erase layer is localized, e.g. 500k parcels vs 3 complex rings)
-    # through the Python worker just to pass its WKB back verbatim.
-    # Persisted so the lonely and hit branches share one join execution.
-    joined = cache.track(joined.persist())
-    lonely = joined.where(F.col("_others").isNull()).drop("_others")
-    hit = joined.where(F.col("_others").isNotNull()).withColumn(
-        "_diff",
-        _combine_vs_union_udf(diff_mode)(F.col(geom_col), F.col("_others")),
-    )
-    # no candidates -> pass through; candidates + empty result -> drop
-    # (DIFF_EMPTY), unless keep_empty_geoms retains them with NULL geometry
-    if not keep_empty_geoms:
-        hit = hit.where(F.col("_diff").isNotNull())
-    hit = hit.withColumn(geom_col, F.col("_diff")).drop("_diff", "_others")
-    out = lonely.unionByName(hit)
+        mode = "difference_union" if blade_union else "difference"
+        if _plan == "forward":
+            out = _broadcast_combine(df1, df2, mode, geom_col, keep_empty_geoms)
+        elif _plan == "reverse":
+            # few-subjects path: the collect_list shuffle output is only
+            # a few dozen MB, so AQE coalesces it to a handful of
+            # partitions — but each row carries a MINUTES-scale combine
+            # kernel (one giant blade union + difference per subject
+            # part). Explicit round-robin repartition (AQE never
+            # coalesces an explicit repartition) spreads the ~hundreds
+            # of kernel rows across the executor width; the shuffled
+            # bytes are trivial by construction. 16x (not 2x) the width:
+            # per-row kernel cost is heavily skewed (parts over dense
+            # blade areas cost many seconds, sparse parts milliseconds),
+            # so at ~2 rows/partition a partition holding two heavy rows
+            # serializes them — near-one-row-per-task makes the stage
+            # wall the single worst row (measured 33 s -> 26 s on the
+            # 329-part complex-difference stage at 500k; empty tasks
+            # from over-partitioning cost microseconds).
+            out = _subtract(
+                df1, _reverse_collect_candidates(df1, df2, geom_col, id_col),
+                id_col, geom_col, mode, keep_empty_geoms,
+                spread=df1.sparkSession.sparkContext.defaultParallelism
+                * pairing.REVERSE_SPREAD,
+            )
+        else:
+            # no intersects refine on the cell candidates: subtracting a
+            # disjoint blade is a no-op, and the kernel's internal bbox
+            # short-circuit costs far less than a polygon-polygon
+            # predicate per candidate pair (measured 500k parcels:
+            # difference 94 -> ~70 s)
+            pairs, _ = candidate_pairs(
+                df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
+            )
+            others = _blade_lists(
+                pairs, f"l1_{id_col}", f"l2_{geom_col}", id_col
+            )
+            out = _subtract(
+                df1, others, id_col, geom_col, mode, keep_empty_geoms
+            )
     return _postprocess(
         out, geom_col, gridsize, explodecollections, where_post, keep_empty_geoms
     )
@@ -840,253 +883,118 @@ def clip(
             if _plan == "reverse":
                 _plan = "cell"
     if subdivide_coords is not None:
-        s1 = subdivide_layer(df1, subdivide_coords, geom_col, with_pos=True)
-        s1 = s1.withColumn(
-            "_pid", F.xxhash64(F.col(id_col), F.col("_subpos"))
-        ).drop("_subpos")
+        s1 = _subdivide_subject(df1, subdivide_coords, geom_col, id_col)
         parts = clip(
-            s1, df2, res=res, geom_col=geom_col, id_col="_pid",
-            _plan=_plan,
+            s1, df2, res=res, geom_col=geom_col, id_col="_pid", _plan=_plan,
         ).drop("_pid")
-        # single-part subjects skip the re-union (see difference)
-        parts = cache.track(parts.persist())
-        attrs = [c for c in parts.columns if c not in (id_col, geom_col, "_nparts")]
-        singles = parts.where(F.col("_nparts") <= 1).drop("_nparts")
-        multi = parts.where(F.col("_nparts") > 1).drop("_nparts")
-        out = multi.groupBy(id_col).agg(
-            _union_parts_udf()(F.collect_list(geom_col)).alias(geom_col),
-            *[F.first(c).alias(c) for c in attrs],
-        ).unionByName(singles.select(id_col, geom_col, *attrs))
-        return _postprocess(out, geom_col, gridsize, explodecollections, where_post)
-    if _plan == "forward":
-        out = _broadcast_combine(df1, df2, "intersection", geom_col)
-        return _postprocess(
-            out, geom_col, gridsize, explodecollections, where_post
+        out = _reunion(parts, [id_col], geom_col)
+    elif _plan == "forward":
+        out = _broadcast_combine(df1, df2, "clip", geom_col)
+    else:
+        # l1 ∩ union(blades) = union(l1 ∩ blade_i): PAIRWISE pieces from
+        # the batched kernel, then the (small) pieces unioned per l1 row
+        # — unioning full blade polygons first paid the unbatched
+        # union_geoms kernel per candidate (measured 157 s vs 42 s at
+        # 500k parcels); pieces are ~10-vertex clips. Single-piece rows
+        # (the majority for parcel-scale inputs) skip the union kernel.
+        pieces = _pair_pieces(
+            df1.select(id_col, geom_col), df2, res, geom_col, id_col,
+            with_l2=False,
+        ).select(
+            F.col(f"l1_{id_col}").alias(id_col), F.col("_piece").alias(geom_col)
         )
-    # l1 ∩ union(blades) = union(l1 ∩ blade_i): compute PAIRWISE
-    # intersections with the batched Arrow kernel, then union the (small)
-    # result fragments per l1 row — unioning full blade polygons first
-    # paid the unbatched union_geoms kernel per candidate (measured 157 s
-    # vs 42 s at 500k parcels); fragments are ~10-vertex clips. The
-    # intersects refine is free: the pair kernel yields NULL for
-    # non-intersecting candidates.
-    slim1 = df1.select(id_col, geom_col)
-    # zero-shuffle pairing + pair kernel when the clip layer fits the
-    # broadcast budget (clip layer contributes no attributes, so the
-    # probe output is just (id, piece))
-    pieces = _broadcast_pairs_matched(
-        slim1, df2.select(geom_col), geom_col, id_col, with_l2=False
-    )
-    if pieces is None:
-        pairs, _ = candidate_pairs(
-            slim1, df2.select(geom_col), res=res,
-            geom_col1=geom_col, geom_col2=geom_col,
-        )
-        g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
-        pieces = pairs.withColumn(
-            "_piece", _pair_intersection_udf(F.col(g1), F.col(g2))
-        ).where(F.col("_piece").isNotNull())
-    grouped = cache.track(
-        pieces.groupBy(F.col(f"l1_{id_col}").alias(id_col))
-        .agg(F.collect_list("_piece").alias("_pieces"))
-        .persist()
-    )
-    # single-piece rows (the majority for parcel-scale inputs) skip the
-    # union kernel entirely: the piece is already an extracted MULTI
-    # geometry and union of one geometry is the identity. Two branches
-    # over the persisted groupBy output, NOT a when() — Catalyst pulls
-    # Python UDFs into an ArrowEvalPython node that evaluates them for
-    # EVERY row regardless of the condition
-    singles = grouped.where(F.size("_pieces") == 1).withColumn(
-        geom_col, F.element_at("_pieces", 1)
-    )
-    multi = grouped.where(F.size("_pieces") > 1).withColumn(
-        geom_col, _union_parts_udf()(F.col("_pieces"))
-    )
-    merged = singles.unionByName(multi).drop("_pieces")
-    out = df1.drop(geom_col).join(merged, on=id_col, how="inner")
-    out = out.where(F.col(geom_col).isNotNull()).select(*df1.columns)
+        merged = _reunion(pieces, [id_col], geom_col)
+        out = df1.drop(geom_col).join(merged, on=id_col, how="inner")
+        out = out.where(F.col(geom_col).isNotNull()).select(*df1.columns)
     return _postprocess(out, geom_col, gridsize, explodecollections, where_post)
 
 
-def _broadcast_pairs_matched(
-    df1: DataFrame, df2: DataFrame, geom_col: str, id_col: str,
-    with_l2: bool = True,
-    self_half_uid: str | None = None,
-) -> DataFrame | None:
-    """Zero-shuffle matched-pairs frame for the pairwise overlays — the
-    overlay twin of ``join._join_broadcast_pairs``: layer 2 is
-    grid-indexed and broadcast, layer 1 streams through ONE mapInPandas
-    that computes the pairwise intersection PIECE for every bbox
-    candidate (same kernel + extract semantics as
-    ``_pair_intersection_udf``), and l2 attributes attach via a
-    broadcast hash join on the l2 id. Replaces the cover-explode +
-    cell-shuffle candidate join for the common "both layers fit this
-    machine" benchmark shape; the distributed cell join stays the
-    default above budget.
-
-    Output: l1_-prefixed df1 columns (geometry included), l2_-prefixed
-    df2 columns (geometry included), and ``_piece``. ``with_l2=False``
-    skips the attribute join and emits only df1 columns + ``_piece``
-    (the clip shape — the clip layer contributes no attributes).
-    Returns None when layer 2 is over budget / empty / has no usable
-    int id.
-
-    ``self_half_uid``: for SELF-pairings (df1 is df2), name of the
-    int64 row-id column; candidate pairs are pre-filtered to
-    ``uid1 < uid2`` INSIDE the probe, before the intersection kernel —
-    a post-hoc ``where(l1_uid < l2_uid)`` would compute every unordered
-    pair's intersection twice and throw one away (requires
-    ``with_l2=True`` so the broadcast carries the ids)."""
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    from ..geometry.batchclip import batch_intersection
-
-    if self_half_uid is not None and not with_l2:
-        raise ValueError("self_half_uid needs with_l2=True (the layer-2 ids)")
-    if with_l2:
-        if id_col not in df2.columns or not isinstance(
-            df2.schema[id_col].dataType, (LongType, IntegerType)
-        ):
-            return None
-    if pairing.choose("pairs", df2).path != "broadcast":
-        return None
-    bc = pairing.build(df2, geom_col, id_col=id_col if with_l2 else None)
-    if bc is None:
-        return None
-
-    schema = StructType(
-        df1.schema.fields
-        + [StructField("_l2id", LongType()), StructField("_piece", BinaryType())]
-    )
-
-    def _probe(batches):
-        probe = pairing.Probe(bc)
-        ids = probe.ids
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf.assign(
-                    _l2id=pd.Series(dtype="int64"),
-                    _piece=pd.Series(dtype=object),
-                )
-                continue
-            g1s, B = probe.decode(pdf[geom_col].to_numpy(object))
-            pr, pl = probe.pairs(B)
-            if self_half_uid is not None and len(pr):
-                suid = pdf[self_half_uid].to_numpy(np.int64)
-                m = suid[pr] < ids[pl]
-                pr, pl = pr[m], pl[m]
-            if len(pr) == 0:
-                yield pdf.iloc[0:0].assign(
-                    _l2id=pd.Series(dtype="int64"),
-                    _piece=pd.Series(dtype=object),
-                )
-                continue
-            ga = [g1s[int(t)] for t in pr]
-            gb = [probe.geom(j) for j in pl]
-            inters = batch_intersection(ga, gb)
-            pieces: list = [None] * len(pr)
-            keep = np.zeros(len(pr), dtype=bool)
-            for t, (g1, g2, inter) in enumerate(zip(ga, gb, inters)):
-                prim = _min_primitive(g1, g2)
-                if prim >= 1:
-                    inter = _drop_degenerate(
-                        inter.collection_extract(prim), prim
-                    )
-                if not inter.is_empty():
-                    pieces[t] = W.dumps(inter.force_multi())
-                    keep[t] = True
-            sel = np.nonzero(keep)[0]
-            out = pdf.iloc[pr[sel]].copy()
-            out["_l2id"] = (
-                ids[pl[sel]] if ids is not None else pl[sel].astype("int64")
-            )
-            out["_piece"] = [pieces[t] for t in sel]
-            yield out
-
-    probe_out = df1.mapInPandas(_probe, schema=schema)
-    if with_l2:
-        l2a = prefix_columns(df2, "l2_")
-        matched = probe_out.join(
-            F.broadcast(l2a),
-            probe_out["_l2id"] == l2a[f"l2_{id_col}"],
-            "inner",
-        ).drop("_l2id")
-    else:
-        matched = probe_out.drop("_l2id")
-    for c in df1.columns:
-        matched = matched.withColumnRenamed(c, f"l1_{c}")
-    return matched
-
-
-def _shared_overlay_parts(
+def _compose(
     df1: DataFrame,
     df2: DataFrame,
+    need: tuple[bool, bool, bool],
     res: int | None,
     geom_col: str,
     id_col: str,
-    need: tuple[bool, bool, bool],
-):
-    """One candidate join + ONE pairwise-intersection kernel pass shared
-    by every branch of the composite overlays. Returns (inter, d12, d21)
-    DataFrames (None when not requested); the caller unions them.
+    gridsize: float,
+    explodecollections: bool,
+    where_post: str | None,
+    subdivide_coords: int | None,
+) -> DataFrame:
+    """The composite overlays as one plan: the union by name (missing
+    columns NULL) of the branches ``need`` asks for — intersection(1,2),
+    difference(1,2) with l1_-prefixed columns, difference(2,1) with
+    l2_-prefixed columns — each through the shared :func:`_postprocess`.
 
-    The single kernel pass computes the intersection PIECE for every
-    bbox-candidate pair; ``piece IS NOT NULL`` doubles as the refine
-    (a piece exists iff the pair overlaps in the common primitive), so
-    the previous separate DE-9IM refine pass is gone and the inter
-    branch is a free projection of the persisted piece. The diff sides
-    still subtract the FULL other-side geometries: subtracting the
-    pieces instead (``A \\ ∪B_i == A \\ ∪(A∩B_i)``) was measured 1.4x
-    SLOWER — a piece's boundary partially coincides with the subject's
-    own boundary by construction, which drives every subtraction into
-    the clipper's degenerate coincident-edge handling. Boundary-touch
-    -only pairs (intersects=True, piece=NULL) subtract nothing, so
-    piece-based matching leaves every branch's result identical — their
-    subjects now pass through verbatim instead of being renoded."""
-    g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
-    matched = _broadcast_pairs_matched(df1, df2, geom_col, id_col)
-    if matched is None:
-        pairs, _ = candidate_pairs(
-            df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-        )
-        matched = pairs.withColumn(
-            "_piece", _pair_intersection_udf(F.col(g1), F.col(g2))
-        ).where(F.col("_piece").isNotNull())
-    matched = cache.track(matched.persist())
+    Plain inputs: one :func:`_pair_pieces` pass is persisted and shared
+    by every branch. The inter branch is a free projection of the
+    pieces; the diff sides subtract the FULL other-side geometries of
+    the piece-bearing pairs. Subtracting the pieces instead
+    (``A \\ ∪B_i == A \\ ∪(A∩B_i)``) was measured 1.4x SLOWER — a piece's
+    boundary partially coincides with the subject's own boundary by
+    construction, which drives every subtraction into the clipper's
+    degenerate coincident-edge handling. Boundary-touch-only pairs
+    (piece NULL) subtract nothing, so their subjects pass through
+    verbatim.
 
+    ``subdivide_coords``: the branches run like the reference's
+    sequential plan over subdivided inputs (``_geoops_sql.py:2770,2931,
+    3107``), each bounding its per-pair kernel cost independently. Each
+    layer is subdivided ONCE and reused by both difference branches: as
+    the subject directly, as the blade via a geometry-only projection.
+    Finer-than-asked blade parts are harmless — blade_union welds the
+    candidates back together before the single subtraction. The
+    intersection branch keeps its own subdivide (its parts carry
+    attributes and re-union per pair, a different shape)."""
     inter = d12 = d21 = None
-    if need[0]:
-        inter = matched.withColumn(geom_col, F.col("_piece"))
-        inter = drop_helper_columns(inter).drop(g1, g2, "_piece")
-
-    def _diff_side(base: DataFrame, key: str, other_geom: str) -> DataFrame:
-        cands = matched.groupBy(F.col(key).alias(id_col)).agg(
-            F.collect_list(F.col(other_geom)).alias("_others")
+    if subdivide_coords is None:
+        matched = cache.track(_pair_pieces(df1, df2, res, geom_col, id_col).persist())
+        g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
+        if need[0]:
+            inter = matched.withColumn(geom_col, F.col("_piece")).drop(g1, g2, "_piece")
+        if need[1]:
+            d12 = _subtract(
+                df1, _blade_lists(matched, f"l1_{id_col}", g2, id_col),
+                id_col, geom_col, "difference",
+            )
+        if need[2]:
+            d21 = _subtract(
+                df2, _blade_lists(matched, f"l2_{id_col}", g1, id_col),
+                id_col, geom_col, "difference",
+            )
+    else:
+        if need[0]:
+            inter = intersection(
+                df1, df2, res=res, geom_col=geom_col, id_col=id_col,
+                subdivide_coords=subdivide_coords,
+            )
+        s1, s2 = (
+            cache.track(
+                _subdivide_subject(df, subdivide_coords, geom_col, id_col).persist()
+            )
+            for df in (df1, df2)
         )
-        # lonely/hit branch split (same rationale as difference()'s
-        # tail): a when() over the UDF ships every candidate-less row
-        # through the Python worker; persisted so both branches share
-        # one join execution
-        joined = cache.track(base.join(cands, on=id_col, how="left").persist())
-        lonely = joined.where(F.col("_others").isNull()).drop("_others")
-        hit = joined.where(F.col("_others").isNotNull()).withColumn(
-            "_diff",
-            _combine_vs_union_udf("difference")(F.col(geom_col), F.col("_others")),
-        )
-        hit = (
-            hit.where(F.col("_diff").isNotNull())
-            .withColumn(geom_col, F.col("_diff"))
-            .drop("_diff", "_others")
-        )
-        return lonely.unionByName(hit)
-
-    if need[1]:
-        d12 = _diff_side(df1, f"l1_{id_col}", g2)
-    if need[2]:
-        d21 = _diff_side(df2, f"l2_{id_col}", g1)
-    return inter, d12, d21
+        # plan per branch, decided on the RAW scans (the subdivided
+        # frames hide size statistics from Catalyst's estimator)
+        if need[1]:
+            d12 = _difference_of_parts(
+                s1, s2.select(geom_col), res, geom_col, id_col,
+                pairing.choose("combine", df2, df1).path,
+            )
+        if need[2]:
+            d21 = _difference_of_parts(
+                s2, s1.select(geom_col), res, geom_col, id_col,
+                pairing.choose("combine", df1, df2).path,
+            )
+    out = None
+    for branch, prefix in ((inter, None), (d12, "l1_"), (d21, "l2_")):
+        if branch is None:
+            continue
+        branch = _postprocess(branch, geom_col, gridsize, explodecollections, where_post)
+        if prefix:
+            branch = prefix_columns(branch, prefix, exclude=(geom_col,))
+        out = branch if out is None else out.unionByName(branch, allowMissingColumns=True)
+    return out
 
 
 def identity(
@@ -1102,31 +1010,11 @@ def identity(
 ) -> DataFrame:
     """intersection(1,2) ⊎ difference(1,2) (geofileops ``geoops.py:2525``
     -> ``_geoops_sql.py:2752-2911``). L2 columns NULL on difference rows.
-    Both branches share one candidate join + refine.
-
-    ``subdivide_coords``: composes the two subdivided branch ops like the
-    reference's sequential plan (``_geoops_sql.py:2770,2833-2880``) —
-    each branch bounds its per-pair kernel cost independently."""
-    if subdivide_coords is not None:
-        inter = intersection(
-            df1, df2, res=res, geom_col=geom_col, id_col=id_col,
-            gridsize=gridsize, explodecollections=explodecollections,
-            where_post=where_post, subdivide_coords=subdivide_coords,
-        )
-        d12 = difference(
-            df1, df2, res=res, geom_col=geom_col, id_col=id_col,
-            gridsize=gridsize, explodecollections=explodecollections,
-            where_post=where_post, subdivide_coords=subdivide_coords,
-        )
-        d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
-        return inter.unionByName(d12, allowMissingColumns=True)
-    inter, d12, _ = _shared_overlay_parts(
-        df1, df2, res, geom_col, id_col, (True, True, False)
+    Both branches share one pair-pieces pass (see :func:`_compose`)."""
+    return _compose(
+        df1, df2, (True, True, False), res, geom_col, id_col, gridsize,
+        explodecollections, where_post, subdivide_coords,
     )
-    inter = _postprocess(inter, geom_col, gridsize, explodecollections, where_post)
-    d12 = _postprocess(d12, geom_col, gridsize, explodecollections, where_post)
-    d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
-    return inter.unionByName(d12, allowMissingColumns=True)
 
 
 def symmetric_difference(
@@ -1142,47 +1030,12 @@ def symmetric_difference(
 ) -> DataFrame:
     """difference(1,2) ⊎ difference(2,1) with the other side's columns
     NULL-filled (geofileops ``geoops.py:3544`` -> ``_geoops_sql.py:
-    2914-3086``). Both branches share one candidate join + refine.
-
-    ``subdivide_coords``: two subdivided ``difference`` branches exactly
-    like the reference's Step 2/3 plan (``_geoops_sql.py:2931,2999-3047``
-    — it differences subdivided temp layers then appends), but each
-    layer is subdivided ONCE and reused by both branches: as the subject
-    directly, as the blade via a geometry-only projection. Finer-than-
-    asked blade parts are harmless — blade_union welds the candidates
-    back together before the single subtraction. Previously each
-    ``difference`` call re-subdivided both layers (4 explode passes per
-    symdiff, the complex layer's multi-second ring clip paid twice)."""
-    if subdivide_coords is not None:
-        s1 = cache.track(
-            _subdivide_subject(df1, subdivide_coords, geom_col, id_col).persist()
-        )
-        s2 = cache.track(
-            _subdivide_subject(df2, subdivide_coords, geom_col, id_col).persist()
-        )
-        # plan per branch, decided on the RAW scans (the subdivided
-        # frames hide size statistics from Catalyst's estimator)
-        d12 = _difference_of_parts(
-            s1, s2.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False,
-            pairing.choose("combine", df2, df1).path,
-        )
-        d21 = _difference_of_parts(
-            s2, s1.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False,
-            pairing.choose("combine", df1, df2).path,
-        )
-        d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
-        d21 = prefix_columns(d21, "l2_", exclude=(geom_col,))
-        return d12.unionByName(d21, allowMissingColumns=True)
-    _, d12, d21 = _shared_overlay_parts(
-        df1, df2, res, geom_col, id_col, (False, True, True)
+    2914-3086``). Both branches share one pair-pieces pass (see
+    :func:`_compose`)."""
+    return _compose(
+        df1, df2, (False, True, True), res, geom_col, id_col, gridsize,
+        explodecollections, where_post, subdivide_coords,
     )
-    d12 = _postprocess(d12, geom_col, gridsize, explodecollections, where_post)
-    d21 = _postprocess(d21, geom_col, gridsize, explodecollections, where_post)
-    d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
-    d21 = prefix_columns(d21, "l2_", exclude=(geom_col,))
-    return d12.unionByName(d21, allowMissingColumns=True)
 
 
 def union(
@@ -1198,52 +1051,10 @@ def union(
 ) -> DataFrame:
     """Overlay union = intersection(1,2) ⊎ difference(1,2) ⊎
     difference(2,1) (geofileops ``geoops.py:3695`` -> ``_geoops_sql.py:
-    3089-3292``). The reference runs the three ops sequentially over
-    shared subdivided inputs; here all three branches share ONE candidate
-    join + intersects refine (the matched pairs are persisted and reused
-    — previously each branch re-ran the cover UDFs and refine).
-
-    ``subdivide_coords``: composes the three subdivided branch ops like
-    the reference's sequential plan (``_geoops_sql.py:3107,3180-3250``);
-    the two difference branches share one subdivide per layer (see
-    :func:`symmetric_difference`). The intersection branch keeps its own
-    (its parts carry attributes and re-union per pair, a different
-    shape)."""
-    if subdivide_coords is not None:
-        inter = intersection(
-            df1, df2, res=res, geom_col=geom_col, id_col=id_col,
-            gridsize=gridsize, explodecollections=explodecollections,
-            where_post=where_post, subdivide_coords=subdivide_coords,
-        )
-        s1 = cache.track(
-            _subdivide_subject(df1, subdivide_coords, geom_col, id_col).persist()
-        )
-        s2 = cache.track(
-            _subdivide_subject(df2, subdivide_coords, geom_col, id_col).persist()
-        )
-        d12 = _difference_of_parts(
-            s1, s2.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False,
-            pairing.choose("combine", df2, df1).path,
-        )
-        d21 = _difference_of_parts(
-            s2, s1.select(geom_col), res, geom_col, id_col, gridsize,
-            explodecollections, where_post, False,
-            pairing.choose("combine", df1, df2).path,
-        )
-        d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
-        d21 = prefix_columns(d21, "l2_", exclude=(geom_col,))
-        return inter.unionByName(d12, allowMissingColumns=True).unionByName(
-            d21, allowMissingColumns=True
-        )
-    inter, d12, d21 = _shared_overlay_parts(
-        df1, df2, res, geom_col, id_col, (True, True, True)
-    )
-    inter = _postprocess(inter, geom_col, gridsize, explodecollections, where_post)
-    d12 = _postprocess(d12, geom_col, gridsize, explodecollections, where_post)
-    d21 = _postprocess(d21, geom_col, gridsize, explodecollections, where_post)
-    d12 = prefix_columns(d12, "l1_", exclude=(geom_col,))
-    d21 = prefix_columns(d21, "l2_", exclude=(geom_col,))
-    return inter.unionByName(d12, allowMissingColumns=True).unionByName(
-        d21, allowMissingColumns=True
+    3089-3292``). The reference runs the three ops sequentially; here
+    all three branches share ONE pair-pieces pass (see
+    :func:`_compose`)."""
+    return _compose(
+        df1, df2, (True, True, True), res, geom_col, id_col, gridsize,
+        explodecollections, where_post, subdivide_coords,
     )

@@ -16,7 +16,7 @@ from __future__ import annotations
 import re
 from collections.abc import Callable
 
-from ..geometry.predicates import relate_match
+from ..geometry.predicates import PREDICATE_FNS, relate_match
 
 NAMED_SPATIAL_RELATIONS = {
     "disjoint": ["FF*FF****"],
@@ -53,6 +53,17 @@ class SpatialQuery:
         if not self.query:
             return True
         return self._fn(matrix)
+
+    @property
+    def simple(self) -> tuple[str, bool] | None:
+        """``(predicate, want)`` when the query is one term
+        ``<predicate> is True|False`` over a named predicate, else None
+        (the reference's optimize_simple_queries,
+        ``_geoops_sql.py:2398-2445``)."""
+        q = self.query.lower().split()
+        if len(q) == 3 and q[0] in PREDICATE_FNS and q[1] == "is":
+            return q[0], q[2] == "true"
+        return None
 
     def avoid_disjoint(self) -> "SpatialQuery":
         """Force 'and intersects is True' when the query would match

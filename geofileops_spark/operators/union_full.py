@@ -41,6 +41,7 @@ from .. import cache
 from ..geometry import wkb as W
 from .celljoin import candidate_pairs
 from .join import delete_duplicate_geometries, query_match_udf
+from .overlay import _pair_pieces, _subtract
 from .relation import SpatialQuery
 
 _INTERSECTS = SpatialQuery("intersects is True")
@@ -289,42 +290,6 @@ def _attach_hits_fast(
     return slim.mapInPandas(_probe, schema=out_schema)
 
 
-def _overlap_half_pairs(cur: DataFrame, geom_col: str, res: int | None) -> DataFrame:
-    """Each unordered candidate self-pair ONCE (l1__uid < l2__uid) with
-    its area-positive intersection in ``_inter`` — the intersection IS
-    the overlap test (``_pair_intersection_udf`` extracts the polygon
-    primitive and returns NULL when empty), so one kernel call per pair
-    serves both the partner detection and the next pass's input. The
-    previous shape ran a full intersection per DIRECTED pair for a
-    boolean and then recomputed the geometry for the kept half — 3x the
-    kernel work per pass."""
-    from .overlay import _broadcast_pairs_matched, _pair_intersection_udf
-
-    # zero-shuffle broadcast-grid pairing + fused pair kernel when the
-    # working set fits the broadcast budget (checkpointed frames report
-    # accurate stats); the distributed cell join stays the fallback.
-    # self_half_uid drops the uid1 >= uid2 candidates INSIDE the probe,
-    # before the intersection kernel — the previous post-hoc where()
-    # computed every unordered pair's intersection twice (once per
-    # orientation) and discarded one: half the pass-0 kernel work.
-    matched = _broadcast_pairs_matched(
-        cur, cur, geom_col, "_uid", self_half_uid="_uid"
-    )
-    if matched is not None:
-        return matched.withColumnRenamed("_piece", "_inter")
-    pairs, _ = candidate_pairs(
-        cur, cur, res=res, geom_col1=geom_col, geom_col2=geom_col,
-    )
-    half = pairs.where(F.col("l1__uid") < F.col("l2__uid"))
-    half = half.withColumn(
-        "_inter",
-        _pair_intersection_udf(
-            F.col(f"l1_{geom_col}"), F.col(f"l2_{geom_col}")
-        ),
-    )
-    return half.where(F.col("_inter").isNotNull())
-
-
 def union_full_self(
     df: DataFrame,
     agg_shape: str = "LISTS",
@@ -382,9 +347,14 @@ def union_full_self(
                 f"union_full_self: overlap depth exceeds max_passes="
                 f"{max_passes}; pieces remain undecomposed"
             )
-        # one intersection kernel per unordered pair, materialized once
-        # and consumed by BOTH the partner lists and the next-pass input
-        half = cache.local_checkpoint(_overlap_half_pairs(cur, geom_col, res))
+        # one piece kernel call per UNORDERED pair (self_half_uid drops
+        # the uid1 >= uid2 candidates before the kernel runs), materialized
+        # once: the piece IS the overlap test — NULL when the pair shares
+        # no area — and is consumed by BOTH the partner lists and the
+        # next-pass input
+        half = cache.local_checkpoint(
+            _pair_pieces(cur, cur, res, geom_col, "_uid", self_half_uid="_uid")
+        )
         partners = (
             half.select(
                 F.col("l1__uid").alias("_uid"),
@@ -399,37 +369,15 @@ def union_full_self(
             .groupBy("_uid")
             .agg(F.collect_list("_pg").alias("_others"))
         )
-        # both face branches below consume the join — persist so the
-        # partner aggregation runs once, not once per branch
-        joined = cache.track(cur.join(partners, on="_uid", how="left").persist())
-
-        # lonely rows + (row minus partners) -> faces. TWO branches, not
-        # a when() over the UDF: Catalyst pulls Python UDFs into an
-        # ArrowEvalPython node that evaluates them for EVERY row
-        # regardless of the condition, so the single-branch shape shipped
-        # all ~500k subjects (89% partner-less on the parcels bench)
-        # through the Python worker to pass most of them back verbatim.
-        from .overlay import _combine_vs_union_udf
-
-        lonely = joined.where(F.col("_others").isNull()).select(
-            F.col(geom_col)
-        )
-        diffed = joined.where(F.col("_others").isNotNull()).withColumn(
-            "_face",
-            _combine_vs_union_udf("difference")(
-                F.col(geom_col), F.col("_others")
-            ),
-        )
-        new_faces = lonely.unionByName(
-            diffed.where(F.col("_face").isNotNull()).select(
-                F.col("_face").alias(geom_col)
-            )
-        )
+        # lonely rows + (row minus partners) -> faces
+        new_faces = _subtract(
+            cur, partners, "_uid", geom_col, "difference"
+        ).select(geom_col)
         faces = new_faces if faces is None else faces.unionByName(new_faces)
 
         # the already-computed pairwise intersections, deduped by
         # normalized geometry -> next pass input
-        inters = half.select(F.col("_inter").alias(geom_col))
+        inters = half.select(F.col("_piece").alias(geom_col))
         inters = delete_duplicate_geometries(inters, geom_col=geom_col)
         cur = inters.select(
             F.monotonically_increasing_id().alias("_uid"), geom_col

@@ -1,9 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
-Single place where engine-relevant Spark conf lives, so tests, bench.py
-and the driver entry all run the same way. Designed for a multi-executor
-cluster (AQE on, skew-join handling on, Arrow batching for the geometry
-UDFs); tested on local[N].
+Single place where engine-relevant Spark conf lives, so tests, the
+benchmark (perfbench/) and the driver entry all run the same way.
+Designed for a multi-executor cluster (AQE on, skew-join handling on,
+Arrow batching for the geometry UDFs); tested on local[N].
 """
 
 from __future__ import annotations

@@ -18,8 +18,9 @@ same row count with reference-hard geometry:
   ("municipalities") for dissolve groupby.
 
 Generation is distributed (mapInPandas over ``spark.range``) and is NOT
-part of any timed benchmark — bench.py materializes the layers to
-parquet once, like the reference pre-builds its input GeoPackage.
+part of any timed benchmark — callers materialize the layers to parquet
+once (:func:`materialize_parcels`), like the reference pre-builds its input
+GeoPackage.
 """
 
 from __future__ import annotations

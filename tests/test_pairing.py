@@ -43,6 +43,30 @@ def layers(spark):
         df.unpersist(blocking=True)
 
 
+@pytest.fixture(scope="module")
+def blobs(spark):
+    """Four 200-vertex near-circles over the parcels: complex enough that
+    ``subdivide_coords=SUBDIVIDE`` splits every one into parts."""
+    from geofileops_spark.functions.st import st_geomfromtext
+
+    rows = []
+    for i, (cx, cy) in enumerate(((900, 900), (2600, 2500), (3600, 1100), (1500, 3800))):
+        a = np.linspace(0, 2 * np.pi, 200, endpoint=False)
+        r = 420 * (1 + 0.05 * np.sin(7 * a))
+        pts = [(cx + r[k] * np.cos(a[k]), cy + r[k] * np.sin(a[k])) for k in range(200)]
+        wkt = "POLYGON ((" + ", ".join(f"{x:.6f} {y:.6f}" for x, y in pts + pts[:1]) + "))"
+        rows.append((i, wkt))
+    df = spark.createDataFrame(rows, "fid long, wkt string").withColumn(
+        "geom_wkb", st_geomfromtext(F.col("wkt"))
+    ).drop("wkt").cache()
+    df.count()
+    yield df
+    df.unpersist(blocking=True)
+
+
+SUBDIVIDE = 64
+
+
 def irregular_polygons(spark, n: int, seed: int = 5):
     """``n`` random triangles (never rectangles) with long ids."""
     from geofileops_spark.functions.st import st_geomfromtext
@@ -193,17 +217,32 @@ PATHS = [
     ("symmetric_difference", ("parcels", "zones"), ("default", "cell"), ("pairs", "broadcast")),
     ("union", ("parcels", "zones"), ("default", "cell"), ("pairs", "broadcast")),
     ("export_by_location", ("parcels", "zones"), ("default", "cell"), ("pairs", "broadcast")),
+    ("union_full_self", ("parcels", "parcels"), ("default", "cell"), ("pairs", "broadcast")),
+    ("difference_subdivided", ("blobs", "parcels"), ("default", "cell"), ("combine", "forward")),
 ]
+
+
+def run_op(op, df1, df2):
+    if op == "export_by_location":
+        return J.export_by_location(df1, df2)
+    if op == "union_full_self":
+        from geofileops_spark.operators.union_full import union_full_self
+
+        return union_full_self(df1.select("fid", "geom_wkb"))
+    if op == "difference_subdivided":
+        return O.difference(df1, df2, subdivide_coords=SUBDIVIDE)
+    return getattr(O, op)(df1, df2)
 
 
 @pytest.mark.parametrize(
     "op,sides,paths,default_path", PATHS,
     ids=[f"{p[0]}-{p[1][0]}" for p in PATHS],
 )
-def test_every_path_gives_the_same_rows(layers, monkeypatch, op, sides, paths, default_path):
-    named = dict(zip(("parcels", "zones", "points"), layers))
+def test_every_path_gives_the_same_rows(
+    layers, blobs, monkeypatch, op, sides, paths, default_path
+):
+    named = dict(zip(("parcels", "zones", "points"), layers), blobs=blobs)
     df1, df2 = named[sides[0]], named[sides[1]]
-    fn = getattr(J if op == "export_by_location" else O, op)
     results = {}
     for path in paths:
         monkeypatch.setattr(pairing, "BROADCAST_BYTES", budget_for(path, layers[1]))
@@ -215,7 +254,7 @@ def test_every_path_gives_the_same_rows(layers, monkeypatch, op, sides, paths, d
             assert d.path == "cell" and pairing.choose("pairs", df2).path == "broadcast"
         else:
             assert d.path == "cell" and pairing.choose("pairs", df2).path == "cell"
-        results[path] = norm(fn(df1, df2))
+        results[path] = norm(run_op(op, df1, df2))
     first = results[paths[0]]
     assert len(first) > 0
     for path in paths[1:]:
@@ -241,12 +280,13 @@ def test_points_in_100_irregular_polygons_grid_probe(spark):
 
 
 # ------------------------------------------------------- long session
-def test_long_session_releases_every_broadcast(spark, layers, monkeypatch):
+def test_long_session_releases_every_broadcast(spark, layers, blobs, monkeypatch):
     """Every public pairwise operator, three times each in one session:
     after release_caches() every broadcast made was released and no RDD
     the operators persisted or checkpointed is left in executor storage."""
     from pyspark import Broadcast, SparkContext
 
+    from geofileops_spark.operators.dissolve import dissolve_within_distance
     from geofileops_spark.operators.union_full import union_full_self
 
     parcels, zones, points = layers
@@ -289,6 +329,12 @@ def test_long_session_releases_every_broadcast(spark, layers, monkeypatch):
         lambda: J.join_nearest(points, zones, nb_nearest=1, distance=500.0),
         lambda: union_full_self(parcels.select("fid", "geom_wkb")),
         lambda: J.join_points_in_polygons(pts, polys, "lon", "lat", "fid"),
+        lambda: O.identity(parcels, zones),
+        lambda: O.symmetric_difference(parcels, zones),
+        lambda: O.union(parcels, zones),
+        lambda: O.difference(blobs, parcels, subdivide_coords=SUBDIVIDE),
+        lambda: O.intersection(blobs, parcels, subdivide_coords=SUBDIVIDE),
+        lambda: dissolve_within_distance(zones.where("fid = 4").select("geom_wkb"), 10.0),
     ]
     for _ in range(3):
         for run in runs:

@@ -458,6 +458,27 @@ def test_dup_clusters_deep_chain_pointer_doubling(spark):
     assert set(labels.values()) == {0}
 
 
+def test_dup_clusters_keeps_only_its_last_round_in_storage(spark):
+    """Each round's local checkpoint is freed once the next round is
+    materialized; the last one, which the result reads, is freed by
+    release_caches()."""
+    from geofileops_spark import cache
+
+    def stored():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    cache.release_caches()
+    before = stored()
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "id_a long, id_b long"
+    )
+    comp = DD.dup_clusters(chain)
+    assert len(stored() - before) == 1
+    assert {r["cluster_id"] for r in comp.collect()} == {0}
+    cache.release_caches()
+    assert stored() == before
+
+
 def test_ivf_centroid_training_spread(spark):
     # corpus clustered by partition: partition 0 holds ONLY cluster-A
     # vectors, partition 1 only cluster-B. A head-biased limit() sample
