@@ -66,7 +66,7 @@ def classify_wkb_batch(blobs):
     (-1 for big-endian / too-short blobs, which callers must route to
     the generic per-row path). ``blobs`` must be non-None bytes."""
     n = len(blobs)
-    lens = np.fromiter((len(b) for b in blobs), dtype=np.int64, count=n)
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=n)
     joined = b"".join(blobs)
     u8 = np.frombuffer(joined, dtype=np.uint8)
     offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
@@ -119,19 +119,19 @@ def bounds_from_wkb_batch(blobs):
     nn_idx = np.nonzero(notnull)[0]
     if len(nn_idx) == 0:
         return out
-    nb = [bytes(blobs[i]) for i in nn_idx]
+    nb = [bytes(b) for b in blobs if b is not None]
     joined, offs, lens, typ = classify_wkb_batch(nb)
     u8 = np.frombuffer(joined, dtype=np.uint8)
 
-    # POINT: fixed 21-byte layout
+    # POINT: fixed 21-byte layout; x and y are the 16 bytes after the
+    # header, gathered column by column from the joined buffer
     is_pt = (typ == POINT) & (lens == 21)
     if is_pt.any():
-        pt_j = np.nonzero(is_pt)[0]
-        xy = _slice_f8(
-            nb, pt_j,
-            np.full(len(pt_j), 5, dtype=np.int64),
-            np.full(len(pt_j), 16, dtype=np.int64),
-        ).reshape(-1, 2)
+        o = offs[is_pt] + 5
+        raw = np.empty((len(o), 16), dtype=np.uint8)
+        for k in range(16):
+            raw[:, k] = u8[o + k]
+        xy = raw.view("<f8")
         rows = nn_idx[is_pt]
         out[rows, 0] = xy[:, 0]
         out[rows, 1] = xy[:, 1]

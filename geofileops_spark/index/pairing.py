@@ -11,14 +11,21 @@ through this module:
 - :class:`Index` is the broadcast value: a flat sorted grid over the
   build rows' bboxes, optionally with their WKBs packed into one buffer
   and their ids;
-- :func:`build` collects, indexes and broadcasts layer 2 of a pairwise
-  operator, reusing the broadcast for repeat calls on the same plan;
+- :func:`build` collects layer 2 of a pairwise operator in one
+  JVM-only Arrow collect bounded at ``MAX_ROWS + 1`` rows, computes its
+  bboxes on the driver, indexes and broadcasts it (or answers
+  :data:`OVER_CAP`), reusing the result for repeat calls on the same
+  plan;
 - :func:`broadcast` is the one ``sparkContext.broadcast`` of the
   pairing paths; ``cache.release_caches()`` releases everything it made;
 - :class:`Probe` is the per-task side: candidates for a batch of stream
   bboxes and a decode cache over the build geometries;
 - :func:`choose` decides between the broadcast shapes and the
   distributed cell join from one byte budget, ``GFO_BROADCAST_BYTES``.
+
+A broadcast-probe job thus runs one Python stage, the probe: the build
+side crosses no Python UDF (each such stage costs a fixed fraction of
+a second before its first batch) and is not counted first.
 """
 
 from __future__ import annotations
@@ -35,7 +42,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .. import cache
-from ..geometry import kernels as K
 from ..geometry import wkb as W
 
 _log = logging.getLogger(__name__)
@@ -45,7 +51,8 @@ _log = logging.getLogger(__name__)
 # fixed shares of it.
 BROADCAST_BYTES = int(os.environ.get("GFO_BROADCAST_BYTES", str(256 << 20)))
 # Rows of a broadcast side: a byte budget alone under-guards point
-# layers (tiny rows), and the driver-side grid build is O(rows).
+# layers (tiny rows), and the driver-side grid build is O(rows). build()
+# bounds its collect by it; choose() guards the knn/sphere collects.
 MAX_ROWS = 4_000_000
 # Partitions per core for the reverse combine's kernel rows (see
 # overlay.difference).
@@ -60,8 +67,11 @@ class Decision:
     ``path`` is ``broadcast`` (layer 2 broadcast, layer 1 streamed),
     ``forward`` / ``reverse`` (the blade-combine broadcast of layer 2 /
     of the subjects' bboxes) or ``cell`` (the distributed cell join).
-    ``scan_bytes`` and ``rows`` describe the side the path broadcasts
-    (``rows`` is None when no count was needed)."""
+    ``scan_bytes`` and ``rows`` describe the side the path broadcasts.
+    ``rows`` is the count of ``knn`` / ``sphere``; :func:`build`'s
+    over-cap record gives the rows its bounded collect returned,
+    ``MAX_ROWS + 1``, a lower bound; it is None everywhere else (no
+    count is run)."""
 
     path: str
     scan_bytes: int | None
@@ -88,7 +98,8 @@ def choose(shape: str, build: DataFrame, stream: DataFrame | None = None) -> Dec
 
     - ``pairs``: layer 2 is grid-indexed and probed by layer 1 (the
       location joins, the overlay pairs). Broadcast when it scans within
-      the budget and has at most ``MAX_ROWS`` rows.
+      the budget; the ``MAX_ROWS`` cap is enforced by :func:`build`'s
+      bounded collect, which answers :data:`OVER_CAP` past it.
     - ``knn``: every task scans all of layer 2 (join_nearest), so it
       gets an eighth of the budget and half the rows.
     - ``sphere``: the haversine probe of export_by_distance has no cell
@@ -100,9 +111,10 @@ def choose(shape: str, build: DataFrame, stream: DataFrame | None = None) -> Dec
       quarter of the budget and scan at most a quarter of the subjects
       (or fit a sixteenth of it outright); otherwise ``cell``.
 
-    Only ``pairs`` and ``knn`` count rows, and only once the bytes fit:
-    Catalyst sizes UDF-built binary columns at ~100 B/row, so the count
-    keeps a byte misestimate from collecting a huge layer."""
+    Only ``knn`` (once the bytes fit) and ``sphere`` count rows: they
+    do not collect through :func:`build`, and Catalyst sizes UDF-built
+    binary columns at ~100 B/row, so the count keeps a byte misestimate
+    from collecting a huge layer. ``pairs`` runs no Spark job."""
     budget = BROADCAST_BYTES
     s2 = scan_size_bytes(build)
     if shape == "sphere":
@@ -124,14 +136,15 @@ def choose(shape: str, build: DataFrame, stream: DataFrame | None = None) -> Dec
         else:
             d = Decision("cell", s2, None, budget, f"comparable sizes ({sizes})")
     elif shape in ("pairs", "knn"):
-        byte_cap, row_cap = (
-            (budget, MAX_ROWS) if shape == "pairs" else (budget // 8, MAX_ROWS // 2)
-        )
+        byte_cap = budget if shape == "pairs" else budget // 8
         if s2 is None or s2 <= 0:
             d = Decision("cell", s2, None, budget, "no size estimate")
         elif s2 > byte_cap:
             d = Decision("cell", s2, None, budget, f"{s2} B > {byte_cap} B")
+        elif shape == "pairs":
+            d = Decision("broadcast", s2, None, budget, f"{s2} B <= {byte_cap} B")
         else:
+            row_cap = MAX_ROWS // 2
             rows = build.count()
             if rows > row_cap:
                 d = Decision("cell", s2, rows, budget, f"{rows} rows > {row_cap}")
@@ -154,7 +167,9 @@ _BOUNDS_SCHEMA = StructType(
 @pandas_udf(_BOUNDS_SCHEMA)
 def _bounds_udf(wkb: pd.Series) -> pd.DataFrame:
     # whole-batch vectorized decode (bit-identical to per-row
-    # loads+bounds; corrupt rows yield NaN like before)
+    # loads+bounds; corrupt rows yield NaN like before). One caller:
+    # overlay._reverse_collect_candidates, which collects only the
+    # subjects' bboxes, never their WKBs.
     bb = W.bounds_from_wkb_batch(wkb.tolist())
     return pd.DataFrame(
         {"minx": bb[:, 0], "miny": bb[:, 1], "maxx": bb[:, 2],
@@ -309,52 +324,62 @@ def broadcast(spark, value):
     return bc
 
 
-# one (layer-2 plan, geom col, id col) -> built grid broadcast; repeat
-# probes of the same layer (common: several export/extract calls
+# build()'s answer for a layer 2 with more than MAX_ROWS rows: the
+# caller takes the distributed cell plan
+OVER_CAP = object()
+
+# one (layer-2 plan, geom col, id col, row cap) -> build() result;
+# repeat probes of the same layer (common: several export/extract calls
 # against one registry) skip the collect+index+broadcast build (~60% of
 # a warm call at 500k rows). Released via cache.release_caches().
 _GRID_CACHE: dict = {}
 
 
 def build(df: DataFrame, geom_col: str, id_col: str | None = None):
-    """Collect, grid-index and broadcast layer 2 (or reuse the broadcast
-    of the same plan). Returns the Broadcast of an :class:`Index` with
-    WKBs, or None when layer 2 has no valid geometry. With ``id_col``
-    the index carries the int64 ids (the pairs paths attach layer-2
-    attributes by them); a NULL id also returns None, so the caller
-    takes the distributed plan."""
+    """Collect, grid-index and broadcast layer 2 (or reuse the result of
+    the same plan). Returns the Broadcast of an :class:`Index` with
+    WKBs, :data:`OVER_CAP` when layer 2 has more than ``MAX_ROWS`` rows,
+    or None when it has no valid geometry. With ``id_col`` the index
+    carries the int64 ids (the pairs paths attach layer-2 attributes by
+    them); a NULL id also returns None, so the caller takes the
+    distributed plan.
+
+    The collect is ONE JVM-only Arrow collect of ``(geom[, id])``
+    bounded at ``MAX_ROWS + 1`` rows, so the row cap costs no count.
+    The bboxes come from the driver-side whole-batch decode
+    (``W.bounds_from_wkb_batch``, the same function :func:`_bounds_udf`
+    runs), so no Python stage runs before the probe. An over-cap result
+    is logged as a ``cell`` :class:`Decision`."""
     try:
-        key = (df.semanticHash(), geom_col, id_col)
+        key = (df.semanticHash(), geom_col, id_col, MAX_ROWS)
     except Exception:  # pragma: no cover - exotic plans
         key = None
     if key is not None and key in _GRID_CACHE:
         return _GRID_CACHE[key]
-    sel = [
-        _bounds_udf(F.col(geom_col)).alias("_b"),
-        F.col(geom_col).alias("_wkb"),
-    ]
+    sel = [F.col(geom_col).alias("_wkb")]
     if id_col is not None:
         sel.append(F.col(id_col).cast("long").alias("_id"))
-    pdf = (
-        df.select(*sel)
-        .select(
-            "_b.minx", "_b.miny", "_b.maxx", "_b.maxy", "_wkb",
-            *(["_id"] if id_col is not None else []),
+    pdf = df.select(*sel).limit(MAX_ROWS + 1).toPandas()
+    if len(pdf) > MAX_ROWS:
+        d = Decision(
+            "cell", scan_size_bytes(df), len(pdf), BROADCAST_BYTES,
+            f"more than {MAX_ROWS} rows",
         )
-        .toPandas()
-    )
-    bb = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-    valid = np.isfinite(bb[:, 0])
-    ids = pdf["_id"][valid] if id_col is not None else None
-    if not valid.any() or (ids is not None and ids.isna().any()):
-        bc = None
+        _log.debug("pairing build: %s", d)
+        bc = OVER_CAP
     else:
-        index = Index(
-            bb[valid],
-            wkbs=pdf["_wkb"].to_numpy(object)[valid],
-            ids=None if ids is None else ids.to_numpy(np.int64),
-        )
-        bc = broadcast(df.sparkSession, index)
+        wkbs = pdf["_wkb"].to_numpy(object)
+        bb = W.bounds_from_wkb_batch(wkbs)
+        valid = np.isfinite(bb[:, 0])
+        ids = pdf["_id"][valid] if id_col is not None else None
+        if not valid.any() or (ids is not None and ids.isna().any()):
+            bc = None
+        else:
+            index = Index(
+                bb[valid], wkbs=wkbs[valid],
+                ids=None if ids is None else ids.to_numpy(np.int64),
+            )
+            bc = broadcast(df.sparkSession, index)
     if key is not None:
         _GRID_CACHE.clear()
         _GRID_CACHE[key] = bc
@@ -393,16 +418,13 @@ class Probe:
     @staticmethod
     def decode(col) -> tuple[list, np.ndarray]:
         """Stream-side geometries and bboxes of a WKB column; NULL and
-        EMPTY rows stay None with NaN bboxes (no candidates)."""
-        n = len(col)
-        geoms: list = [None] * n
-        B = np.full((n, 4), np.nan)
-        for i, b in enumerate(col):
-            if b is None:
-                continue
-            g = W.loads(bytes(b))
-            if g.is_empty():
-                continue
-            geoms[i] = g
-            B[i] = K.bounds(g)
-        return geoms, B
+        EMPTY rows stay None with NaN bboxes (no candidates). The bboxes
+        come from the whole-batch decode; every non-NULL row is still
+        loaded, so corrupt WKB raises as it does on the cell plan."""
+        blobs = list(col)
+        B = W.bounds_from_wkb_batch(blobs)
+        alive = np.isfinite(B[:, 0])
+        geoms = [
+            None if b is None else W.loads(bytes(b)) for b in blobs
+        ]
+        return [g if ok else None for g, ok in zip(geoms, alive)], B

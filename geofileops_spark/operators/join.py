@@ -420,10 +420,11 @@ def _join_broadcast_pairs(
     in every worker process, ``_geoops_sql.py:2185-2342``). Returns the
     ``matched`` frame in the standard output shape (l1_-prefixed
     columns, ``geom_col``, l2_-prefixed attributes), or None when the
-    broadcast cannot be built (empty layer 2 / NULL join keys) and the
-    caller must use the distributed plan."""
+    broadcast cannot be built (empty layer 2 / NULL join keys / more
+    than ``pairing.MAX_ROWS`` rows) and the caller must use the
+    distributed plan."""
     bc = pairing.build(df2, geom_col, id_col=id_col)
-    if bc is None:
+    if bc is None or bc is pairing.OVER_CAP:
         return None
 
     simple = sq.simple
@@ -839,18 +840,20 @@ def _export_broadcast(
     sq: SpatialQuery,
     min_area_intersect: float | None,
     geom_col: str,
-) -> DataFrame:
-    """Map-side export_by_location: layer 2's (bbox, WKB) is computed
-    distributed, collected once, grid-indexed and broadcast; layer 1
-    streams through ONE mapInPandas with zero shuffles — the Spark twin
-    of the reference's in-process rtree probe (each gfo worker process
-    holds layer 2's rtree in RAM, ``_geoops_sql.py:1541-1736``). Guarded
-    by ``GFO_BROADCAST_BYTES`` (``pairing.choose``): a layer 2 past the
-    reference's own in-memory operating envelope falls back to the
-    distributed cell join.
+) -> DataFrame | None:
+    """Map-side export_by_location: layer 2's WKBs are collected once
+    (``pairing.build``), grid-indexed and broadcast; layer 1 streams
+    through ONE mapInPandas with zero shuffles — the Spark twin of the
+    reference's in-process rtree probe (each gfo worker process holds
+    layer 2's rtree in RAM, ``_geoops_sql.py:1541-1736``). Guarded by
+    ``GFO_BROADCAST_BYTES`` (``pairing.choose``) and by the build's row
+    cap: past ``pairing.MAX_ROWS`` rows this returns None and the
+    caller takes the distributed cell join.
     """
     anti = sq.true_for_disjoint
     bc = pairing.build(df2, geom_col)
+    if bc is pairing.OVER_CAP:
+        return None
     if bc is None:
         # empty layer 2: EXISTS fails everywhere; the for-ALL (disjoint)
         # filter holds vacuously everywhere
@@ -1000,9 +1003,10 @@ def export_by_location(
     Two physical plans:
 
     - **broadcast probe** (default when layer 2 fits
-      ``GFO_BROADCAST_BYTES``, see ``pairing.choose``): layer 2
-      grid-indexed in RAM, layer 1 streamed map-side, zero shuffles —
-      the reference's in-process-rtree shape.
+      ``GFO_BROADCAST_BYTES``, see ``pairing.choose``, and has at most
+      ``pairing.MAX_ROWS`` rows): layer 2 grid-indexed in RAM, layer 1
+      streamed map-side, zero shuffles — the reference's
+      in-process-rtree shape.
     - **distributed cell join** (the 100-TB shape): payload-trimmed
       cover explode → cell hash join → per-(cell, l1) early-exit EXISTS
       aggregate (no re-shuffle: the aggregate reuses the join's hash
@@ -1021,9 +1025,9 @@ def export_by_location(
                 df2.select(geom_col), subdivide_coords, geom_col
             )
     if broadcast:
-        return _export_broadcast(
-            df1, df2, sq, min_area_intersect, geom_col
-        )
+        out = _export_broadcast(df1, df2, sq, min_area_intersect, geom_col)
+        if out is not None:
+            return out
     # distributed plan: only (id, geom) of layer 1 and (geom) of layer 2
     # flow through the cover explode + cell shuffle — attributes rejoin
     # via the final semi/anti join on id

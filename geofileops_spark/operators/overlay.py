@@ -411,14 +411,17 @@ def _broadcast_pairs_matched(
     broadcast, layer 1 streams through ONE mapInPandas that runs the
     pair piece kernel over every bbox candidate of a batch, and l2
     attributes attach via a broadcast hash join on the l2 id. No cover
-    explode and no cell shuffle.
+    explode and no cell shuffle; the probe is the job's only Python
+    stage (``pairing.build`` collects layer 2 JVM-only, uncounted).
 
     Output: l1_-prefixed df1 columns (geometry included), l2_-prefixed
     df2 columns (geometry included), and ``_piece``. ``with_l2=False``
     skips the attribute join and emits only df1 columns + ``_piece``
     (the clip shape — the clip layer contributes no attributes).
-    Returns None when layer 2 is over budget / empty / has no usable
-    int id.
+    Returns None, and the caller takes the cell join, when layer 2 is
+    over the byte budget (``pairing.choose``), over the row cap
+    (``pairing.OVER_CAP`` from ``pairing.build``), has no valid
+    geometry or has no usable int id.
 
     ``self_half_uid``: for SELF-pairings (df1 is df2), name of the
     int64 row-id column; candidate pairs are pre-filtered to
@@ -438,7 +441,7 @@ def _broadcast_pairs_matched(
     if pairing.choose("pairs", df2).path != "broadcast":
         return None
     bc = pairing.build(df2, geom_col, id_col=id_col if with_l2 else None)
-    if bc is None:
+    if bc is None or bc is pairing.OVER_CAP:
         return None
 
     schema = StructType(
@@ -492,12 +495,13 @@ def _pair_pieces(
     keep_empty: bool = False,
 ) -> DataFrame:
     """Every intersecting (l1, l2) candidate pair with its intersection
-    ``_piece``, on the plan ``pairing.choose("pairs", df2)`` picks: the
-    broadcast-grid probe (:func:`_broadcast_pairs_matched`) or the
-    distributed cell join + :func:`_pair_intersection_udf`. Both plans
-    return the l1_-prefixed df1 columns, the l2_-prefixed df2 columns
-    (none with ``with_l2=False``) and ``_piece``; pairs whose piece is
-    empty are dropped.
+    ``_piece``, on the plan ``pairing.choose("pairs", df2)`` and
+    ``pairing.build``'s row cap pick: the broadcast-grid probe
+    (:func:`_broadcast_pairs_matched`) or the distributed cell join +
+    :func:`_pair_intersection_udf`. Both plans return the l1_-prefixed
+    df1 columns, the l2_-prefixed df2 columns (none with
+    ``with_l2=False``) and ``_piece``; pairs whose piece is empty are
+    dropped.
 
     ``self_half_uid`` keeps each unordered self-pair once (uid1 < uid2),
     before the kernel runs. ``broadcast=False`` forces the cell join.
@@ -591,7 +595,7 @@ def _broadcast_combine(
     mode: str,
     geom_col: str,
     keep_empty_geoms: bool = False,
-) -> DataFrame:
+) -> DataFrame | None:
     """Map-side difference/clip against a SMALL blade layer (the
     ``forward`` plan): layer 2 is grid-indexed and broadcast once
     (``index.pairing.build``), layer 1 streams through ONE mapInPandas —
@@ -606,10 +610,13 @@ def _broadcast_combine(
     NULL out, under ``keep_empty_geoms``) fully-erased rows; ``clip``
     runs the pair piece kernel over every candidate of the batch and
     keeps each row's pieces — unioned when there is more than one —
-    dropping rows without any."""
+    dropping rows without any. Returns None when the blade layer is
+    over ``pairing.build``'s row cap: the caller takes the cell plan."""
     spark = df1.sparkSession
     bc = pairing.build(df2, geom_col)
     is_diff = mode.startswith("difference")
+    if bc is pairing.OVER_CAP:
+        return None
     if bc is None:  # empty blade layer
         return df1 if is_diff else df1.limit(0)
     # mapInPandas inherits the input partitioning: subjects that descend
@@ -783,7 +790,9 @@ def difference(
         out = _difference_of_parts(s1, s2, res, geom_col, id_col, _plan)
     else:
         mode = "difference_union" if blade_union else "difference"
+        out = None
         if _plan == "forward":
+            # None: the blades are over the row cap, take the cell plan
             out = _broadcast_combine(df1, df2, mode, geom_col, keep_empty_geoms)
         elif _plan == "reverse":
             # few-subjects path: the collect_list shuffle output is only
@@ -807,7 +816,7 @@ def difference(
                 spread=df1.sparkSession.sparkContext.defaultParallelism
                 * pairing.REVERSE_SPREAD,
             )
-        else:
+        if out is None:
             # no intersects refine on the cell candidates: subtracting a
             # disjoint blade is a no-op, and the kernel's internal bbox
             # short-circuit costs far less than a polygon-polygon
@@ -882,6 +891,7 @@ def clip(
             _plan = pairing.choose("combine", df2, df1).path
             if _plan == "reverse":
                 _plan = "cell"
+    out = None
     if subdivide_coords is not None:
         s1 = _subdivide_subject(df1, subdivide_coords, geom_col, id_col)
         parts = clip(
@@ -889,8 +899,9 @@ def clip(
         ).drop("_pid")
         out = _reunion(parts, [id_col], geom_col)
     elif _plan == "forward":
+        # None: the blades are over the row cap, take the cell plan
         out = _broadcast_combine(df1, df2, "clip", geom_col)
-    else:
+    if out is None:
         # l1 ∩ union(blades) = union(l1 ∩ blade_i): PAIRWISE pieces from
         # the batched kernel, then the (small) pieces unioned per l1 row
         # — unioning full blade polygons first paid the unbatched

@@ -8,7 +8,12 @@ cap (``pairing.MAX_ROWS``) around the fixtures' real scan sizes."""
 
 from __future__ import annotations
 
+import logging
+import re
+import struct
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,9 +102,10 @@ def expected_path(shape, budget, max_rows, s2, rows2, s1=None):
     """The per-shape rules and limits each operator applied on its own
     before ``choose()`` existed, as shares of the default 256 MB budget:
     pairs 256 MB / 4M rows, kNN 32 MB / 2M rows, combine-forward 64 MB
-    (16 MB outright), reverse 256 MB."""
+    (16 MB outright), reverse 256 MB. The pairs row cap is ``build``'s
+    (its bounded collect), so ``choose`` applies only the bytes."""
     if shape == "pairs":
-        return "broadcast" if 0 < s2 <= budget and rows2 <= max_rows else "cell"
+        return "broadcast" if 0 < s2 <= budget else "cell"
     if shape == "knn":
         ok = 0 < s2 <= budget // 8 and rows2 <= max_rows // 2
         return "broadcast" if ok else "cell"
@@ -112,7 +118,7 @@ def expected_path(shape, budget, max_rows, s2, rows2, s1=None):
     raise AssertionError(shape)
 
 
-def test_choose_keeps_the_per_shape_limits(layers, monkeypatch):
+def test_choose_keeps_the_per_shape_limits(layers, monkeypatch, caplog):
     parcels, zones, _ = layers
     assert pairing.MAX_ROWS == 4_000_000
     # the default budget reproduces every absolute per-shape limit
@@ -139,6 +145,7 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch):
                     shape, budget, max_rows, d)
                 assert d.budget == budget and d.scan_bytes == sz
                 seen.add((shape, d.path))
+            assert pairing.choose("pairs", zones).rows is None  # no count
         for build, stream in ((zones, parcels), (parcels, zones)):
             d = pairing.choose("combine", build, stream)
             s2 = sz if build is zones else sp
@@ -152,6 +159,26 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch):
         ("knn", "broadcast"), ("knn", "cell"),
         ("combine", "forward"), ("combine", "reverse"), ("combine", "cell"),
     }
+    # the pairs row cap: build's bounded collect answers OVER_CAP past
+    # MAX_ROWS rows (5 zone rows), logged as a cell Decision
+    monkeypatch.setattr(pairing, "BROADCAST_BYTES", default)
+    for max_rows in (4, 5, 9, 10, 4_000_000):
+        monkeypatch.setattr(pairing, "MAX_ROWS", max_rows)
+        with caplog.at_level(logging.DEBUG, logger=pairing.__name__):
+            caplog.clear()
+            for id_col in (None, "fid"):
+                bc = pairing.build(zones, "geom_wkb", id_col=id_col)
+                over = 5 > max_rows
+                assert (bc is pairing.OVER_CAP) == over, (max_rows, id_col)
+                if not over:
+                    assert len(bc.value.bb) == 5
+        logged = [r.args[0] for r in caplog.records if r.name == pairing.__name__]
+        if over:
+            assert [(d.path, d.rows, d.scan_bytes) for d in logged] == [
+                ("cell", max_rows + 1, sz)] * 2
+        else:
+            assert logged == []
+    cache.release_caches()
     monkeypatch.setattr(pairing, "MAX_ROWS", 9)
     assert pairing.choose("sphere", zones).path == "cell"
     monkeypatch.setattr(pairing, "MAX_ROWS", 10)
@@ -159,23 +186,110 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch):
     assert d.path == "broadcast" and d.rows == 5
 
 
-def test_intersection_plan_counts_layer2_at_most_once(layers):
-    """Building (not running) intersection may count layer 2 once — the
-    row-cap guard that keeps the driver collect safe — and nothing else."""
+def test_intersection_plan_runs_one_jvm_only_job(spark, layers):
+    """Building (not running) intersection runs exactly one Spark job,
+    ``build``'s bounded collect of layer 2: no ``count()`` of any frame
+    and no ``_bounds_udf`` Python stage."""
     from unittest import mock
 
     parcels, zones, _ = layers
-    seen = []
+    cache.release_caches()  # no grid of zones left from earlier calls
+    sc = spark.sparkContext
+    counted = []
     orig = type(zones).count
 
     def spy(self):
-        seen.append(self)
+        counted.append(self)
         return orig(self)
 
-    with mock.patch.object(type(zones), "count", spy):
-        O.intersection(parcels, zones)
-    assert sum(df is zones for df in seen) <= 1
-    assert all(df is zones for df in seen), seen
+    sc.setJobGroup("intersection-plan", "building intersection")
+    try:
+        with mock.patch.object(type(zones), "count", spy), mock.patch.object(
+            pairing, "_bounds_udf", wraps=pairing._bounds_udf
+        ) as bounds_udf:
+            O.intersection(parcels, zones)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counted == []
+    bounds_udf.assert_not_called()
+    assert len(sc.statusTracker().getJobIdsForGroup("intersection-plan")) == 1
+
+
+# ------------------------------------------------ build / decode bounds
+def _big_endian_polygon(ring):
+    out = struct.pack(">BIII", 0, 3, 1, len(ring))
+    return out + b"".join(struct.pack(">dd", x, y) for x, y in ring)
+
+
+MIXED_WKBS = [
+    None,
+    W.dumps(W.from_wkt("POINT EMPTY")),
+    W.dumps(W.from_wkt("POLYGON EMPTY")),
+    W.dumps(W.from_wkt(
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 4 2, 4 4, 2 4, 2 2))")),
+    W.dumps(W.from_wkt(
+        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((5 5, 6.5 5, 6 7.25, 5 5)))")),
+    _big_endian_polygon([(-3.5, 1), (2, 1), (2, 4.125), (-3.5, 1)]),
+    W.dumps(W.from_wkt("LINESTRING (0 0, 3 -4, 7 2)")),
+    W.dumps(W.from_wkt("POLYGON ((0.1 0.2, 3.3 0.2, 3.3 9.7, 0.1 0.2))")),
+    W.dumps(W.from_wkt("POINT (1.5 -2.5)")),
+    None,
+]
+
+
+def row_loop_decode(col):
+    """The per-row decode ``Probe.decode`` replaced."""
+    geoms, B = [None] * len(col), np.full((len(col), 4), np.nan)
+    for i, b in enumerate(col):
+        if b is None:
+            continue
+        g = W.loads(bytes(b))
+        if g.is_empty():
+            continue
+        geoms[i] = g
+        B[i] = K.bounds(g)
+    return geoms, B
+
+
+def test_build_and_decode_bounds_match_the_udf_and_the_row_loop(spark):
+    """``build`` takes its bboxes on the driver: bit-identical to the
+    ``_bounds_udf`` stage it replaced; ``Probe.decode`` gives the None
+    mask and bboxes of the per-row loop."""
+    df = spark.createDataFrame(
+        list(enumerate(MIXED_WKBS)), "fid long, geom_wkb binary"
+    ).repartition(3)
+    udf = np.array(
+        [tuple(r) for r in df.orderBy("fid").select(
+            pairing._bounds_udf(F.col("geom_wkb")).alias("b")).select("b.*").collect()],
+        dtype=np.float64,
+    )
+    valid = np.isfinite(udf[:, 0])
+    assert valid.sum() == 6
+    index = pairing.build(df, "geom_wkb", id_col="fid").value
+    assert sorted(index.ids) == list(np.nonzero(valid)[0])
+    assert index.bb.tobytes() == udf[index.ids].tobytes()
+    cache.release_caches()
+
+    geoms, B = pairing.Probe.decode(pd.Series(MIXED_WKBS, dtype=object))
+    old_geoms, old_B = row_loop_decode(MIXED_WKBS)
+    assert [g is None for g in geoms] == [g is None for g in old_geoms]
+    assert [g is None for g in geoms] == list(~valid)
+    assert np.array_equal(np.isnan(B), np.isnan(old_B))
+    assert B[valid].tobytes() == old_B[valid].tobytes() == udf[valid].tobytes()
+    assert all(
+        g is None or W.dumps(g) == W.dumps(o) for g, o in zip(geoms, old_geoms)
+    )
+
+
+def test_decode_raises_on_corrupt_wkb_like_the_cell_plan(spark):
+    good = MIXED_WKBS[3]
+    corrupt = good[:-5]  # truncated ring: the vectorized bounds give NaN
+    assert np.isnan(W.bounds_from_wkb_batch([corrupt])).all()
+    with pytest.raises(ValueError) as err:
+        pairing.Probe.decode([good, corrupt])
+    pairs = spark.createDataFrame([(corrupt, good)], "g1 binary, g2 binary")
+    with pytest.raises(Exception, match=re.escape(str(err.value))):
+        pairs.select(O._pair_intersection_udf(F.col("g1"), F.col("g2"))).collect()
 
 
 # ------------------------------------------------------ path equivalence
@@ -259,6 +373,39 @@ def test_every_path_gives_the_same_rows(
     assert len(first) > 0
     for path in paths[1:]:
         assert results[path] == first, (op, path)
+
+
+OVER_CAP_RUNS = {
+    "intersection": lambda df1, df2: O.intersection(df1, df2),
+    "export_by_location": lambda df1, df2: J.export_by_location(df1, df2),
+    # the disjoint form keeps the l1 rows that intersect no l2 row
+    "export_by_location-disjoint": lambda df1, df2: J.export_by_location(
+        df1, df2, "intersects is False"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(OVER_CAP_RUNS))
+def test_over_cap_layer2_takes_the_cell_plan(layers, monkeypatch, op):
+    """A layer 2 within the byte budget but past the row cap gets
+    ``OVER_CAP`` from ``build``: the call takes the distributed cell
+    join and returns the broadcast plan's rows — never ``df1`` or an
+    empty frame, as reading it like an empty layer 2 would."""
+    parcels, zones, _ = layers
+    run = OVER_CAP_RUNS[op]
+    assert pairing.choose("pairs", zones).path == "broadcast"
+    fast = run(parcels, zones)
+    monkeypatch.setattr(pairing, "MAX_ROWS", 4)  # zones has 5 rows
+    capped = run(parcels, zones)
+    assert pairing.build(zones, "geom_wkb") is pairing.OVER_CAP
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "Exchange hashpartitioning" not in plan(fast)
+    assert "Exchange hashpartitioning" in plan(capped)  # the cell join
+    got = norm(capped)
+    assert got == norm(fast)
+    assert 0 < len(got) < parcels.count()
 
 
 def test_points_in_100_irregular_polygons_grid_probe(spark):
