@@ -7,18 +7,34 @@ call overhead on tiny arrays (~25 kernel launches per pair, measured
 0.64 ms/pair vs GEOS ~0.15 ms). This module amortizes that overhead over
 the whole Arrow batch:
 
+- ring prep: every distinct single-ring geometry's open ring and bbox
+  come from one numpy pass over the concatenated vertices
+  (:func:`_open_rings`, the ``clip._open_ring`` + ``clip._ring_bbox``
+  twin);
 - phase 1 (segment-pair intersection tests) runs ONCE over the
   flattened cartesian combos of every pair in the batch — identical
   formulas and tolerances to ``clip._gh_clip``;
 - phase 2 (entry/exit flags) uses the parity identity: along a ring the
   entry flag strictly alternates, so flag(j-th crossing) =
   flag(first) XOR (j odd) — no node walk;
-- phase 3 (traversal) hops crossing-to-crossing copying vertex SLICES,
-  never stepping vertex-by-vertex in Python;
+- phase 3 (traversal): every pair with exactly two crossings (most
+  overlapping parcel pairs) is walked by ONE index gather over
+  ``concat(A, B, crossings)`` (:func:`_traverse_two`); pairs with four
+  or more hop crossing-to-crossing copying vertex SLICES
+  (:func:`_traverse_pair`), never stepping vertex-by-vertex in Python;
 - every degeneracy the per-pair code handles by perturb-and-retry
   (collinear overlap, vertex touch, odd crossing count, point on
   boundary, traversal anomaly) routes that single pair back to
   ``clip.intersection`` — the batch path never guesses.
+
+Each result ring's signed area is computed once, in one shoelace pass
+over all the traversed rings of a sweep (:func:`_signed_areas`), and
+serves the ``_MIN_AREA`` filter, the orientation and the ring assembly
+(:func:`_assemble`), which skips ``clip._reassemble``'s containment
+probe when it provably answers "outside" for every ring.
+:func:`intersection_parts` stops at the assembled polygons, so the
+overlay piece kernel writes WKB straight from them while
+:func:`batch_intersection` wraps the same polygons as Geometries.
 
 Reference behavior being matched: GEOS ``ST_Intersection`` as used by
 geofileops two-layer ops (``_geoops_sql.py:1805-2102``).
@@ -41,6 +57,11 @@ _MIN_AREA = C._MIN_AREA
 # chunks (fresh multi-MB temporaries page-fault; L2-resident chunks don't).
 _MAX_COMBOS = 60_000
 
+# how far outside a ring's bbox kernels._pir_single can still answer
+# "on the boundary" (code 1) for a ring whose edges are all >= 1e-6
+# long: 1e-6 across the edge's line plus 1e-6 past its ends
+_PROBE_TOL = 2e-6
+
 
 def _single_ring(g: G.Geometry):
     """The single exterior ring when g is a 1-polygon, 0-hole polygonal
@@ -54,112 +75,207 @@ def _single_ring(g: G.Geometry):
     return None
 
 
+def _gather_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Indices of the ranges [starts[i], starts[i] + counts[i]), concatenated."""
+    before = np.cumsum(counts) - counts
+    return np.arange(int(counts.sum())) + np.repeat(starts - before, counts)
+
+
+def _open_rings(rings: list):
+    """``clip._open_ring`` + ``clip._ring_bbox`` of many closed rings in
+    one numpy pass: the closing vertex is dropped when it is close to the
+    first (``clip._pts_close``), then consecutive duplicates (L1 step
+    <= EPS). Returns (O, off, cnt, bb): ring g's open ring is
+    ``O[off[g]:off[g] + cnt[g]]`` and ``bb[g]`` its bbox, meaningful
+    only where ``cnt[g] >= 3`` (the batch path's precondition)."""
+    lens = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
+    V = np.concatenate([np.empty((0, 2))] + rings)
+    start = np.cumsum(lens) - lens
+    two = np.nonzero(lens > 1)[0]
+    first = V[start[two]]
+    last = V[start[two] + lens[two] - 1]
+    close = np.zeros(len(rings), dtype=np.int64)
+    close[two] = (
+        np.abs(first - last) <= 1e-8 + 1e-5 * np.abs(last)
+    ).all(axis=1)
+    pos = np.arange(len(V)) - np.repeat(start, lens)
+    keep = pos < np.repeat(lens - close, lens)
+    later = np.nonzero(pos > 0)[0]
+    keep[later] &= np.abs(np.diff(V, axis=0)).sum(axis=1)[later - 1] > EPS
+    O = V[keep]
+    cnt = np.zeros(len(rings), dtype=np.int64)
+    live = np.nonzero(lens > 0)[0]
+    if len(live):
+        cnt[live] = np.add.reduceat(keep.astype(np.int64), start[live])
+    off = np.cumsum(cnt) - cnt
+    bb = np.zeros((len(rings), 4))
+    nz = np.nonzero(cnt > 0)[0]
+    if len(nz):
+        for k, (col, red) in enumerate(
+            ((0, np.minimum), (1, np.minimum), (0, np.maximum), (1, np.maximum))
+        ):
+            bb[nz, k] = red.reduceat(O[:, col], off[nz])
+    return O, off, cnt, bb
+
+
 def batch_intersection(gs1: list, gs2: list) -> list:
     """Elementwise ST_Intersection over two geometry lists. Pairs of
     simple single-ring polygons go through the batched clipper; anything
     else (holes, multis, lines, points, rects, degeneracies) uses
     ``clip.intersection`` unchanged."""
+    return [
+        got if isinstance(got, G.Geometry) else C._mp_to_geom(got[0])
+        for got in intersection_parts(gs1, gs2)
+    ]
+
+
+def intersection_parts(gs1: list, gs2: list) -> list:
+    """Ring-level core of :func:`batch_intersection`. Per pair, either
+    the per-pair path's Geometry (a NULL input, a non-single-ring or
+    rect x rect pair, a degenerate pair) or ``(polys, positive)``: the
+    polygons (lists of closed rings, exterior CCW) the batched clipper
+    assembled — what ``clip._reassemble`` returns for those rings — and
+    whether every one of them is a single ring kept unreversed, so its
+    area is the traversal's ``> _MIN_AREA`` one (when False, a caller
+    that needs each polygon's area recomputes it)."""
     n = len(gs1)
-    out = [None] * n
-    idxs: list[int] = []
-    pairs: list[tuple[np.ndarray, np.ndarray]] = []
-    windows: list[tuple[float, float, float, float]] = []
-    # open-ring + bbox memo per DISTINCT geometry object: after a cell
+    out: list = [None] * n
+    if n == 0:
+        return out
+    # one table row per DISTINCT single-ring geometry object: after a
     # join the same (cached-decode) Geometry appears in ~k consecutive
-    # pairs, and _open_ring/_ring_bbox were ~40% of front-end time
-    memo: dict[int, tuple] = {}
+    # pairs
+    both = list(gs1) + list(gs2)
+    keys = np.fromiter(map(id, both), dtype=np.int64, count=2 * n)
+    _, first, inv = np.unique(keys, return_index=True, return_inverse=True)
+    distinct = [both[f] for f in first.tolist()]
+    rings = [None if g is None else _single_ring(g) for g in distinct]
+    row = np.cumsum([r is not None for r in rings]) - 1
+    row[[r is None for r in rings]] = -1
+    isnull = np.array([g is None for g in distinct], dtype=bool)
+    isnull = isnull[inv[:n]] | isnull[inv[n:]]
+    ia, ib = row[inv[:n]], row[inv[n:]]
+    cand = np.nonzero((ia >= 0) & (ib >= 0) & ~isnull)[0]
+    O, off, cnt, bb = _open_rings([r for r in rings if r is not None])
+    rect = np.zeros(len(cnt), dtype=bool)
+    for g in np.nonzero(cnt == 4)[0].tolist():
+        rect[g] = C._as_rect(O[off[g] : off[g] + 4]) is not None
+    ga, gb = ia[cand], ib[cand]
+    na, nb = cnt[ga], cnt[gb]
+    win = np.concatenate(
+        [np.maximum(bb[ga, :2], bb[gb, :2]), np.minimum(bb[ga, 2:], bb[gb, 2:])],
+        axis=1,
+    )
+    # bboxes sharing at most a measure-zero strip: interiors disjoint
+    empty = (
+        (na < 3) | (nb < 3)
+        | (win[:, 2] - win[:, 0] <= 0.0) | (win[:, 3] - win[:, 1] <= 0.0)
+    )
+    # rect x rect: exact algebra in the per-pair path. One huge pair
+    # would blow the sweep's memory bound on its own (_MAX_COMBOS only
+    # bounds ACROSS pairs): the per-pair path chunks its subject-edge
+    # axis internally, so route it there
+    batch = ~empty & ~(rect[ga] & rect[gb]) & (na * nb <= _MAX_COMBOS)
+    for i in np.nonzero(isnull)[0].tolist():
+        out[i] = G.Geometry.empty(G.GEOMETRYCOLLECTION)
+    for i in cand[empty].tolist():
+        out[i] = ([], True)
+    fallback = np.ones(n, dtype=bool)
+    fallback[isnull] = False
+    fallback[cand[empty | batch]] = False
+    for i in np.nonzero(fallback)[0].tolist():
+        out[i] = C.intersection(gs1[i], gs2[i])
 
-    def _prep(g):
-        key = id(g)
-        got = memo.get(key)
-        if got is None:
-            r = _single_ring(g)
-            if r is None:
-                got = (None, None)
-            else:
-                o = C._open_ring(r)
-                got = (o, C._ring_bbox(o) if len(o) >= 3 else None)
-            memo[key] = got
-        return got
-
-    for i in range(n):
-        g1, g2 = gs1[i], gs2[i]
-        if g1 is None or g2 is None:
-            out[i] = G.Geometry.empty(G.GEOMETRYCOLLECTION)
-            continue
-        a, bb_a = _prep(g1)
-        b, bb_b = _prep(g2)
-        if a is None or b is None:
-            out[i] = C.intersection(g1, g2)
-            continue
-        if bb_a is None or bb_b is None:
-            out[i] = G.Geometry.empty(G.MULTIPOLYGON)
-            continue
-        ox = min(bb_a[2], bb_b[2]) - max(bb_a[0], bb_b[0])
-        oy = min(bb_a[3], bb_b[3]) - max(bb_a[1], bb_b[1])
-        if ox < 0.0 or oy < 0.0:
-            out[i] = G.Geometry.empty(G.MULTIPOLYGON)
-            continue
-        if ox <= 0.0 or oy <= 0.0:
-            # bboxes share only a measure-zero strip: interiors disjoint
-            out[i] = G.Geometry.empty(G.MULTIPOLYGON)
-            continue
-        if (
-            len(a) == 4
-            and len(b) == 4
-            and C._as_rect(a) is not None
-            and C._as_rect(b) is not None
-        ):
-            # rect x rect: exact algebra in the per-pair path
-            out[i] = C.intersection(g1, g2)
-            continue
-        if len(a) * len(b) > _MAX_COMBOS:
-            # one huge pair would blow the sweep's memory bound on its own
-            # (_MAX_COMBOS only bounds ACROSS pairs): the per-pair path
-            # chunks its subject-edge axis internally, so route it there
-            out[i] = C.intersection(g1, g2)
-            continue
-        idxs.append(i)
-        pairs.append((a, b))
-        windows.append(
-            (
-                max(bb_a[0], bb_b[0]),
-                max(bb_a[1], bb_b[1]),
-                min(bb_a[2], bb_b[2]),
-                min(bb_a[3], bb_b[3]),
-            )
+    idxs = cand[batch]
+    ga, gb, win = ga[batch], gb[batch], win[batch]
+    # group pairs so each numpy sweep stays under _MAX_COMBOS
+    groups: list[tuple[int, int]] = []
+    start = 0
+    combos = 0
+    for k, c in enumerate((na[batch] * nb[batch]).tolist()):
+        if combos and combos + c > _MAX_COMBOS:
+            groups.append((start, k))
+            start = k
+            combos = 0
+        combos += c
+    if combos:
+        groups.append((start, len(idxs)))
+    for lo, hi in groups:
+        a, b = ga[lo:hi], gb[lo:hi]
+        res, areas = _ring_ops(
+            O[_gather_ranges(off[a], cnt[a])], cnt[a],
+            O[_gather_ranges(off[b], cnt[b])], cnt[b],
+            win[lo:hi], "intersection",
         )
-
-    if pairs:
-        # group pairs so each numpy sweep stays under _MAX_COMBOS
-        start = 0
-        combos = 0
-        groups: list[tuple[int, int]] = []
-        for k, (a, b) in enumerate(pairs):
-            c = len(a) * len(b)
-            if combos and combos + c > _MAX_COMBOS:
-                groups.append((start, k))
-                start = k
-                combos = 0
-            combos += c
-        groups.append((start, len(pairs)))
-        for lo, hi in groups:
-            res = _batch_ring_intersections(
-                pairs[lo:hi], np.asarray(windows[lo:hi], dtype=np.float64)
-            )
-            for off, rings in enumerate(res):
-                i = idxs[lo + off]
-                if rings is None:
-                    out[i] = C.intersection(gs1[i], gs2[i])
-                else:
-                    out[i] = C._mp_to_geom(C._reassemble(rings))
+        done = [k for k, r in enumerate(res) if r is not None]
+        polys = _assemble([res[k] for k in done], [areas[k] for k in done])
+        for k, got in zip(done, polys):
+            out[idxs[lo + k]] = got
+        for k, r in enumerate(res):
+            if r is None:
+                i = idxs[lo + k]
+                out[i] = C.intersection(gs1[i], gs2[i])
     return out
 
 
-def _batch_ring_intersections(pairs, windows=None):
-    """Intersection of many (open subject ring, open clip ring) pairs.
-    See :func:`_batch_ring_ops`."""
-    return _batch_ring_ops(pairs, windows, op="intersection")
+def _assemble(results: list, areas: list) -> list:
+    """``(clip._reassemble(rings), positive)`` for each pair's closed
+    result rings (already past the ``_MIN_AREA`` filter), from their
+    signed ``areas`` (see :func:`intersection_parts` for ``positive``).
+    The containment probe only runs for a pair whose rings may nest
+    (:func:`_maybe_nested`); otherwise every ring is its own polygon, in
+    ring order — the probe's answer when it finds no containment."""
+    multi = [k for k, rings in enumerate(results) if len(rings) > 1]
+    nested = set()
+    if multi:
+        flags = _maybe_nested([results[k] for k in multi])
+        nested = {k for k, f in zip(multi, flags.tolist()) if f}
+    out = []
+    for k, (rings, ar) in enumerate(zip(results, areas)):
+        if k in nested:
+            out.append((C._reassemble(rings), False))
+        else:
+            out.append((
+                [[r if a > 0 else r[::-1].copy()] for r, a in zip(rings, ar)],
+                all(a > 0 for a in ar),
+            ))
+    return out
+
+
+def _maybe_nested(ring_sets: list) -> np.ndarray:
+    """Per set of closed rings: False only when ``clip._reassemble``'s
+    probe of each ring's first vertex against every other ring of the
+    set must answer 0 (outside) — no first vertex lies within another
+    ring's bbox grown by :data:`_PROBE_TOL` (plus the coordinate
+    subtraction's rounding), and every edge is at least sqrt(EPS) long:
+    on a shorter edge ``_pir_single``'s on-boundary band grows past that
+    tolerance. One numpy pass over all the sets' rings."""
+    counts = np.fromiter(map(len, ring_sets), dtype=np.int64, count=len(ring_sets))
+    rings = [r for rs in ring_sets for r in rs]
+    owner = np.repeat(np.arange(len(ring_sets)), counts)
+    lens = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
+    V = np.concatenate(rings)
+    start = np.cumsum(lens) - lens
+    lo = np.stack([np.minimum.reduceat(V[:, c], start) for c in (0, 1)], axis=1)
+    hi = np.stack([np.maximum.reduceat(V[:, c], start) for c in (0, 1)], axis=1)
+    first = V[start]
+    d = np.diff(V, axis=0)
+    seg2 = np.append((d * d).sum(axis=1), np.inf)
+    seg2[start[1:] - 1] = np.inf  # the step from one ring into the next
+    nested = np.zeros(len(ring_sets), dtype=bool)
+    nested[owner[np.minimum.reduceat(seg2, start) < EPS]] = True
+    tol = _PROBE_TOL + 1e-15 * float(np.abs(V).max())
+    # every (ring i, other ring j of the same set)
+    set_start = np.cumsum(counts) - counts
+    I = np.repeat(np.arange(len(rings)), counts[owner])
+    J = _gather_ranges(set_start[owner], counts[owner])
+    ok = I != J
+    I, J = I[ok], J[ok]
+    near = (
+        (first[I] >= lo[J] - tol) & (first[I] <= hi[J] + tol)
+    ).all(axis=1)
+    nested[owner[I[near]]] = True
+    return nested
 
 
 # sentinel result from batch_ring_differences: the pair had no boundary
@@ -193,13 +309,26 @@ def batch_ring_differences(pairs, windows=None):
     (:func:`clip._mp_difference_tiled`) batches its (piece, blade)
     pairs here. Disjoint pairs return :data:`UNCHANGED` instead of a
     rebuilt copy of the subject."""
-    return _batch_ring_ops(pairs, windows, op="difference")
+    return _batch_ring_ops(pairs, windows, op="difference")[0]
 
 
 def _batch_ring_ops(pairs, windows=None, op="intersection"):
-    """Boolean op over many (open subject ring, open clip ring) pairs.
-    Returns, per pair, a list of closed result rings — or None when that
-    pair hit a degeneracy and must take the per-pair fallback.
+    """:func:`_ring_ops` over a list of (open subject ring, open clip
+    ring) pairs."""
+    n = np.fromiter((len(p[0]) for p in pairs), dtype=np.int64, count=len(pairs))
+    m = np.fromiter((len(p[1]) for p in pairs), dtype=np.int64, count=len(pairs))
+    A = np.concatenate([p[0] for p in pairs])
+    B = np.concatenate([p[1] for p in pairs])
+    return _ring_ops(A, n, B, m, windows, op)
+
+
+def _ring_ops(A, n, B, m, windows=None, op="intersection"):
+    """Boolean op over many (open subject ring, open clip ring) pairs,
+    given flat: pair p's subject ring is the ``n[p]`` rows of ``A`` after
+    those of the pairs before it, its clip ring likewise in ``B``/``m``.
+    Returns ``(results, areas)``: per pair, a list of closed result
+    rings — or None when that pair hit a degeneracy and must take the
+    per-pair fallback — and, for a ring list, the rings' signed areas.
 
     ``windows`` (P, 4), when given, is each pair's bbox-overlap window:
     every boundary contact (proper crossing, touch, collinear overlap)
@@ -217,13 +346,9 @@ def _batch_ring_ops(pairs, windows=None, op="intersection"):
         "intersection": (True, True),
         "difference": (False, True),
     }[op]
-    P = len(pairs)
-    n = np.fromiter((len(p[0]) for p in pairs), dtype=np.int64, count=P)
-    m = np.fromiter((len(p[1]) for p in pairs), dtype=np.int64, count=P)
-    A = np.concatenate([p[0] for p in pairs])
-    B = np.concatenate([p[1] for p in pairs])
-    aoff = np.concatenate([[0], np.cumsum(n)])[:-1]
-    boff = np.concatenate([[0], np.cumsum(m)])[:-1]
+    P = len(n)
+    aoff = np.cumsum(n) - n
+    boff = np.cumsum(m) - m
 
     # per-ring "next vertex" (circular) edge vectors, flattened
     nxt_a = np.arange(1, len(A) + 1)
@@ -361,45 +486,48 @@ def _batch_ring_ops(pairs, windows=None, op="intersection"):
     h_y = A[si[hit_idx], 1] + h_t * d1y[hit_idx]
     pair_starts = np.searchsorted(hp, np.arange(P + 1))
 
-    results: list = []
-    for p in range(P):
-        if degen[p]:
-            results.append(None)
-            continue
-        lo, hi = int(pair_starts[p]), int(pair_starts[p + 1])
-        if lo == hi:
-            # no boundary intersections at all: containment or disjoint.
-            # Degeneracy-free => any vertex decides containment exactly.
-            a = pairs[p][0]
-            b = pairs[p][1]
-            if op == "difference":
-                if in_a0[p]:
-                    results.append([])
-                elif in_b0[p]:
-                    # clip strictly inside subject: the subject keeps its
-                    # ring, the clip becomes a hole wound opposite (same
-                    # construction as clip._no_intersection_fallback)
-                    closed_a = np.vstack([a, a[:1]])
-                    hole = np.vstack([b, b[:1]])[::-1].copy()
-                    if (
-                        C.ring_signed_area(hole)
-                        * C.ring_signed_area(closed_a)
-                        > 0
-                    ):
-                        hole = hole[::-1].copy()
-                    results.append(Holed(hole))
-                else:
-                    results.append(UNCHANGED)
-            elif in_a0[p]:
-                results.append([np.vstack([a, a[:1]])])
-            elif in_b0[p]:
-                results.append([np.vstack([b, b[:1]])])
+    results: list = [None] * P
+    areas: list = [None] * P
+    live = ~degen
+    # no boundary intersections at all: containment or disjoint.
+    # Degeneracy-free => any vertex decides containment exactly.
+    zero = live & (nx_per_pair == 0)
+    for p in np.nonzero(zero & ~in_a0 & ~in_b0)[0].tolist():
+        if op == "difference":
+            results[p] = UNCHANGED
+        else:
+            results[p], areas[p] = [], []
+    traced: list = []  # (pair, closed rings before the _MIN_AREA filter)
+    for p in np.nonzero(zero & (in_a0 | in_b0))[0].tolist():
+        a = A[aoff[p] : aoff[p] + n[p]]
+        b = B[boff[p] : boff[p] + m[p]]
+        if op == "difference":
+            if in_a0[p]:
+                results[p], areas[p] = [], []
             else:
-                results.append([])
-            continue
-        rings = _traverse_pair(
-            pairs[p][0],
-            pairs[p][1],
+                # clip strictly inside subject: the subject keeps its
+                # ring, the clip becomes a hole wound opposite (same
+                # construction as clip._no_intersection_fallback)
+                closed_a = np.vstack([a, a[:1]])
+                hole = np.vstack([b, b[:1]])[::-1].copy()
+                if C.ring_signed_area(hole) * C.ring_signed_area(closed_a) > 0:
+                    hole = hole[::-1].copy()
+                results[p] = Holed(hole)
+        else:
+            traced.append((p, [np.vstack([a, a[:1]] if in_a0[p] else [b, b[:1]])]))
+    two = np.nonzero(live & (nx_per_pair == 2))[0]
+    if len(two):
+        rings2 = _traverse_two(
+            A, aoff[two], n[two], B, boff[two], m[two], pair_starts[two],
+            in_a0[two] ^ s_entry, in_b0[two] ^ c_entry,
+            h_si, h_ci, h_t, h_u, np.stack([h_x, h_y], axis=1),
+        )
+        traced += zip(two.tolist(), ([r] for r in rings2))
+    for p in np.nonzero(live & (nx_per_pair >= 4))[0].tolist():
+        lo, hi = int(pair_starts[p]), int(pair_starts[p + 1])
+        got = _traverse_pair(
+            A[aoff[p] : aoff[p] + n[p]],
+            B[boff[p] : boff[p] + m[p]],
             h_si[lo:hi],
             h_ci[lo:hi],
             h_t[lo:hi],
@@ -411,8 +539,100 @@ def _batch_ring_ops(pairs, windows=None, op="intersection"):
             s_entry,
             c_entry,
         )
-        results.append(rings)
-    return results
+        if got is not None:
+            traced.append((p, got))
+    flat = [r for _, rings in traced for r in rings]
+    if flat:
+        each = iter(_signed_areas(flat).tolist())
+        for p, rings in traced:
+            kept, kept_a = [], []
+            for r in rings:
+                a = next(each)
+                if abs(a) > _MIN_AREA:
+                    kept.append(r)
+                    kept_a.append(a)
+            results[p], areas[p] = kept, kept_a
+    return results, areas
+
+
+def _signed_areas(rings: list) -> np.ndarray:
+    """Signed shoelace areas of many closed rings in one numpy pass.
+    The sum order differs from ``kernels.ring_signed_area``'s ``np.dot``,
+    so a value may differ from that function's in the last bits; every
+    ring whose sign or comparison with ``_MIN_AREA`` lies within the
+    rounding bound of either sum takes ``ring_signed_area``'s value, so
+    the decisions taken from these areas (orientation, ``_MIN_AREA``
+    filter) are exactly the per-ring ones."""
+    lens = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
+    V = np.concatenate(rings)
+    start = np.cumsum(lens) - lens
+    x, y = V[:, 0], V[:, 1]
+    t1 = np.append(x[:-1] * y[1:], 0.0)
+    t2 = np.append(x[1:] * y[:-1], 0.0)
+    t1[start + lens - 1] = 0.0  # the step from one ring into the next
+    t2[start + lens - 1] = 0.0
+    area = 0.5 * (np.add.reduceat(t1, start) - np.add.reduceat(t2, start))
+    # any summation order is within (len * 2^-53) * sum|terms| of the
+    # exact sum; 4x covers both sums, the products and the subtraction
+    err = (4.0 * 2.0**-53) * (lens + 2) * np.add.reduceat(
+        np.abs(t1) + np.abs(t2), start
+    )
+    mag = np.abs(area)
+    for i in np.nonzero((mag <= err) | (np.abs(mag - _MIN_AREA) <= err))[0].tolist():
+        area[i] = C.ring_signed_area(rings[i])
+    return area
+
+
+def _traverse_two(A, aoff, n, B, boff, m, lo, fwd_s, fwd_c0,
+                  h_si, h_ci, h_t, h_u, X):
+    """:func:`_traverse_pair` for many pairs with exactly two crossings
+    (hits ``lo``, ``lo + 1`` of each), in ONE index gather over
+    ``concat(A, B, X)``. With two crossings the walk always closes after
+    two hops: the first crossing in subject order, the subject vertices
+    up to the other crossing (forward when the first is an entry, else
+    backward), the other crossing, the clip vertices back to the first
+    (forward when the other is an entry there), the first crossing
+    again. ``fwd_s``/``fwd_c0`` are ``inside(first vertex) ^ op flag``
+    of the subject/clip rings: the entry flag of the first crossing
+    along each ring (parity rule of :func:`_traverse_pair`). Ties sort
+    stably like ``sorted``. Returns the closed ring of each pair — the
+    ring ``_traverse_pair`` builds — as views of one array."""
+    i0, i1 = lo, lo + 1
+    swap_s = (h_si[i1] < h_si[i0]) | ((h_si[i1] == h_si[i0]) & (h_t[i1] < h_t[i0]))
+    first = np.where(swap_s, i1, i0)
+    other = np.where(swap_s, i0, i1)
+    s0, s1 = h_si[first], h_si[other]
+    swap_c = (h_ci[i1] < h_ci[i0]) | ((h_ci[i1] == h_ci[i0]) & (h_u[i1] < h_u[i0]))
+    c0 = np.where(swap_c, h_ci[i1], h_ci[i0])
+    c1 = np.where(swap_c, h_ci[i0], h_ci[i1])
+    # the other crossing is the second along the clip ring: its entry
+    # flag flips, and the clip walk runs from c1 instead of c0
+    late = other == np.where(swap_c, i0, i1)
+    fwd_c = fwd_c0 ^ late
+    # subject run: s0+1 .. s1 forward, or s0 down to s1+1 (wrapping)
+    s_len = np.where(fwd_s, s1 - s0, n - (s1 - s0))
+    s_st = s0 + fwd_s
+    # clip run: forward from the other crossing's edge + 1, or backward
+    # from its edge, to the first crossing's edge (wrapping past 0)
+    c_len = np.where(fwd_c ^ late, c1 - c0, m - (c1 - c0))
+    c_st = np.where(late, c1, c0) + fwd_c
+    T = len(lo)
+    one = np.ones(T, dtype=np.int64)
+    nil = np.zeros(T, dtype=np.int64)
+    xb = len(A) + len(B)
+    # five runs per ring: first crossing, subject, other, clip, first
+    base = np.stack([xb + first, aoff, xb + other, len(A) + boff, xb + first], 1)
+    st = np.stack([nil, s_st, nil, c_st, nil], 1)
+    ln = np.stack([one, s_len, one, c_len, one], 1)
+    step = np.stack([nil, 2 * fwd_s - 1, nil, 2 * fwd_c - 1, nil], 1)
+    mod = np.stack([one, n, one, m, one], 1)
+    ln = ln.ravel()
+    run = np.repeat(np.arange(5 * T), ln)
+    q = np.arange(len(run)) - np.repeat(np.cumsum(ln) - ln, ln)
+    idx = base.ravel()[run] + (st.ravel()[run] + step.ravel()[run] * q) % mod.ravel()[run]
+    ring_all = np.concatenate([A, B, X])[idx]
+    ends = np.cumsum(ln.reshape(T, 5).sum(axis=1)).tolist()
+    return [ring_all[s:e] for s, e in zip([0] + ends[:-1], ends)]
 
 
 def _batch_point_in_ring(pts, V, dV, off, cnt):
@@ -452,8 +672,9 @@ def _traverse_pair(
     """Phase 2+3 for one pair from precomputed proper crossings.
     ``(s_entry, c_entry)``: (True, True)=intersection, (False, True)=
     difference — identical flag semantics to ``clip._gh_clip``. Returns
-    list of closed rings, or None on traversal anomaly (per-pair
-    fallback)."""
+    the closed rings (the caller drops those of area <= ``_MIN_AREA``),
+    or None on traversal anomaly (per-pair fallback). Two-crossing pairs
+    take :func:`_traverse_two`."""
     k = len(sil)
     n = len(a)
     m = len(b)
@@ -564,9 +785,7 @@ def _traverse_pair(
                 break
         if not ok:
             return None
-        ring = np.concatenate(piece + [coords[start_cid : start_cid + 1]])
-        if abs(C.ring_signed_area(ring)) > _MIN_AREA:
-            results.append(ring)
+        results.append(np.concatenate(piece + [coords[start_cid : start_cid + 1]]))
     return results
 
 
@@ -877,9 +1096,7 @@ def ring_box_clip(g: G.Geometry, x0: float, y0: float, x1: float, y1: float):
     b = np.array(
         [[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=np.float64
     )
-    res = _batch_ring_intersections(
-        [(a, b)], np.asarray([w], dtype=np.float64)
-    )[0]
-    if res is None:
+    res, areas = _batch_ring_ops([(a, b)], np.asarray([w], dtype=np.float64))
+    if res[0] is None:
         return None
-    return C._mp_to_geom(C._reassemble(res))
+    return C._mp_to_geom(_assemble(res, areas)[0][0])

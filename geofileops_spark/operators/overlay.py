@@ -8,8 +8,9 @@ written once and called by every physical plan:
     bbox candidate pairs: broadcast-grid probe or cell join
       (the R-tree analogue; ``index.pairing.choose`` picks)
       -> pair piece kernel (:func:`_pieces`): the pairwise intersection
-         in the pair's lowest primitive, NULL/EMPTY dropped — it is also
-         the exact refine of the bbox candidates
+         in the pair's lowest primitive as MULTI WKB, NULL/EMPTY dropped
+         — it is also the exact refine of the bbox candidates; pairs the
+         batched clipper solves are written from its rings directly
       -> row combine kernel (:func:`_combine_rows`): a row minus (the
          union of) its candidate blades
       -> re-union of subdivided parts (:func:`_reunion`)
@@ -74,18 +75,32 @@ def _drop_degenerate(g: G.Geometry, prim: int) -> G.Geometry:
 
 def _pieces(gs1: list, gs2: list) -> list:
     """Pair piece kernel: the intersection of every ``(gs1[i], gs2[i])``
-    pair as a MULTI geometry, or None when it is empty. The piece keeps
-    the pair's lowest-dimension primitive (geofileops keeps min dim,
+    pair as MULTI WKB, or None when it is empty. The piece keeps the
+    pair's lowest-dimension primitive (geofileops keeps min dim,
     ``_geoops_sql.py:1964-1968``) with zero-measure parts dropped, so a
-    piece exists iff the pair overlaps in that primitive."""
-    from ..geometry.batchclip import batch_intersection
+    piece exists iff the pair overlaps in that primitive.
+
+    Pairs the batched clipper solved come back as assembled polygons
+    (``batchclip.intersection_parts``) and are written as MULTIPOLYGON
+    WKB directly: two single-ring polygons always meet in primitive 3,
+    and a polygon whose area the traversal already proved positive
+    needs no ``_drop_degenerate`` pass. The per-pair fallbacks keep the
+    Geometry tail."""
+    from ..geometry import kernels as K
+    from ..geometry.batchclip import intersection_parts
 
     out = []
-    for g1, g2, inter in zip(gs1, gs2, batch_intersection(gs1, gs2)):
-        prim = min(g1.dim(), g2.dim()) + 1
-        if prim >= 1:
-            inter = _drop_degenerate(inter.collection_extract(prim), prim)
-        out.append(None if inter.is_empty() else inter.force_multi())
+    for g1, g2, got in zip(gs1, gs2, intersection_parts(gs1, gs2)):
+        if isinstance(got, G.Geometry):
+            prim = min(g1.dim(), g2.dim()) + 1
+            if prim >= 1:
+                got = _drop_degenerate(got.collection_extract(prim), prim)
+            out.append(None if got.is_empty() else W.dumps(got.force_multi()))
+            continue
+        polys, positive = got
+        if not positive:
+            polys = [p for p in polys if K.area(G.Geometry(G.POLYGON, p)) > 0.0]
+        out.append(W.dumps(G.Geometry(G.MULTIPOLYGON, polys)) if polys else None)
     return out
 
 
@@ -157,8 +172,7 @@ def _pair_intersection_udf(wkb1: pd.Series, wkb2: pd.Series) -> pd.Series:
             gs1.append(load(bytes(b1)))
             gs2.append(load(bytes(b2)))
     for i, piece in zip(idx, _pieces(gs1, gs2)):
-        if piece is not None:
-            out[i] = W.dumps(piece)
+        out[i] = piece
     return pd.Series(out)
 
 
@@ -465,7 +479,7 @@ def _broadcast_pairs_matched(
             out["_l2id"] = (ids[pl[sel]] if ids is not None else pl[sel]).astype(
                 np.int64
             )
-            out["_piece"] = [W.dumps(p) for p in pieces if p is not None]
+            out["_piece"] = [p for p in pieces if p is not None]
             yield out
 
     probe_out = df1.mapInPandas(_probe, schema=schema)
@@ -656,9 +670,9 @@ def _broadcast_combine(
                 for i, s, e in zip(rows, starts, ends):
                     got = [p for p in pieces[s:e] if p is not None]
                     if len(got) == 1:
-                        newg[i] = W.dumps(got[0])
+                        newg[i] = got[0]
                     elif got:
-                        newg[i] = _union_wkb(got)
+                        newg[i] = _union_wkb([W.loads(p) for p in got])
                 keep = np.array([g is not None for g in newg], dtype=bool)
             out = pdf.copy()
             out.iloc[:, gpos] = newg

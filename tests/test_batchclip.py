@@ -2,6 +2,8 @@
 clipper — it is the same algorithm with amortized numpy dispatch, and
 every degeneracy routes back to the per-pair path."""
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -16,10 +18,10 @@ def poly(*pts):
     return G.Geometry(G.POLYGON, [r])
 
 
-def star(cx, cy, n, seed):
+def star(cx, cy, n, seed, r=30.0):
     rng = np.random.default_rng(seed)
     th = 2 * np.pi * np.arange(n) / n
-    rad = 30 * (0.55 + 0.4 * rng.random(n))
+    rad = r * (0.55 + 0.4 * rng.random(n))
     ring = np.empty((n + 1, 2))
     ring[:n, 0] = cx + rad * np.cos(th)
     ring[:n, 1] = cy + rad * np.sin(th)
@@ -328,3 +330,319 @@ def test_tiled_difference_uses_batch_sweep(monkeypatch):
     out = C._mp_difference_tiled([[subj]], mb)
     assert out is not None
     assert calls["pairs"] > 0
+
+
+# ------------------------------------------------ golden pair piece bytes
+
+
+def _golden_pairs():
+    """Seeded star fixture for the pair piece kernel: 500 subjects, each
+    paired with 4 stars at random offsets (the probe's shape: the same
+    Geometry object in consecutive pairs), so the pairs mix 2, 4 and 6+
+    crossings, disjoint and bbox-disjoint pairs; then containment both
+    ways, vertex touch, shared edge, holed, multi, rect x rect and
+    line/point x polygon pairs."""
+    rng = np.random.default_rng(20261017)
+    gs1, gs2 = [], []
+    for i in range(500):
+        a = star(0, 0, int(rng.integers(8, 29)), 10_000 + i)
+        for j in range(4):
+            ang = rng.uniform(0, 2 * np.pi)
+            d = rng.uniform(0, 60)
+            b = star(
+                d * np.cos(ang), d * np.sin(ang),
+                int(rng.integers(8, 29)), 20_000 + 4 * i + j,
+            )
+            gs1.append(a)
+            gs2.append(b)
+    sq = poly((0, 0), (10, 0), (10, 10), (0, 10))
+    outer = np.array([[0, 0], [60, 0], [60, 60], [0, 60], [0, 0]], float)
+    hole = np.array([[20, 20], [40, 20], [40, 40], [20, 40], [20, 20]], float)
+    donut = G.Geometry(G.POLYGON, [outer, hole])
+    for i in range(20):
+        big = star(0, 0, 24, 30_000 + i)
+        small = star(1.5, -1.0, 12, 31_000 + i, r=8.0)
+        other = star(45, 10, 16, 32_000 + i)
+        multi = G.Geometry(G.MULTIPOLYGON, [big.data, other.data])
+        blade = star(20 + i, 5, 14, 33_000 + i)
+        gs1 += [big, small, donut, multi, blade]
+        gs2 += [small, big, blade, blade, donut]
+    box_a = G.Geometry.box(0, 0, 10, 10)
+    line = G.Geometry(G.LINESTRING, np.array([[-5.0, 5.0], [15.0, 6.0]]))
+    pts = G.Geometry(G.MULTIPOINT, np.array([[5.0, 5.0], [20.0, 20.0]]))
+    gs1 += [
+        sq, sq, box_a, box_a, line, pts,
+        poly((10, 10), (12, 11), (11, 12)),  # vertex touch
+        poly((10, 0), (14, 0), (14, 10), (10, 10)),  # shared edge
+    ]
+    gs2 += [
+        poly((10, 10), (12, 11), (11, 12)),
+        poly((10, 0), (14, 0), (14, 10), (10, 10)),
+        G.Geometry.box(5, 5, 15, 15),
+        G.Geometry.box(10, 0, 20, 10),
+        sq, sq, sq, sq,
+    ]
+    return gs1, gs2
+
+
+def _wkb_of(piece):
+    """A piece as WKB bytes (Geometry pieces are encoded)."""
+    from geofileops_spark.geometry import wkb as W
+
+    return piece if piece is None or isinstance(piece, bytes) else W.dumps(piece)
+
+
+def test_pieces_golden_bytes():
+    """The pair piece kernel's output is pinned byte for byte: any
+    change in its batching, traversal, ring assembly or WKB writer that
+    moves a single bit of a piece changes this digest."""
+    from geofileops_spark.operators.overlay import _pieces
+
+    gs1, gs2 = _golden_pairs()
+    assert len(gs1) >= 2000
+    h = hashlib.sha256()
+    n_out = 0
+    for p in _pieces(gs1, gs2):
+        b = _wkb_of(p)
+        if b is None:
+            h.update(b"N")
+        else:
+            n_out += 1
+            h.update(len(b).to_bytes(8, "little") + b)
+    assert n_out == GOLDEN_PIECES
+    assert h.hexdigest() == GOLDEN_PIECES_SHA256
+
+
+def test_ring_differences_golden_bytes():
+    """batch_ring_differences' rings on the golden single-ring pairs are
+    pinned byte for byte (None / UNCHANGED / Holed / rings)."""
+    from geofileops_spark.geometry.batchclip import (
+        UNCHANGED,
+        Holed,
+        _single_ring,
+        batch_ring_differences,
+    )
+
+    gs1, gs2 = _golden_pairs()
+    pairs, windows = [], []
+    for g1, g2 in zip(gs1, gs2):
+        ra, rb = _single_ring(g1), _single_ring(g2)
+        if ra is None or rb is None:
+            continue
+        a, b = C._open_ring(ra), C._open_ring(rb)
+        ba, bb = C._ring_bbox(a), C._ring_bbox(b)
+        w = (max(ba[0], bb[0]), max(ba[1], bb[1]), min(ba[2], bb[2]), min(ba[3], bb[3]))
+        if w[0] > w[2] or w[1] > w[3]:
+            continue
+        pairs.append((a, b))
+        windows.append(w)
+    assert len(pairs) >= 1500
+    h = hashlib.sha256()
+    for res in batch_ring_differences(pairs, np.asarray(windows, dtype=np.float64)):
+        if res is None:
+            h.update(b"N")
+        elif res is UNCHANGED:
+            h.update(b"U")
+        elif isinstance(res, Holed):
+            h.update(b"H" + len(res.hole).to_bytes(8, "little") + res.hole.tobytes())
+        else:
+            h.update(b"R" + len(res).to_bytes(8, "little"))
+            for r in res:
+                h.update(len(r).to_bytes(8, "little") + np.ascontiguousarray(r).tobytes())
+    assert h.hexdigest() == GOLDEN_DIFF_SHA256
+
+
+GOLDEN_PIECES = 1621
+GOLDEN_PIECES_SHA256 = "2cd41d6f48ebde4c11364095d49b740e12ce15ff1643453caf8e1a3fb058b9de"
+GOLDEN_DIFF_SHA256 = "6cdec542e8ddbd22766539f9f830d5b88b88aabd10f2b5efecf1c326ea1e5c9d"
+
+
+# ------------------------------------------- two-crossing traversal
+
+
+def _two_crossing_pairs():
+    """Every vertex rotation and orientation of two twice-crossing
+    configurations, each ring in turn the subject: a square with a
+    trapezoid poking through one of its edges, and a small box whose
+    top edge a V-notch of a big polygon dips through (the walk along
+    that edge's ring then goes all the way round it). Together they
+    have both crossings on one subject edge or on one clip edge, walks
+    wrapping past vertex 0 on either ring, and the subject's first
+    vertex inside or outside the clip."""
+    sq = np.array([[0, 0], [10, 0], [10, 10], [0, 10]], float)
+    trap = np.array([[4, -3], [6, -3], [6.5, 3], [3.5, 3]], float)
+    notched = np.array(
+        [[0, 0], [20, 0], [20, 20], [11, 20], [10, 12], [9, 20], [0, 20]], float
+    )
+    box = np.array([[7, 10], [13, 10], [13, 16], [7, 16]], float)
+    pairs = []
+    for a0, b0 in ((sq, trap), (trap, sq), (notched, box), (box, notched)):
+        for fa in (a0, a0[::-1]):
+            for fb in (b0, b0[::-1]):
+                for ra in range(len(fa)):
+                    for rb in range(len(fb)):
+                        pairs.append(
+                            (np.roll(fa, -ra, axis=0), np.roll(fb, -rb, axis=0))
+                        )
+    return pairs
+
+
+def _adjacent(ring, p, q):
+    """The closed ring steps between vertices p and q (either way)."""
+    hit_p = np.all(ring == p, axis=1)
+    hit_q = np.all(ring == q, axis=1)
+    return bool((hit_p[:-1] & hit_q[1:]).any() or (hit_q[:-1] & hit_p[1:]).any())
+
+
+_TWO_CROSSING_FEATURES = {
+    "one_subject_edge": lambda c: c["si"][0] == c["si"][1],
+    "one_clip_edge": lambda c: c["ci"][0] == c["ci"][1],
+    "subject_wraps": lambda c: _adjacent(c["ring"], c["a"][0], c["a"][-1]),
+    "clip_wraps": lambda c: _adjacent(c["ring"], c["b"][0], c["b"][-1]),
+    "subject_first_inside": lambda c: c["a0_in_b"],
+    "subject_first_outside": lambda c: not c["a0_in_b"],
+}
+
+
+@pytest.mark.parametrize("feature", sorted(_TWO_CROSSING_FEATURES))
+@pytest.mark.parametrize("op", ["intersection", "difference"])
+def test_two_crossing_gather_matches_traverse_pair(monkeypatch, op, feature):
+    """The one-gather two-crossing walk builds, ring for ring, the
+    closed ring the per-pair traversal builds from the same crossings."""
+    from geofileops_spark.geometry import batchclip as BC
+
+    s_entry, c_entry = {"intersection": (True, True), "difference": (False, True)}[op]
+    pairs = _two_crossing_pairs()
+    cases = []
+    orig = BC._traverse_two
+
+    def spy(A, aoff, n, B, boff, m, lo, fwd_s, fwd_c0, h_si, h_ci, h_t, h_u, X):
+        rings = orig(A, aoff, n, B, boff, m, lo, fwd_s, fwd_c0, h_si, h_ci, h_t, h_u, X)
+        for p in range(len(lo)):
+            a = A[aoff[p] : aoff[p] + n[p]]
+            b = B[boff[p] : boff[p] + m[p]]
+            hs = slice(lo[p], lo[p] + 2)
+            a0_in_b = bool(fwd_s[p] ^ s_entry)
+            ref = BC._traverse_pair(
+                a, b, h_si[hs], h_ci[hs], h_t[hs], h_u[hs], X[hs, 0], X[hs, 1],
+                a0_in_b, bool(fwd_c0[p] ^ c_entry), s_entry, c_entry,
+            )
+            cases.append(dict(
+                a=a, b=b, si=h_si[hs], ci=h_ci[hs], a0_in_b=a0_in_b,
+                ring=rings[p], ref=ref,
+            ))
+        return rings
+
+    monkeypatch.setattr(BC, "_traverse_two", spy)
+    res = BC._batch_ring_ops(pairs, None, op)[0]
+    assert len(cases) == len(pairs)  # every pair crosses exactly twice
+    assert all(r is not None for r in res)
+    picked = [c for c in cases if _TWO_CROSSING_FEATURES[feature](c)]
+    assert picked
+    for c in picked:
+        assert len(c["ref"]) == 1
+        assert np.array_equal(c["ring"], c["ref"][0])
+
+
+# ------------------------------------------------ silent-fallback guard
+
+
+def test_pieces_take_batched_paths(monkeypatch):
+    """Regression guard for the pair piece kernel's batching: on the
+    star fixture no two-crossing pair falls back to the per-pair
+    traversal, and the containment probe (clip._reassemble) only runs
+    for results whose rings may nest. A changed batching condition
+    would otherwise show up only as a slowdown."""
+    from geofileops_spark.geometry import batchclip as BC
+    from geofileops_spark.operators.overlay import _pieces
+
+    seen = {"k": [], "two": 0, "probed": []}
+    orig_pair, orig_two, orig_re = BC._traverse_pair, BC._traverse_two, C._reassemble
+
+    def pair_spy(a, b, sil, *args):
+        seen["k"].append(len(sil))
+        return orig_pair(a, b, sil, *args)
+
+    def two_spy(*args):
+        rings = orig_two(*args)
+        seen["two"] += len(rings)
+        return rings
+
+    def re_spy(rings):
+        seen["probed"].append(rings)
+        return orig_re(rings)
+
+    monkeypatch.setattr(BC, "_traverse_pair", pair_spy)
+    monkeypatch.setattr(BC, "_traverse_two", two_spy)
+    monkeypatch.setattr(C, "_reassemble", re_spy)
+    gs1, gs2 = _golden_pairs()
+    pieces = _pieces(gs1, gs2)
+    assert seen["two"] >= 500
+    assert seen["k"] and min(seen["k"]) >= 4
+    from geofileops_spark.geometry import wkb as W
+
+    multi = sum(
+        1 for p in pieces
+        if p is not None and len(W.loads(_wkb_of(p)).data) > 1
+    )
+    assert multi >= 20
+    for rings in seen["probed"]:
+        if len(rings) < 2:
+            continue
+        # some ring's first vertex within another ring's grown bbox, or
+        # an edge shorter than sqrt(EPS): the probe may find nesting
+        short = any(((np.diff(r, axis=0) ** 2).sum(axis=1) < 1e-12).any() for r in rings)
+        near = any(
+            np.all(ri[0] >= rj.min(axis=0) - 1e-5) and np.all(ri[0] <= rj.max(axis=0) + 1e-5)
+            for i, ri in enumerate(rings)
+            for j, rj in enumerate(rings)
+            if i != j
+        )
+        assert short or near
+
+
+def test_signed_areas_decide_like_ring_signed_area():
+    """The one-pass ring areas take every orientation and _MIN_AREA
+    decision exactly as kernels.ring_signed_area does, also for slivers
+    whose area is lost in the rounding of far-from-origin coordinates."""
+    from geofileops_spark.geometry.batchclip import _MIN_AREA, _signed_areas
+
+    rng = np.random.default_rng(5)
+    rings = []
+    for i in range(400):
+        k = int(rng.integers(3, 40))
+        x = 1e5 * rng.random() + np.sort(rng.random(k))
+        h = rng.choice([0.0, 1e-13, 2e-12, 1e-9, 1.0])
+        y = 1e5 * rng.random() + h * rng.standard_normal(k)
+        r = np.column_stack([x, y])
+        if i % 2:
+            r = r[::-1]
+        rings.append(np.vstack([r, r[:1]]))
+    got = _signed_areas(rings)
+    for r, a in zip(rings, got.tolist()):
+        ref = C.ring_signed_area(r)
+        assert (a > 0) == (ref > 0)
+        assert (abs(a) > _MIN_AREA) == (abs(ref) > _MIN_AREA)
+
+
+def test_open_rings_match_open_ring():
+    """The one-pass ring prep equals clip._open_ring + clip._ring_bbox
+    ring by ring: closing vertex dropped only when close to the first,
+    consecutive duplicates removed, and 0-, 1- and 2-vertex rings."""
+    from geofileops_spark.geometry.batchclip import _open_rings
+
+    rng = np.random.default_rng(9)
+    rings = [np.empty((0, 2)), np.array([[1.0, 2.0]]), np.array([[0.0, 0], [0, 0]])]
+    for _ in range(200):
+        k = int(rng.integers(2, 12))
+        r = np.round(rng.random((k, 2)) * 4) / 2  # repeats on a coarse grid
+        if rng.random() < 0.5:
+            r = np.vstack([r, r[:1] + rng.choice([0.0, 1e-9, 1e-3])])
+        rings.append(r)
+    O, off, cnt, bb = _open_rings(rings)
+    for g, r in enumerate(rings):
+        ref = C._open_ring(r)
+        got = O[off[g] : off[g] + cnt[g]]
+        assert np.array_equal(got, ref)
+        if len(ref) >= 3:
+            assert tuple(bb[g]) == C._ring_bbox(ref)
