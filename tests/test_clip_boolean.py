@@ -3,6 +3,8 @@ comparison style the reference's dissolve tests use —
 geofileops tests/single_layer_operations/test_geoops_dissolve.py:411-425).
 """
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -305,3 +307,103 @@ def test_identical_ring_ops_exact():
     gp = G.Geometry(G.POLYGON, [p])
     assert area(C.intersection(gp, gp)) == area(gp)
     assert C.difference(gp, gp).is_empty()
+
+
+# ------------------------------------------------ scalar clipper golden bytes
+
+
+def _star_ring(rng, cx, cy, k, r):
+    """Closed star-shaped ring: vertex j at angle 2*pi*j/k, radius in
+    [0.55, 0.95] * r around (cx, cy) (the perfbench parcel shape)."""
+    th = 2 * np.pi * np.arange(k) / k
+    rad = r * (0.55 + 0.4 * rng.random(k))
+    ring = np.column_stack([cx + rad * np.cos(th), cy + rad * np.sin(th)])
+    return np.vstack([ring, ring[:1]])
+
+
+def _scalar_golden_cases():
+    """Seeded fixture for the scalar clipper: star pairs at random
+    offsets (2, 4 and 6+ boundary crossings), star x star pairs with
+    spikes (many crossings), holed and multi inputs, a vertex-touch pair
+    and a shared-edge pair (both go down the perturb ladder), and two
+    dissolve groups: a jittered 12 x 12 grid of star parcels each (the
+    shape of a perfbench parcel dissolve group)."""
+    from geofileops_spark.geometry import geom as G
+
+    rng = np.random.default_rng(20261018)
+
+    def P(*rings):
+        return G.Geometry(G.POLYGON, list(rings))
+
+    pairs = []
+    for _ in range(150):
+        a = P(_star_ring(rng, 0, 0, int(rng.integers(8, 29)), 30.0))
+        ang, d = rng.uniform(0, 2 * np.pi), rng.uniform(0, 50)
+        b = P(_star_ring(rng, d * np.cos(ang), d * np.sin(ang), int(rng.integers(8, 29)), 30.0))
+        pairs.append((a, b))
+    for _ in range(30):
+        # spiky stars crossing each other many times
+        k = int(rng.integers(10, 24))
+        th = 2 * np.pi * np.arange(2 * k) / (2 * k)
+        rad = np.where(np.arange(2 * k) % 2 == 0, 20.0, 6.0) * (0.9 + 0.2 * rng.random(2 * k))
+        ring = np.column_stack([rad * np.cos(th), rad * np.sin(th)])
+        a = P(np.vstack([ring, ring[:1]]))
+        rot = rng.uniform(0, np.pi / k)
+        c, s = np.cos(rot), np.sin(rot)
+        rb = ring @ np.array([[c, s], [-s, c]]) + rng.uniform(-3, 3, 2)
+        pairs.append((a, P(np.vstack([rb, rb[:1]]))))
+    outer = np.array([[0, 0], [60, 0], [60, 60], [0, 60], [0, 0]], float)
+    hole = np.array([[20, 20], [40, 20], [40, 40], [20, 40], [20, 20]], float)
+    donut = P(outer, hole)
+    for i in range(10):
+        blade = P(_star_ring(rng, 20 + 2 * i, 5 + i, 14, 30.0))
+        multi = G.Geometry(
+            G.MULTIPOLYGON,
+            [[_star_ring(rng, 0, 0, 24, 30.0)], [_star_ring(rng, 45, 10, 16, 30.0)]],
+        )
+        pairs += [(donut, blade), (blade, donut), (multi, blade), (blade, multi)]
+    sq = P(np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], float))
+    # B's vertex (5, 0) lies on A's bottom edge and B crosses A's right edge
+    pairs.append((sq, P(np.array([[5, 0], [15, -5], [15, 5], [5, 0]], float))))
+    # a shared edge plus a proper crossing
+    pairs.append((sq, P(np.array([[10, 0], [14, 0], [14, 10], [8, 10], [10, 0]], float))))
+
+    groups = []
+    for _ in range(2):
+        side, spacing = 12, 100.0
+        half = spacing / 2
+        geoms = []
+        for gx in range(side):
+            for gy in range(side):
+                cx = gx * spacing + half + (rng.random() - 0.5) * 0.3 * spacing
+                cy = gy * spacing + half + (rng.random() - 0.5) * 0.3 * spacing
+                geoms.append(P(_star_ring(rng, cx, cy, int(rng.integers(10, 41)), half)))
+        groups.append(geoms)
+    return pairs, groups
+
+
+def test_scalar_clipper_golden_bytes():
+    """clip.intersection, clip.difference and clip.union_geoms are
+    pinned byte for byte: any change in the scalar clipper's crossing
+    test, walk, perturb ladder or ring assembly that moves a single bit
+    of a result changes these digests."""
+    pairs, groups = _scalar_golden_cases()
+    digests = {}
+    for name, results in (
+        ("intersection", [C.intersection(a, b) for a, b in pairs]),
+        ("difference", [C.difference(a, b) for a, b in pairs]),
+        ("union", [C.union_geoms(gs) for gs in groups]),
+    ):
+        h = hashlib.sha256()
+        for r in results:
+            b = wkb.dumps(r)
+            h.update(len(b).to_bytes(8, "little") + b)
+        digests[name] = h.hexdigest()
+    assert digests == SCALAR_GOLDEN_SHA256
+
+
+SCALAR_GOLDEN_SHA256 = {
+    "intersection": "3cefa62ee63a66af8b8feb2ee627059bcdaa5534b5ec6ce8d3f75ceddae7989d",
+    "difference": "aaca4e3a5c80d8fbffc04b143344aeda1cc8bbf9847e42a264e30ec5820418e6",
+    "union": "4279b860728fe50a84769ac95c37fe2b14ad598d0a5d1ad2ccb2d6e0326862db",
+}
