@@ -12,16 +12,17 @@ the whole Arrow batch:
   (:func:`_open_rings`, the ``clip._open_ring`` + ``clip._ring_bbox``
   twin);
 - phase 1 (segment-pair intersection tests) runs ONCE over the
-  flattened cartesian combos of every pair in the batch — identical
-  formulas and tolerances to ``clip._gh_clip``;
+  flattened cartesian combos of every pair in the batch, through the
+  scalar clipper's own crossing test (``clip._segment_crossings``);
 - phase 2 (entry/exit flags) uses the parity identity: along a ring the
   entry flag strictly alternates, so flag(j-th crossing) =
-  flag(first) XOR (j odd) — no node walk;
-- phase 3 (traversal): every pair with exactly two crossings (most
-  overlapping parcel pairs) is walked by ONE index gather over
-  ``concat(A, B, crossings)`` (:func:`_traverse_two`); pairs with four
-  or more hop crossing-to-crossing copying vertex SLICES
-  (:func:`_traverse_pair`), never stepping vertex-by-vertex in Python;
+  flag(first) XOR (j odd);
+- phase 3 (traversal): every crossing pair, whatever its (even)
+  crossing count, is walked by ONE index gather over
+  ``concat(A, B, crossings)`` (:func:`_traverse_batch`): the rings are
+  the cycles of two permutations of each pair's crossings, labelled and
+  ranked by pointer jumping, and their vertex runs are gathered in one
+  go — the rings ``clip._traverse_pair`` builds one pair at a time;
 - every degeneracy the per-pair code handles by perturb-and-retry
   (collinear overlap, vertex touch, odd crossing count, point on
   boundary, traversal anomaly) routes that single pair back to
@@ -48,7 +49,6 @@ from . import clip as C
 from . import geom as G
 from .kernels import EPS
 
-_ALPHA_TOL = C._ALPHA_TOL
 _MIN_AREA = C._MIN_AREA
 
 # max flattened (subject edge x clip edge) combos processed per numpy
@@ -341,7 +341,14 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     traversal, never from the pruned edge set.)
 
     ``op``: "intersection" (GH flags True,True) or "difference"
-    (False,True — subject minus clip), mirroring ``clip._ring_op``."""
+    (False,True — subject minus clip), mirroring ``clip._ring_op``.
+
+    The phases are ``clip._gh_clip``'s, each run once for all pairs:
+    ``clip._segment_crossings`` on the flat combos (any degeneracy, or
+    an odd crossing count, marks the pair for the per-pair fallback),
+    the two first-vertex tests batched, and one :func:`_traverse_batch`
+    walk over every pair with crossings — no pair is walked on its
+    own."""
     s_entry, c_entry = {
         "intersection": (True, True),
         "difference": (False, True),
@@ -356,10 +363,10 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     d1 = A[nxt_a] - A
     nxt_b = np.arange(1, len(B) + 1)
     nxt_b[boff + m - 1] = boff
-    d2 = B[nxt_b] - B
+    B_end = B[nxt_b]
+    d2 = B_end - B
     s1len = np.maximum(np.abs(d1).sum(axis=1), EPS)
     s2len = np.maximum(np.abs(d2).sum(axis=1), EPS)
-
     if windows is not None:
         grow = 1e-7 * np.maximum(1.0, np.abs(windows).max(axis=1))
         w0 = windows[:, 0] - grow
@@ -407,61 +414,18 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     si = keptA[kaoff[pair_of] + within // kb_rep]
     ci = keptB[kboff[pair_of] + within % kb_rep]
 
-    d1x = d1[si, 0]
-    d1y = d1[si, 1]
-    d2x = d2[ci, 0]
-    d2y = d2[ci, 1]
-    denom = d1x * d2y - d1y * d2x
-    ex = B[ci, 0] - A[si, 0]
-    ey = B[ci, 1] - A[si, 1]
-    scale = s1len[si] * s2len[ci]
-    par = np.abs(denom) <= 1e-14 * scale
-    cross = ex * d1y - ey * d1x
-
-    degen = np.zeros(P, dtype=bool)
-
-    col = par & (np.abs(cross) <= 1e-11 * scale)
-    if col.any():
-        cc = np.nonzero(col)[0]
-        sic = si[cc]
-        cic = ci[cc]
-        L2 = np.maximum(d1x[cc] ** 2 + d1y[cc] ** 2, EPS * EPS)
-        t0 = (
-            (B[cic, 0] - A[sic, 0]) * d1x[cc] + (B[cic, 1] - A[sic, 1]) * d1y[cc]
-        ) / L2
-        q2 = B[nxt_b[cic]]
-        t1 = ((q2[:, 0] - A[sic, 0]) * d1x[cc] + (q2[:, 1] - A[sic, 1]) * d1y[cc]) / L2
-        lo = np.minimum(t0, t1)
-        hi = np.maximum(t0, t1)
-        bad = (hi > _ALPHA_TOL) & (lo < 1 - _ALPHA_TOL)
-        if bad.any():
-            degen[np.unique(pair_of[cc[bad]])] = True
-
-    safe = np.where(par, 1.0, denom)
-    t = (ex * d2y - ey * d2x) / safe
-    u = cross / safe
-    tol = 1e-10
-    near_t = (np.abs(t) < tol) | (np.abs(t - 1.0) < tol)
-    near_u = (np.abs(u) < tol) | (np.abs(u - 1.0) < tol)
-    touch = (
-        ~par
-        & (near_t | near_u)
-        & (t >= -tol)
-        & (t <= 1 + tol)
-        & (u >= -tol)
-        & (u <= 1 + tol)
+    P_s = A[si]
+    d1_s = d1[si]
+    bad, hits, t, u = C._segment_crossings(
+        P_s, d1_s, s1len[si], B[ci], d2[ci], s2len[ci], B_end[ci]
     )
     # reduceat misbehaves on zero-length segments (fully pruned pairs):
     # reduce only over pairs that still have combos
     nzp = np.nonzero(N > 0)[0]
-    if touch.any():
-        tsum = np.zeros(P, dtype=np.int64)
-        tsum[nzp] = np.add.reduceat(touch.astype(np.int64), cstart[:-1][nzp])
-        degen |= tsum > 0
-
-    hits = ~par & (t > 0) & (t < 1) & (u > 0) & (u < 1) & ~near_t & ~near_u
+    degen = np.zeros(P, dtype=bool)
     nx_per_pair = np.zeros(P, dtype=np.int64)
     if len(nzp):
+        degen[nzp] = np.add.reduceat(bad, cstart[:-1][nzp]) > 0
         nx_per_pair[nzp] = np.add.reduceat(
             hits.astype(np.int64), cstart[:-1][nzp]
         )
@@ -474,17 +438,6 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     in_a0, on_a0 = _batch_point_in_ring(a0, B, d2, boff, m)
     in_b0, on_b0 = _batch_point_in_ring(b0, A, d1, aoff, n)
     degen |= on_a0 | on_b0
-
-    # gather per-pair crossing lists
-    hit_idx = np.nonzero(hits)[0]
-    hp = pair_of[hit_idx]
-    h_si = si[hit_idx] - aoff[hp]
-    h_ci = ci[hit_idx] - boff[hp]
-    h_t = t[hit_idx]
-    h_u = u[hit_idx]
-    h_x = A[si[hit_idx], 0] + h_t * d1x[hit_idx]
-    h_y = A[si[hit_idx], 1] + h_t * d1y[hit_idx]
-    pair_starts = np.searchsorted(hp, np.arange(P + 1))
 
     results: list = [None] * P
     areas: list = [None] * P
@@ -515,32 +468,22 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
                 results[p] = Holed(hole)
         else:
             traced.append((p, [np.vstack([a, a[:1]] if in_a0[p] else [b, b[:1]])]))
-    two = np.nonzero(live & (nx_per_pair == 2))[0]
-    if len(two):
-        rings2 = _traverse_two(
-            A, aoff[two], n[two], B, boff[two], m[two], pair_starts[two],
-            in_a0[two] ^ s_entry, in_b0[two] ^ c_entry,
-            h_si, h_ci, h_t, h_u, np.stack([h_x, h_y], axis=1),
+    walk = live & (nx_per_pair > 0)
+    if walk.any():
+        # every crossing of the walked pairs, grouped by pair
+        hit_idx = np.nonzero(hits)[0]
+        hit_idx = hit_idx[walk[pair_of[hit_idx]]]
+        h_t = t[hit_idx]
+        X = P_s[hit_idx] + h_t[:, None] * d1_s[hit_idx]
+        hp = pair_of[hit_idx]
+        rings, ring_pair = _traverse_batch(
+            A, aoff, n, B, boff, m, hp,
+            si[hit_idx] - aoff[hp], ci[hit_idx] - boff[hp], h_t, u[hit_idx], X,
+            in_a0 ^ s_entry, in_b0 ^ c_entry,
         )
-        traced += zip(two.tolist(), ([r] for r in rings2))
-    for p in np.nonzero(live & (nx_per_pair >= 4))[0].tolist():
-        lo, hi = int(pair_starts[p]), int(pair_starts[p + 1])
-        got = _traverse_pair(
-            A[aoff[p] : aoff[p] + n[p]],
-            B[boff[p] : boff[p] + m[p]],
-            h_si[lo:hi],
-            h_ci[lo:hi],
-            h_t[lo:hi],
-            h_u[lo:hi],
-            h_x[lo:hi],
-            h_y[lo:hi],
-            bool(in_a0[p]),
-            bool(in_b0[p]),
-            s_entry,
-            c_entry,
-        )
-        if got is not None:
-            traced.append((p, got))
+        cut = (np.flatnonzero(np.diff(ring_pair)) + 1).tolist()
+        lo, hi = [0] + cut, cut + [len(rings)]
+        traced += zip(ring_pair[lo].tolist(), (rings[i:j] for i, j in zip(lo, hi)))
     flat = [r for _, rings in traced for r in rings]
     if flat:
         each = iter(_signed_areas(flat).tolist())
@@ -583,56 +526,103 @@ def _signed_areas(rings: list) -> np.ndarray:
     return area
 
 
-def _traverse_two(A, aoff, n, B, boff, m, lo, fwd_s, fwd_c0,
-                  h_si, h_ci, h_t, h_u, X):
-    """:func:`_traverse_pair` for many pairs with exactly two crossings
-    (hits ``lo``, ``lo + 1`` of each), in ONE index gather over
-    ``concat(A, B, X)``. With two crossings the walk always closes after
-    two hops: the first crossing in subject order, the subject vertices
-    up to the other crossing (forward when the first is an entry, else
-    backward), the other crossing, the clip vertices back to the first
-    (forward when the other is an entry there), the first crossing
-    again. ``fwd_s``/``fwd_c0`` are ``inside(first vertex) ^ op flag``
-    of the subject/clip rings: the entry flag of the first crossing
-    along each ring (parity rule of :func:`_traverse_pair`). Ties sort
-    stably like ``sorted``. Returns the closed ring of each pair — the
-    ring ``_traverse_pair`` builds — as views of one array."""
-    i0, i1 = lo, lo + 1
-    swap_s = (h_si[i1] < h_si[i0]) | ((h_si[i1] == h_si[i0]) & (h_t[i1] < h_t[i0]))
-    first = np.where(swap_s, i1, i0)
-    other = np.where(swap_s, i0, i1)
-    s0, s1 = h_si[first], h_si[other]
-    swap_c = (h_ci[i1] < h_ci[i0]) | ((h_ci[i1] == h_ci[i0]) & (h_u[i1] < h_u[i0]))
-    c0 = np.where(swap_c, h_ci[i1], h_ci[i0])
-    c1 = np.where(swap_c, h_ci[i0], h_ci[i1])
-    # the other crossing is the second along the clip ring: its entry
-    # flag flips, and the clip walk runs from c1 instead of c0
-    late = other == np.where(swap_c, i0, i1)
-    fwd_c = fwd_c0 ^ late
-    # subject run: s0+1 .. s1 forward, or s0 down to s1+1 (wrapping)
-    s_len = np.where(fwd_s, s1 - s0, n - (s1 - s0))
-    s_st = s0 + fwd_s
-    # clip run: forward from the other crossing's edge + 1, or backward
-    # from its edge, to the first crossing's edge (wrapping past 0)
-    c_len = np.where(fwd_c ^ late, c1 - c0, m - (c1 - c0))
-    c_st = np.where(late, c1, c0) + fwd_c
-    T = len(lo)
-    one = np.ones(T, dtype=np.int64)
-    nil = np.zeros(T, dtype=np.int64)
+def _traverse_batch(A, aoff, n, B, boff, m, hp, h_si, h_ci, h_t, h_u, X,
+                    fwd_s, fwd_c):
+    """``clip._traverse_pair`` for many pairs at once, in ONE index gather
+    over ``concat(A, B, X)``. Crossing h of pair ``hp[h]`` (hits grouped
+    by pair) lies on subject edge ``h_si[h]`` at ``h_t[h]`` and clip edge
+    ``h_ci[h]`` at ``h_u[h]``, at ``X[h]``; per pair, ``fwd_s``/``fwd_c``
+    are ``inside(first vertex) ^ op flag`` of the subject/clip ring, the
+    entry flag of the first crossing along each ring.
+
+    With parity entry flags the subject step S pairs each crossing with
+    its neighbour in sorted subject order (an entry j with j + 1, ties
+    stable like ``sorted``), the clip step C likewise in clip order. Both
+    are fixed-point-free involutions, so their union splits the crossings
+    into alternating cycles x, S x, C S x, ... of even length 2L: the
+    walk's rings. A ring's subject-side crossings form one cycle of
+    π = C∘S (length L <= k/2), its clip-side ones that cycle's S-image.
+    Pointer jumping labels every π-cycle with its least subject rank; a
+    ring starts from the least subject rank of its two cycles, as the
+    scalar walk starts from the first unprocessed crossing, and is ranked
+    along π from there. Returns ``(rings, ring_pair)``: the closed rings
+    — the rings ``clip._traverse_pair`` builds, in its order, as views of
+    one array — and each ring's pair, ascending.
+    """
+    H = len(hp)
+    idx_h = np.arange(H)
+    start = np.searchsorted(hp, hp)  # first crossing of each one's pair
+    k = np.searchsorted(hp, hp, side="right") - start
+
+    def step(order, fwd):
+        # rank of each crossing along its ring, and its neighbour there:
+        # forward from an entry, backward from an exit (wrapping)
+        rank = np.empty(H, dtype=np.int64)
+        rank[order] = idx_h - start
+        fw = fwd[hp] ^ (rank % 2 == 1)
+        to = order[start + (rank + 2 * fw - 1) % k]
+        return rank, fw, to
+
+    order_s = np.lexsort((h_t, h_si, hp))
+    rank_s, fw_s, S = step(order_s, fwd_s)
+    rank_c, fw_c, C_ = step(np.lexsort((h_u, h_ci, hp)), fwd_c)
+    pi = C_[S]
+    # each π-cycle's least subject rank: r rounds cover 2^r >= L crossings
+    half = int(k.max()) // 2
+    lab = rank_s.copy()
+    nxt = pi
+    span = 1
+    while span < half:
+        lab = np.minimum(lab, lab[nxt])
+        nxt = nxt[nxt]
+        span *= 2
+    walked = lab < lab[S]  # the cycle holding its ring's least rank
+    # distance along π to the cycle's last crossing before its start
+    last = rank_s[pi] == lab
+    dist = (~last).astype(np.int64)
+    nxt = np.where(last, idx_h, pi)
+    span = 1
+    while span < half:
+        dist = dist + dist[nxt]
+        nxt = nxt[nxt]
+        span *= 2
+    w = np.nonzero(walked)[0]
+    x = w[np.lexsort((-dist[w], lab[w], hp[w]))]  # ring by ring, in walk order
+    sx = S[x]
+    p = hp[x]
+
+    def run(rank, fw, to, h_e, cnt, h):
+        # start, length and step of the ring's vertices from crossing h's
+        # edge h_e[h] to crossing to[h]'s, wrapping past vertex 0 when the
+        # step passes the last rank
+        sg = 2 * fw[h] - 1
+        d = h_e[to[h]] - h_e[h]
+        ln = np.where(sg * (rank[to[h]] - rank[h]) > 0, sg * d, cnt + sg * d)
+        return h_e[h] + fw[h], ln, sg
+
+    s_st, s_len, s_step = run(rank_s, fw_s, S, h_si, n[p], x)
+    c_st, c_len, c_step = run(rank_c, fw_c, C_, h_ci, m[p], sx)
+    W = len(x)
+    one = np.ones(W, dtype=np.int64)
+    nil = np.zeros(W, dtype=np.int64)
     xb = len(A) + len(B)
-    # five runs per ring: first crossing, subject, other, clip, first
-    base = np.stack([xb + first, aoff, xb + other, len(A) + boff, xb + first], 1)
+    # five runs per crossing: it, the subject run, S of it, the clip
+    # run, and (after a ring's last crossing only) the ring's start
+    first = order_s[start[x] + lab[x]]
+    closes = dist[x] == 0
+    base = np.stack([xb + x, aoff[p], xb + sx, len(A) + boff[p], xb + first], 1)
     st = np.stack([nil, s_st, nil, c_st, nil], 1)
-    ln = np.stack([one, s_len, one, c_len, one], 1)
-    step = np.stack([nil, 2 * fwd_s - 1, nil, 2 * fwd_c - 1, nil], 1)
-    mod = np.stack([one, n, one, m, one], 1)
+    ln = np.stack([one, s_len, one, c_len, closes.astype(np.int64)], 1)
+    stp = np.stack([nil, s_step, nil, c_step, nil], 1)
+    mod = np.stack([one, n[p], one, m[p], one], 1)
     ln = ln.ravel()
-    run = np.repeat(np.arange(5 * T), ln)
-    q = np.arange(len(run)) - np.repeat(np.cumsum(ln) - ln, ln)
-    idx = base.ravel()[run] + (st.ravel()[run] + step.ravel()[run] * q) % mod.ravel()[run]
+    r = np.repeat(np.arange(5 * W), ln)
+    q = np.arange(len(r)) - np.repeat(np.cumsum(ln) - ln, ln)
+    idx = base.ravel()[r] + (st.ravel()[r] + stp.ravel()[r] * q) % mod.ravel()[r]
     ring_all = np.concatenate([A, B, X])[idx]
-    ends = np.cumsum(ln.reshape(T, 5).sum(axis=1)).tolist()
-    return [ring_all[s:e] for s, e in zip([0] + ends[:-1], ends)]
+    ends = np.cumsum(ln.reshape(W, 5).sum(axis=1))[closes].tolist()
+    rings = [ring_all[s:e] for s, e in zip([0] + ends[:-1], ends)]
+    return rings, p[closes]
 
 
 def _batch_point_in_ring(pts, V, dV, off, cnt):
@@ -665,130 +655,6 @@ def _batch_point_in_ring(pts, V, dV, off, cnt):
     return inside, on_boundary
 
 
-def _traverse_pair(
-    a, b, sil, cil, t, u, xs, ys, a0_in_b, b0_in_a,
-    s_entry=True, c_entry=True,
-):
-    """Phase 2+3 for one pair from precomputed proper crossings.
-    ``(s_entry, c_entry)``: (True, True)=intersection, (False, True)=
-    difference — identical flag semantics to ``clip._gh_clip``. Returns
-    the closed rings (the caller drops those of area <= ``_MIN_AREA``),
-    or None on traversal anomaly (per-pair fallback). Two-crossing pairs
-    take :func:`_traverse_two`."""
-    k = len(sil)
-    n = len(a)
-    m = len(b)
-    # crossing counts are tiny (k=2..8 for real parcel pairs): plain
-    # Python sorts/lists beat np.lexsort + fancy-index setup ~3x here
-    sil = sil.tolist()
-    cil = cil.tolist()
-    tl = t.tolist()
-    ul = u.tolist()
-    rng = range(k)
-    order_s = sorted(rng, key=lambda i: (sil[i], tl[i]))
-    order_c = sorted(rng, key=lambda i: (cil[i], ul[i]))
-    pos_s = [0] * k
-    pos_c = [0] * k
-    for p, i in enumerate(order_s):
-        pos_s[i] = p
-    for p, i in enumerate(order_c):
-        pos_c[i] = p
-
-    # entry flags: status before the first crossing is inside(first
-    # vertex) XOR'd with the op flag; it then alternates
-    # (clip._gh_clip phase 2, collapsed to parity arithmetic):
-    #   original: status = inside ^ s_entry; node.entry = status; toggle
-    # so flag at sorted position j = (inside ^ s_entry) ^ (j odd).
-    entry_s = [(a0_in_b ^ s_entry) ^ (pos_s[i] % 2 == 1) for i in rng]
-    entry_c = [(b0_in_a ^ c_entry) ^ (pos_c[i] % 2 == 1) for i in rng]
-
-    sil_sorted = [sil[i] for i in order_s]
-    cil_sorted = [cil[i] for i in order_c]
-
-    processed = [False] * k
-    results = []
-    coords = np.stack([xs, ys], axis=1)
-    max_hops = 2 * k + 2
-
-    # start rings from the first unprocessed crossing in SUBJECT ring
-    # order — same choice as the per-pair traversal, so output rings are
-    # bit-identical (starting vertex affects shoelace rounding ~1e-9)
-    for start_j in range(k):
-        start_cid = order_s[start_j]
-        if processed[start_cid]:
-            continue
-        piece: list[np.ndarray] = []
-        cid = start_cid
-        on_subject = True
-        hops = 0
-        ok = True
-        while True:
-            processed[cid] = True
-            piece.append(coords[cid : cid + 1])
-            if on_subject:
-                entry = entry_s[cid]
-                jpos = pos_s[cid]
-                if entry:
-                    nj = (jpos + 1) % k
-                    v0 = sil_sorted[jpos] + 1
-                    v1 = sil_sorted[nj]  # inclusive
-                    if nj > jpos:
-                        if v1 >= v0:
-                            piece.append(a[v0 : v1 + 1])
-                    else:
-                        piece.append(a[v0:n])
-                        piece.append(a[0 : v1 + 1])
-                else:
-                    nj = (jpos - 1) % k
-                    v1 = sil_sorted[jpos]  # inclusive, walking down
-                    v0 = sil_sorted[nj] + 1
-                    if nj < jpos:
-                        if v1 >= v0:
-                            piece.append(a[v0 : v1 + 1][::-1])
-                    else:
-                        piece.append(a[0 : v1 + 1][::-1])
-                        piece.append(a[v0:n][::-1])
-                ncid = order_s[nj]
-            else:
-                entry = entry_c[cid]
-                jpos = pos_c[cid]
-                if entry:
-                    nj = (jpos + 1) % k
-                    v0 = cil_sorted[jpos] + 1
-                    v1 = cil_sorted[nj]
-                    if nj > jpos:
-                        if v1 >= v0:
-                            piece.append(b[v0 : v1 + 1])
-                    else:
-                        piece.append(b[v0:m])
-                        piece.append(b[0 : v1 + 1])
-                else:
-                    nj = (jpos - 1) % k
-                    v1 = cil_sorted[jpos]
-                    v0 = cil_sorted[nj] + 1
-                    if nj < jpos:
-                        if v1 >= v0:
-                            piece.append(b[v0 : v1 + 1][::-1])
-                    else:
-                        piece.append(b[0 : v1 + 1][::-1])
-                        piece.append(b[v0:m][::-1])
-                ncid = order_c[nj]
-            # arrive at the next crossing on this ring, then jump rings
-            # (the neighbour link: same crossing id, other ring)
-            cid = ncid
-            on_subject = not on_subject
-            hops += 1
-            if cid == start_cid:
-                break
-            if processed[cid] or hops > max_hops:
-                ok = False
-                break
-        if not ok:
-            return None
-        results.append(np.concatenate(piece + [coords[start_cid : start_cid + 1]]))
-    return results
-
-
 _DIFF_SWEEP_CAP = 12_000  # same policy as clip._mp_difference_tiled
 
 
@@ -798,8 +664,8 @@ def batch_difference_seq(subjects: list, blade_lists: list) -> list:
     semantics identical to a loop of ``clip.difference`` calls (the
     ``overlay._combine_rows('difference')`` hot path). The (piece ×
     blade-part) single-ring clips of ALL rows are flattened into shared
-    :func:`batch_ring_differences` sweeps — the per-pair linked-list
-    clipper cost on parcel-sized rings was the measured dominant term of
+    :func:`batch_ring_differences` sweeps — the per-pair clipper's numpy
+    call overhead on parcel-sized rings was the measured dominant term of
     every overlay difference side. Anything the sweep cannot prove simple
     (multi-ring pieces, holed/multi blades, rects, degeneracies, ≥16-part
     blades, non-polygon dims) takes the exact per-pair path unchanged.
@@ -1076,10 +942,11 @@ def batch_difference_seq(subjects: list, blade_lists: list) -> list:
 def ring_box_clip(g: G.Geometry, x0: float, y0: float, x1: float, y1: float):
     """Intersection of a single-ring polygon with an axis box through the
     batched sweep — the :func:`transform.subdivide` splitting kernel.
-    The per-pair clipper builds a Python linked-list node per vertex, so
+    The per-pair clipper tests every (ring edge, box edge) pair, so
     halving a 300k-coord ring cost seconds per cut (measured 236 s to
-    subdivide 12 such rings); here the window prune keeps only the ring
-    edges inside the box and the whole cut is a few numpy sweeps.
+    subdivide 12 such rings with the former node-list clipper); here the
+    window prune keeps only the ring edges inside the box and the whole
+    cut is a few numpy sweeps.
 
     Returns the clipped Geometry, or None when the pair is degenerate or
     not a simple single ring (caller falls back to the exact path)."""

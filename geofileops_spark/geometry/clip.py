@@ -8,6 +8,14 @@ These are the engine's equivalents of the reference's GEOS calls
 ``:1058-1355`` difference, ``:942-1055`` clip) and the dissolve union
 (``_geoops_gpd.py:2190-2370`` shapely.union_all).
 
+One ring pair is clipped in three phases (:func:`_gh_clip`): every
+(subject edge, clip edge) pair goes through one broadcast crossing test
+(:func:`_segment_crossings`, the same function the batched kernel in
+:mod:`batchclip` runs on many pairs at once); each ring's entry flags
+follow by parity from whether its first vertex lies inside the other
+ring; and the walk (:func:`_traverse_pair`) hops crossing to crossing
+over the sorted crossing lists, copying the vertex slices between them.
+
 Degenerate configurations (intersection exactly at a vertex, collinear
 edge overlap) are handled by deterministically perturbing the subject
 ring by ~1e-9 of the bbox extent and retrying — results are compared with
@@ -47,34 +55,9 @@ class _Degenerate(Exception):
     pass
 
 
-class _Node:
-    __slots__ = (
-        "x",
-        "y",
-        "next",
-        "prev",
-        "intersect",
-        "entry",
-        "neighbour",
-        "alpha",
-        "processed",
-    )
-
-    def __init__(self, x, y, alpha=0.0, intersect=False):
-        self.x = x
-        self.y = y
-        self.next = None
-        self.prev = None
-        self.intersect = intersect
-        self.entry = True
-        self.neighbour = None
-        self.alpha = alpha
-        self.processed = False
-
-
 def _pts_close(p, q) -> bool:
     """Scalar twin of np.allclose(p, q) for 2-vectors (allclose is ~0.2ms
-    per call from Python overhead — this is the clipper's hottest check)."""
+    per call from Python overhead; every ring prep calls this)."""
     bx = float(q[0])
     by = float(q[1])
     return (
@@ -93,73 +76,6 @@ def _open_ring(ring: np.ndarray) -> np.ndarray:
         keep[1:] = (np.abs(np.diff(r, axis=0)).sum(axis=1)) > EPS
         r = r[keep]
     return r
-
-
-def _build_list(coords: np.ndarray) -> _Node:
-    # one C-level tolist() beats per-row numpy unpacking (each row yields
-    # two np scalars + float() calls — ~8% of the overlay kernel time)
-    nodes = [_Node(x, y) for x, y in coords.tolist()]
-    n = len(nodes)
-    for i, nd in enumerate(nodes):
-        nd.next = nodes[(i + 1) % n]
-        nd.prev = nodes[(i - 1) % n]
-    return nodes[0]
-
-
-def _iter_ring(first: _Node):
-    nd = first
-    while True:
-        yield nd
-        nd = nd.next
-        if nd is first:
-            break
-
-
-def _insert(node: _Node, start: _Node, end: _Node):
-    """Insert an intersection node between start and end ordered by alpha."""
-    cur = start
-    while cur.next is not end and cur.next.intersect and cur.next.alpha < node.alpha:
-        cur = cur.next
-    # skip remaining intersect nodes with smaller alpha
-    while cur.next is not end and cur.next.intersect and cur.next.alpha <= node.alpha:
-        cur = cur.next
-    node.next = cur.next
-    node.prev = cur
-    cur.next.prev = node
-    cur.next = node
-
-
-def _seg_intersect(p1, p2, q1, q2):
-    """Strict interior intersection of two segments; raises _Degenerate on
-    vertex-touching / collinear configurations."""
-    d1x, d1y = p2[0] - p1[0], p2[1] - p1[1]
-    d2x, d2y = q2[0] - q1[0], q2[1] - q1[1]
-    denom = d1x * d2y - d1y * d2x
-    scale = max(abs(d1x) + abs(d1y), EPS) * max(abs(d2x) + abs(d2y), EPS)
-    ex, ey = q1[0] - p1[0], q1[1] - p1[1]
-    if abs(denom) <= 1e-14 * scale:
-        # parallel: collinear overlap is degenerate
-        cross = ex * d1y - ey * d1x
-        if abs(cross) <= 1e-11 * scale:
-            # check 1-D overlap
-            L2 = d1x * d1x + d1y * d1y
-            t0 = (ex * d1x + ey * d1y) / L2
-            t1 = ((q2[0] - p1[0]) * d1x + (q2[1] - p1[1]) * d1y) / L2
-            lo, hi = min(t0, t1), max(t0, t1)
-            if hi > _ALPHA_TOL and lo < 1 - _ALPHA_TOL:
-                raise _Degenerate("collinear overlap")
-        return None
-    t = (ex * d2y - ey * d2x) / denom
-    u = (ex * d1y - ey * d1x) / denom
-    tol = 1e-10
-    if -tol < t < tol or 1 - tol < t < 1 + tol or -tol < u < tol or 1 - tol < u < 1 + tol:
-        # endpoint touch: degenerate only if the other param is within range
-        if -tol <= t <= 1 + tol and -tol <= u <= 1 + tol:
-            raise _Degenerate("vertex touch")
-        return None
-    if 0 < t < 1 and 0 < u < 1:
-        return t, u, p1[0] + t * d1x, p1[1] + t * d1y
-    return None
 
 
 def _point_in_ring_strict(pt, ring) -> bool:
@@ -193,158 +109,226 @@ def _point_in_ring_strict(pt, ring) -> bool:
     return bool(np.count_nonzero(x < xints) % 2 == 1)
 
 
+def _segment_crossings(p, d1, s1, q, d2, s2, q_end):
+    """The clippers' one segment-crossing test, elementwise over
+    broadcast-compatible arrays: subject edges ``p + t * d1`` against clip
+    edges ``q + u * d2`` (``q_end`` is the clip edge's end vertex, so
+    ``q + d2`` up to rounding), with ``s1``/``s2`` each edge's L1 length
+    clamped to ``EPS``. ``p``, ``d1``, ``q``, ``d2`` and ``q_end`` carry x/y
+    on a trailing axis of 2. ``clip._gh_clip`` passes one (chunk, m) block
+    of a ring pair, ``batchclip._ring_ops`` flat combos of many pairs.
+
+    Returns ``(bad, hit, t, u)``. ``bad`` marks the degeneracies that
+    send a pair down the perturb ladder: a collinear overlap longer than
+    ``_ALPHA_TOL`` of the subject edge, or a touch within 1e-10 of either
+    edge's end. ``hit`` marks proper interior crossings, at ``t``/``u``
+    along the subject/clip edge (meaningful where ``hit``)."""
+    d1x, d1y = d1[..., 0], d1[..., 1]
+    d2x, d2y = d2[..., 0], d2[..., 1]
+    denom = d1x * d2y - d1y * d2x
+    ex = q[..., 0] - p[..., 0]
+    ey = q[..., 1] - p[..., 1]
+    scale = s1 * s2
+    par = np.abs(denom) <= 1e-14 * scale
+    cross = ex * d1y - ey * d1x
+    col = par & (np.abs(cross) <= 1e-11 * scale)
+    bad = np.zeros(col.shape, dtype=bool)
+    if col.any():
+        # parallel and on one line: degenerate when the clip edge's
+        # projection overlaps the subject edge's interior
+        def at(v):
+            return np.broadcast_to(v, col.shape)[col]
+
+        cx, cy = at(d1x), at(d1y)
+        L2 = np.maximum(cx * cx + cy * cy, EPS * EPS)
+        t0 = (at(ex) * cx + at(ey) * cy) / L2
+        t1 = ((at(q_end[..., 0]) - at(p[..., 0])) * cx
+              + (at(q_end[..., 1]) - at(p[..., 1])) * cy) / L2
+        bad[col] = (np.maximum(t0, t1) > _ALPHA_TOL) & (np.minimum(t0, t1) < 1 - _ALPHA_TOL)
+    safe = np.where(par, 1.0, denom)
+    t = (ex * d2y - ey * d2x) / safe
+    u = cross / safe
+    tol = 1e-10
+    near_t = (np.abs(t) < tol) | (np.abs(t - 1.0) < tol)
+    near_u = (np.abs(u) < tol) | (np.abs(u - 1.0) < tol)
+    in_range = (t >= -tol) & (t <= 1 + tol) & (u >= -tol) & (u <= 1 + tol)
+    bad |= ~par & (near_t | near_u) & in_range
+    hit = ~par & (t > 0) & (t < 1) & (u > 0) & (u < 1) & ~near_t & ~near_u
+    return bad, hit, t, u
+
+
 def _gh_clip(subj: np.ndarray, clip: np.ndarray, s_entry: bool, c_entry: bool):
     """Core Greiner–Hormann. subj/clip are OPEN rings (CCW or CW ok).
 
     (s_entry, c_entry): (True, True)=intersection, (False, False)=union,
     (False, True)=difference subj−clip.
     Returns list of closed rings, or None when there were no boundary
-    intersections (caller applies containment fallback).
+    intersections (caller applies containment fallback). Raises
+    :class:`_Degenerate` on any degeneracy (the caller perturbs and
+    retries).
     """
-    closed_clip = np.vstack([clip, clip[:1]])
-    closed_subj = np.vstack([subj, subj[:1]])
-
-    # --- phase 1: find & insert intersections — numpy broadcast over
-    # all (subject edge, clip edge) pairs (the former per-pair Python
-    # loop dominated every overlay kernel's runtime). Semantics mirror
-    # _seg_intersect exactly, including the degeneracy triggers.
-    # Node lists are built ONLY once a crossing is known to exist — a
-    # large fraction of bbox candidates have none and return early.
-    # The subject-edge axis is CHUNKED so the ~dozen (chunk, m) scratch
-    # arrays stay bounded (~1M elements, like any_segment_intersection
-    # in kernels.py) — two 10k-vertex rings would otherwise allocate
-    # multiple GB inside the Arrow UDF.
+    # --- phase 1: every (subject edge, clip edge) pair in one
+    # broadcast test. The subject-edge axis is CHUNKED so the (chunk, m)
+    # scratch arrays stay bounded (~1M elements, like
+    # any_segment_intersection in kernels.py) — two 10k-vertex rings
+    # would otherwise allocate multiple GB inside the Arrow UDF.
     sa = np.asarray(subj, dtype=np.float64)
     ca = np.asarray(clip, dtype=np.float64)
     # manual wrap-slicing: np.roll's generic machinery was ~7% of the
     # overlay kernel time at these small ring sizes
-    d1_full = np.empty_like(sa)
-    d1_full[:-1] = sa[1:] - sa[:-1]
-    d1_full[-1] = sa[0] - sa[-1]
+    d1 = np.empty_like(sa)
+    d1[:-1] = sa[1:] - sa[:-1]
+    d1[-1] = sa[0] - sa[-1]
     ca_next = np.empty_like(ca)
     ca_next[:-1] = ca[1:]
     ca_next[-1] = ca[0]
     d2 = ca_next - ca  # (m,2)
     m = len(ca)
-    scale2 = np.maximum(np.abs(d2).sum(axis=1), EPS)[None, :]
+    s1 = np.maximum(np.abs(d1).sum(axis=1), EPS)[:, None]
+    s2 = np.maximum(np.abs(d2).sum(axis=1), EPS)[None, :]
     chunk = max(1, 1_000_000 // max(m, 1))
-    tol = 1e-10
-    hit_list: list[tuple[int, int, float, float]] = []
+    found = []
     for s0 in range(0, len(sa), chunk):
-        sc = sa[s0 : s0 + chunk]
-        d1 = d1_full[s0 : s0 + chunk]
-        denom = d1[:, None, 0] * d2[None, :, 1] - d1[:, None, 1] * d2[None, :, 0]
-        ex = ca[None, :, 0] - sc[:, None, 0]
-        ey = ca[None, :, 1] - sc[:, None, 1]
-        scale = np.maximum(np.abs(d1).sum(axis=1), EPS)[:, None] * scale2
-        par = np.abs(denom) <= 1e-14 * scale
-        cross = ex * d1[:, None, 1] - ey * d1[:, None, 0]
-        col = par & (np.abs(cross) <= 1e-11 * scale)
-        if col.any():
-            ii, jj = np.nonzero(col)
-            L2 = np.maximum((d1[ii] * d1[ii]).sum(axis=1), EPS * EPS)
-            t0 = ((ca[jj] - sc[ii]) * d1[ii]).sum(axis=1) / L2
-            t1 = ((ca_next[jj] - sc[ii]) * d1[ii]).sum(axis=1) / L2
-            lo = np.minimum(t0, t1)
-            hi = np.maximum(t0, t1)
-            if ((hi > _ALPHA_TOL) & (lo < 1 - _ALPHA_TOL)).any():
-                raise _Degenerate("collinear overlap")
-        safe = np.where(par, 1.0, denom)
-        t = (ex * d2[None, :, 1] - ey * d2[None, :, 0]) / safe
-        u = cross / safe
-        near_t = (np.abs(t) < tol) | (np.abs(t - 1.0) < tol)
-        near_u = (np.abs(u) < tol) | (np.abs(u - 1.0) < tol)
-        in_range = (t >= -tol) & (t <= 1 + tol) & (u >= -tol) & (u <= 1 + tol)
-        if (~par & (near_t | near_u) & in_range).any():
-            raise _Degenerate("vertex touch")
-        hits = ~par & (t > 0) & (t < 1) & (u > 0) & (u < 1) & ~near_t & ~near_u
-        if hits.any():
-            hi_i, hi_j = np.nonzero(hits)
-            tv = t[hi_i, hi_j]
-            uv = u[hi_i, hi_j]
-            hit_list.extend(
-                zip((hi_i + s0).tolist(), hi_j.tolist(), tv.tolist(), uv.tolist())
-            )
-    n_inters = len(hit_list)
-    if n_inters == 0:
+        rows = slice(s0, s0 + chunk)
+        bad, hit, t, u = _segment_crossings(
+            sa[rows, None], d1[rows, None], s1[rows],
+            ca[None], d2[None], s2, ca_next[None],
+        )
+        if bad.any():
+            raise _Degenerate("collinear overlap or vertex touch")
+        if hit.any():
+            hi_i, hi_j = np.nonzero(hit)
+            found.append((hi_i + s0, hi_j, t[hi_i, hi_j], u[hi_i, hi_j]))
+    if not found:
         return None
-    s_first = _build_list(subj)
-    c_first = _build_list(clip)
-    s_nodes = [nd for nd in _iter_ring(s_first)]
-    c_nodes = [nd for nd in _iter_ring(c_first)]
-    d1 = d1_full
-    for si, ci, tt, uu in hit_list:
-        x = float(sa[si, 0] + tt * d1[si, 0])
-        y = float(sa[si, 1] + tt * d1[si, 1])
-        a = _Node(x, y, alpha=tt, intersect=True)
-        b = _Node(x, y, alpha=uu, intersect=True)
-        a.neighbour = b
-        b.neighbour = a
-        _insert(a, s_nodes[si], s_nodes[(si + 1) % len(s_nodes)])
-        _insert(b, c_nodes[ci], c_nodes[(ci + 1) % len(c_nodes)])
-    if n_inters % 2 == 1:
+    si, ci, t, u = (np.concatenate(f) for f in zip(*found))
+    if len(si) % 2 == 1:
         raise _Degenerate("odd intersection count")
+    xs = sa[si, 0] + t * d1[si, 0]
+    ys = sa[si, 1] + t * d1[si, 1]
 
-    # --- phase 2: entry/exit flags
-    status = _point_in_ring_strict((s_first.x, s_first.y), closed_clip)
-    status = status ^ s_entry  # True -> first intersection is an entry
-    # note: standard formulation: entry = s_entry XOR inside; walk & toggle
-    for nd in _iter_ring(s_first):
-        if nd.intersect:
-            nd.entry = status
-            status = not status
-    status = _point_in_ring_strict((c_first.x, c_first.y), closed_subj)
-    status = status ^ c_entry
-    for nd in _iter_ring(c_first):
-        if nd.intersect:
-            nd.entry = status
-            status = not status
+    # --- phases 2-3: entry flags from each ring's first vertex, walk
+    a0_in_b = _point_in_ring_strict(sa[0], np.vstack([ca, ca[:1]]))
+    b0_in_a = _point_in_ring_strict(ca[0], np.vstack([sa, sa[:1]]))
+    rings = _traverse_pair(sa, ca, si, ci, t, u, xs, ys, a0_in_b, b0_in_a, s_entry, c_entry)
+    return [r for r in rings if abs(ring_signed_area(r)) > _MIN_AREA]
 
-    # --- phase 3: traversal
+
+def _traverse_pair(
+    a, b, sil, cil, t, u, xs, ys, a0_in_b, b0_in_a,
+    s_entry=True, c_entry=True,
+):
+    """Phases 2+3 of Greiner–Hormann for one ring pair from its proper
+    crossings: crossing i lies on subject edge ``sil[i]`` at ``t[i]`` and
+    on clip edge ``cil[i]`` at ``u[i]``, at ``(xs[i], ys[i])``;
+    ``a0_in_b``/``b0_in_a`` say whether each ring's first vertex lies
+    inside the other ring. ``(s_entry, c_entry)`` are :func:`_gh_clip`'s
+    op flags. Returns the closed rings; the caller drops those of area
+    <= ``_MIN_AREA``. The crossing count k is even, so the subject and
+    clip steps pair up crossings and every walk closes at its start
+    without revisiting a crossing (``batchclip._traverse_batch``, the
+    batched twin, spells this out)."""
+    k = len(sil)
+    n = len(a)
+    m = len(b)
+    # crossing counts are tiny (k=2..8 for real parcel pairs): plain
+    # Python sorts/lists beat np.lexsort + fancy-index setup ~3x here.
+    # Ties (one edge crossed twice at the same parameter) keep the
+    # crossing order, as sorted() is stable.
+    sil = sil.tolist()
+    cil = cil.tolist()
+    tl = t.tolist()
+    ul = u.tolist()
+    rng = range(k)
+    order_s = sorted(rng, key=lambda i: (sil[i], tl[i]))
+    order_c = sorted(rng, key=lambda i: (cil[i], ul[i]))
+    pos_s = [0] * k
+    pos_c = [0] * k
+    for p, i in enumerate(order_s):
+        pos_s[i] = p
+    for p, i in enumerate(order_c):
+        pos_c[i] = p
+
+    # entry flags: along a ring they alternate, starting from
+    # inside(first vertex) XOR the op flag, so the flag at sorted
+    # position j is (inside ^ s_entry) ^ (j odd)
+    entry_s = [(a0_in_b ^ s_entry) ^ (pos_s[i] % 2 == 1) for i in rng]
+    entry_c = [(b0_in_a ^ c_entry) ^ (pos_c[i] % 2 == 1) for i in rng]
+
+    sil_sorted = [sil[i] for i in order_s]
+    cil_sorted = [cil[i] for i in order_c]
+
+    processed = [False] * k
     results = []
-    max_steps = 4 * (len(subj) + len(clip) + 2 * n_inters) + 16
-    while True:
-        current = None
-        for nd in _iter_ring(s_first):
-            if nd.intersect and not nd.processed:
-                current = nd
-                break
-        if current is None:
-            break
-        ring = [(current.x, current.y)]
-        start = current
-        steps = 0
+    coords = np.stack([xs, ys], axis=1)
+
+    # each ring starts from the first unprocessed crossing in SUBJECT
+    # ring order (the starting vertex moves the shoelace rounding ~1e-9)
+    for start_j in range(k):
+        start_cid = order_s[start_j]
+        if processed[start_cid]:
+            continue
+        piece: list[np.ndarray] = []
+        cid = start_cid
+        on_subject = True
         while True:
-            current.processed = True
-            if current.neighbour is not None:
-                current.neighbour.processed = True
-            if current.entry:
-                while True:
-                    current = current.next
-                    ring.append((current.x, current.y))
-                    steps += 1
-                    if current.intersect or steps > max_steps:
-                        break
+            processed[cid] = True
+            piece.append(coords[cid : cid + 1])
+            if on_subject:
+                entry = entry_s[cid]
+                jpos = pos_s[cid]
+                if entry:
+                    nj = (jpos + 1) % k
+                    v0 = sil_sorted[jpos] + 1
+                    v1 = sil_sorted[nj]  # inclusive
+                    if nj > jpos:
+                        if v1 >= v0:
+                            piece.append(a[v0 : v1 + 1])
+                    else:
+                        piece.append(a[v0:n])
+                        piece.append(a[0 : v1 + 1])
+                else:
+                    nj = (jpos - 1) % k
+                    v1 = sil_sorted[jpos]  # inclusive, walking down
+                    v0 = sil_sorted[nj] + 1
+                    if nj < jpos:
+                        if v1 >= v0:
+                            piece.append(a[v0 : v1 + 1][::-1])
+                    else:
+                        piece.append(a[0 : v1 + 1][::-1])
+                        piece.append(a[v0:n][::-1])
+                ncid = order_s[nj]
             else:
-                while True:
-                    current = current.prev
-                    ring.append((current.x, current.y))
-                    steps += 1
-                    if current.intersect or steps > max_steps:
-                        break
-            if steps > max_steps:
-                raise _Degenerate("traversal did not terminate")
-            current = current.neighbour
-            if current is start or current.neighbour is start:
+                entry = entry_c[cid]
+                jpos = pos_c[cid]
+                if entry:
+                    nj = (jpos + 1) % k
+                    v0 = cil_sorted[jpos] + 1
+                    v1 = cil_sorted[nj]
+                    if nj > jpos:
+                        if v1 >= v0:
+                            piece.append(b[v0 : v1 + 1])
+                    else:
+                        piece.append(b[v0:m])
+                        piece.append(b[0 : v1 + 1])
+                else:
+                    nj = (jpos - 1) % k
+                    v1 = cil_sorted[jpos]
+                    v0 = cil_sorted[nj] + 1
+                    if nj < jpos:
+                        if v1 >= v0:
+                            piece.append(b[v0 : v1 + 1][::-1])
+                    else:
+                        piece.append(b[0 : v1 + 1][::-1])
+                        piece.append(b[v0:m][::-1])
+                ncid = order_c[nj]
+            # arrive at the next crossing on this ring, then jump rings
+            # (same crossing id, other ring)
+            cid = ncid
+            on_subject = not on_subject
+            if cid == start_cid:
                 break
-            if current.processed and current.intersect:
-                # revisiting a processed intersection that's not start
-                raise _Degenerate("traversal revisit")
-        arr = np.asarray(ring, dtype=np.float64)
-        if not _pts_close(arr[0], arr[-1]):
-            arr = np.vstack([arr, arr[:1]])
-        if abs(ring_signed_area(arr)) > _MIN_AREA:
-            results.append(arr)
+        results.append(np.concatenate(piece + [coords[start_cid : start_cid + 1]]))
     return results
 
 

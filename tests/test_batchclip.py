@@ -2,6 +2,7 @@
 clipper — it is the same algorithm with amortized numpy dispatch, and
 every degeneracy routes back to the per-pair path."""
 
+import functools
 import hashlib
 
 import numpy as np
@@ -457,33 +458,65 @@ GOLDEN_PIECES_SHA256 = "2cd41d6f48ebde4c11364095d49b740e12ce15ff1643453caf8e1a3f
 GOLDEN_DIFF_SHA256 = "6cdec542e8ddbd22766539f9f830d5b88b88aabd10f2b5efecf1c326ea1e5c9d"
 
 
-# ------------------------------------------- two-crossing traversal
+# ----------------------------------------------- batched traversal
 
 
-def _two_crossing_pairs():
-    """Every vertex rotation and orientation of two twice-crossing
-    configurations, each ring in turn the subject: a square with a
-    trapezoid poking through one of its edges, and a small box whose
-    top edge a V-notch of a big polygon dips through (the walk along
-    that edge's ring then goes all the way round it). Together they
-    have both crossings on one subject edge or on one clip edge, walks
-    wrapping past vertex 0 on either ring, and the subject's first
-    vertex inside or outside the clip."""
+def _spiky(p, ro, ri, rot, cx=0.0, cy=0.0):
+    """Open ring of a p-pointed star: outer radius ro, inner ri."""
+    th = rot + np.pi * np.arange(2 * p) / p
+    r = np.where(np.arange(2 * p) % 2 == 0, ro, ri)
+    return np.column_stack([cx + r * np.cos(th), cy + r * np.sin(th)])
+
+
+def _comb(teeth):
+    """Open ring of a comb whose teeth poke up through y = 0 (the bottom
+    edge of a 10 x 10 box at the origin): 2 crossings per tooth, all on
+    that one edge."""
+    xs = np.linspace(1, 9, 2 * teeth)
+    pts = [(-1, -5)]
+    for x0, x1 in zip(xs[::2], xs[1::2]):
+        pts += [(x0, -2), (x0, 3), (x1, 3), (x1, -2)]
+    return np.array(pts + [(11, -2), (11, -5)], float)
+
+
+def _walk_pairs():
+    """Every vertex rotation and orientation of twice- to 8-times-
+    crossing configurations, each ring in turn the subject:
+    - a square with a trapezoid poking through one of its edges, and a
+      small box whose top edge a V-notch of a big polygon dips through
+      (the walk along that edge's ring then goes all the way round it):
+      two crossings, on one subject edge or on one clip edge;
+    - combs of 2, 3 and 4 teeth through a box: 4, 6 and 8 crossings on
+      one edge, several result rings;
+    - star x star: 4, 6 and 8 crossings spread over both rings;
+    - a bow tie whose self-crossing lies on a box edge: two crossings
+      tie exactly, at the same parameter of the same edge.
+    Together they have walks wrapping past vertex 0 on either ring and
+    the subject's first vertex inside or outside the clip."""
     sq = np.array([[0, 0], [10, 0], [10, 10], [0, 10]], float)
     trap = np.array([[4, -3], [6, -3], [6.5, 3], [3.5, 3]], float)
     notched = np.array(
         [[0, 0], [20, 0], [20, 20], [11, 20], [10, 12], [9, 20], [0, 20]], float
     )
     box = np.array([[7, 10], [13, 10], [13, 16], [7, 16]], float)
+    bow = np.array([[4, -1], [6, 1], [6, -1], [4, 1]], float)
+    configs = [(sq, trap), (notched, box), (sq, bow)]
+    configs += [(sq, _comb(t)) for t in (2, 3, 4)]
+    configs += [
+        (_spiky(2, 10, 4, 0.1), _spiky(2, 9, 3.5, 0.3, 1.5, 0.5)),  # 4
+        (_spiky(2, 10, 4, 0.1), _spiky(2, 9, 3.5, 0.3, 0.0, 0.5)),  # 6
+        (_spiky(3, 10, 4, 0.1), _spiky(4, 9, 3.5, 0.3, 0.0, 0.5)),  # 8
+    ]
     pairs = []
-    for a0, b0 in ((sq, trap), (trap, sq), (notched, box), (box, notched)):
-        for fa in (a0, a0[::-1]):
-            for fb in (b0, b0[::-1]):
-                for ra in range(len(fa)):
-                    for rb in range(len(fb)):
-                        pairs.append(
-                            (np.roll(fa, -ra, axis=0), np.roll(fb, -rb, axis=0))
-                        )
+    for x, y in configs:
+        for a0, b0 in ((x, y), (y, x)):
+            for fa in (a0, a0[::-1]):
+                for fb in (b0, b0[::-1]):
+                    for ra in range(len(fa)):
+                        for rb in range(len(fb)):
+                            pairs.append(
+                                (np.roll(fa, -ra, axis=0), np.roll(fb, -rb, axis=0))
+                            )
     return pairs
 
 
@@ -494,54 +527,117 @@ def _adjacent(ring, p, q):
     return bool((hit_p[:-1] & hit_q[1:]).any() or (hit_q[:-1] & hit_p[1:]).any())
 
 
-_TWO_CROSSING_FEATURES = {
-    "one_subject_edge": lambda c: c["si"][0] == c["si"][1],
-    "one_clip_edge": lambda c: c["ci"][0] == c["ci"][1],
-    "subject_wraps": lambda c: _adjacent(c["ring"], c["a"][0], c["a"][-1]),
-    "clip_wraps": lambda c: _adjacent(c["ring"], c["b"][0], c["b"][-1]),
+def _tied(e, s):
+    """Two crossings at the same parameter of the same edge."""
+    return len(set(zip(e.tolist(), s.tolist()))) < len(e)
+
+
+_WALK_FEATURES = {
+    "one_subject_edge": lambda c: len(set(c["si"].tolist())) < len(c["si"]),
+    "one_clip_edge": lambda c: len(set(c["ci"].tolist())) < len(c["ci"]),
+    "subject_wraps": lambda c: any(_adjacent(r, c["a"][0], c["a"][-1]) for r in c["rings"]),
+    "clip_wraps": lambda c: any(_adjacent(r, c["b"][0], c["b"][-1]) for r in c["rings"]),
     "subject_first_inside": lambda c: c["a0_in_b"],
     "subject_first_outside": lambda c: not c["a0_in_b"],
+    "four_crossings": lambda c: len(c["si"]) == 4,
+    "six_crossings": lambda c: len(c["si"]) == 6,
+    "eight_crossings": lambda c: len(c["si"]) == 8,
+    "several_rings": lambda c: len(c["rings"]) >= 2,
+    "exact_tie": lambda c: _tied(c["si"], c["t"]) or _tied(c["ci"], c["u"]),
 }
 
 
-@pytest.mark.parametrize("feature", sorted(_TWO_CROSSING_FEATURES))
-@pytest.mark.parametrize("op", ["intersection", "difference"])
-def test_two_crossing_gather_matches_traverse_pair(monkeypatch, op, feature):
-    """The one-gather two-crossing walk builds, ring for ring, the
-    closed ring the per-pair traversal builds from the same crossings."""
+@functools.lru_cache(maxsize=None)
+def _walk_cases(op):
+    """Per walked pair of :func:`_walk_pairs`: its crossings, the rings
+    the one-gather walk built (spied on _traverse_batch) and the rings
+    the scalar walk builds from the same crossings."""
     from geofileops_spark.geometry import batchclip as BC
 
     s_entry, c_entry = {"intersection": (True, True), "difference": (False, True)}[op]
-    pairs = _two_crossing_pairs()
     cases = []
-    orig = BC._traverse_two
+    orig = BC._traverse_batch
 
-    def spy(A, aoff, n, B, boff, m, lo, fwd_s, fwd_c0, h_si, h_ci, h_t, h_u, X):
-        rings = orig(A, aoff, n, B, boff, m, lo, fwd_s, fwd_c0, h_si, h_ci, h_t, h_u, X)
-        for p in range(len(lo)):
+    def spy(A, aoff, n, B, boff, m, hp, h_si, h_ci, h_t, h_u, X, fwd_s, fwd_c):
+        rings, ring_pair = orig(
+            A, aoff, n, B, boff, m, hp, h_si, h_ci, h_t, h_u, X, fwd_s, fwd_c
+        )
+        for p in np.unique(hp).tolist():
             a = A[aoff[p] : aoff[p] + n[p]]
             b = B[boff[p] : boff[p] + m[p]]
-            hs = slice(lo[p], lo[p] + 2)
+            hs = slice(*np.searchsorted(hp, [p, p + 1]).tolist())
+            rs = slice(*np.searchsorted(ring_pair, [p, p + 1]).tolist())
             a0_in_b = bool(fwd_s[p] ^ s_entry)
-            ref = BC._traverse_pair(
+            ref = C._traverse_pair(
                 a, b, h_si[hs], h_ci[hs], h_t[hs], h_u[hs], X[hs, 0], X[hs, 1],
-                a0_in_b, bool(fwd_c0[p] ^ c_entry), s_entry, c_entry,
+                a0_in_b, bool(fwd_c[p] ^ c_entry), s_entry, c_entry,
             )
             cases.append(dict(
-                a=a, b=b, si=h_si[hs], ci=h_ci[hs], a0_in_b=a0_in_b,
-                ring=rings[p], ref=ref,
+                a=a, b=b, si=h_si[hs], ci=h_ci[hs], t=h_t[hs], u=h_u[hs],
+                a0_in_b=a0_in_b, ref=ref, rings=rings[rs],
             ))
-        return rings
+        return rings, ring_pair
 
-    monkeypatch.setattr(BC, "_traverse_two", spy)
-    res = BC._batch_ring_ops(pairs, None, op)[0]
-    assert len(cases) == len(pairs)  # every pair crosses exactly twice
+    pairs = _walk_pairs()
+    BC._traverse_batch = spy
+    try:
+        res = BC._batch_ring_ops(pairs, None, op)[0]
+    finally:
+        BC._traverse_batch = orig
+    assert len(cases) == len(pairs)  # every pair is walked
     assert all(r is not None for r in res)
-    picked = [c for c in cases if _TWO_CROSSING_FEATURES[feature](c)]
+    return cases
+
+
+@pytest.mark.parametrize("feature", sorted(_WALK_FEATURES))
+@pytest.mark.parametrize("op", ["intersection", "difference"])
+def test_two_crossing_gather_matches_traverse_pair(op, feature):
+    """The one-gather walk builds, ring for ring and in the same order,
+    the closed rings the scalar walk (clip._traverse_pair) builds from
+    the same crossings, for every crossing count."""
+    picked = [c for c in _walk_cases(op) if _WALK_FEATURES[feature](c)]
     assert picked
     for c in picked:
-        assert len(c["ref"]) == 1
-        assert np.array_equal(c["ring"], c["ref"][0])
+        assert len(c["rings"]) == len(c["ref"])
+        for got, ref in zip(c["rings"], c["ref"]):
+            assert np.array_equal(got, ref)
+
+
+def test_batched_walk_matches_scalar_walk_on_random_crossings():
+    """The walk is pure combinatorics over the crossing lists, so it can
+    be checked on random ones: edges drawn with repeats, parameters from
+    a 3-value grid (exact ties), any even count up to 12 (π-cycles up to
+    6 long), random entry flags. Every pair's rings equal the scalar
+    walk's, in order."""
+    from geofileops_spark.geometry.batchclip import _traverse_batch
+
+    rng = np.random.default_rng(3)
+    P = 2000
+    n, m = rng.integers(3, 12, P), rng.integers(3, 12, P)
+    k = 2 * rng.integers(1, 7, P)
+    A, B = rng.random((int(n.sum()), 2)), rng.random((int(m.sum()), 2))
+    aoff, boff = np.cumsum(n) - n, np.cumsum(m) - m
+    hp = np.repeat(np.arange(P), k)
+    h_si, h_ci = rng.integers(0, n[hp]), rng.integers(0, m[hp])
+    h_t, h_u = rng.choice([0.25, 0.5, 0.75], (2, len(hp)))
+    X = rng.random((len(hp), 2))
+    fwd_s, fwd_c = rng.random((2, P)) < 0.5
+    rings, ring_pair = _traverse_batch(
+        A, aoff, n, B, boff, m, hp, h_si, h_ci, h_t, h_u, X, fwd_s, fwd_c
+    )
+    assert np.array_equal(np.unique(ring_pair), np.arange(P))
+    for p in range(P):
+        hs = slice(*np.searchsorted(hp, [p, p + 1]).tolist())
+        rs = slice(*np.searchsorted(ring_pair, [p, p + 1]).tolist())
+        ref = C._traverse_pair(
+            A[aoff[p] : aoff[p] + n[p]], B[boff[p] : boff[p] + m[p]],
+            h_si[hs], h_ci[hs], h_t[hs], h_u[hs], X[hs, 0], X[hs, 1],
+            bool(fwd_s[p]), bool(fwd_c[p]), False, False,
+        )
+        got = rings[rs]
+        assert len(got) == len(ref)
+        for g, r in zip(got, ref):
+            assert np.array_equal(g, r)
 
 
 # ------------------------------------------------ silent-fallback guard
@@ -549,36 +645,50 @@ def test_two_crossing_gather_matches_traverse_pair(monkeypatch, op, feature):
 
 def test_pieces_take_batched_paths(monkeypatch):
     """Regression guard for the pair piece kernel's batching: on the
-    star fixture no two-crossing pair falls back to the per-pair
-    traversal, and the containment probe (clip._reassemble) only runs
-    for results whose rings may nest. A changed batching condition
-    would otherwise show up only as a slowdown."""
+    star fixture every crossing pair the batched sweep finds is walked by
+    the one-gather walk (2, 4, 6+ crossings alike) and none falls back to
+    the scalar walk, which runs only inside the scalar clipper
+    (clip._gh_clip, for the holed, multi and degenerate pairs); and the
+    containment probe (clip._reassemble) only runs for results whose
+    rings may nest. A changed batching condition would otherwise show up
+    only as a slowdown."""
     from geofileops_spark.geometry import batchclip as BC
     from geofileops_spark.operators.overlay import _pieces
 
-    seen = {"k": [], "two": 0, "probed": []}
-    orig_pair, orig_two, orig_re = BC._traverse_pair, BC._traverse_two, C._reassemble
+    seen = {"k": [], "outside_gh": 0, "gh_depth": 0, "probed": []}
+    orig_walk, orig_pair, orig_gh = BC._traverse_batch, C._traverse_pair, C._gh_clip
+    orig_re = C._reassemble
 
-    def pair_spy(a, b, sil, *args):
-        seen["k"].append(len(sil))
-        return orig_pair(a, b, sil, *args)
+    def walk_spy(A, aoff, n, B, boff, m, hp, *args):
+        rings, ring_pair = orig_walk(A, aoff, n, B, boff, m, hp, *args)
+        assert set(ring_pair.tolist()) == set(hp.tolist())  # every pair closes
+        seen["k"] += np.bincount(hp)[np.unique(hp)].tolist()
+        return rings, ring_pair
 
-    def two_spy(*args):
-        rings = orig_two(*args)
-        seen["two"] += len(rings)
-        return rings
+    def pair_spy(*args):
+        seen["outside_gh"] += seen["gh_depth"] == 0
+        return orig_pair(*args)
+
+    def gh_spy(*args):
+        seen["gh_depth"] += 1
+        try:
+            return orig_gh(*args)
+        finally:
+            seen["gh_depth"] -= 1
 
     def re_spy(rings):
         seen["probed"].append(rings)
         return orig_re(rings)
 
-    monkeypatch.setattr(BC, "_traverse_pair", pair_spy)
-    monkeypatch.setattr(BC, "_traverse_two", two_spy)
+    monkeypatch.setattr(BC, "_traverse_batch", walk_spy)
+    monkeypatch.setattr(C, "_traverse_pair", pair_spy)
+    monkeypatch.setattr(C, "_gh_clip", gh_spy)
     monkeypatch.setattr(C, "_reassemble", re_spy)
     gs1, gs2 = _golden_pairs()
     pieces = _pieces(gs1, gs2)
-    assert seen["two"] >= 500
-    assert seen["k"] and min(seen["k"]) >= 4
+    assert seen["outside_gh"] == 0
+    k = np.asarray(seen["k"])
+    assert (k == 2).sum() >= 500 and (k == 4).sum() >= 50 and (k >= 6).sum() >= 10
     from geofileops_spark.geometry import wkb as W
 
     multi = sum(
