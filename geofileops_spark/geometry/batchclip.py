@@ -25,7 +25,7 @@ the whole Arrow batch:
   go — the rings ``clip._traverse_pair`` builds one pair at a time;
 - every degeneracy the per-pair code handles by perturb-and-retry
   (collinear overlap, vertex touch, odd crossing count, point on
-  boundary, traversal anomaly) routes that single pair back to
+  boundary) routes that single pair back to
   ``clip.intersection`` — the batch path never guesses.
 
 Each result ring's signed area is computed once, in one shoelace pass
@@ -367,6 +367,7 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     d2 = B_end - B
     s1len = np.maximum(np.abs(d1).sum(axis=1), EPS)
     s2len = np.maximum(np.abs(d2).sum(axis=1), EPS)
+
     if windows is not None:
         grow = 1e-7 * np.maximum(1.0, np.abs(windows).max(axis=1))
         w0 = windows[:, 0] - grow
@@ -414,10 +415,10 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     si = keptA[kaoff[pair_of] + within // kb_rep]
     ci = keptB[kboff[pair_of] + within % kb_rep]
 
-    P_s = A[si]
-    d1_s = d1[si]
+    A_si = A[si]
+    d1_si = d1[si]
     bad, hits, t, u = C._segment_crossings(
-        P_s, d1_s, s1len[si], B[ci], d2[ci], s2len[ci], B_end[ci]
+        A_si, d1_si, s1len[si], B[ci], d2[ci], s2len[ci], B_end[ci]
     )
     # reduceat misbehaves on zero-length segments (fully pruned pairs):
     # reduce only over pairs that still have combos
@@ -474,7 +475,7 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
         hit_idx = np.nonzero(hits)[0]
         hit_idx = hit_idx[walk[pair_of[hit_idx]]]
         h_t = t[hit_idx]
-        X = P_s[hit_idx] + h_t[:, None] * d1_s[hit_idx]
+        X = A_si[hit_idx] + h_t[:, None] * d1_si[hit_idx]
         hp = pair_of[hit_idx]
         rings, ring_pair = _traverse_batch(
             A, aoff, n, B, boff, m, hp,
