@@ -710,7 +710,7 @@ def batch_difference_seq(subjects: list, blade_lists: list) -> list:
 
     mb_memo: dict[int, list] = {}
     bb2_memo: dict[int, tuple] = {}
-    open_memo: dict[int, np.ndarray] = {}
+    open_memo: dict[int, tuple] = {}
 
     def _mb_of(g2):
         key = id(g2)
@@ -729,12 +729,14 @@ def batch_difference_seq(subjects: list, blade_lists: list) -> list:
         return got
 
     def _open_of(ring):
+        # a cut piece's ring is freed and a new ring may reuse its id:
+        # an entry counts only while it still holds the same ring
         key = id(ring)
         got = open_memo.get(key)
-        if got is None:
-            got = C._open_ring(ring)
+        if got is None or got[0] is not ring:
+            got = (ring, C._open_ring(ring))
             open_memo[key] = got
-        return got
+        return got[1]
 
     def _full_bbox(poly):
         # row-gate bbox over ALL rings (kernels.bounds twin)
