@@ -806,3 +806,86 @@ def test_batch_difference_seq_matches_the_difference_loop(seed):
         if W.dumps(r) != W.dumps(_difference_loop(g, bl))
     ]
     assert bad == []
+
+
+def _tiled_golden_cases():
+    """Six seeded tiled-difference cases: a 300-vertex blob minus a
+    jittered grid of small blades, some crossing its boundary, most
+    swallowed by it (deferred holes), a few reaching past their grid
+    neighbours."""
+    cases = []
+    for seed in range(6):
+        rng = np.random.default_rng(500 + seed)
+        ma = [[_rand_ring(rng, 0, 0, 10.0, 300)]]
+        mb = []
+        for gx in range(-5, 6):
+            for gy in range(-5, 6):
+                if rng.random() < 0.6:
+                    cx = gx * 1.9 + rng.uniform(-0.2, 0.2)
+                    cy = gy * 1.9 + rng.uniform(-0.2, 0.2)
+                    mb.append([_rand_ring(
+                        rng, cx, cy, rng.uniform(0.3, 0.8), int(rng.integers(5, 30))
+                    )])
+        cases.append((ma, mb))
+    return cases
+
+
+def _row_golden_cases():
+    """batch_difference_seq rows, one shape each: overlapping blades, a
+    blade swallowed by its subject and then a blade splitting it,
+    rect x rect, a >= 64-vertex subject against small blades (crossing,
+    swallowed, and near its boundary without touching it), a >= 16-part
+    blade, a holed blade, an empty blade, a covering blade, a multi
+    subject, a subject no blade touches and a line subject."""
+    th = np.linspace(0, 2 * np.pi, 101)
+    circle = np.column_stack([50 + 40 * np.cos(th), 50 + 40 * np.sin(th)])
+    circle[-1] = circle[0]
+    big = G.Geometry(G.POLYGON, [circle])
+    outer = np.array([[0, 0], [60, 0], [60, 60], [0, 60], [0, 0]], float)
+    hole = np.array([[20, 20], [40, 20], [40, 40], [20, 40], [20, 20]], float)
+    donut = G.Geometry(G.POLYGON, [outer, hole])
+    many = G.Geometry(G.MULTIPOLYGON, [
+        star(-24 + 12 * (k % 5), -18 + 12 * (k // 5), 9, 700 + k, r=5.0).data
+        for k in range(20)
+    ])
+    rows = [
+        (star(0, 0, 20, 1), [star(15, 0, 14, 2), star(12, 8, 11, 3)]),
+        (star(0, 0, 24, 4), [star(1, -2, 10, 5, r=6.0), poly((10, -60), (14, -60), (14.5, 60), (9.5, 60))]),
+        (G.Geometry.box(0, 0, 10, 10), [G.Geometry.box(5, 5, 15, 15), G.Geometry.box(-2, 2, 3, 4)]),
+        (big, [star(90, 50, 12, 7, r=6.0), star(50, 50, 12, 8, r=5.0),
+               star(60, 60, 9, 9, r=4.0), poly((85, 85), (86, 85), (86, 86))]),
+        (star(0, 0, 28, 10), [many]),
+        (star(30, 30, 20, 11, r=40.0), [donut]),
+        (star(0, 0, 16, 12), [G.Geometry.empty(G.POLYGON), star(20, 0, 10, 13)]),
+        (star(0, 0, 12, 14), [G.Geometry.box(-100, -100, 100, 100), star(5, 5, 9, 15)]),
+        (G.Geometry(G.MULTIPOLYGON, [star(0, 0, 15, 16).data, star(60, 0, 15, 17).data]),
+         [star(30, 0, 18, 18, r=40.0)]),
+        (star(0, 0, 14, 19), [star(500, 500, 10, 20)]),
+        (G.Geometry(G.LINESTRING, np.array([[-40.0, 1.0], [40.0, -2.0]])),
+         [star(0, 0, 14, 21), star(25, 0, 10, 22)]),
+    ]
+    return [r[0] for r in rows], [r[1] for r in rows]
+
+
+def test_difference_stepper_golden_bytes():
+    """The tiled difference and batch_difference_seq are pinned byte for
+    byte (a pass-through row as its own marker)."""
+    from geofileops_spark.geometry import wkb as W
+    from geofileops_spark.geometry.batchclip import batch_difference_seq
+
+    h = hashlib.sha256()
+    for ma, mb in _tiled_golden_cases():
+        assert 61 <= len(mb) <= 82
+        got = C._mp_difference_tiled(ma, mb)
+        h.update(b"N" if got is None else W.dumps(C._mp_to_geom(got)))
+    assert h.hexdigest() == GOLDEN_TILED_SHA256
+
+    subjects, blade_lists = _row_golden_cases()
+    h = hashlib.sha256()
+    for g, res in zip(subjects, batch_difference_seq(subjects, blade_lists)):
+        h.update(b"I" if res is g else W.dumps(res))
+    assert h.hexdigest() == GOLDEN_ROWS_SHA256
+
+
+GOLDEN_TILED_SHA256 = "b2e4bc6afc6b12df535e497c27096bb0c5bf7c3375b197c5e6f3850580d6fd96"
+GOLDEN_ROWS_SHA256 = "be046ce478856afd120a5335ad04586e56d7e08509ff0086fc64cf9cac31bb8c"
