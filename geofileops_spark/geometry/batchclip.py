@@ -37,6 +37,12 @@ probe when it provably answers "outside" for every ring.
 overlay piece kernel writes WKB straight from them while
 :func:`batch_intersection` wraps the same polygons as Geometries.
 
+Differences run through one stepper, :func:`_subtract`: its lanes (the
+rows of a batch, :func:`batch_difference_seq`, or the tiles of one
+subject, ``clip._mp_difference_tiled``) subtract their blades round by
+round, each round's ring pairs in shared
+:func:`batch_ring_differences` sweeps.
+
 Reference behavior being matched: GEOS ``ST_Intersection`` as used by
 geofileops two-layer ops (``_geoops_sql.py:1805-2102``).
 """
@@ -188,19 +194,7 @@ def intersection_parts(gs1: list, gs2: list) -> list:
 
     idxs = cand[batch]
     ga, gb, win = ga[batch], gb[batch], win[batch]
-    # group pairs so each numpy sweep stays under _MAX_COMBOS
-    groups: list[tuple[int, int]] = []
-    start = 0
-    combos = 0
-    for k, c in enumerate((na[batch] * nb[batch]).tolist()):
-        if combos and combos + c > _MAX_COMBOS:
-            groups.append((start, k))
-            start = k
-            combos = 0
-        combos += c
-    if combos:
-        groups.append((start, len(idxs)))
-    for lo, hi in groups:
+    for lo, hi in _sweep_groups((na[batch] * nb[batch]).tolist(), _MAX_COMBOS):
         a, b = ga[lo:hi], gb[lo:hi]
         res, areas = _ring_ops(
             O[_gather_ranges(off[a], cnt[a])], cnt[a],
@@ -216,6 +210,22 @@ def intersection_parts(gs1: list, gs2: list) -> list:
                 i = idxs[lo + k]
                 out[i] = C.intersection(gs1[i], gs2[i])
     return out
+
+
+def _sweep_groups(weights: list, cap: int) -> list:
+    """``[lo, hi)`` runs of consecutive pairs, one numpy sweep each,
+    whose combo ``weights`` add up to at most ``cap`` (a pair heavier
+    than ``cap`` on its own gets a run of its own)."""
+    groups: list[tuple[int, int]] = []
+    start = combos = 0
+    for k, c in enumerate(weights):
+        if combos and combos + c > cap:
+            groups.append((start, k))
+            start, combos = k, 0
+        combos += c
+    if start < len(weights):
+        groups.append((start, len(weights)))
+    return groups
 
 
 def _assemble(results: list, areas: list) -> list:
@@ -280,22 +290,22 @@ def _maybe_nested(ring_sets: list) -> np.ndarray:
 
 # sentinel result from batch_ring_differences: the pair had no boundary
 # contact and no containment — the subject ring is the answer, unchanged.
-# Callers keep their original object (and its cached bbox) instead of
-# reassembling an identical copy; measured ~48% of all (piece, blade)
-# pairs in the complex-difference kernel end here.
+# The difference stepper keeps the piece it has (polygon, bbox and open
+# ring) instead of reassembling an identical copy; measured ~48% of all
+# (piece, blade) pairs in the complex-difference kernel end here.
 UNCHANGED = object()
 
 
 class Holed:
     """batch_ring_differences result marker: the clip ring lies strictly
     inside the subject (no boundary contact) — the answer is the subject
-    with ``hole`` punched in. The tiled-difference caller DEFERS the
-    hole instead of attaching it immediately: attaching would make the
-    piece multi-ring and exile it to the per-pair path for every later
-    blade (measured: 96% of that kernel's per-pair fallbacks were such
-    holed pieces). ``hole`` is the closed clip ring already wound
-    opposite to the subject (clip._no_intersection_fallback's
-    construction)."""
+    with ``hole`` punched in. The difference stepper DEFERS the hole
+    (:class:`_Piece`'s ``holes``) instead of attaching it: attaching
+    would make the piece multi-ring and exile it to the per-pair path
+    for every later blade (measured: 96% of the tiled kernel's per-pair
+    fallbacks were such holed pieces). ``hole`` is the closed clip ring
+    already wound opposite to the subject
+    (clip._no_intersection_fallback's construction)."""
 
     __slots__ = ("hole",)
 
@@ -304,11 +314,13 @@ class Holed:
 
 
 def batch_ring_differences(pairs, windows=None):
-    """Difference (subject − clip) of many open-ring pairs. See
-    :func:`_batch_ring_ops`; the tiled-difference kernel's hot loop
-    (:func:`clip._mp_difference_tiled`) batches its (piece, blade)
-    pairs here. Disjoint pairs return :data:`UNCHANGED` instead of a
-    rebuilt copy of the subject."""
+    """Difference (subject − clip) of many open-ring pairs, see
+    :func:`_ring_ops`: the difference stepper (:func:`_subtract`) runs
+    each round's (piece, blade) pairs through here. Per pair, the closed
+    result rings, :data:`UNCHANGED` for a disjoint pair (instead of a
+    rebuilt copy of the subject), a :class:`Holed` marker for a clip
+    strictly inside the subject, or None for a degenerate pair (it takes
+    the per-pair path)."""
     return _batch_ring_ops(pairs, windows, op="difference")[0]
 
 
@@ -656,289 +668,274 @@ def _batch_point_in_ring(pts, V, dV, off, cnt):
     return inside, on_boundary
 
 
-_DIFF_SWEEP_CAP = 12_000  # same policy as clip._mp_difference_tiled
+# combo cap of the difference sweeps. Smaller than _MAX_COMBOS: inside
+# long-lived Spark Python workers the bigger sweeps' multi-MB temporaries
+# bloat the allocator arenas and measurably slow every LATER stage run by
+# the same workers (observed: the d21 branch of symmetric_difference
+# going 13 s -> 60 s in the same session after a 60k-sweep d12). 12k
+# keeps temporaries ~100 KB while still amortizing tens of pairs per
+# sweep.
+_DIFF_SWEEP_CAP = 12_000
+
+
+class _Blade:
+    """One entry of a lane's blade list: a polygon ``poly`` (closed
+    rings), its exterior bbox, its open exterior ring when the sweep can
+    take it (one ring of >= 3 vertices; None otherwise) and whether that
+    ring is an axis rectangle. A ``whole`` entry is a many-part blade:
+    ``poly`` is its list of polygons and ``bb`` its bounds, and
+    ``clip.mp_difference`` subtracts it in one go."""
+
+    __slots__ = ("poly", "bb", "ring", "rect", "whole")
+
+    def __init__(self, poly, bb=None, whole=False):
+        self.poly = poly
+        self.whole = whole
+        self.bb = C._poly_bbox(poly) if bb is None else bb
+        ring = None if whole or len(poly) != 1 else C._open_ring(poly[0])
+        self.ring = ring if ring is not None and len(ring) >= 3 else None
+        self.rect = self.ring is not None and C._as_rect(self.ring) is not None
+
+
+class _Piece:
+    """One polygon of a lane being cut: ``poly`` (closed rings, exterior
+    CCW), its exterior bbox, its open exterior ring (made on first use,
+    :meth:`open`) and ``holes``, the deferred hole rings of the blades it
+    swallowed (:class:`Holed`)."""
+
+    __slots__ = ("poly", "bb", "holes", "_open")
+
+    def __init__(self, poly, bb=None, holes=(), ring=False):
+        self.poly = poly
+        self.bb = C._poly_bbox(poly) if bb is None else bb
+        self.holes = holes
+        self._open = ring
+
+    def open(self):
+        """The open exterior ring the sweep takes; None for a piece with
+        holes of its own or with fewer than 3 vertices."""
+        if self._open is False:
+            ring = C._open_ring(self.poly[0]) if len(self.poly) == 1 else None
+            self._open = ring if ring is not None and len(ring) >= 3 else None
+        return self._open
+
+    def full(self):
+        """The polygon with its deferred holes attached."""
+        return [self.poly[0], *self.holes] if self.holes else self.poly
+
+
+def _cut(p: _Piece, b: _Blade) -> list:
+    """``p − b`` by the exact per-pair path (``clip.poly_difference``)."""
+    full = p.full()
+    return [
+        _Piece(q, p.bb if q is full else None)
+        for q in C.poly_difference(full, b.poly)
+    ]
+
+
+def _defer(p: _Piece, hole, b: _Blade, later: list) -> list:
+    """``p − b`` for a blade strictly inside ``p``: the hole is deferred,
+    which keeps the piece single-ring and batchable. When a later blade
+    of the lane overlaps ``b``'s bbox it could cut the piece into the
+    hole's region, and attaching the hole at the end would no longer be
+    a plain ring append: then it is attached now (the piece takes the
+    per-pair path from there)."""
+    hb = b.bb
+    for c in later:
+        if c.bb[0] <= hb[2] and c.bb[2] >= hb[0] and c.bb[1] <= hb[3] and c.bb[3] >= hb[1]:
+            return [_Piece([*p.full(), hole], p.bb)]
+    return [_Piece(p.poly, p.bb, p.holes + (hole,), p._open)]
+
+
+def _place_holes(new: list, holes: tuple) -> bool:
+    """Hand each deferred hole to the piece of ``new`` strictly
+    containing it (the probe ``clip._subtract_ring`` uses for a piece's
+    old holes). False when a hole has no such piece, which the
+    :func:`_defer` guard rules out; the caller then takes the per-pair
+    path."""
+    from .kernels import points_in_ring
+
+    for h in holes:
+        hx, hy = float(h[0, 0]), float(h[0, 1])
+        for t, q in enumerate(new):
+            if not (q.bb[0] <= hx <= q.bb[2] and q.bb[1] <= hy <= q.bb[3]):
+                continue
+            code = points_in_ring(h[0:1], q.poly[0])[0]
+            if code == 1:
+                code = 2 if (points_in_ring(h[:-1], q.poly[0]) == 2).any() else 0
+            if code == 2:
+                new[t] = _Piece(q.poly, q.bb, q.holes + (h,), q._open)
+                break
+        else:
+            return False
+    return True
+
+
+def _edges_in_window(r: np.ndarray, w) -> int:
+    """Edges of the open ring ``r`` (the closing one included) whose bbox
+    meets the window ``w``: an upper bound on the sweep's combos for ``r``
+    after the window prune, and 0 when no boundary contact is possible."""
+    x1, y1 = r[:, 0], r[:, 1]
+    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+    return int((
+        (np.maximum(x1, x2) >= w[0]) & (np.minimum(x1, x2) <= w[2])
+        & (np.maximum(y1, y2) >= w[1]) & (np.minimum(y1, y2) <= w[3])
+    ).sum())
+
+
+def _subtract(lanes: list) -> list:
+    """The difference stepper behind the tiled difference
+    (``clip._mp_difference_tiled``, a lane per tile) and
+    :func:`batch_difference_seq` (a lane per row). A lane is ``(polys,
+    blades)``: the polygons of one subject and the :class:`_Blade` list
+    to subtract from them, in order. Round r subtracts every live lane's
+    r-th blade from each of its pieces, and the (piece, blade) ring pairs
+    of ALL lanes share :func:`batch_ring_differences` sweeps: per-pair
+    numpy overhead on these small rings was the measured 90% of the
+    difference kernels. Each lane keeps its blade order, so every
+    intermediate region is that of a plain sequential loop. Returns the
+    polygons each lane has left.
+
+    One policy per (piece, blade) pair:
+
+    - a piece whose bbox misses the blade's, or meets it only in a
+      measure-zero strip, is unchanged (``clip._ring_op``'s strip exit);
+    - a piece with holes of its own, a holed blade, a rect x rect pair
+      (exact rect algebra), a pair over :data:`_DIFF_SWEEP_CAP` and a
+      degenerate pair take the exact per-pair path
+      (``clip.poly_difference``); a whole blade takes
+      ``clip.mp_difference`` for all of the lane's pieces;
+    - a >= 64-vertex piece weighs only its edges near the overlap
+      window, and none there means no boundary contact, decided without
+      a sweep (``clip._ring_op``'s big-ring fast path);
+    - a blade strictly inside a piece becomes a deferred hole
+      (:func:`_defer`)."""
+    pieces = [[_Piece(p) for p in polys] for polys, _ in lanes]
+    blades = [b for _, b in lanes]
+    live = [k for k in range(len(lanes)) if pieces[k] and blades[k]]
+    r = 0
+    while live:
+        repl: dict[int, dict[int, list]] = {}
+        pairs, windows, weights, refs = [], [], [], []
+        for k in live:
+            b, cur = blades[k][r], pieces[k]
+            if b.whole:
+                # the gate of the loop's clip.difference: the bounds of
+                # what is left of the subject
+                if not (
+                    max(p.bb[2] for p in cur) < b.bb[0]
+                    or b.bb[2] < min(p.bb[0] for p in cur)
+                    or max(p.bb[3] for p in cur) < b.bb[1]
+                    or b.bb[3] < min(p.bb[1] for p in cur)
+                ):
+                    pieces[k] = [
+                        _Piece(q)
+                        for q in C.mp_difference([p.full() for p in cur], b.poly)
+                    ]
+                continue
+            rmap = repl[k] = {}
+            for i, p in enumerate(cur):
+                w = (
+                    max(p.bb[0], b.bb[0]), max(p.bb[1], b.bb[1]),
+                    min(p.bb[2], b.bb[2]), min(p.bb[3], b.bb[3]),
+                )
+                if w[2] <= w[0] or w[3] <= w[1]:
+                    continue
+                a = p.open()
+                if (
+                    a is None or b.ring is None
+                    or (b.rect and len(a) == 4 and C._as_rect(a) is not None)
+                ):
+                    rmap[i] = _cut(p, b)
+                    continue
+                weight = len(a) * len(b.ring)
+                if len(a) >= 64:
+                    ka = _edges_in_window(a, w)
+                    if ka == 0:
+                        res = C._no_intersection_fallback(
+                            a, b.ring, "difference", (p.bb, b.bb)
+                        )
+                        if not res:
+                            rmap[i] = []  # swallowed by the blade
+                        elif len(res) == 2:
+                            rmap[i] = _defer(p, res[1], b, blades[k][r + 1 :])
+                        continue
+                    weight = ka * len(b.ring)
+                if weight > _DIFF_SWEEP_CAP:
+                    rmap[i] = _cut(p, b)
+                    continue
+                pairs.append((a, b.ring))
+                windows.append(w)
+                weights.append(weight)
+                refs.append((k, i))
+        for lo, hi in _sweep_groups(weights, _DIFF_SWEEP_CAP):
+            res = batch_ring_differences(
+                pairs[lo:hi], np.asarray(windows[lo:hi], dtype=np.float64)
+            )
+            for (k, i), rings in zip(refs[lo:hi], res):
+                if rings is UNCHANGED:
+                    continue
+                p, b = pieces[k][i], blades[k][r]
+                if isinstance(rings, Holed):
+                    repl[k][i] = _defer(p, rings.hole, b, blades[k][r + 1 :])
+                elif rings is None:
+                    repl[k][i] = _cut(p, b)  # its perturb-and-retry ladder
+                else:
+                    new = [_Piece(q) for q in C._reassemble(rings)]
+                    repl[k][i] = new if _place_holes(new, p.holes) else _cut(p, b)
+        for k, rmap in repl.items():
+            if rmap:
+                pieces[k] = [
+                    q for i, p in enumerate(pieces[k]) for q in rmap.get(i, (p,))
+                ]
+        r += 1
+        live = [k for k in live if pieces[k] and r < len(blades[k])]
+    return [[p.full() for p in cur] for cur in pieces]
 
 
 def batch_difference_seq(subjects: list, blade_lists: list) -> list:
     """Elementwise sequential difference over one Arrow batch: row i's
-    result is ``subjects[i] − blades[0] − blades[1] − …`` with per-blade
-    semantics identical to a loop of ``clip.difference`` calls (the
-    ``overlay._combine_rows('difference')`` hot path). The (piece ×
-    blade-part) single-ring clips of ALL rows are flattened into shared
-    :func:`batch_ring_differences` sweeps — the per-pair clipper's numpy
-    call overhead on parcel-sized rings was the measured dominant term of
-    every overlay difference side. Anything the sweep cannot prove simple
-    (multi-ring pieces, holed/multi blades, rects, degeneracies, ≥16-part
-    blades, non-polygon dims) takes the exact per-pair path unchanged.
+    result is ``subjects[i] − blades[0] − blades[1] − …``, the bytes a
+    loop of ``clip.difference`` calls returns (the
+    ``overlay._combine_rows('difference')`` hot path). Each polygonal
+    row is one lane of the difference stepper (:func:`_subtract`); its
+    blade list holds the parts of the row's blades whose bounds meet the
+    subject's, a ≥16-part blade as one whole entry (``clip.mp_difference``
+    tiles it). A row with a non-polygonal subject runs the loop itself.
 
     Returns one entry per row; the entry IS ``subjects[i]`` (same object)
-    when no blade passed the whole-bbox gate, matching
+    when no blade passed the subject's bbox gate, matching
     ``clip.difference``'s pass-through identity contract."""
-    from .kernels import bounds as g_bounds
+    from .kernels import bounds
 
-    n = len(subjects)
-    out: list = list(subjects)
-
-    # rows with non-polygonal subjects: exact sequential loop
-    seq_rows = []
-    work = []  # indices processed by the stepper
-    for i in range(n):
-        g1 = subjects[i]
+    out = list(subjects)
+    rows, lanes = [], []
+    for i, (g1, g2s) in enumerate(zip(subjects, blade_lists)):
         if g1.dim() != 2:
-            seq_rows.append(i)
-        else:
-            work.append(i)
-    for i in seq_rows:
-        res = subjects[i]
-        for g2 in blade_lists[i]:
-            res = C.difference(res, g2)
-            if res.is_empty():
-                break
-        out[i] = res
-
-    if not work:
-        return out
-
-    # per-row state
-    cur_b = {i: 0 for i in work}  # blade index
-    cur_p = {i: 0 for i in work}  # part index within current blade's mb
-    mb_cur: dict[int, list] = {}
-    pieces: dict[int, list] = {}  # None until first touching blade
-    row_bbox: dict[int, tuple] = {}
-    done: dict[int, bool] = {i: False for i in work}
-    touched: dict[int, bool] = {i: False for i in work}
-
-    mb_memo: dict[int, list] = {}
-    bb2_memo: dict[int, tuple] = {}
-    open_memo: dict[int, tuple] = {}
-
-    def _mb_of(g2):
-        key = id(g2)
-        got = mb_memo.get(key)
-        if got is None:
-            got = C._geom_to_mp(g2)
-            mb_memo[key] = got
-        return got
-
-    def _bb2_of(g2):
-        key = id(g2)
-        got = bb2_memo.get(key)
-        if got is None:
-            got = g_bounds(g2)
-            bb2_memo[key] = got
-        return got
-
-    def _open_of(ring):
-        # a cut piece's ring is freed and a new ring may reuse its id:
-        # an entry counts only while it still holds the same ring
-        key = id(ring)
-        got = open_memo.get(key)
-        if got is None or got[0] is not ring:
-            got = (ring, C._open_ring(ring))
-            open_memo[key] = got
-        return got[1]
-
-    def _full_bbox(poly):
-        # row-gate bbox over ALL rings (kernels.bounds twin)
-        xs0 = min(r[:, 0].min() for r in poly)
-        ys0 = min(r[:, 1].min() for r in poly)
-        xs1 = max(r[:, 0].max() for r in poly)
-        ys1 = max(r[:, 1].max() for r in poly)
-        return (xs0, ys0, xs1, ys1)
-
-    def _decompose(i):
-        mp = C._geom_to_mp(subjects[i])
-        pieces[i] = [
-            (p, C._poly_bbox(p), _full_bbox(p)) for p in mp
-        ]
-        _update_row_bbox(i)
-
-    def _update_row_bbox(i):
-        ps = pieces[i]
-        if not ps:
-            row_bbox[i] = (np.nan, np.nan, np.nan, np.nan)
-            return
-        row_bbox[i] = (
-            min(fb[0] for _, _, fb in ps),
-            min(fb[1] for _, _, fb in ps),
-            max(fb[2] for _, _, fb in ps),
-            max(fb[3] for _, _, fb in ps),
-        )
-
-    while True:
-        sweep_pairs: list[tuple[np.ndarray, np.ndarray]] = []
-        sweep_windows: list[tuple] = []
-        sweep_w: list[int] = []
-        sweep_ref: list[tuple[int, int]] = []  # (row, piece idx)
-        # per-row: dict piece_idx -> replacement list, for this step
-        step_repl: dict[int, dict[int, list]] = {}
-        step_rows: list[int] = []
-        active = False
-        for i in work:
-            if done[i]:
+            for g2 in g2s:
+                out[i] = C.difference(out[i], g2)
+                if out[i].is_empty():
+                    break
+            continue
+        ba = bounds(g1)
+        entries, hit = [], False
+        for g2 in g2s:
+            if g2.dim() != 2 or g2.is_empty():
                 continue
-            blades = blade_lists[i]
-            # advance through gate-skipped blades to the next real step
-            pb = None
-            while cur_b[i] < len(blades):
-                g2 = blades[cur_b[i]]
-                if cur_p[i] == 0:
-                    if g2.dim() != 2 or g2.is_empty():
-                        cur_b[i] += 1
-                        continue
-                    ba = row_bbox.get(i)
-                    if ba is None:
-                        ba = g_bounds(subjects[i])
-                        row_bbox[i] = ba
-                    bb2 = _bb2_of(g2)
-                    if (
-                        ba[2] < bb2[0] or bb2[2] < ba[0]
-                        or ba[3] < bb2[1] or bb2[3] < ba[1]
-                    ):
-                        cur_b[i] += 1
-                        continue
-                    touched[i] = True
-                    if pieces.get(i) is None:
-                        _decompose(i)
-                        if not pieces[i]:
-                            done[i] = True
-                            break
-                    mb = _mb_of(g2)
-                    if len(mb) >= C._TILED_DIFF_MIN_BLADES:
-                        # exact whole-blade path (tiled kernel inside)
-                        mp = C.mp_difference(
-                            [p for p, _, _ in pieces[i]], mb
-                        )
-                        pieces[i] = [
-                            (p, C._poly_bbox(p), _full_bbox(p)) for p in mp
-                        ]
-                        _update_row_bbox(i)
-                        cur_b[i] += 1
-                        if not pieces[i]:
-                            done[i] = True
-                        break
-                    mb_cur[i] = mb
-                pb = mb_cur[i][cur_p[i]]
-                break
+            bb = bounds(g2)
+            if ba[2] < bb[0] or bb[2] < ba[0] or ba[3] < bb[1] or bb[3] < ba[1]:
+                continue
+            hit = True
+            mb = C._geom_to_mp(g2)
+            if len(mb) >= C._TILED_DIFF_MIN_BLADES:
+                entries.append(_Blade(mb, bb, whole=True))
             else:
-                done[i] = True
-            if done[i] or pb is None:
-                continue
-            active = True
-            step_rows.append(i)
-            repl: dict[int, list] = {}
-            step_repl[i] = repl
-            pb_bbox = C._poly_bbox(pb)
-            for pi, (pa, pab, _fb) in enumerate(pieces[i]):
-                if not (
-                    pab[0] <= pb_bbox[2] and pb_bbox[0] <= pab[2]
-                    and pab[1] <= pb_bbox[3] and pb_bbox[1] <= pab[3]
-                ):
-                    continue  # bbox-disjoint: piece unchanged
-                batchable = len(pa) == 1 and len(pb) == 1
-                if batchable:
-                    a = _open_of(pa[0])
-                    b = _open_of(pb[0])
-                    if (
-                        len(a) < 3 or len(b) < 3
-                        or len(a) * len(b) > _DIFF_SWEEP_CAP
-                        or (
-                            len(a) == 4 and len(b) == 4
-                            and C._as_rect(a) is not None
-                            and C._as_rect(b) is not None
-                        )
-                    ):
-                        batchable = False
-                if not batchable:
-                    repl[pi] = [
-                        (rp, C._poly_bbox(rp), None)
-                        for rp in C.poly_difference(pa, pb)
-                    ]
-                    continue
-                bb_a = C._ring_bbox(a)
-                bb_b = C._ring_bbox(b)
-                sweep_pairs.append((a, b))
-                sweep_windows.append(
-                    (
-                        max(bb_a[0], bb_b[0]),
-                        max(bb_a[1], bb_b[1]),
-                        min(bb_a[2], bb_b[2]),
-                        min(bb_a[3], bb_b[3]),
-                    )
-                )
-                sweep_w.append(len(a) * len(b))
-                sweep_ref.append((i, pi))
-                repl[pi] = None  # pending
-
-        if not active:
-            break
-
-        # run the shared sweeps, grouped under the combos cap
-        if sweep_pairs:
-            start = 0
-            combos = 0
-            groups: list[tuple[int, int]] = []
-            for g, c in enumerate(sweep_w):
-                if combos and combos + c > _DIFF_SWEEP_CAP:
-                    groups.append((start, g))
-                    start = g
-                    combos = 0
-                combos += c
-            groups.append((start, len(sweep_pairs)))
-            for lo, hi in groups:
-                res = batch_ring_differences(
-                    sweep_pairs[lo:hi],
-                    np.asarray(sweep_windows[lo:hi], dtype=np.float64),
-                )
-                for off, rings in enumerate(res):
-                    i, pi = sweep_ref[lo + off]
-                    pa, pab, fb = pieces[i][pi]
-                    if rings is UNCHANGED:
-                        step_repl[i][pi] = [(pa, pab, fb)]
-                        continue
-                    if rings is None or isinstance(rings, Holed):
-                        # degenerate or strictly-contained blade: exact
-                        # per-pair path (identical to the old sequence)
-                        pb = mb_cur[i][cur_p[i]]
-                        step_repl[i][pi] = [
-                            (rp, C._poly_bbox(rp), None)
-                            for rp in C.poly_difference(pa, pb)
-                        ]
-                        continue
-                    step_repl[i][pi] = [
-                        (rp, C._poly_bbox(rp), None)
-                        for rp in C._reassemble(rings)
-                    ]
-
-        # splice replacements and advance cursors
-        for i in step_rows:
-            repl = step_repl[i]
-            if repl:
-                nxt = []
-                for pi, item in enumerate(pieces[i]):
-                    got = repl.get(pi)
-                    if got is None and pi not in repl:
-                        nxt.append(item)
-                    else:
-                        for rp, pab, fb in got:
-                            nxt.append(
-                                (rp, pab, fb if fb is not None else _full_bbox(rp))
-                            )
-                pieces[i] = nxt
-            cur_p[i] += 1
-            if cur_p[i] >= len(mb_cur[i]):
-                cur_p[i] = 0
-                cur_b[i] += 1
-                mb_cur.pop(i, None)
-                _update_row_bbox(i)
-            if not pieces[i]:
-                # emptied mid-blade: remaining parts/blades are no-ops
-                # (the old loop breaks on is_empty after the blade)
-                done[i] = True
-
-    for i in work:
-        if touched[i]:
-            out[i] = C._mp_to_geom([p for p, _, _ in pieces.get(i) or []])
+                entries.extend(map(_Blade, mb))
+        if hit:
+            rows.append(i)
+            lanes.append((C._geom_to_mp(g1), entries))
+    for i, polys in zip(rows, _subtract(lanes)):
+        out[i] = C._mp_to_geom(polys)
     return out
 
 

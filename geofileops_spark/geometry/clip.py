@@ -25,8 +25,6 @@ reference's own dissolve tests use (``test_geoops_dissolve.py:411-425``).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 from .geom import (
@@ -718,12 +716,13 @@ def mp_intersection(ma, mb):
 
 _TILED_DIFF_MIN_BLADES = 16
 # target blade count per tile in _mp_difference_tiled: the grid is sized
-# so each tile subtracts ~this many blades sequentially. Smaller → more
-# tiles (more subject/tile clips, more blades straddling seams, larger
-# weld); larger → longer sequential piece accumulation per tile. Swept on
-# the 120 heaviest complex-difference parts at 500k: 4.0 ≈ 81 s vs 6.0 ≈
-# 99 s vs 12.0 ≈ 135 s vs 48.0 ≈ 523 s single-thread (density 1-3 flat
-# within noise of 4.0 but caps nt sooner on many-blade subjects).
+# so each tile's lane of the difference stepper subtracts ~this many
+# blades. Smaller → more tiles (more subject/tile clips, more blades
+# straddling seams, larger weld); larger → more pieces accumulated per
+# lane, each cut by each later blade. Swept on the 120 heaviest
+# complex-difference parts at 500k: 4.0 ≈ 81 s vs 6.0 ≈ 99 s vs
+# 12.0 ≈ 135 s vs 48.0 ≈ 523 s single-thread (density 1-3 flat within
+# noise of 4.0 but caps nt sooner on many-blade subjects).
 _TILE_BLADES = 4.0
 
 
@@ -733,10 +732,14 @@ def _mp_difference_tiled(ma, mb):
     blades, results re-weld along the (axis-parallel, snap-matched) tile
     seams. The sequential path is O(components x accumulated pieces) —
     measured 7 s for a 5-vertex box minus 85 parcels; the grid bounds the
-    per-tile blade count so total work stays ~O(subject + blades).
+    per-tile blade count so total work stays ~O(subject + blades). Each
+    tile is one lane of the difference stepper (``batchclip._subtract``),
+    so the (piece, blade) clips of all tiles share its sweeps.
     Returns None when the weld cannot certify the reassembly (caller
     falls back to the sequential path)."""
     import math
+
+    from .batchclip import _Blade, _subtract
 
     bbs = [_poly_bbox(p) for p in ma]
     x0 = min(b[0] for b in bbs)
@@ -745,26 +748,17 @@ def _mp_difference_tiled(ma, mb):
     y1 = max(b[3] for b in bbs)
     if x1 <= x0 or y1 <= y0:
         return None
-    blade_bb = np.asarray([_poly_bbox(p) for p in mb], dtype=np.float64)
+    blades = [_Blade(p) for p in mb]
+    blade_bb = np.asarray([b.bb for b in blades], dtype=np.float64)
     nt = int(math.ceil(math.sqrt(len(mb) / _TILE_BLADES)))
     nt = max(2, min(nt, 24))
     xs = np.linspace(x0, x1, nt + 1)
     ys = np.linspace(y0, y1, nt + 1)
-    pieces: list[list[np.ndarray]] = []
-    # per-tile state: (pieces [(poly, bbox)], selected blade indices)
-    states: list[tuple[list, np.ndarray]] = []
+    lanes = []
     for i in range(nt):
         for j in range(nt):
             tb = (xs[i], ys[j], xs[i + 1], ys[j + 1])
-            box = np.asarray(
-                [
-                    [tb[0], tb[1]],
-                    [tb[2], tb[1]],
-                    [tb[2], tb[3]],
-                    [tb[0], tb[3]],
-                    [tb[0], tb[1]],
-                ]
-            )
+            box = _rect_ring(*tb)
             sub: list[list[np.ndarray]] = []
             for p, pb in zip(ma, bbs):
                 if (
@@ -779,290 +773,8 @@ def _mp_difference_tiled(ma, mb):
                 (blade_bb[:, 0] > tb[2]) | (blade_bb[:, 2] < tb[0])
                 | (blade_bb[:, 1] > tb[3]) | (blade_bb[:, 3] < tb[1])
             )
-            # carry each piece's bbox through the sequential subtraction:
-            # recomputing _poly_bbox per (piece, blade) pair dominated the
-            # tile loop (numpy min/max reduces were ~8% of the whole d12
-            # kernel), and a cached bbox also lets bbox-disjoint blades
-            # skip the clip without the call overhead. Unchanged results
-            # reuse the cached bbox; only freshly cut pieces pay a scan.
-            states.append(
-                ([(p, _poly_bbox(p), ()) for p in sub], np.where(sel)[0])
-            )
-
-    # blade ROUNDS across all tiles: round r subtracts each tile's r-th
-    # selected blade from that tile's current pieces. Per-tile blade
-    # order (and therefore every intermediate region) is identical to
-    # the old sequential tile loop — difference is A − ∪blades, so only
-    # the per-tile order matters, and it is preserved. The round
-    # structure exists so the (piece, blade) ring clips of ALL tiles can
-    # run through ONE batched sweep (batchclip.batch_ring_differences):
-    # per-pair numpy overhead on these small rings was the measured 90%
-    # of the complex-difference kernel. Degenerate / holed-blade /
-    # oversized pairs fall back to poly_difference, the exact per-pair
-    # path.
-    #
-    # Piece state is (poly, bbox, pend): ``pend`` holds hole rings from
-    # blades that fell STRICTLY INSIDE the piece (batchclip.Holed).
-    # Attaching them immediately would make the piece multi-ring and
-    # exile it to the per-pair path for every later blade — 96% of this
-    # kernel's per-pair fallbacks were exactly such pieces. Deferral is
-    # exact because the blades are disjoint components of one union:
-    # no later blade can overlap a pending hole's region, so each hole
-    # survives intact and lands strictly inside exactly one final piece
-    # (holes are re-distributed by containment when a later blade splits
-    # the piece — the same probe _subtract_ring uses for old holes).
-    from .batchclip import (
-        UNCHANGED,
-        Holed,
-        batch_ring_differences,
-    )
-
-    # sweep size cap for the difference batches. Smaller than batchclip's
-    # _MAX_COMBOS (60k): inside long-lived Spark Python workers the
-    # bigger sweeps' multi-MB temporaries bloat the allocator arenas and
-    # measurably slow every LATER stage run by the same workers
-    # (observed: the d21 branch of symmetric_difference going 13 s -> 60 s
-    # in the same session after a 60k-sweep d12). 12k keeps temporaries
-    # ~100 KB while still amortizing tens of pairs per sweep.
-    _sweep_cap = int(os.environ.get("GFO_DIFF_SWEEP_COMBOS", "12000"))
-
-    def _materialize(pa, pend):
-        return [pa[0], *pend] if pend else pa
-
-    def _edges_in_window(r, w):
-        """Number of open-ring edges (wraparound included) whose bbox
-        overlaps window ``w`` — both the batch sweep's post-prune combo
-        count estimator and the asymmetric no-contact fast test (0 means
-        no boundary contact is possible, _ring_op's big-ring reasoning)."""
-        x1, y1 = r[:, 0], r[:, 1]
-        x2 = np.roll(x1, -1)
-        y2 = np.roll(y1, -1)
-        return int(
-            (
-                (np.maximum(x1, x2) >= w[0])
-                & (np.minimum(x1, x2) <= w[2])
-                & (np.maximum(y1, y2) >= w[1])
-                & (np.minimum(y1, y2) <= w[3])
-            ).sum()
-        )
-
-    def _defer_or_attach(si, pi, pa, pab, pend, hole, r):
-        """A blade fell strictly inside the piece. Defer the hole (keeps
-        the piece single-ring and batchable) unless a LATER blade of this
-        tile could touch it — callers pass disjoint union components, so
-        deferral always holds there; the guard keeps it exact even for
-        overlapping blades (e.g. poly_union's hole survivors), where a
-        later blade could clip the piece into the deferred hole's region
-        and the end-attachment would no longer be a plain ring append."""
-        kidx = states[si][1]
-        rest = kidx[r + 1:]
-        hb = blade_bb[int(kidx[r])]
-        if len(rest) and bool(
-            (
-                (blade_bb[rest, 0] <= hb[2])
-                & (blade_bb[rest, 2] >= hb[0])
-                & (blade_bb[rest, 1] <= hb[3])
-                & (blade_bb[rest, 3] >= hb[1])
-            ).any()
-        ):
-            # attach now: exact multi-ring piece (exiled to the
-            # per-pair path for later blades)
-            return [([*_materialize(pa, pend), hole], pab, ())]
-        return [(pa, pab, pend + (hole,))]
-
-    def _distribute_pend(new_pieces, pend):
-        """Attach each pending hole to the replacement piece containing
-        it. Returns False (caller must use the exact per-pair path) when
-        any hole cannot be placed — only possible when the disjoint-
-        blades precondition was violated."""
-        from .kernels import points_in_ring
-
-        for h in pend:
-            hx, hy = float(h[0, 0]), float(h[0, 1])
-            target = -1
-            for ti, (tp, tb, _) in enumerate(new_pieces):
-                if not (tb[0] <= hx <= tb[2] and tb[1] <= hy <= tb[3]):
-                    continue
-                code = points_in_ring(h[0:1], tp[0])[0]
-                if code == 1:
-                    codes = points_in_ring(h[:-1], tp[0])
-                    code = 2 if (codes == 2).any() else 0
-                if code == 2:
-                    target = ti
-                    break
-            if target < 0:
-                return False
-            tp, tb, tpend = new_pieces[target]
-            new_pieces[target] = (tp, tb, tpend + (h,))
-        return True
-
-    blade_open: dict[int, np.ndarray | None] = {}
-    rmax = max((len(kidx) for _, kidx in states), default=0)
-    for r in range(rmax):
-        pend_pairs: list[tuple[np.ndarray, np.ndarray]] = []
-        pend_weights: list[int] = []
-        pend_windows: list[tuple[float, float, float, float]] = []
-        pend_ref: list[tuple[int, int]] = []
-        # repl[si][pi] = list of replacement (poly, bbox, pend) for that
-        # piece (no entry = piece unchanged this round)
-        repl: dict[int, dict[int, list]] = {}
-        for si, (cur, kidx) in enumerate(states):
-            if r >= len(kidx) or not cur:
-                continue
-            k = int(kidx[r])
-            blade = mb[k]
-            kb0, kb1, kb2, kb3 = blade_bb[k]
-            b_open = blade_open.get(k, False)
-            if b_open is False:
-                b_open = (
-                    _open_ring(blade[0]) if len(blade) == 1 else None
-                )
-                if b_open is not None and len(b_open) < 3:
-                    b_open = None
-                blade_open[k] = b_open
-            rmap = repl.setdefault(si, {})
-            for pi, (pa, pab, pend) in enumerate(cur):
-                ox = min(pab[2], kb2) - max(pab[0], kb0)
-                oy = min(pab[3], kb3) - max(pab[1], kb1)
-                if ox < 0.0 or oy < 0.0:
-                    continue  # bbox-disjoint: unchanged
-                if ox <= 0.0 or oy <= 0.0:
-                    # bboxes share only a measure-zero strip: interiors
-                    # cannot overlap, difference leaves pa unchanged
-                    # (same reasoning as _ring_op's degenerate-strip exit)
-                    continue
-                a_open = (
-                    _open_ring(pa[0])
-                    if b_open is not None and len(pa) == 1
-                    else None
-                )
-                if a_open is None or len(a_open) < 3:
-                    full = _materialize(pa, pend)
-                    rmap[pi] = [
-                        (rp, pab if rp is full else _poly_bbox(rp), ())
-                        for rp in poly_difference(full, blade)
-                    ]
-                    continue
-                w = (
-                    max(pab[0], kb0),
-                    max(pab[1], kb1),
-                    min(pab[2], kb2),
-                    min(pab[3], kb3),
-                )
-                weight = len(a_open) * len(b_open)
-                if len(a_open) >= 64:
-                    # big piece vs small blade (the subdivide_coords=2000
-                    # regime): the full edge product would force one-pair
-                    # sweeps with no amortization. Count the subject
-                    # edges near the overlap window instead — 0 means no
-                    # boundary contact is possible (same reasoning as
-                    # _ring_op's >=64-vertex fast path), so the pair is
-                    # containment/disjoint, decided without any sweep;
-                    # otherwise the count upper-bounds the sweep's
-                    # post-prune combos, so groups pack properly.
-                    ka = _edges_in_window(a_open, w)
-                    if ka == 0:
-                        res = _no_intersection_fallback(
-                            a_open,
-                            b_open,
-                            "difference",
-                            (pab, (kb0, kb1, kb2, kb3)),
-                        )
-                        if len(res) == 1:
-                            continue  # disjoint: piece unchanged
-                        if not res:
-                            rmap[pi] = []  # piece swallowed by the blade
-                        else:
-                            rmap[pi] = _defer_or_attach(
-                                si, pi, pa, pab, pend, res[1], r
-                            )
-                        continue
-                    weight = ka * len(b_open)
-                if weight > _sweep_cap:
-                    full = _materialize(pa, pend)
-                    rmap[pi] = [
-                        (rp, pab if rp is full else _poly_bbox(rp), ())
-                        for rp in poly_difference(full, blade)
-                    ]
-                    continue
-                pend_pairs.append((a_open, b_open))
-                pend_weights.append(weight)
-                pend_windows.append(w)
-                pend_ref.append((si, pi))
-        if pend_pairs:
-            # group sweeps under the combos cap (same policy as
-            # batch_intersection)
-            start = 0
-            combos = 0
-            groups: list[tuple[int, int]] = []
-            for g, c in enumerate(pend_weights):
-                if combos and combos + c > _sweep_cap:
-                    groups.append((start, g))
-                    start = g
-                    combos = 0
-                combos += c
-            groups.append((start, len(pend_pairs)))
-            for lo, hi in groups:
-                res = batch_ring_differences(
-                    pend_pairs[lo:hi],
-                    np.asarray(pend_windows[lo:hi], dtype=np.float64),
-                )
-                for off, rings in enumerate(res):
-                    si, pi = pend_ref[lo + off]
-                    if rings is UNCHANGED:
-                        continue
-                    cur = states[si][0]
-                    pa, pab, pend = cur[pi]
-                    if isinstance(rings, Holed):
-                        repl[si][pi] = _defer_or_attach(
-                            si, pi, pa, pab, pend, rings.hole, r
-                        )
-                        continue
-                    if rings is None:
-                        # degeneracy: exact per-pair path with its
-                        # perturb-and-retry ladder
-                        k = int(states[si][1][r])
-                        full = _materialize(pa, pend)
-                        repl[si][pi] = [
-                            (
-                                rp,
-                                pab if rp is full else _poly_bbox(rp),
-                                (),
-                            )
-                            for rp in poly_difference(full, mb[k])
-                        ]
-                        continue
-                    new_pieces = [
-                        (rp, _poly_bbox(rp), ())
-                        for rp in _reassemble(rings)
-                    ]
-                    if pend and not _distribute_pend(new_pieces, pend):
-                        # a pending hole has no containing piece: the
-                        # disjoint-blades precondition was violated —
-                        # recompute this step exactly per-pair
-                        k = int(states[si][1][r])
-                        full = _materialize(pa, pend)
-                        new_pieces = [
-                            (rp, _poly_bbox(rp), ())
-                            for rp in poly_difference(full, mb[k])
-                        ]
-                    repl[si][pi] = new_pieces
-        # splice replacements, preserving piece order within each tile
-        for si, rmap in repl.items():
-            if not rmap:
-                continue
-            cur = states[si][0]
-            nxt: list = []
-            for pi, item in enumerate(cur):
-                got = rmap.get(pi)
-                if got is None:
-                    nxt.append(item)
-                else:
-                    nxt.extend(got)
-            states[si] = (nxt, states[si][1])
-
-    for cur, _ in states:
-        pieces.extend(_materialize(p, pend) for p, _, pend in cur)
+            lanes.append((sub, [blades[k] for k in np.nonzero(sel)[0].tolist()]))
+    pieces = [p for polys in _subtract(lanes) for p in polys]
     if not pieces:
         return []
     return weld_all(pieces)

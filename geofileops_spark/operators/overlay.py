@@ -110,9 +110,10 @@ def _combine_rows(
     """Row combine kernel: ``subjects[i]`` minus its blades
     ``blade_lists[i]`` as MULTI WKB, or None when nothing is left.
 
-    mode='difference': the blades are subtracted in turn, every row's
-    clips flattened into shared sweep rounds
-    (``batchclip.batch_difference_seq``).
+    mode='difference': the blades are subtracted in turn, the polygons a
+    loop of ``clip.difference`` calls leaves; each row is one lane of
+    the difference stepper, whose rounds share their sweeps across the
+    batch's rows (``batchclip.batch_difference_seq``).
     mode='difference_union': the blades are unioned FIRST, then one
     subtraction — required when the blades are subdivided PARTS of one
     original geometry: sequential subtraction leaves floating-point

@@ -867,6 +867,35 @@ def _row_golden_cases():
     return [r[0] for r in rows], [r[1] for r in rows]
 
 
+def test_difference_entry_points_share_the_stepper(monkeypatch):
+    """The tiled difference and batch_difference_seq both subtract
+    through the one stepper (batchclip._subtract), and on the star rows
+    every (piece, blade) pair is settled by the sweep: none reaches the
+    per-pair clip.poly_difference."""
+    from geofileops_spark.geometry import batchclip as BC
+
+    lanes, per_pair = [], []
+    orig_subtract, orig_cut = BC._subtract, C.poly_difference
+
+    def subtract_spy(ls):
+        lanes.append(len(ls))
+        return orig_subtract(ls)
+
+    def cut_spy(pa, pb):
+        per_pair.append(1)
+        return orig_cut(pa, pb)
+
+    monkeypatch.setattr(BC, "_subtract", subtract_spy)
+    monkeypatch.setattr(C, "poly_difference", cut_spy)
+    subjects, blade_lists = _star_rows(7)
+    BC.batch_difference_seq(subjects, blade_lists)
+    assert lanes == [len(subjects)]
+    assert per_pair == []
+    ma, mb = _tiled_golden_cases()[0]
+    assert C._mp_difference_tiled(ma, mb) is not None
+    assert len(lanes) == 2 and lanes[1] >= 4
+
+
 def test_difference_stepper_golden_bytes():
     """The tiled difference and batch_difference_seq are pinned byte for
     byte (a pass-through row as its own marker)."""
@@ -888,4 +917,10 @@ def test_difference_stepper_golden_bytes():
 
 
 GOLDEN_TILED_SHA256 = "b2e4bc6afc6b12df535e497c27096bb0c5bf7c3375b197c5e6f3850580d6fd96"
-GOLDEN_ROWS_SHA256 = "be046ce478856afd120a5335ad04586e56d7e08509ff0086fc64cf9cac31bb8c"
+# The >= 64-vertex row differs from the clip.difference loop (and from
+# the separate row loop the stepper replaced) only in the order of its
+# two holes: the stepper keeps them in blade order, while the loop's
+# per-pair path re-attaches its old holes after each new cut, and the
+# last blade there (bbox overlap, no contact) rotates them. Symmetric
+# difference area 0.
+GOLDEN_ROWS_SHA256 = "95ea3ad7b828c780412eb9b64f7a5895948b8331f95e1ae6a7f26565b73325aa"
