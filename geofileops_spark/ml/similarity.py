@@ -120,25 +120,20 @@ def srp_bucket_expr(vec_col, dim: int, nbits: int, plane_offset: int = 0):
     return bucket
 
 
-import os as _os
-
-_ANN_BCAST_BYTES = int(
-    _os.environ.get("GFO_ANN_BROADCAST_BYTES", str(64 * 1024 * 1024))
-)
-
-
 def _bucket_join(q: DataFrame, c: DataFrame) -> DataFrame:
     """Bucket-equi join of the query side against the corpus. The query
     side is broadcast ONLY when its raw scan fits the byte budget (the
     intended dimension-sized query set); an over-budget or
     unestimable query side (e.g. ``lsh_topk(corpus, corpus)`` self
     search) takes a shuffled hash join instead of broadcasting the whole
-    corpus — the same guard pattern as the spatial joins
-    (``index.pairing.scan_size_bytes`` + a byte cap)."""
-    from ..index.pairing import scan_size_bytes
+    corpus — the same guard pattern as the spatial joins: the cap is a
+    quarter of the library's one broadcast budget,
+    ``index.pairing.BROADCAST_BYTES`` (64 MB by default), read at call
+    time."""
+    from ..index import pairing
 
-    sz = scan_size_bytes(q)
-    if sz is not None and 0 < sz <= _ANN_BCAST_BYTES:
+    sz = pairing.scan_size_bytes(q)
+    if sz is not None and 0 < sz <= pairing.BROADCAST_BYTES // 4:
         return F.broadcast(q).join(c, "_bucket")
     return q.hint("shuffle_hash").join(c, "_bucket")
 

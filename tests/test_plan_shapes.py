@@ -213,7 +213,9 @@ def test_ann_query_broadcast_guarded(spark, monkeypatch):
     assert "BroadcastHashJoin" in p_small
 
     # shrink the budget so the full corpus no longer fits
-    monkeypatch.setattr(S, "_ANN_BCAST_BYTES", 1)
+    from geofileops_spark.index import pairing
+
+    monkeypatch.setattr(pairing, "BROADCAST_BYTES", 1)
     p_big = plan_of(S.lsh_topk(emb, emb, k=3, include_self=False))
     bucket_joins = [
         l for l in p_big.splitlines()
