@@ -918,20 +918,19 @@ def batch_difference_seq(subjects: list, blade_lists: list) -> list:
                     break
             continue
         ba = bounds(g1)
-        entries, hit = [], False
+        entries = []
         for g2 in g2s:
             if g2.dim() != 2 or g2.is_empty():
                 continue
             bb = bounds(g2)
             if ba[2] < bb[0] or bb[2] < ba[0] or ba[3] < bb[1] or bb[3] < ba[1]:
                 continue
-            hit = True
             mb = C._geom_to_mp(g2)
             if len(mb) >= C._TILED_DIFF_MIN_BLADES:
                 entries.append(_Blade(mb, bb, whole=True))
             else:
                 entries.extend(map(_Blade, mb))
-        if hit:
+        if entries:
             rows.append(i)
             lanes.append((C._geom_to_mp(g1), entries))
     for i, polys in zip(rows, _subtract(lanes)):

@@ -810,9 +810,8 @@ def test_batch_difference_seq_matches_the_difference_loop(seed):
 
 def _tiled_golden_cases():
     """Six seeded tiled-difference cases: a 300-vertex blob minus a
-    jittered grid of small blades, some crossing its boundary, most
-    swallowed by it (deferred holes), a few reaching past their grid
-    neighbours."""
+    jittered grid of small bbox-disjoint blades: outside it, crossing
+    its boundary, or swallowed by it (8-15 deferred holes a case)."""
     cases = []
     for seed in range(6):
         rng = np.random.default_rng(500 + seed)
@@ -865,6 +864,26 @@ def _row_golden_cases():
          [star(0, 0, 14, 21), star(25, 0, 10, 22)]),
     ]
     return [r[0] for r in rows], [r[1] for r in rows]
+
+
+def test_deferred_hole_meets_a_later_blade():
+    """A blade swallowed by its piece defers as a hole only when no later
+    blade of the lane overlaps it: here a later blade cuts through the
+    swallowed one, or overlaps it inside the subject, and the rows keep
+    the clip.difference loop's bytes."""
+    from geofileops_spark.geometry import wkb as W
+    from geofileops_spark.geometry.batchclip import batch_difference_seq
+
+    subject = star(0, 0, 24, 40)
+    inner = star(1, 1, 10, 41, r=6.0)
+    rows = [
+        [inner, poly((-1, -60), (3, -60), (3.5, 60), (-1.5, 60))],
+        [inner, star(4, 3, 9, 42, r=5.0)],
+        [inner, star(4, 3, 9, 42, r=5.0), star(30, 0, 12, 43)],
+    ]
+    got = batch_difference_seq([subject] * len(rows), rows)
+    for blades, res in zip(rows, got):
+        assert W.dumps(res) == W.dumps(_difference_loop(subject, blades))
 
 
 def test_difference_entry_points_share_the_stepper(monkeypatch):
