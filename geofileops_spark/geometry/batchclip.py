@@ -895,9 +895,11 @@ def _subtract(lanes: list) -> list:
 
 def batch_difference_seq(subjects: list, blade_lists: list) -> list:
     """Elementwise sequential difference over one Arrow batch: row i's
-    result is ``subjects[i] − blades[0] − blades[1] − …``, the bytes a
-    loop of ``clip.difference`` calls returns (the
-    ``overlay._combine_rows('difference')`` hot path). Each polygonal
+    result is ``subjects[i] − blades[0] − blades[1] − …``, the polygons
+    a loop of ``clip.difference`` calls returns (the
+    ``overlay._combine_rows('difference')`` hot path), byte for byte but
+    for the order of a polygon's holes: here they come in blade order,
+    while the loop's per-pair path may rotate them. Each polygonal
     row is one lane of the difference stepper (:func:`_subtract`); its
     blade list holds the parts of the row's blades whose bounds meet the
     subject's, a ≥16-part blade as one whole entry (``clip.mp_difference``
