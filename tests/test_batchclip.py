@@ -936,10 +936,9 @@ def test_difference_stepper_golden_bytes():
 
 
 GOLDEN_TILED_SHA256 = "b2e4bc6afc6b12df535e497c27096bb0c5bf7c3375b197c5e6f3850580d6fd96"
-# The >= 64-vertex row differs from the clip.difference loop (and from
-# the separate row loop the stepper replaced) only in the order of its
-# two holes: the stepper keeps them in blade order, while the loop's
-# per-pair path re-attaches its old holes after each new cut, and the
-# last blade there (bbox overlap, no contact) rotates them. Symmetric
-# difference area 0.
+# The >= 64-vertex row differs from the clip.difference loop only in the
+# order of its two holes: the stepper keeps them in blade order, while
+# the loop's per-pair path re-attaches a piece's old holes after each new
+# cut, and the last blade there (bbox overlap, no contact) rotates them.
+# Symmetric difference area 0.
 GOLDEN_ROWS_SHA256 = "95ea3ad7b828c780412eb9b64f7a5895948b8331f95e1ae6a7f26565b73325aa"
