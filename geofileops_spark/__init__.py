@@ -8,6 +8,10 @@ parity), ``geofileops_spark.session.get_spark`` (tuned session factory),
 
 __version__ = "0.1.0"
 
+from . import _worker  # noqa: E402
+
+_worker.install()
+
 from . import geoops  # noqa: F401,E402
 from .cache import release_caches  # noqa: F401,E402
 from .session import get_spark  # noqa: F401,E402

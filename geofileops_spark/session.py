@@ -4,6 +4,9 @@ Single place where engine-relevant Spark conf lives, so tests, the
 benchmark (perfbench/) and the driver entry all run the same way.
 Designed for a multi-executor cluster (AQE on, skew-join handling on,
 Arrow batching for the geometry UDFs); tested on local[N].
+
+Python worker start-up is not a conf: ``_worker.py`` keeps a reused
+worker from re-reading ``pyspark.zip`` at the start of every task.
 """
 
 from __future__ import annotations
