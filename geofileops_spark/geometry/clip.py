@@ -676,7 +676,15 @@ def poly_intersection(pa: list[np.ndarray], pb: list[np.ndarray]) -> list[list[n
 def poly_difference(pa: list[np.ndarray], pb: list[np.ndarray]) -> list[list[np.ndarray]]:
     if not bbox_intersects(_poly_bbox(pa), _poly_bbox(pb)):
         return [pa]
-    part1 = _reassemble(_ring_op(pa[0], pb[0], "difference"))
+    shell = _ring_op(pa[0], pb[0], "difference")
+    if len(pb) == 1 and len(shell) == 1 and np.array_equal(shell[0], pa[0]):
+        # the blade leaves the shell as it is: pa's own holes are already
+        # in place, and subtracting them again would only rotate their
+        # order. A holed blade takes the full path: _ring_op's give-up
+        # answer also keeps the shell, and the blade's holes may then
+        # still meet pa.
+        return [pa]
+    part1 = _reassemble(shell)
     part2: list[list[np.ndarray]] = []
     for h in pb[1:]:
         part2.extend(poly_intersection([pa[0]], [_ccw(h)]))
@@ -794,10 +802,6 @@ def mp_difference(ma, mb):
         if not cur:
             break
     return cur
-
-
-def mp_union(ma, mb):
-    return union_all_polys(list(ma) + list(mb))
 
 
 def union_all_polys(polys: list[list[np.ndarray]]) -> list[list[np.ndarray]]:

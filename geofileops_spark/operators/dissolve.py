@@ -506,8 +506,7 @@ def dissolve_within_distance(
     # many distinct input features does the piece touch, and how much of
     # its boundary is shared with them
     from .celljoin import candidate_pairs
-    from .join import query_match_udf
-    from .relation import SpatialQuery
+    from .join import _INTERSECTS, query_match_udf
 
     pairs, _ = candidate_pairs(
         pieces, diss.select("fid", geom_col), geom_col1=geom_col,
@@ -515,7 +514,7 @@ def dissolve_within_distance(
     )
     g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
     matched = pairs.where(
-        query_match_udf(SpatialQuery("intersects is True"))(F.col(g1), F.col(g2))
+        query_match_udf(_INTERSECTS)(F.col(g1), F.col(g2))
     )
     stats = (
         matched.withColumn(

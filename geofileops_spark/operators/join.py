@@ -2,9 +2,15 @@
 export_by_distance, join_nearest, equi join, delete_duplicate_geometries.
 
 Spark-first re-expression of geofileops' theta-joins
-(``_geoops_sql.py:2105-2697`` and ``:1541-1802``): every join is a
-cell-equi hash join (celljoin.py) + exact-predicate refine; kNN is a
-cell-ring-expansion join + window top-k (SURVEY.md §2.4 mapping table).
+(``_geoops_sql.py:2105-2697`` and ``:1541-1802``). A location join
+takes one of two physical plans: the broadcast probe (layer 2
+grid-indexed and broadcast, layer 1 streamed map-side, see
+``index/pairing.py``) when layer 2 fits the broadcast budget, else the
+distributed cell-equi hash join (celljoin.py). Both plans, and
+``join_points_in_polygons``' grid probe, settle their (row, candidate)
+pairs with the one refine kernel :func:`refine_pairs`. kNN is a
+broadcast probe or a cell-ring-expansion join + window top-k
+(SURVEY.md §2.4 mapping table).
 """
 
 from __future__ import annotations
@@ -15,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -60,8 +67,11 @@ def _geom_cache_loader(max_entries: int = 65536):
     return load
 
 
-# point-vs-area predicates expressible from the vectorized classification
-# (0=outside, 1=boundary, 2=interior) of kernels.points_in_multipolygon
+# ------------------------------------------------------ the pair refine
+_INTERSECTS = SpatialQuery("intersects is True")
+
+# point-vs-area simple predicates settled by the classification
+# (0 outside, 1 boundary, 2 interior) of kernels.points_in_multipolygon
 _PIP_PRED = {
     "intersects": lambda c: c >= 1,
     "disjoint": lambda c: c == 0,
@@ -71,49 +81,38 @@ _PIP_PRED = {
 }
 
 
-def _pip_pairs_flat(pts: np.ndarray, geoms: list) -> np.ndarray:
-    """Elementwise 0/1/2 classification of (point_i, geometry_i) pairs —
-    the pair-FLATTENED twin of ``kernels.points_in_multipolygon`` with
-    identical EPS formulas, for batches where the per-distinct-geometry
-    loop degenerates (many distinct small polygons with ~1 point each,
-    e.g. interior-points-vs-parcels): all pairs' ring segments run
-    through one set of whole-batch numpy sweeps."""
+def _pip_pairs_flat(pts: np.ndarray, geoms: list, inv: np.ndarray) -> np.ndarray:
+    """Elementwise 0/1/2 classification of the (``pts[i]``,
+    ``geoms[inv[i]]``) pairs — the pair-FLATTENED twin of
+    ``kernels.points_in_multipolygon`` with identical EPS formulas, for
+    batches where the per-distinct-geometry loop degenerates (many
+    distinct small polygons with ~1 point each, e.g.
+    interior-points-vs-parcels): each distinct geometry's rings are
+    gathered once, and all pairs' ring segments run through one set of
+    whole-batch numpy sweeps."""
     from ..geometry.kernels import EPS
 
-    n = len(geoms)
-    codes = np.zeros(n, dtype=np.int8)
     rings: list[np.ndarray] = []
-    ring_pair: list[int] = []
-    ring_hole: list[bool] = []
-    poly_starts: list[int] = []  # index into rings where each poly starts
-    poly_pair: list[int] = []
-    for i, g in enumerate(geoms):
+    ext: list[bool] = []  # a polygon's exterior ring, not a hole
+    ring_lo = np.zeros(len(geoms) + 1, dtype=np.int64)
+    for u, g in enumerate(geoms):
         for poly in g.polygons():
-            poly_starts.append(len(rings))
-            poly_pair.append(i)
-            for rj, r in enumerate(poly):
-                rings.append(r)
-                ring_pair.append(i)
-                ring_hole.append(rj > 0)
-    if not rings:
-        return codes
-    R = len(rings)
-    m = np.fromiter(
-        (len(r) - 1 if len(r) > 1 else 0 for r in rings), np.int64, count=R
-    )
-    segs_s = [r[:-1] for r in rings if len(r) > 1]
-    segs_e = [r[1:] for r in rings if len(r) > 1]
-    S = np.concatenate(segs_s) if segs_s else np.empty((0, 2))
-    E = np.concatenate(segs_e) if segs_e else np.empty((0, 2))
-    rp = np.asarray(ring_pair, dtype=np.int64)
-    seg_ring = np.repeat(np.arange(R), m)
-    p_of_seg = rp[seg_ring]
-    x = pts[p_of_seg, 0]
-    y = pts[p_of_seg, 1]
-    x1 = S[:, 0]
-    y1 = S[:, 1]
-    dx = E[:, 0] - x1
-    dy = E[:, 1] - y1
+            rings.extend(poly)
+            ext.extend([True] + [False] * (len(poly) - 1))
+        ring_lo[u + 1] = len(rings)
+    m = np.fromiter((max(len(r) - 1, 0) for r in rings), np.int64, count=len(rings))
+    seg_lo = np.cumsum(m) - m
+    S = np.concatenate([r[:-1] for r in rings] + [np.empty((0, 2))])
+    E = np.concatenate([r[1:] for r in rings] + [np.empty((0, 2))])
+    # (pair, ring) rows, then their segments, pair by pair
+    ring_of, pair_of = pairing._flat_ranges(ring_lo[inv], ring_lo[inv + 1])
+    seg_of, row_of = pairing._flat_ranges(seg_lo[ring_of], seg_lo[ring_of] + m[ring_of])
+    x = pts[pair_of[row_of], 0]
+    y = pts[pair_of[row_of], 1]
+    x1 = S[seg_of, 0]
+    y1 = S[seg_of, 1]
+    dx = E[seg_of, 0] - x1
+    dy = E[seg_of, 1] - y1
     rx = x - x1
     ry = y - y1
     cross = rx * dy - ry * dx
@@ -121,176 +120,177 @@ def _pip_pairs_flat(pts: np.ndarray, geoms: list) -> np.ndarray:
     on_line = cross * cross <= (EPS * 1e6) ** 2 * np.maximum(seg_len2, EPS)
     dot = rx * dx + ry * dy
     on_seg = on_line & (dot >= -EPS) & (dot <= seg_len2 + EPS)
-    cond = (y1 > y) != (E[:, 1] > y)
+    cond = (y1 > y) != (E[seg_of, 1] > y)
     with np.errstate(divide="ignore", invalid="ignore"):
         xints = x1 + (y - y1) * dx / np.where(dy == 0, np.inf, dy)
     crossed = cond & (x < xints)
-    ring_code = np.zeros(R, dtype=np.int8)
-    starts = np.concatenate(([0], np.cumsum(m)))[:-1]
-    nz = np.nonzero(m > 0)[0]
+    nseg = m[ring_of]
+    code = np.zeros(len(ring_of), dtype=np.int8)
+    nz = np.nonzero(nseg > 0)[0]
     if len(nz):
-        on_b = np.zeros(R, dtype=bool)
-        on_b[nz] = np.add.reduceat(on_seg, starts[nz]) > 0
-        par = np.zeros(R, dtype=np.int64)
-        par[nz] = np.add.reduceat(crossed.astype(np.int64), starts[nz])
-        ring_code[(par % 2) == 1] = 2
-        ring_code[on_b] = 1
-    # combine per polygon: exterior code modified by holes (same order
-    # and rules as points_in_polygon), then max per pair
-    hole_arr = np.asarray(ring_hole, dtype=bool)
-    poly_starts.append(R)
-    for k in range(len(poly_pair)):
-        lo, hi = poly_starts[k], poly_starts[k + 1]
-        res = ring_code[lo]
-        for j in range(lo + 1, hi):
-            h = ring_code[j]
-            if res == 2 and h == 2:
-                res = 0
-            elif res == 2 and h == 1:
-                res = 1
-        i = poly_pair[k]
-        if res > codes[i]:
-            codes[i] = res
+        starts = (np.cumsum(nseg) - nseg)[nz]
+        code[nz[(np.add.reduceat(crossed.astype(np.int64), starts) % 2) == 1]] = 2
+        code[nz[np.add.reduceat(on_seg, starts) > 0]] = 1
+    # per polygon (same rules as points_in_polygon): interior of the
+    # exterior ring becomes outside / boundary at the FIRST hole whose
+    # code is interior / boundary; then the max over a pair's polygons
+    is_ext = np.asarray(ext, dtype=bool)[ring_of]
+    poly_of = np.cumsum(is_ext) - 1
+    res = code[is_ext]
+    holes = np.nonzero(~is_ext & (code >= 1))[0]
+    polys, first = np.unique(poly_of[holes], return_index=True)
+    inside = res[polys] == 2
+    res[polys[inside]] = np.where(code[holes[first[inside]]] == 2, 0, 1)
+    codes = np.zeros(len(inv), dtype=np.int8)
+    np.maximum.at(codes, pair_of[is_ext], res)
     return codes
 
 
-def _pip_fast_path(pred_name: str, wkb1: pd.Series, wkb2: pd.Series):
-    """Vectorized point-in-polygon evaluation for a whole Arrow batch:
-    decode all left POINTs at once (fixed 21-byte WKB layout), group by
-    distinct right geometry (zones repeat thousands of times per batch),
-    classify with numpy ray casting. When the grouping degenerates (many
-    distinct geometries with few points each — the inverted
-    interior-point-vs-parcels shape), all pairs flatten into ONE sweep
-    instead (``_pip_pairs_flat``, identical formulas). Returns a bool
-    ndarray or None when the batch isn't all-points / the predicate
-    isn't expressible."""
-    fn = _PIP_PRED.get(pred_name)
-    if fn is None or wkb1.isna().any() or wkb2.isna().any():
-        return None
-    pts = W.points_from_wkb_list([bytes(b) for b in wkb1])
-    if pts is None:
-        return None
-    codes, uniques = pd.factorize(wkb2.map(bytes))
-    if len(uniques) * 64 > len(pts):
-        # few points per distinct geometry: pair-flattened sweep
-        load = _geom_cache_loader()
-        geoms = []
-        for b in uniques:
-            g2 = load(b)
-            if g2.dim() != 2:
-                return None
-            geoms.append(g2)
-        cls = _pip_pairs_flat(pts, [geoms[c] for c in codes])
-        return fn(cls)
-    out = np.zeros(len(pts), dtype=bool)
-    for u, blob in enumerate(uniques):
-        g2 = W.loads(blob)
-        if g2.dim() != 2:
-            return None
-        idx = np.nonzero(codes == u)[0]
-        cls = K.points_in_multipolygon(pts[idx], g2)
-        out[idx] = fn(cls)
-    return out
+def refine_pairs(sq, g1s, B1, pr, geom_at, B2, pl, pts=None, stop=None):
+    """The one refine of the join family: does subject ``g1s[pr[t]]``
+    relate to candidate ``geom_at(pl[t])`` as ``sq`` asks? One bool per
+    pair. ``B1``/``B2`` are the subjects' / candidates' bboxes (NaN for
+    EMPTY); no pair may hold a NULL geometry. ``pts`` gives the
+    subjects' POINT coordinates (NaN rows for the rest; read from
+    ``g1s`` when omitted), and with ``g1s=None`` every subject is the
+    point of its ``pts`` row.
+
+    A simple query (the reference's optimize_simple_queries,
+    ``_geoops_sql.py:2398-2445``) settles whole groups of pairs at once:
+
+    1. POINT x (MULTI)POLYGON pairs of a PIP-expressible predicate: one
+       points-in-polygon classification per candidate, or one
+       pair-flattened sweep when candidates average under 64 points;
+    2. plain ``intersects``/``disjoint``: bbox-disjoint pairs do not
+       intersect, and one windowed segment-hit sweep proves the pairs
+       whose boundaries cross.
+
+    Every other pair runs the named predicate, or the DE-9IM matrix of
+    a compound query. ``stop`` is the per-row "any" form of the EXISTS
+    (``True``) and for-all (``False``) shapes: a subject's remaining
+    pairs are skipped once one of them answered ``stop``, so only
+    ``any(result == stop)`` per subject is exact."""
+    ok = np.zeros(len(pr), dtype=bool)
+    todo = np.ones(len(pr), dtype=bool)
+    name, want = sq.simple or (None, None)
+
+    def g1_at(i):
+        return G.Geometry.point(*pts[i]) if g1s is None else g1s[i]
+
+    if name in _PIP_PRED and len(pr):
+        if pts is None:
+            pts = np.full((len(g1s), 2), np.nan)
+            for i, g in enumerate(g1s):
+                if g is not None and g.typ == G.POINT:
+                    pts[i] = g.data
+        t = np.nonzero(np.isfinite(pts[pr]).all(axis=1))[0]
+        u = np.unique(pl[t])
+        areal = [geom_at(j).typ in (G.POLYGON, G.MULTIPOLYGON) for j in u]
+        t = t[np.isin(pl[t], u[np.asarray(areal, dtype=bool)])]
+        if len(t):
+            u, inv = np.unique(pl[t], return_inverse=True)
+            if len(u) * 64 > len(t):
+                cls = _pip_pairs_flat(pts[pr[t]], [geom_at(j) for j in u], inv)
+            else:
+                cls = np.empty(len(t), dtype=np.int8)
+                order = np.argsort(inv, kind="stable")
+                cuts = np.cumsum(np.bincount(inv))[:-1]
+                for j, grp in zip(u, np.split(order, cuts)):
+                    cls[grp] = K.points_in_multipolygon(pts[pr[t[grp]]], geom_at(j))
+            ok[t] = _PIP_PRED[name](cls) == want
+            todo[t] = False
+
+    if name in ("intersects", "disjoint"):
+        t = np.nonzero(todo)[0]
+        b1, b2 = B1[pr[t]], B2[pl[t]]
+        w = np.column_stack((
+            np.maximum(b1[:, 0], b2[:, 0]), np.maximum(b1[:, 1], b2[:, 1]),
+            np.minimum(b1[:, 2], b2[:, 2]), np.minimum(b1[:, 3], b2[:, 3]),
+        ))
+        meet = (w[:, 0] <= w[:, 2]) & (w[:, 1] <= w[:, 3])
+        hit = np.zeros(len(t), dtype=bool)
+        live = np.nonzero(meet)[0]
+        if len(live):
+            # window_segments pre-prunes LARGE geometries per pair: the
+            # sweep concatenates every pair's segments before its own
+            # prune, and a 10k-edge part in thousands of pairs is GBs
+            seg_a = [K.window_segments(g1_at(pr[t[r]]), *w[r]) for r in live]
+            seg_b = [K.window_segments(geom_at(pl[t[r]]), *w[r]) for r in live]
+            hit[live] = K.batch_segment_hits(seg_a, seg_b, windows=w[live])
+        # bbox-disjoint pairs and certain crossings are settled; the rest
+        # (containment, collinear touch) take the exact predicate
+        settled = ~meet | hit
+        ok[t[settled]] = (hit[settled] == (name == "intersects")) == want
+        todo[t[settled]] = False
+
+    rest = np.nonzero(todo)[0]
+    if len(rest):
+        fn = P.PREDICATE_FNS[name] if name else None
+        done = None
+        if stop is not None:
+            done = np.zeros(int(pr.max()) + 1, dtype=bool)
+            done[pr[~todo & (ok == stop)]] = True
+        for t, i, j in zip(rest.tolist(), pr[rest].tolist(), pl[rest].tolist()):
+            if done is not None and done[i]:
+                continue
+            g1, g2 = g1_at(i), geom_at(j)
+            ok[t] = (
+                bool(fn(g1, g2)) == want if fn
+                else sq.matches(P.relate_matrix(g1, g2))
+            )
+            if done is not None and ok[t] == stop:
+                done[i] = True
+    return ok
 
 
-def _batch_pair_intersects(wkb1: pd.Series, wkb2: pd.Series, load) -> np.ndarray:
-    """Vectorized per-pair ``intersects`` over a whole Arrow batch:
-    bbox-disjoint pairs are certainly False, a windowed batched
-    segment-hit sweep (kernels.batch_segment_hits) marks certain Trues,
-    and only the leftover pairs (containment / collinear touch /
-    NULL-adjacent) run the exact per-pair predicate."""
-    n = len(wkb1)
-    out = np.zeros(n, dtype=bool)
-    g1s: list = [None] * n
-    g2s: list = [None] * n
-    B1 = np.full((n, 4), np.nan)
-    B2 = np.full((n, 4), np.nan)
-    for i, (b1, b2) in enumerate(zip(wkb1, wkb2)):
-        if b1 is None or b2 is None:
-            continue
-        g1 = load(bytes(b1))
-        g2 = load(bytes(b2))
-        if g1.is_empty() or g2.is_empty():
-            continue
-        g1s[i] = g1
-        g2s[i] = g2
-        B1[i] = K.bounds(g1)
-        B2[i] = K.bounds(g2)
-    overlap = (
-        (B1[:, 0] <= B2[:, 2])
-        & (B2[:, 0] <= B1[:, 2])
-        & (B1[:, 1] <= B2[:, 3])
-        & (B2[:, 1] <= B1[:, 3])
-    )
-    cand = np.nonzero(overlap)[0]
-    if len(cand) == 0:
-        return out
-    windows = np.column_stack(
-        (
-            np.maximum(B1[cand, 0], B2[cand, 0]),
-            np.maximum(B1[cand, 1], B2[cand, 1]),
-            np.minimum(B1[cand, 2], B2[cand, 2]),
-            np.minimum(B1[cand, 3], B2[cand, 3]),
-        )
-    )
-    # window_segments pre-prunes LARGE geometries per pair — the batched
-    # sweep concatenates every pair's segments before its own prune
-    seg_a = [
-        K.window_segments(g1s[i], *windows[r]) for r, i in enumerate(cand)
-    ]
-    seg_b = [
-        K.window_segments(g2s[i], *windows[r]) for r, i in enumerate(cand)
-    ]
-    hits = K.batch_segment_hits(seg_a, seg_b, windows=windows)
-    out[cand[hits]] = True
-    for i in cand[~hits]:
-        out[i] = P.intersects(g1s[i], g2s[i])
-    return out
+def _rows_any(ok: np.ndarray, pr: np.ndarray, stop: bool, n: int) -> np.ndarray:
+    """Per subject row: did any of its pairs answer ``stop``?"""
+    hit = np.zeros(n, dtype=bool)
+    hit[pr[ok == stop]] = True
+    return hit
+
+
+def _subjects(col: pd.Series):
+    """Per-row subject side of a cell-join batch for :func:`refine_pairs`:
+    ``(g1s, B1, pts)`` with NULL rows None and NaN bboxes. An all-POINT
+    column takes the vectorized 21-byte decode (``g1s`` None); any
+    other decodes each distinct blob once."""
+    nn = col.notna().to_numpy()
+    pts = W.points_from_wkb_list([bytes(b) for b in col[nn]])
+    if pts is not None:
+        xy = np.full((len(col), 2), np.nan)
+        xy[nn] = pts
+        return None, np.column_stack([xy, xy]), xy
+    codes, uniq = pd.factorize(col.map(bytes, na_action="ignore"))
+    uniq = list(uniq)
+    geoms = [W.loads(b) for b in uniq] + [None]
+    # code -1 (NULL) reads the appended None / NaN row
+    B1 = np.vstack([W.bounds_from_wkb_batch(uniq), np.full((1, 4), np.nan)])
+    return [geoms[c] for c in codes], B1[codes], None
+
+
+def _candidates(col: pd.Series):
+    """Candidate side of a cell-join batch for :func:`refine_pairs`:
+    ``(pl, geom_at, B2)`` over the distinct blobs (``pl`` -1 = NULL), so
+    the PIP step groups the pairs by distinct geometry."""
+    codes, uniq = pd.factorize(col.map(bytes, na_action="ignore"))
+    uniq = list(uniq)
+    geoms = [W.loads(b) for b in uniq]
+    return codes, geoms.__getitem__, W.bounds_from_wkb_batch(uniq)
 
 
 def query_match_udf(query: SpatialQuery):
-    """Boolean pandas UDF evaluating the compiled spatial query per pair.
-
-    Single-term queries short-circuit to the named predicate functions
-    (the reference's optimize_simple_queries, ``_geoops_sql.py:2398-2445``);
-    all-point left batches against areal rights take the fully vectorized
-    PIP path, and intersects/disjoint batches take the windowed batched
-    segment-hit sweep (no per-pair numpy in the common case).
-    """
-    simple = query.simple
+    """Boolean pandas UDF: does each (l1, l2) cell-join pair satisfy the
+    query? NULL on either side is False; the pairs run through
+    :func:`refine_pairs`."""
 
     @pandas_udf(BooleanType())
     def _match(wkb1: pd.Series, wkb2: pd.Series) -> pd.Series:
-        load = _geom_cache_loader()
-        out = []
-        if simple is not None:
-            name, want = simple
-            fast = _pip_fast_path(name, wkb1, wkb2)
-            if fast is not None:
-                return pd.Series(fast == want, dtype="boolean")
-            if name in ("intersects", "disjoint"):
-                inter = _batch_pair_intersects(wkb1, wkb2, load)
-                # NULL on either side stays False (matching the loop below)
-                nulls = np.array(
-                    [b1 is None or b2 is None for b1, b2 in zip(wkb1, wkb2)],
-                    dtype=bool,
-                )
-                res = inter if name == "intersects" else ~inter
-                res = (res == want) & ~nulls
-                return pd.Series(res, dtype="boolean")
-            fn = P.PREDICATE_FNS[name]
-            for b1, b2 in zip(wkb1, wkb2):
-                if b1 is None or b2 is None:
-                    out.append(False)
-                else:
-                    out.append(bool(fn(load(bytes(b1)), load(bytes(b2)))) == want)
-        else:
-            for b1, b2 in zip(wkb1, wkb2):
-                if b1 is None or b2 is None:
-                    out.append(False)
-                else:
-                    m = P.relate_matrix(load(bytes(b1)), load(bytes(b2)))
-                    out.append(query.matches(m))
+        g1s, B1, pts = _subjects(wkb1)
+        pl, at, B2 = _candidates(wkb2)
+        pr = np.nonzero(wkb1.notna().to_numpy() & (pl >= 0))[0]
+        out = np.zeros(len(wkb1), dtype=bool)
+        out[pr] = refine_pairs(query, g1s, B1, pr, at, B2, pl[pr], pts=pts)
         return pd.Series(out, dtype="boolean")
 
     return _match
@@ -298,35 +298,25 @@ def query_match_udf(query: SpatialQuery):
 
 def _any_match_udf(query: SpatialQuery, want_match: bool = True):
     """(g1, array<g2>) -> does ANY candidate satisfy (``want_match=True``)
-    / violate (``want_match=False``) the relation? EARLY EXIT at the
-    first hit: the predicate kernel runs once per matching row instead
-    of once per candidate pair."""
-    simple = query.simple
-    fn = P.PREDICATE_FNS[simple[0]] if simple else None
+    / violate (``want_match=False``) the relation? The per-row early
+    exit of :func:`refine_pairs` stops a row at its first witness."""
 
     @pandas_udf(BooleanType())
     def _any(wkb1: pd.Series, others: pd.Series) -> pd.Series:
-        load = _geom_cache_loader()
-        out = []
-        for b1, arr in zip(wkb1, others):
-            if b1 is None or arr is None or len(arr) == 0:
-                out.append(False)
-                continue
-            g1 = load(bytes(b1))
-            hit = False
-            for b2 in arr:
-                if b2 is None:
-                    continue
-                g2 = load(bytes(b2))
-                if fn is not None:
-                    ok = bool(fn(g1, g2)) == simple[1]
-                else:
-                    ok = query.matches(P.relate_matrix(g1, g2))
-                if ok == want_match:
-                    hit = True
-                    break
-            out.append(hit)
-        return pd.Series(out, dtype="boolean")
+        rows, flat = [], []
+        for i, (b1, arr) in enumerate(zip(wkb1, others)):
+            if b1 is not None and arr is not None:
+                for b2 in arr:
+                    if b2 is not None:
+                        rows.append(i)
+                        flat.append(b2)
+        if not rows:
+            return pd.Series(np.zeros(len(wkb1), dtype=bool), dtype="boolean")
+        pr = np.asarray(rows, dtype=np.int64)
+        g1s, B1, pts = _subjects(wkb1)
+        pl, at, B2 = _candidates(pd.Series(flat, dtype=object))
+        ok = refine_pairs(query, g1s, B1, pr, at, B2, pl, pts=pts, stop=want_match)
+        return pd.Series(_rows_any(ok, pr, want_match, len(wkb1)), dtype="boolean")
 
     return _any.asNondeterministic()
 
@@ -393,17 +383,6 @@ def join(
 
 
 # -------------------------------------------------------- join_by_location
-# point-subject vs polygonal-blade simple predicates reduce to the PIP
-# classification (0 outside / 1 boundary / 2 interior) — one vectorized
-# kernel call per blade instead of a per-pair Python predicate loop
-_POINT_PIP_PRED = {
-    "intersects": lambda pip: pip >= 1,
-    "within": lambda pip: pip == 2,
-    "touches": lambda pip: pip == 1,
-    "coveredby": lambda pip: pip >= 1,
-}
-
-
 def _join_broadcast_pairs(
     df1: DataFrame,
     df2: DataFrame,
@@ -427,103 +406,16 @@ def _join_broadcast_pairs(
     if bc is None or bc is pairing.OVER_CAP:
         return None
 
-    simple = sq.simple
-    # certain boundary crossings prove plain `intersects`: eligible
-    # pairs short-circuit the exact predicate (batched segment sweep)
-    fast_hit = simple is not None and simple[0] == "intersects"
     schema = StructType(df1.schema.fields + [StructField("_l2id", LongType())])
 
     def _probe(batches):
         probe = pairing.Probe(bc)
-        bbv, ids, g2_at = probe.bb, probe.ids, probe.geom
-        pred = P.PREDICATE_FNS[simple[0]] if simple else None
-        want = simple[1] if simple else None
-
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf.assign(_l2id=pd.Series(dtype="int64"))
-                continue
             g1s, B = probe.decode(pdf[geom_col])
             pr, pl = probe.pairs(B)
-            if len(pr) == 0:
-                yield pdf.iloc[0:0].assign(_l2id=pd.Series(dtype="int64"))
-                continue
-            ok = np.zeros(len(pr), dtype=bool)
-            handled = np.zeros(len(pr), dtype=bool)
-            # POINT subjects: one points_in_multipolygon call per blade
-            # (the segment sweep is useless for points — they have no
-            # segments — and the per-pair loop below would run pure
-            # Python per candidate; measured 7.0 s -> cell-join-parity
-            # on 15k points x 1k boxes)
-            pip_pred = _POINT_PIP_PRED.get(simple[0]) if simple else None
-            if pip_pred is not None:
-                row_is_pt = np.fromiter(
-                    (g is not None and g.typ == G.POINT for g in g1s),
-                    dtype=bool,
-                    count=n,
-                )
-                ptpairs = np.nonzero(row_is_pt[pr])[0]
-                if len(ptpairs) and (
-                    len(np.unique(pl[ptpairs])) * 64 > len(ptpairs)
-                ):
-                    # inverted shape (many blades, few points each): one
-                    # pair-flattened sweep, identical formulas
-                    gb = [g2_at(int(j)) for j in pl[ptpairs]]
-                    if all(
-                        g.typ in (G.POLYGON, G.MULTIPOLYGON) for g in gb
-                    ):
-                        pts = np.stack(
-                            [g1s[int(pr[t])].data for t in ptpairs]
-                        )
-                        pip = _pip_pairs_flat(pts, gb)
-                        ok[ptpairs] = pip_pred(pip) == want
-                        handled[ptpairs] = True
-                        ptpairs = ptpairs[:0]
-                if len(ptpairs):
-                    order = np.argsort(pl[ptpairs], kind="stable")
-                    ptpairs = ptpairs[order]
-                    splits = np.nonzero(np.diff(pl[ptpairs]))[0] + 1
-                    for grp in np.split(ptpairs, splits):
-                        g2 = g2_at(int(pl[grp[0]]))
-                        if g2.typ not in (G.POLYGON, G.MULTIPOLYGON):
-                            continue  # non-areal blade: per-pair path
-                        pts = np.stack([g1s[int(pr[t])].data for t in grp])
-                        pip = K.points_in_multipolygon(pts, g2)
-                        ok[grp] = pip_pred(pip) == want
-                        handled[grp] = True
-            todo = np.nonzero(~handled)[0]
-            if fast_hit and len(todo):
-                windows = np.column_stack(
-                    (
-                        np.maximum(B[pr[todo], 0], bbv[pl[todo], 0]),
-                        np.maximum(B[pr[todo], 1], bbv[pl[todo], 1]),
-                        np.minimum(B[pr[todo], 2], bbv[pl[todo], 2]),
-                        np.minimum(B[pr[todo], 3], bbv[pl[todo], 3]),
-                    )
-                )
-                seg_a = [
-                    K.window_segments(g1s[int(pr[t])], *windows[r])
-                    for r, t in enumerate(todo)
-                ]
-                seg_b = [
-                    K.window_segments(g2_at(int(pl[t])), *windows[r])
-                    for r, t in enumerate(todo)
-                ]
-                hits = K.batch_segment_hits(seg_a, seg_b, windows=windows)
-                # a certain hit decides plain intersects either way
-                ok[todo[hits]] = want
-                todo = todo[~hits]
-            for t in todo:
-                g1 = g1s[int(pr[t])]
-                g2 = g2_at(int(pl[t]))
-                if simple is not None:
-                    ok[t] = bool(pred(g1, g2)) == want
-                else:
-                    ok[t] = sq.matches(P.relate_matrix(g1, g2))
-            sel = np.nonzero(ok)[0]
-            out = pdf.iloc[pr[sel]].copy()
-            out["_l2id"] = ids[pl[sel]]
+            ok = refine_pairs(sq, g1s, B, pr, probe.geom, probe.bb, pl)
+            out = pdf.iloc[pr[ok]].copy()
+            out["_l2id"] = probe.ids[pl[ok]]
             yield out
 
     probe_out = df1.mapInPandas(_probe, schema=schema)
@@ -637,52 +529,55 @@ def join_points_in_polygons(
     poly_id_col: str = "fid",
     geom_col: str = "geom_wkb",
     max_polys: int = 100_000,
-    jvm_rect_path: bool = True,
 ) -> DataFrame:
-    """Vectorized broadcast point-in-polygon join: the fast path for the
-    canonical "billions of points x small polygon dimension" shape (pages
-    x zones). Polygons are collected once and broadcast;
-    every Arrow batch tests all points against all polygons with numpy
-    ray-casting (``kernels.points_in_multipolygon``) — no shuffle at all,
-    the scan streams map-side. Falls back to ``join_by_location`` when
-    the polygon side is large.
+    """Broadcast point-in-polygon join: the fast path for the canonical
+    "billions of points x small polygon dimension" shape (pages x
+    zones). At most ``max_polys`` polygons are collected once (more
+    raise ``ValueError``: use ``join_by_location``), and the point scan
+    streams map-side with no shuffle at all:
+
+    - an all-rectangle polygon side becomes a broadcast nested-loop join
+      on a BETWEEN predicate, with no Python anywhere in the plan;
+    - any other polygon side is grid-indexed and broadcast, and each
+      Arrow batch of points asks the grid for its candidate polygons and
+      settles them with :func:`refine_pairs` (``intersects``: boundary
+      points match).
 
     Output: points columns + ``{poly_id_col}`` of the matched polygon
     (one row per (point, polygon) containment pair).
     """
-    rows = polys.select(poly_id_col, geom_col).collect()
+    rows = polys.select(poly_id_col, geom_col).limit(max_polys + 1).collect()
     if len(rows) > max_polys:
         raise ValueError(
-            f"polygon side has {len(rows)} rows; use join_by_location instead"
+            f"polygon side has more than {max_polys} rows; use "
+            "join_by_location instead"
         )
     payload = [(r[0], bytes(r[1])) for r in rows if r[1] is not None]
+    geoms = [W.loads(b) for _, b in payload]
 
     # all-rectangle polygon side (bbox zones, tiles): containment becomes
     # a broadcast nested-loop join on a BETWEEN predicate — pure JVM
-    # codegen, ZERO Python in the entire join. Default ON: measured
-    # (16M pages x 5 zones, min-of-3) c8 10.2 s vs numpy-bitmask 9.5 s,
-    # but c32 5.4 s vs 17.8 s in the same window — the Python-worker
-    # Arrow socket traffic saturates this VM's kernel above ~8 threads,
-    # while the JVM join keeps scaling; on a real cluster avoiding the
-    # Python workers entirely is strictly better. (The earlier per-row
-    # array_compact(array(when...)) formulation of this path WAS slower
-    # than the bitmask at every width — allocation per row; the BNLJ
-    # shape replaced it.)
-    rects = [] if jvm_rect_path else None
-    if rects is not None:
-        from ..geometry.clip import _as_rect, _open_ring
+    # codegen, ZERO Python in the entire join. Measured (16M pages x 5
+    # zones, min-of-3) against the numpy bitmask UDF that then served
+    # small polygon sides: c8 10.2 s vs 9.5 s, but c32 5.4 s vs 17.8 s
+    # in the same window — the Python-worker Arrow socket traffic
+    # saturates this VM's kernel above ~8 threads, while the JVM join
+    # keeps scaling; on a real cluster avoiding the Python workers
+    # entirely is strictly better.
+    from ..geometry.clip import _as_rect, _open_ring
 
-        for pid, blob in payload:
-            g = W.loads(blob)
-            polys = g.polygons()
-            if len(polys) != 1 or len(polys[0]) != 1:
-                rects = None
-                break
-            r4 = _as_rect(_open_ring(polys[0][0]))
-            if r4 is None:
-                rects = None
-                break
-            rects.append((pid, r4))
+    rects = []
+    for (pid, _), g in zip(payload, geoms):
+        parts = g.polygons()
+        r4 = (
+            _as_rect(_open_ring(parts[0][0]))
+            if len(parts) == 1 and len(parts[0]) == 1
+            else None
+        )
+        if r4 is None:
+            rects = None
+            break
+        rects.append((pid, r4))
     if rects is not None and 0 < len(rects) <= 10_000:
         spark = points.sparkSession
         # inline VALUES table (LocalRelation), not createDataFrame: the
@@ -734,63 +629,15 @@ def join_points_in_polygons(
         )
         return out.drop("_rx0", "_ry0", "_rx1", "_ry1")
 
-    spark = points.sparkSession
-    if len(payload) <= 63:
-        # bitmask path: the UDF returns one int64 whose bit z says "inside
-        # polygon z" — zero Python objects per row, explode happens JVM-side
-        bc = pairing.broadcast(spark, payload)
-
-        @pandas_udf(LongType())
-        def _matchbits(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            pts = np.column_stack(
-                [xs.to_numpy(np.float64), ys.to_numpy(np.float64)]
-            )
-            out = np.zeros(len(pts), dtype=np.int64)
-            for z, (pid, blob) in enumerate(bc.value):
-                g = W.loads(blob)
-                bx0, by0, bx1, by1 = K.bounds(g)
-                bb = (
-                    (pts[:, 0] >= bx0)
-                    & (pts[:, 0] <= bx1)
-                    & (pts[:, 1] >= by0)
-                    & (pts[:, 1] <= by1)
-                )
-                idx = np.nonzero(bb)[0]
-                if len(idx) == 0:
-                    continue
-                # 0=outside, 1=boundary, 2=interior; boundary intersects
-                inside = K.points_in_multipolygon(pts[idx], g) >= 1
-                out[idx[inside]] |= np.int64(1) << np.int64(z)
-            return pd.Series(out)
-
-        ids_arr = F.array(*[F.lit(pid) for pid, _ in payload])
-        _matchbits = _matchbits.asNondeterministic()
-        out = points.withColumn("_bits", _matchbits(F.col(x_col), F.col(y_col)))
-        out = out.where(F.col("_bits") != 0)
-        idxs = F.array_compact(
-            F.array(
-                *[
-                    F.when(
-                        F.col("_bits").bitwiseAND(F.lit(1 << z)) != 0, F.lit(z)
-                    )
-                    for z in range(len(payload))
-                ]
-            )
-        )
-        out = out.withColumn("_pidx", F.explode(idxs)).drop("_bits")
-        return out.withColumn(
-            poly_id_col, F.element_at(ids_arr, F.col("_pidx") + 1)
-        ).drop("_pidx")
-
-    # larger irregular polygon sides: the bbox grid of the pairing
-    # module; per batch, candidates come from one vectorized probe and
-    # each polygon tests only ITS candidate points
-    bbs = np.asarray([K.bounds(W.loads(b)) for _, b in payload], dtype=np.float64)
+    # any other polygon side: the bbox grid of the pairing module, and
+    # per batch one vectorized probe and one refine of its candidates
+    id_type = polys.schema[poly_id_col].dataType
+    bbs = np.asarray([K.bounds(g) for g in geoms], dtype=np.float64).reshape(-1, 4)
     valid = np.isfinite(bbs[:, 0])
-    if not valid.any():  # only EMPTY polygons: nothing contains a point
-        return points.withColumn(poly_id_col, F.lit(None).cast("long")).limit(0)
+    if not valid.any():  # no polygon or only EMPTY ones: nothing matches
+        return points.withColumn(poly_id_col, F.lit(None).cast(id_type)).limit(0)
     bc = pairing.broadcast(
-        spark,
+        points.sparkSession,
         pairing.Index(
             bbs[valid],
             wkbs=[b for (_, b), v in zip(payload, valid) if v],
@@ -799,32 +646,22 @@ def join_points_in_polygons(
         ),
     )
 
-    @pandas_udf("array<long>")
+    @pandas_udf(ArrayType(id_type))
     def _match_grid(xs: pd.Series, ys: pd.Series) -> pd.Series:
         probe = pairing.Probe(bc)
         pts = np.column_stack(
             [xs.to_numpy(np.float64), ys.to_numpy(np.float64)]
         )
-        hit_lists: list = [None] * len(pts)
-        # degenerate point bboxes
-        pr, pl = probe.pairs(np.column_stack([pts, pts]))
-        if len(pr) == 0:
-            return pd.Series(hit_lists)
-        # group candidate pairs by POLYGON so each polygon runs ONE
-        # vectorized PIP over just its candidate points
-        order = np.argsort(pl, kind="stable")
-        pl_s, pr_s = pl[order], pr[order]
-        pstarts = np.concatenate(
-            ([0], np.nonzero(np.diff(pl_s))[0] + 1, [len(pl_s)])
+        B = np.column_stack([pts, pts])  # degenerate point bboxes
+        pr, pl = probe.pairs(B)
+        ok = refine_pairs(
+            _INTERSECTS, None, B, pr, probe.geom, probe.bb, pl, pts=pts
         )
-        for s, e in zip(pstarts[:-1], pstarts[1:]):
-            j = int(pl_s[s])
-            sub = pr_s[s:e]
-            inside = K.points_in_multipolygon(pts[sub], probe.geom(j)) >= 1
-            for i in sub[inside]:
-                if hit_lists[i] is None:
-                    hit_lists[i] = []
-                hit_lists[i].append(probe.ids[j])
+        hit_lists: list = [None] * len(pts)
+        for i, j in zip(pr[ok].tolist(), pl[ok].tolist()):
+            if hit_lists[i] is None:
+                hit_lists[i] = []
+            hit_lists[i].append(probe.ids[j])
         return pd.Series(hit_lists)
 
     _match_grid = _match_grid.asNondeterministic()
@@ -859,116 +696,35 @@ def _export_broadcast(
         # filter holds vacuously everywhere
         return df1 if anti else df1.limit(0)
 
-    simple = sq.simple
-    min_area = min_area_intersect
-    schema = df1.schema
-
-    # in all four intersects/disjoint x True/False combinations, the
-    # early-exit target (the semi branch's witness / the anti branch's
-    # violator) is plain ``intersects`` — eligible for the batched
-    # segment-hit sweep (certain-hit fast accept, exact fallback)
-    fast_hit = (
-        simple is not None
-        and simple[0] in ("intersects", "disjoint")
-        and min_area_intersect is None
-    )
-
     def _probe(batches):
         from ..geometry import clip as C
 
         probe = pairing.Probe(bc)
-        bbv, g2_at = probe.bb, probe.geom
-        pred = P.PREDICATE_FNS[simple[0]] if simple else None
-        want = simple[1] if simple else None
-
-        def row_hit(g1, cand):
-            """Early-exit: does any candidate witness (semi) / violate
-            (anti) the relation for this l1 geometry?"""
-            for j in cand:
-                g2 = g2_at(int(j))
-                ok = (
-                    bool(pred(g1, g2)) == want
-                    if simple
-                    else sq.matches(P.relate_matrix(g1, g2))
-                )
-                if ok != anti:
-                    return True
-            return False
-
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf
-                continue
-            g1s, B = probe.decode(pdf[geom_col])
             # rows with NULL/empty geometry or zero candidates: EXISTS
             # fails, the for-ALL filter holds vacuously (matches the
             # cell-join plan where such rows never enter the pair stream)
-            keep = np.full(n, anti, dtype=bool)
+            g1s, B = probe.decode(pdf[geom_col])
             pr, pl = probe.pairs(B)
-            if len(pr) == 0:
-                yield pdf[keep]
-                continue
-            # per-row candidate slices (pr is sorted by row)
-            row_start = np.concatenate(
-                ([0], np.nonzero(np.diff(pr))[0] + 1, [len(pr)])
-            )
-            row_ids = pr[row_start[:-1]]
-            if fast_hit:
-                # batched certain-hit sweep over every (row, candidate)
-                # pair at once; a hit anywhere in a row resolves it
-                # (witness found / violator found). Rows with no certain
-                # hit re-check their candidates with the exact predicate
-                # (containment and collinear-touch cases).
-                windows = np.column_stack(
-                    (
-                        np.maximum(B[pr, 0], bbv[pl, 0]),
-                        np.maximum(B[pr, 1], bbv[pl, 1]),
-                        np.minimum(B[pr, 2], bbv[pl, 2]),
-                        np.minimum(B[pr, 3], bbv[pl, 3]),
-                    )
+            if min_area_intersect is None:
+                # the early-exit target is the semi branch's witness /
+                # the anti branch's violator
+                ok = refine_pairs(
+                    sq, g1s, B, pr, probe.geom, probe.bb, pl, stop=not anti
                 )
-                # pre-prune big candidates per pair (a subdivided part
-                # can carry 10k edges and appear in thousands of pairs —
-                # concatenating full sets in the sweep is GBs)
-                seg_a = [
-                    K.window_segments(g1s[i], *windows[r])
-                    for r, i in enumerate(pr)
-                ]
-                seg_b = [
-                    K.window_segments(g2_at(int(j)), *windows[r])
-                    for r, j in enumerate(pl)
-                ]
-                hits = K.batch_segment_hits(seg_a, seg_b, windows=windows)
-                for s, e, i in zip(row_start[:-1], row_start[1:], row_ids):
-                    if hits[s:e].any():
-                        keep[i] = not anti
-                    else:
-                        hit = row_hit(g1s[i], pl[s:e])
-                        keep[i] = (not hit) if anti else hit
-            else:
-                for s, e, i in zip(row_start[:-1], row_start[1:], row_ids):
-                    g1, cand = g1s[i], pl[s:e]
-                    if min_area is not None:
-                        total = 0.0
-                        for j in cand:
-                            g2 = g2_at(int(j))
-                            ok = (
-                                bool(pred(g1, g2)) == want
-                                if simple
-                                else sq.matches(P.relate_matrix(g1, g2))
-                            )
-                            if ok:
-                                total += K.area(C.intersection(g1, g2))
-                                if total >= min_area:
-                                    break
-                        keep[i] = total >= min_area
-                        continue
-                    hit = row_hit(g1, cand)
-                    keep[i] = (not hit) if anti else hit
+                yield pdf[_rows_any(ok, pr, not anti, len(pdf)) != anti]
+                continue
+            ok = refine_pairs(sq, g1s, B, pr, probe.geom, probe.bb, pl)
+            total = np.zeros(len(pdf))
+            for i, j in zip(pr[ok].tolist(), pl[ok].tolist()):
+                if total[i] < min_area_intersect:
+                    total[i] += K.area(C.intersection(g1s[i], probe.geom(j)))
+            keep = np.full(len(pdf), anti, dtype=bool)
+            cand = np.unique(pr)
+            keep[cand] = total[cand] >= min_area_intersect
             yield pdf[keep]
 
-    return df1.mapInPandas(_probe, schema=schema)
+    return df1.mapInPandas(_probe, schema=df1.schema)
 
 
 def export_by_location(

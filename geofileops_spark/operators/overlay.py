@@ -49,10 +49,7 @@ from ..geometry import geom as G
 from ..geometry import wkb as W
 from ..index import pairing
 from .celljoin import candidate_pairs, drop_helper_columns, prefix_columns
-from .join import _geom_cache_loader, query_match_udf
-from .relation import SpatialQuery
-
-_INTERSECTS = SpatialQuery("intersects is True")
+from .join import _INTERSECTS, _geom_cache_loader, query_match_udf
 
 
 # ---------------------------------------------------------------- kernels

@@ -40,11 +40,13 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 from .. import cache
 from ..geometry import wkb as W
 from .celljoin import candidate_pairs
-from .join import delete_duplicate_geometries, query_match_udf
+from .join import (
+    _INTERSECTS,
+    delete_duplicate_geometries,
+    query_match_udf,
+    refine_pairs,
+)
 from .overlay import _pair_pieces, _subtract
-from .relation import SpatialQuery
-
-_INTERSECTS = SpatialQuery("intersects is True")
 
 
 def _interior_points_batch(vals: list) -> list:
@@ -204,27 +206,26 @@ def _attach_hits_fast(
 ) -> DataFrame | None:
     """(face, contributor) pairs with the broadcast orientation INVERTED:
     a grid over the interior POINTS (about 70 bytes each with bbox, id
-    and grid entry — ~40 MB for 561k faces) is broadcast and the ORIGINAL layer streams map-side through
-    one vectorized PIP sweep. The previously-tried parcel-grid attach
-    was reverted twice because packing+broadcasting 500k parcel
-    geometries cost more than the candidate cell shuffle; the point
-    side is two orders of magnitude lighter to build, the parcels never
-    shuffle at all, and only (id, attrs, _face_id) rows leave the probe.
+    and grid entry — ~40 MB for 561k faces) is broadcast and the
+    ORIGINAL layer streams map-side through the join family's pair
+    refine. The previously-tried parcel-grid attach was reverted twice
+    because packing+broadcasting 500k parcel geometries cost more than
+    the candidate cell shuffle; the point side is two orders of
+    magnitude lighter to build, the parcels never shuffle at all, and
+    only (id, attrs, _face_id) rows leave the probe.
 
     Candidates are point-in-parcel-bbox (a SUBSET of the cell join's
     shared-cover-cell candidates; any pair it drops has the point
     strictly outside the parcel bbox, which the exact oracle's
-    intersects rejects too). The membership test is the same
-    ``_pip_pairs_flat`` classification (>= 1 == intersects is True)
-    the cell join's refine uses. Returns None (caller falls back to
-    the cell join) when the point side exceeds ``max_points`` or a
-    point blob is not a plain little-endian POINT."""
+    intersects rejects too). Each (point, parcel) pair is settled by
+    ``join.refine_pairs`` with the points as subjects, the kernel the
+    cell join's refine runs, so both plans give the same contributors
+    (``intersects``: a point on a parcel boundary counts). Returns None
+    (caller falls back to the cell join) when the point side exceeds
+    ``max_points`` or a point blob is not a plain little-endian POINT."""
     import numpy as np
 
-    from ..geometry import predicates as P
-    from ..geometry.geom import Geometry
     from ..index import pairing
-    from .join import _pip_pairs_flat
 
     pdf = (
         faces.select("_face_id", "_ip")
@@ -254,37 +255,25 @@ def _attach_hits_fast(
 
     def _probe(batches):
         probe = pairing.Probe(bc)
-        pts_ = probe.bb[:, :2]
         for pdfb in batches:
             col = pdfb[geom_col].to_numpy(object)
-            cand_row, cand_pt = probe.pairs(W.bounds_from_wkb_batch(col.tolist()))
-            if len(cand_pt) == 0:
-                yield pdfb.iloc[0:0].drop(columns=[geom_col]).assign(
-                    _face_id=pd.Series(dtype="int64")
-                )
-                continue
-            geoms = {}
-            for r in np.unique(cand_row).tolist():
-                geoms[r] = W.loads(bytes(col[r]))
-            areal = np.fromiter(
-                (geoms[int(r)].dim() == 2 for r in cand_row),
-                dtype=bool, count=len(cand_row),
+            B = W.bounds_from_wkb_batch(col.tolist())
+            row, pt = probe.pairs(B)
+            geoms: dict = {}
+
+            def geom_at(r):
+                g = geoms.get(r)
+                if g is None:
+                    g = geoms[r] = W.loads(bytes(col[r]))
+                return g
+
+            # intersects is symmetric: the points are the subjects
+            ok = refine_pairs(
+                _INTERSECTS, None, probe.bb, pt, geom_at, B, row,
+                pts=probe.bb[:, :2],
             )
-            hit = np.zeros(len(cand_row), dtype=bool)
-            ai = np.nonzero(areal)[0]
-            if len(ai):
-                cls = _pip_pairs_flat(
-                    pts_[cand_pt[ai]], [geoms[int(r)] for r in cand_row[ai]]
-                )
-                hit[ai] = cls >= 1
-            for t in np.nonzero(~areal)[0].tolist():
-                g_pt = Geometry.point(
-                    float(pts_[cand_pt[t], 0]), float(pts_[cand_pt[t], 1])
-                )
-                hit[t] = bool(P.intersects(g_pt, geoms[int(cand_row[t])]))
-            sel = np.nonzero(hit)[0]
-            out = pdfb.iloc[cand_row[sel]].drop(columns=[geom_col]).copy()
-            out["_face_id"] = probe.ids[cand_pt[sel]]
+            out = pdfb.iloc[row[ok]].drop(columns=[geom_col]).copy()
+            out["_face_id"] = probe.ids[pt[ok]]
             yield out
 
     return slim.mapInPandas(_probe, schema=out_schema)

@@ -184,12 +184,3 @@ def synth_complex_polys(
         )
     return spark.createDataFrame(rows, schema=PARCEL_SCHEMA)
 
-
-def materialize_complex_polys(
-    spark: SparkSession, n_rows: int, path: str, coords_per_ring: int = 300_000
-) -> str:
-    if not _complete(path):
-        synth_complex_polys(
-            spark, n_rows, coords_per_ring=coords_per_ring
-        ).write.mode("overwrite").parquet(path)
-    return path

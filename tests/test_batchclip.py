@@ -929,16 +929,19 @@ def test_difference_stepper_golden_bytes():
     assert h.hexdigest() == GOLDEN_TILED_SHA256
 
     subjects, blade_lists = _row_golden_cases()
+    got = batch_difference_seq(subjects, blade_lists)
     h = hashlib.sha256()
-    for g, res in zip(subjects, batch_difference_seq(subjects, blade_lists)):
+    for g, res in zip(subjects, got):
         h.update(b"I" if res is g else W.dumps(res))
     assert h.hexdigest() == GOLDEN_ROWS_SHA256
+    assert [W.dumps(r) for r in got] == [
+        W.dumps(_difference_loop(g, b)) for g, b in zip(subjects, blade_lists)
+    ]
 
 
 GOLDEN_TILED_SHA256 = "b2e4bc6afc6b12df535e497c27096bb0c5bf7c3375b197c5e6f3850580d6fd96"
-# The >= 64-vertex row differs from the clip.difference loop only in the
-# order of its two holes: the stepper keeps them in blade order, while
-# the loop's per-pair path re-attaches a piece's old holes after each new
-# cut, and the last blade there (bbox overlap, no contact) rotates them.
-# Symmetric difference area 0.
+# Every row is also the clip.difference loop's bytes, the >= 64-vertex
+# row's two holes included: its last blade meets the piece's bbox but not
+# the piece, and clip.poly_difference hands such a piece back with its
+# holes in place, as the stepper keeps them.
 GOLDEN_ROWS_SHA256 = "95ea3ad7b828c780412eb9b64f7a5895948b8331f95e1ae6a7f26565b73325aa"

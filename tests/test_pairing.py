@@ -375,6 +375,33 @@ def test_every_path_gives_the_same_rows(
         assert results[path] == first, (op, path)
 
 
+EXPORT_QUERIES = [
+    ("intersects is False", None),
+    ("within is True", None),
+    ("T*F**F*** is True", None),
+    ("intersects is True", 50_000.0),
+]
+
+
+@pytest.mark.parametrize(
+    "query,min_area", EXPORT_QUERIES,
+    ids=["intersects-False", "within", "T*F**F***", "min_area"],
+)
+def test_export_by_location_plans_agree(layers, monkeypatch, query, min_area):
+    """The broadcast probe (default budget) and the cell join (no
+    budget) of export_by_location keep the same rows for the for-all,
+    EXISTS, DE-9IM and min-area shapes of the refine."""
+    parcels, zones, _ = layers
+    results = {}
+    for path, want in (("default", "broadcast"), ("cell", "cell")):
+        monkeypatch.setattr(pairing, "BROADCAST_BYTES", budget_for(path, zones))
+        assert pairing.choose("pairs", zones).path == want
+        results[path] = norm(J.export_by_location(
+            parcels, zones, query, min_area_intersect=min_area))
+    assert 0 < len(results["default"]) < parcels.count()
+    assert results["cell"] == results["default"]
+
+
 OVER_CAP_RUNS = {
     "intersection": lambda df1, df2: O.intersection(df1, df2),
     "export_by_location": lambda df1, df2: J.export_by_location(df1, df2),
@@ -424,6 +451,45 @@ def test_points_in_100_irregular_polygons_grid_probe(spark):
         inside = K.points_in_multipolygon(P, W.loads(bytes(r["geom_wkb"]))) >= 1
         exp.extend((int(i), r["fid"]) for i in np.nonzero(inside)[0])
     assert got == sorted(exp) and len(got) > 100
+
+
+@pytest.mark.parametrize("n", [10, 100])
+def test_points_in_string_id_triangles_grid_probe(spark, n):
+    """String polygon ids reach the output through the grid probe, whose
+    hit lists carry the id column's own type; every (point, polygon)
+    pair matches a numpy points_in_multipolygon recount."""
+    polys = irregular_polygons(spark, n).withColumn(
+        "fid", F.concat(F.lit("t"), F.col("fid").cast("string")))
+    points, rows = random_points(spark, 2000)
+    out = J.join_points_in_polygons(points, polys, "lon", "lat", "fid")
+    assert out.schema["fid"].dataType.simpleString() == "string"
+    got = sorted((r["pt"], r["fid"]) for r in out.collect())
+    P = np.asarray([(x, y) for _, x, y in rows])
+    exp = []
+    for r in polys.collect():
+        inside = K.points_in_multipolygon(P, W.loads(bytes(r["geom_wkb"]))) >= 1
+        exp.extend((int(i), r["fid"]) for i in np.nonzero(inside)[0])
+    assert got == sorted(exp) and len(got) > n
+
+
+def test_join_points_in_polygons_collect_is_bounded(spark, monkeypatch):
+    """The polygon side is collected through ``limit(max_polys + 1)``:
+    an oversized layer never lands whole on the driver, and still
+    raises."""
+    polys = irregular_polygons(spark, 100)
+    points, _ = random_points(spark, 10)
+    collected = []
+    orig = type(polys).collect
+
+    def spy(self):
+        rows = orig(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(polys), "collect", spy)
+    with pytest.raises(ValueError, match="more than 10 rows"):
+        J.join_points_in_polygons(points, polys, "lon", "lat", "fid", max_polys=10)
+    assert collected == [11]
 
 
 # ------------------------------------------------------- long session

@@ -46,7 +46,7 @@ def test_join_by_location_broadcasts_small_side(spark):
 
 
 def test_flagship_pip_is_map_side(spark):
-    """extract -> bitmask PIP -> explode must be ONE stage: the only
+    """extract -> broadcast PIP join must be ONE stage: the only
     exchange allowed is the final 5-group rollup."""
     from geofileops_spark.operators.join import join_points_in_polygons
     from geofileops_spark.sources.pages import extract_points, synth_pages, synth_zones
@@ -136,8 +136,8 @@ def test_dissolve_triggers_no_full_input_count(spark):
 def test_pip_rect_path_is_pure_jvm_bnlj(spark):
     """Rectangle zones: the PIP join must compile to a broadcast
     nested-loop join with ZERO Python evaluation anywhere in the plan
-    (the numpy-bitmask path saturates Python workers above ~8 threads;
-    the BNLJ shape is the scale-robust default)."""
+    (a Python UDF over every point saturates the Python workers above
+    ~8 threads; the BNLJ shape keeps scaling)."""
     from geofileops_spark.functions.st import st_geomfromtext
     from geofileops_spark.operators.join import join_points_in_polygons
 

@@ -495,3 +495,97 @@ def test_join_broadcast_pairs_point_subjects(layers, spark):
         fast = J.join_by_location(pts, zones, query)
         slow = J.join_by_location(pts, zones, query, broadcast_right=False)
         assert spark_pairs(fast) == spark_pairs(slow), query
+
+
+def test_join_mixed_subject_batch_plans_agree(layers, spark):
+    """One Arrow batch of layer 1 mixing POINT, POLYGON and NULL rows:
+    the broadcast probe and the cell join give the same pairs, point
+    rows settled by the PIP step and polygon rows by the predicate."""
+    from geofileops_spark.functions.st import st_geomfromtext
+
+    parcels, zones, points = layers
+    # zone 3 is the box (1500 1500, 3200 3400): a corner and an edge point
+    edge = spark.createDataFrame(
+        [(9001, "POINT (1500 1500)"), (9002, "POINT (2000 1500)")],
+        "fid long, wkt string",
+    ).withColumn("geom_wkb", st_geomfromtext(F.col("wkt"))).drop("wkt")
+    mixed = (
+        parcels.select("fid", "geom_wkb")
+        .unionByName(points.select((F.col("fid") + 1000).alias("fid"), "geom_wkb"))
+        .unionByName(edge)
+        .unionByName(spark.createDataFrame([(9003, None)], "fid long, geom_wkb binary"))
+        .coalesce(1)
+    )
+    assert mixed.count() < 2048  # the tests' maxRecordsPerBatch
+    for query in ("intersects is True", "within is True", "touches is True"):
+        fast = spark_pairs(J.join_by_location(mixed, zones, query))
+        slow = spark_pairs(
+            J.join_by_location(mixed, zones, query, broadcast_right=False)
+        )
+        assert fast == slow, query
+        fids = {f for f, _ in fast}
+        if query == "touches is True":
+            assert {9001, 9002} <= fids
+        else:
+            assert any(f < 1000 for f in fids) and any(1000 < f < 9000 for f in fids)
+
+
+def test_every_join_plan_reaches_the_one_kernel(layers, monkeypatch):
+    """Both plans of join_by_location and export_by_location settle their
+    pairs in ``join.refine_pairs``. Each plan's Python function is taken
+    from the operator call and replayed on the driver over the fixtures
+    with a spy on the kernel (worker processes import their own copy of
+    the module, so a spy cannot watch them)."""
+    import pandas as pd
+
+    parcels, zones, _ = layers
+    frame = type(parcels)
+    probes, udfs = [], []
+    orig_map = frame.mapInPandas
+
+    def map_spy(self, func, schema, *a, **k):
+        probes.append(func)
+        return orig_map(self, func, schema, *a, **k)
+
+    monkeypatch.setattr(frame, "mapInPandas", map_spy)
+    for name in ("query_match_udf", "_any_match_udf"):
+        def factory_spy(*a, _orig=getattr(J, name), **k):
+            udfs.append(_orig(*a, **k))
+            return udfs[-1]
+
+        monkeypatch.setattr(J, name, factory_spy)
+
+    J.join_by_location(parcels, zones)
+    J.join_by_location(parcels, zones, broadcast_right=False)
+    J.export_by_location(parcels, zones)
+    monkeypatch.setattr(pairing, "BROADCAST_BYTES", 0)
+    J.export_by_location(parcels, zones)
+    by_name = {f.__qualname__.split(".")[0]: f for f in probes}
+    join_cell, export_cell = udfs
+
+    calls = []
+    orig_refine = J.refine_pairs
+
+    def refine_spy(*a, **k):
+        calls.append(1)
+        return orig_refine(*a, **k)
+
+    monkeypatch.setattr(J, "refine_pairs", refine_spy)
+    pdf = parcels.toPandas()
+    l1 = list(pdf["geom_wkb"])
+    l2 = list(zones.toPandas()["geom_wkb"])
+    replays = {
+        "join broadcast": lambda: pd.concat(
+            by_name["_join_broadcast_pairs"](iter([pdf]))),
+        "join cell": lambda: join_cell.func(
+            pd.Series([a for a in l1 for _ in l2]), pd.Series(l2 * len(l1))),
+        "export broadcast": lambda: pd.concat(
+            by_name["_export_broadcast"](iter([pdf]))),
+        "export cell": lambda: export_cell.func(
+            pd.Series(l1), pd.Series([l2] * len(l1))),
+    }
+    for plan, replay in replays.items():
+        calls.clear()
+        out = replay()
+        assert calls, plan
+        assert out.sum() > 0 if isinstance(out, pd.Series) else len(out) > 0, plan
