@@ -18,8 +18,11 @@ through this module:
   plan;
 - :func:`broadcast` is the one ``sparkContext.broadcast`` of the
   pairing paths; ``cache.release_caches()`` releases everything it made;
-- :class:`Probe` is the per-task side: candidates for a batch of stream
-  bboxes and a decode cache over the build geometries;
+- :func:`probe` is the one probe driver. It streams a frame against a
+  broadcast index and owns the stream decode, the candidates, the
+  self-half filter, the output frame and the layer-2 attribute attach.
+  Each operator passes only its per-batch step (a refine, a piece
+  kernel, a row combine) over a :class:`Batch`;
 - :func:`choose` decides between the broadcast shapes and the
   distributed cell join from one byte budget, ``GFO_BROADCAST_BYTES``.
 
@@ -44,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from .. import cache
 from ..geometry import wkb as W
@@ -311,7 +314,7 @@ class Index:
         self.y0 = float(bb[:, 1].min())
         self.grid = _grid_index(bb, self.cellsz, self.x0, self.y0)
         self.bb = bb
-        self.ids = ids
+        self.ids = None if ids is None else np.asarray(ids)
         self.buf = self.offs = None
         if wkbs is not None:
             lens = np.fromiter(
@@ -346,8 +349,8 @@ def build(df: DataFrame, geom_col: str, id_col: str | None = None):
     WKBs, :data:`OVER_CAP` when layer 2 has more than ``MAX_ROWS`` rows,
     or None when it has no valid geometry. With ``id_col`` the index
     carries the int64 ids (the pairs paths attach layer-2 attributes by
-    them); a NULL id also returns None, so the caller takes the
-    distributed plan.
+    them); a missing, non-integral or NULL id also returns None, so the
+    caller takes the distributed plan.
 
     The collect is ONE JVM-only Arrow collect of ``(geom[, id])``
     bounded at ``MAX_ROWS + 1`` rows, so the row cap costs no count.
@@ -361,6 +364,11 @@ def build(df: DataFrame, geom_col: str, id_col: str | None = None):
         key = None
     if key is not None and key in _GRID_CACHE:
         return _GRID_CACHE[key]
+    if id_col is not None and not isinstance(
+        {f.name: f.dataType for f in df.schema.fields}.get(id_col),
+        (IntegerType, LongType),
+    ):
+        return None
     sel = [F.col(geom_col).alias("_wkb")]
     if id_col is not None:
         sel.append(F.col(id_col).cast("long").alias("_id"))
@@ -393,43 +401,128 @@ def build(df: DataFrame, geom_col: str, id_col: str | None = None):
 
 
 # ----------------------------------------------------------------- probe
-class Probe:
-    """Per-task side of a broadcast :class:`Index`. The geometry decode
-    cache lives for one task: a worker-lifetime cache (one Geometry per
-    build row in every worker) measured SLOWER at 500k rows —
-    allocator/GC pressure beat the saved decodes."""
+def decode(col) -> tuple[list, np.ndarray]:
+    """Stream-side geometries and bboxes of a WKB column; NULL and EMPTY
+    rows stay None with NaN bboxes (no candidates). The bboxes come from
+    the whole-batch decode; every non-NULL row is still loaded, so
+    corrupt WKB raises as it does on the cell plan."""
+    blobs = list(col)
+    B = W.bounds_from_wkb_batch(blobs)
+    alive = np.isfinite(B[:, 0])
+    geoms = [None if b is None else W.loads(bytes(b)) for b in blobs]
+    return [g if ok else None for g, ok in zip(geoms, alive)], B
 
-    def __init__(self, bc):
-        self.index = bc.value
-        self.ids = self.index.ids
-        self.bb = self.index.bb
-        self._geoms: dict[int, object] = {}
 
-    def pairs(self, B: np.ndarray):
-        """(stream row, build row) bbox-overlap pairs, sorted by row."""
-        ix = self.index
-        return _batch_candidates(B, *ix.grid, ix.cellsz, ix.x0, ix.y0, ix.bb)
+class Batch:
+    """One Arrow batch of the stream as a probe step sees it: the rows
+    ``pdf``, their geometries ``g1s`` (None on a bbox-only or
+    point-column probe), bboxes ``B1`` and points ``pts`` (point-column
+    probe only), the bbox-overlap (stream row, build row) pairs
+    ``pr``/``pl`` sorted by row, and the build rows' bboxes ``B2``.
+    :meth:`geom1`/:meth:`geom2` decode a stream/build geometry once."""
 
-    def geom(self, j):
-        """Decoded build geometry ``j`` (needs an index with WKBs)."""
-        j = int(j)
-        g = self._geoms.get(j)
-        if g is None:
-            ix = self.index
-            g = W.loads(ix.buf[ix.offs[j]:ix.offs[j + 1]])
-            self._geoms[j] = g
-        return g
+    def __init__(self, pdf, g1s, B1, pts, pr, pl, index, col, built):
+        self.pdf, self.g1s, self.B1, self.pts = pdf, g1s, B1, pts
+        self.pr, self.pl, self.B2 = pr, pl, index.bb
+        self._ix, self._col, self._g1, self._g2 = index, col, {}, built
 
-    @staticmethod
-    def decode(col) -> tuple[list, np.ndarray]:
-        """Stream-side geometries and bboxes of a WKB column; NULL and
-        EMPTY rows stay None with NaN bboxes (no candidates). The bboxes
-        come from the whole-batch decode; every non-NULL row is still
-        loaded, so corrupt WKB raises as it does on the cell plan."""
-        blobs = list(col)
-        B = W.bounds_from_wkb_batch(blobs)
-        alive = np.isfinite(B[:, 0])
-        geoms = [
-            None if b is None else W.loads(bytes(b)) for b in blobs
-        ]
-        return [g if ok else None for g, ok in zip(geoms, alive)], B
+    def geom1(self, i):
+        if self.g1s is not None:
+            return self.g1s[i]
+        if i not in self._g1:
+            self._g1[i] = W.loads(bytes(self._col[i]))
+        return self._g1[i]
+
+    def geom2(self, j):
+        j, ix = int(j), self._ix
+        if j not in self._g2:
+            self._g2[j] = W.loads(ix.buf[ix.offs[j]:ix.offs[j + 1]])
+        return self._g2[j]
+
+
+def probe(
+    stream: DataFrame, bc, step, geom, *, load: bool = True,
+    rows: bool = False, columns: dict | None = None,
+    id_col: str | None = "_l2id", id_type=None, payload=None,
+    self_half_uid: str | None = None,
+    l2: DataFrame | None = None, l2_id_col: str | None = None,
+) -> DataFrame:
+    """The one probe driver: ``stream`` flows through ONE mapInPandas
+    against the broadcast :class:`Index` ``bc``, and ``step(batch)``
+    settles each :class:`Batch`. Each task keeps one decode cache over
+    the build geometries (a worker-lifetime cache measured SLOWER at
+    500k rows: allocator/GC pressure beat the saved decodes).
+
+    - ``geom`` is a WKB column, decoded by :func:`decode` or, with
+      ``load=False``, only bboxed; or an ``(x, y)`` pair of point
+      columns.
+    - ``self_half_uid`` (int64 stream row ids, matched against the index
+      ids) keeps only the ``uid1 < uid2`` pairs of a self-pairing,
+      before the step runs.
+    - ``step`` returns a selection ``sel`` (None: all) or ``(sel,
+      values)``. ``sel`` picks pairs: the frame holds stream rows
+      ``pr[sel]`` and, unless ``id_col`` is None, the index ids of
+      ``pl[sel]`` as ``id_col`` (``id_type``, default long). With
+      ``rows=True`` it picks stream rows. ``values`` fill the
+      ``payload`` field, which replaces a stream column of its name.
+    - ``columns`` maps the stream columns to keep to their output names
+      (default all, unrenamed).
+    - ``l2`` attaches layer 2's attributes, all ``l2_``-prefixed by one
+      ``toDF``, by broadcast hash join of ``id_col`` on ``l2_id_col``.
+      The stream's renames cost no Spark call: they are the output
+      schema's names."""
+    fields = stream.schema.fields
+    at = {f.name: i for i, f in enumerate(fields)}
+    columns = columns if columns is not None else dict(zip(at, at))
+    pos = [at[c] for c in columns]
+    out_fields = [
+        StructField(n, fields[at[c]].dataType, fields[at[c]].nullable)
+        for c, n in columns.items()
+    ]
+    if not rows and id_col is not None:
+        out_fields.append(StructField(id_col, id_type or LongType()))
+    if payload is not None:
+        i = next((k for k, f in enumerate(out_fields) if f.name == payload.name),
+                 len(out_fields))
+        out_fields[i:i + 1] = [payload]
+    names = list(columns.values())
+    xy = geom if isinstance(geom, tuple) else None
+
+    def _run(batches):
+        ix, built = bc.value, {}  # one build-geometry cache per task
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            g1s = pts = col = None
+            if xy is not None:
+                pts = np.column_stack(
+                    [pdf[xy[0]].to_numpy(np.float64), pdf[xy[1]].to_numpy(np.float64)]
+                )
+                B = np.column_stack([pts, pts])  # degenerate point bboxes
+            elif load:
+                g1s, B = decode(pdf[geom])
+            else:
+                col = pdf[geom].to_numpy(object)
+                B = W.bounds_from_wkb_batch(col.tolist())
+            pr, pl = _batch_candidates(B, *ix.grid, ix.cellsz, ix.x0, ix.y0, ix.bb)
+            if self_half_uid is not None and len(pr):
+                m = pdf[self_half_uid].to_numpy(np.int64)[pr] < ix.ids[pl]
+                pr, pl = pr[m], pl[m]
+            got = step and step(Batch(pdf, g1s, B, pts, pr, pl, ix, col, built))
+            sel, values = got if isinstance(got, tuple) else (got, None)
+            if sel is None:
+                sel = slice(None)
+            out = pdf.iloc[sel if rows else pr[sel], pos].set_axis(names, axis=1)
+            if not rows and id_col is not None:
+                out[id_col] = ix.ids[pl[sel]]
+            if payload is not None:
+                out[payload.name] = values
+            yield out
+
+    out = stream.mapInPandas(_run, schema=StructType(out_fields))
+    if l2 is not None:
+        l2a = l2.toDF(*[f"l2_{c}" for c in l2.columns])
+        out = out.join(
+            F.broadcast(l2a), out[id_col] == l2a[f"l2_{l2_id_col}"], "inner"
+        ).drop(id_col)
+    return out

@@ -8,7 +8,8 @@ grid-indexed and broadcast, layer 1 streamed map-side, see
 ``index/pairing.py``) when layer 2 fits the broadcast budget, else the
 distributed cell-equi hash join (celljoin.py). Both plans, and
 ``join_points_in_polygons``' grid probe, settle their (row, candidate)
-pairs with the one refine kernel :func:`refine_pairs`. kNN is a
+pairs with the one refine kernel :func:`refine_pairs`; the broadcast
+probes run through the one probe driver, ``pairing.probe``. kNN is a
 broadcast probe or a cell-ring-expansion join + window top-k
 (SURVEY.md §2.4 mapping table).
 """
@@ -20,15 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BooleanType, DoubleType
 
 from ..functions.st import _EARTH_RADIUS_M
 from ..geometry import geom as G
@@ -390,45 +383,30 @@ def _join_broadcast_pairs(
     geom_col: str,
     id_col: str,
 ) -> DataFrame | None:
-    """Map-side pair generation for :func:`join_by_location`, the pairs
-    twin of :func:`_export_broadcast`: layer 2 is grid-indexed and
-    broadcast (geometry + int64 ids), layer 1 streams through ONE
-    mapInPandas emitting a row per matching (l1, l2) pair with the l2
-    key; attributes attach afterwards via a broadcast hash join on that
-    key — zero shuffles end to end (the reference holds layer 2's rtree
-    in every worker process, ``_geoops_sql.py:2185-2342``). Returns the
-    ``matched`` frame in the standard output shape (l1_-prefixed
-    columns, ``geom_col``, l2_-prefixed attributes), or None when the
-    broadcast cannot be built (empty layer 2 / NULL join keys / more
-    than ``pairing.MAX_ROWS`` rows) and the caller must use the
-    distributed plan."""
+    """Map-side pair generation for :func:`join_by_location`: layer 2
+    is grid-indexed and broadcast (geometry + int64 ids), layer 1
+    streams through the probe driver (``pairing.probe``), which emits a
+    row per (l1, l2) pair :func:`refine_pairs` accepts and attaches the
+    l2 attributes by a broadcast hash join on the l2 id — zero shuffles
+    end to end (the reference holds layer 2's rtree in every worker
+    process, ``_geoops_sql.py:2185-2342``). Returns the ``matched``
+    frame in the standard output shape (l1_-prefixed columns,
+    ``geom_col``, l2_-prefixed attributes), or None when the broadcast
+    cannot be built (empty layer 2 / missing, non-integral or NULL join
+    keys / more than ``pairing.MAX_ROWS`` rows) and the caller must use
+    the distributed plan."""
     bc = pairing.build(df2, geom_col, id_col=id_col)
     if bc is None or bc is pairing.OVER_CAP:
         return None
 
-    schema = StructType(df1.schema.fields + [StructField("_l2id", LongType())])
+    def _step(b):
+        return refine_pairs(sq, b.g1s, b.B1, b.pr, b.geom2, b.B2, b.pl)
 
-    def _probe(batches):
-        probe = pairing.Probe(bc)
-        for pdf in batches:
-            g1s, B = probe.decode(pdf[geom_col])
-            pr, pl = probe.pairs(B)
-            ok = refine_pairs(sq, g1s, B, pr, probe.geom, probe.bb, pl)
-            out = pdf.iloc[pr[ok]].copy()
-            out["_l2id"] = probe.ids[pl[ok]]
-            yield out
-
-    probe_out = df1.mapInPandas(_probe, schema=schema)
-    l2a = prefix_columns(df2, "l2_").drop(f"l2_{geom_col}")
-    matched = probe_out.join(
-        F.broadcast(l2a),
-        probe_out["_l2id"] == l2a[f"l2_{id_col}"],
-        "inner",
-    ).drop("_l2id")
-    for c in df1.columns:
-        if c != geom_col:
-            matched = matched.withColumnRenamed(c, f"l1_{c}")
-    return matched
+    return pairing.probe(
+        df1, bc, _step, geom_col,
+        columns={c: c if c == geom_col else f"l1_{c}" for c in df1.columns},
+        l2=df2.drop(geom_col), l2_id_col=id_col,
+    )
 
 
 def join_by_location(
@@ -461,10 +439,6 @@ def join_by_location(
         broadcast_right is None
         and min_area_intersect is None
         and area_inters_column_name is None
-        and id_col in df2.columns
-        and isinstance(
-            df2.schema[id_col].dataType, (LongType, IntegerType)
-        )
         and pairing.choose("pairs", df2).path == "broadcast"
     ):
         matched = _join_broadcast_pairs(df1, df2, sq, geom_col, id_col)
@@ -538,13 +512,16 @@ def join_points_in_polygons(
 
     - an all-rectangle polygon side becomes a broadcast nested-loop join
       on a BETWEEN predicate, with no Python anywhere in the plan;
-    - any other polygon side is grid-indexed and broadcast, and each
-      Arrow batch of points asks the grid for its candidate polygons and
-      settles them with :func:`refine_pairs` (``intersects``: boundary
-      points match).
+    - any other polygon side is grid-indexed and broadcast, and the
+      points stream through the probe driver (``pairing.probe``), as
+      :func:`join_by_location`'s do: each Arrow batch asks the grid for
+      its candidate polygons, settles them with :func:`refine_pairs`
+      (``intersects``: boundary points match) and emits one row per
+      matching (point, polygon) pair.
 
     Output: points columns + ``{poly_id_col}`` of the matched polygon
-    (one row per (point, polygon) containment pair).
+    (one row per (point, polygon) containment pair); the id column
+    replaces a points column of the same name.
     """
     rows = polys.select(poly_id_col, geom_col).limit(max_polys + 1).collect()
     if len(rows) > max_polys:
@@ -554,6 +531,8 @@ def join_points_in_polygons(
         )
     payload = [(r[0], bytes(r[1])) for r in rows if r[1] is not None]
     geoms = [W.loads(b) for _, b in payload]
+    # the output id column REPLACES a same-named points column
+    points = points.drop(poly_id_col)
 
     # all-rectangle polygon side (bbox zones, tiles): containment becomes
     # a broadcast nested-loop join on a BETWEEN predicate — pure JVM
@@ -617,10 +596,6 @@ def join_points_in_polygons(
                     for pid, (x0, y0, x1, y1) in rects
                 ]
             )
-        if poly_id_col in points.columns:
-            # match the UDF paths' withColumn semantics: the output id
-            # column REPLACES a same-named points column
-            points = points.drop(poly_id_col)
         x, y = F.col(x_col), F.col(y_col)
         out = points.join(
             F.broadcast(rdf),
@@ -646,28 +621,14 @@ def join_points_in_polygons(
         ),
     )
 
-    @pandas_udf(ArrayType(id_type))
-    def _match_grid(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        probe = pairing.Probe(bc)
-        pts = np.column_stack(
-            [xs.to_numpy(np.float64), ys.to_numpy(np.float64)]
+    def _step(b):
+        return refine_pairs(
+            _INTERSECTS, None, b.B1, b.pr, b.geom2, b.B2, b.pl, pts=b.pts
         )
-        B = np.column_stack([pts, pts])  # degenerate point bboxes
-        pr, pl = probe.pairs(B)
-        ok = refine_pairs(
-            _INTERSECTS, None, B, pr, probe.geom, probe.bb, pl, pts=pts
-        )
-        hit_lists: list = [None] * len(pts)
-        for i, j in zip(pr[ok].tolist(), pl[ok].tolist()):
-            if hit_lists[i] is None:
-                hit_lists[i] = []
-            hit_lists[i].append(probe.ids[j])
-        return pd.Series(hit_lists)
 
-    _match_grid = _match_grid.asNondeterministic()
-    out = points.withColumn("_hits", _match_grid(F.col(x_col), F.col(y_col)))
-    out = out.where(F.col("_hits").isNotNull())
-    return out.withColumn(poly_id_col, F.explode("_hits")).drop("_hits")
+    return pairing.probe(
+        points, bc, _step, (x_col, y_col), id_col=poly_id_col, id_type=id_type
+    )
 
 
 # ------------------------------------------------------ export_by_location
@@ -680,12 +641,13 @@ def _export_broadcast(
 ) -> DataFrame | None:
     """Map-side export_by_location: layer 2's WKBs are collected once
     (``pairing.build``), grid-indexed and broadcast; layer 1 streams
-    through ONE mapInPandas with zero shuffles — the Spark twin of the
-    reference's in-process rtree probe (each gfo worker process holds
-    layer 2's rtree in RAM, ``_geoops_sql.py:1541-1736``). Guarded by
-    ``GFO_BROADCAST_BYTES`` (``pairing.choose``) and by the build's row
-    cap: past ``pairing.MAX_ROWS`` rows this returns None and the
-    caller takes the distributed cell join.
+    through the probe driver (``pairing.probe``) with zero shuffles —
+    the Spark twin of the reference's in-process rtree probe (each gfo
+    worker process holds layer 2's rtree in RAM,
+    ``_geoops_sql.py:1541-1736``). Guarded by ``GFO_BROADCAST_BYTES``
+    (``pairing.choose``) and by the build's row cap: past
+    ``pairing.MAX_ROWS`` rows this returns None and the caller takes the
+    distributed cell join.
     """
     anti = sq.true_for_disjoint
     bc = pairing.build(df2, geom_col)
@@ -696,35 +658,30 @@ def _export_broadcast(
         # filter holds vacuously everywhere
         return df1 if anti else df1.limit(0)
 
-    def _probe(batches):
+    def _step(b):
+        # rows with NULL/empty geometry or zero candidates: EXISTS fails,
+        # the for-ALL filter holds vacuously (matches the cell-join plan
+        # where such rows never enter the pair stream)
+        if min_area_intersect is None:
+            # the early-exit target is the semi branch's witness / the
+            # anti branch's violator
+            ok = refine_pairs(
+                sq, b.g1s, b.B1, b.pr, b.geom2, b.B2, b.pl, stop=not anti
+            )
+            return _rows_any(ok, b.pr, not anti, len(b.pdf)) != anti
         from ..geometry import clip as C
 
-        probe = pairing.Probe(bc)
-        for pdf in batches:
-            # rows with NULL/empty geometry or zero candidates: EXISTS
-            # fails, the for-ALL filter holds vacuously (matches the
-            # cell-join plan where such rows never enter the pair stream)
-            g1s, B = probe.decode(pdf[geom_col])
-            pr, pl = probe.pairs(B)
-            if min_area_intersect is None:
-                # the early-exit target is the semi branch's witness /
-                # the anti branch's violator
-                ok = refine_pairs(
-                    sq, g1s, B, pr, probe.geom, probe.bb, pl, stop=not anti
-                )
-                yield pdf[_rows_any(ok, pr, not anti, len(pdf)) != anti]
-                continue
-            ok = refine_pairs(sq, g1s, B, pr, probe.geom, probe.bb, pl)
-            total = np.zeros(len(pdf))
-            for i, j in zip(pr[ok].tolist(), pl[ok].tolist()):
-                if total[i] < min_area_intersect:
-                    total[i] += K.area(C.intersection(g1s[i], probe.geom(j)))
-            keep = np.full(len(pdf), anti, dtype=bool)
-            cand = np.unique(pr)
-            keep[cand] = total[cand] >= min_area_intersect
-            yield pdf[keep]
+        ok = refine_pairs(sq, b.g1s, b.B1, b.pr, b.geom2, b.B2, b.pl)
+        total = np.zeros(len(b.pdf))
+        for i, j in zip(b.pr[ok].tolist(), b.pl[ok].tolist()):
+            if total[i] < min_area_intersect:
+                total[i] += K.area(C.intersection(b.g1s[i], b.geom2(j)))
+        # like the cell plan's area sum, only rows with a matching pair
+        keep = np.zeros(len(b.pdf), dtype=bool)
+        keep[b.pr[ok]] = total[b.pr[ok]] >= min_area_intersect
+        return keep
 
-    return df1.mapInPandas(_probe, schema=df1.schema)
+    return pairing.probe(df1, bc, _step, geom_col, rows=True)
 
 
 def export_by_location(
@@ -756,6 +713,13 @@ def export_by_location(
     same total. Non-decomposing relations (within/touches/ST_Relate)
     keep whole geometries.
 
+    ``min_area_intersect`` keeps the rows whose intersection areas with
+    the matching layer-2 rows sum to at least that much. It raises
+    ``ValueError`` with a query that holds for disjoint geometries
+    (``intersects is False``, ``disjoint is True``): such a query keeps
+    the rows for which it holds against ALL of layer 2, and what an area
+    threshold would mean there is not settled.
+
     Two physical plans:
 
     - **broadcast probe** (default when layer 2 fits
@@ -769,6 +733,11 @@ def export_by_location(
       partitioning on the cell) → distinct matched ids → semi-join.
     """
     sq = SpatialQuery(spatial_relations_query)
+    if min_area_intersect is not None and sq.true_for_disjoint:
+        raise ValueError(
+            "min_area_intersect needs a query that fails for disjoint "
+            f"geometries, not {spatial_relations_query!r}"
+        )
     if broadcast is None:
         # decide on the RAW layer-2 scan — subdivision rewrites the plan
         # and would hide the scan-size statistic from the sizer

@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
+from pyspark.sql.types import BinaryType, StructField
 
 from .. import cache
 from ..geometry import clip as C
@@ -418,13 +418,13 @@ def _broadcast_pairs_matched(
     with_l2: bool = True,
     self_half_uid: str | None = None,
 ) -> DataFrame | None:
-    """Broadcast plan of :func:`_pair_pieces` — the overlay twin of
-    ``join._join_broadcast_pairs``: layer 2 is grid-indexed and
-    broadcast, layer 1 streams through ONE mapInPandas that runs the
-    pair piece kernel over every bbox candidate of a batch, and l2
-    attributes attach via a broadcast hash join on the l2 id. No cover
-    explode and no cell shuffle; the probe is the job's only Python
-    stage (``pairing.build`` collects layer 2 JVM-only, uncounted).
+    """Broadcast plan of :func:`_pair_pieces`: layer 2 is grid-indexed
+    and broadcast, layer 1 streams through the probe driver
+    (``pairing.probe``), whose step runs the pair piece kernel over every
+    bbox candidate of a batch, and l2 attributes attach via a broadcast
+    hash join on the l2 id. No cover explode and no cell shuffle; the
+    probe is the job's only Python stage (``pairing.build`` collects
+    layer 2 JVM-only, uncounted).
 
     Output: l1_-prefixed df1 columns (geometry included), l2_-prefixed
     df2 columns (geometry included), and ``_piece``. ``with_l2=False``
@@ -436,63 +436,32 @@ def _broadcast_pairs_matched(
     geometry or has no usable int id.
 
     ``self_half_uid``: for SELF-pairings (df1 is df2), name of the
-    int64 row-id column; candidate pairs are pre-filtered to
-    ``uid1 < uid2`` INSIDE the probe, before the intersection kernel —
-    a post-hoc ``where(l1_uid < l2_uid)`` would compute every unordered
-    pair's intersection twice and throw one away (requires
-    ``with_l2=True`` so the broadcast carries the ids)."""
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
+    int64 row-id column; the driver keeps only the ``uid1 < uid2``
+    candidate pairs, before the intersection kernel — a post-hoc
+    ``where(l1_uid < l2_uid)`` would compute every unordered pair's
+    intersection twice and throw one away (requires ``with_l2=True`` so
+    the broadcast carries the ids)."""
     if self_half_uid is not None and not with_l2:
         raise ValueError("self_half_uid needs with_l2=True (the layer-2 ids)")
-    if with_l2:
-        if id_col not in df2.columns or not isinstance(
-            df2.schema[id_col].dataType, (LongType, IntegerType)
-        ):
-            return None
     if pairing.choose("pairs", df2).path != "broadcast":
         return None
     bc = pairing.build(df2, geom_col, id_col=id_col if with_l2 else None)
     if bc is None or bc is pairing.OVER_CAP:
         return None
 
-    schema = StructType(
-        df1.schema.fields
-        + [StructField("_l2id", LongType()), StructField("_piece", BinaryType())]
+    def _step(b):
+        pieces = _pieces([b.g1s[t] for t in b.pr], [b.geom2(j) for j in b.pl])
+        sel = np.array([p is not None for p in pieces], dtype=bool)
+        return sel, [p for p in pieces if p is not None]
+
+    return pairing.probe(
+        df1, bc, _step, geom_col,
+        columns={c: f"l1_{c}" for c in df1.columns},
+        id_col="_l2id" if with_l2 else None,
+        payload=StructField("_piece", BinaryType()),
+        self_half_uid=self_half_uid,
+        l2=df2 if with_l2 else None, l2_id_col=id_col,
     )
-
-    def _probe(batches):
-        probe = pairing.Probe(bc)
-        ids = probe.ids
-        for pdf in batches:
-            g1s, B = probe.decode(pdf[geom_col].to_numpy(object))
-            pr, pl = probe.pairs(B)
-            if self_half_uid is not None and len(pr):
-                suid = pdf[self_half_uid].to_numpy(np.int64)
-                m = suid[pr] < ids[pl]
-                pr, pl = pr[m], pl[m]
-            pieces = _pieces([g1s[t] for t in pr], [probe.geom(j) for j in pl])
-            sel = np.array([p is not None for p in pieces], dtype=bool)
-            out = pdf.iloc[pr[sel]].copy()
-            out["_l2id"] = (ids[pl[sel]] if ids is not None else pl[sel]).astype(
-                np.int64
-            )
-            out["_piece"] = [p for p in pieces if p is not None]
-            yield out
-
-    probe_out = df1.mapInPandas(_probe, schema=schema)
-    if with_l2:
-        l2a = prefix_columns(df2, "l2_")
-        matched = probe_out.join(
-            F.broadcast(l2a),
-            probe_out["_l2id"] == l2a[f"l2_{id_col}"],
-            "inner",
-        ).drop("_l2id")
-    else:
-        matched = probe_out.drop("_l2id")
-    for c in df1.columns:
-        matched = matched.withColumnRenamed(c, f"l1_{c}")
-    return matched
 
 
 def _pair_pieces(
@@ -554,50 +523,34 @@ def _reverse_collect_candidates(
     """(id, collect_list(blade geom)) — the reverse-broadcast plan of the
     blade lists for FEW subjects vs MANY blades: only the subjects'
     (id, bbox) rows are collected and broadcast (a few dozen bytes per
-    subject); the blade layer streams through one mapInPandas emitting
-    its matches, and only matching blades enter the (small) groupBy
-    shuffle."""
-    from pyspark.sql.types import StructField, StructType
-
-    spark = df1.sparkSession
+    subject); the blade layer streams bbox-only through the probe driver
+    emitting its matches, and only matching blades enter the (small)
+    groupBy shuffle."""
     pdf = (
         df1.select(F.col(id_col).alias("_sid"), geom_col)
         .withColumn("_b", pairing._bounds_udf(F.col(geom_col)))
         .select("_sid", "_b.minx", "_b.miny", "_b.maxx", "_b.maxy")
         .toPandas()
     )
-    out_schema = StructType(
-        [
-            StructField("_sid", df1.schema[id_col].dataType),
-            StructField("_blade", BinaryType()),
-        ]
-    )
+    id_type = df1.schema[id_col].dataType
     bb = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
     valid = np.isfinite(bb[:, 0])
-    if not valid.any():
-        return _blade_lists(
-            spark.createDataFrame([], out_schema), "_sid", "_blade", id_col
+    if valid.any():
+        bc = pairing.broadcast(
+            df1.sparkSession,
+            pairing.Index(
+                bb[valid], ids=pdf["_sid"].to_numpy()[valid],
+                per_extent=0.5, point_cells=256,
+            ),
         )
-    bc = pairing.broadcast(
-        spark,
-        pairing.Index(
-            bb[valid], ids=pdf["_sid"].to_numpy()[valid],
-            per_extent=0.5, point_cells=256,
-        ),
-    )
-
-    def _emit(batches):
-        probe = pairing.Probe(bc)
-        for pdf2 in batches:
-            if len(pdf2) == 0:
-                continue
-            col = pdf2[geom_col].to_numpy(object)
-            # vectorized batch bounds (empty/None rows stay NaN)
-            pr, pl = probe.pairs(W.bounds_from_wkb_batch(col.tolist()))
-            if len(pr):
-                yield pd.DataFrame({"_sid": probe.ids[pl], "_blade": col[pr]})
-
-    hits = df2.select(geom_col).mapInPandas(_emit, schema=out_schema)
+        hits = pairing.probe(
+            df2.select(geom_col), bc, None, geom_col, load=False,
+            columns={geom_col: "_blade"}, id_col="_sid", id_type=id_type,
+        )
+    else:  # no subject has a bbox: no blade can match
+        hits = df2.select(
+            F.lit(None).cast(id_type).alias("_sid"), F.col(geom_col).alias("_blade")
+        ).limit(0)
     return _blade_lists(hits, "_sid", "_blade", id_col)
 
 
@@ -610,10 +563,11 @@ def _broadcast_combine(
 ) -> DataFrame | None:
     """Map-side difference/clip against a SMALL blade layer (the
     ``forward`` plan): layer 2 is grid-indexed and broadcast once
-    (``index.pairing.build``), layer 1 streams through ONE mapInPandas —
-    no candidate join, no shuffle, and no duplication of multi-KB blade
-    blobs into every candidate pair (the cell plan ships each subdivided
-    2000-coord blade part to every nearby subject row: ~40 KB x 45k rows
+    (``index.pairing.build``), layer 1 streams through the probe driver
+    (``pairing.probe``) — no candidate join, no shuffle, and no
+    duplication of multi-KB blade blobs into every candidate pair (the
+    cell plan ships each subdivided 2000-coord blade part to every
+    nearby subject row: ~40 KB x 45k rows
     of pure serialization at 50k parcels vs 3 giant rings).
 
     Same kernels and results as the cell plans: ``difference`` /
@@ -638,45 +592,41 @@ def _broadcast_combine(
     target = spark.sparkContext.defaultParallelism * 2
     if df1.rdd.getNumPartitions() < max(2, target // 2):
         df1 = df1.repartition(target)
-    gpos = df1.columns.index(geom_col)
+    memo: dict = {}  # unpickled with the step: one per task
 
-    def _probe(batches):
-        probe = pairing.Probe(bc)
-        memo: dict = {}
-        for pdf in batches:
-            col = pdf.iloc[:, gpos].to_numpy(object)
-            geoms, B = probe.decode(col)
-            pr, pl = probe.pairs(B)
-            blades = [probe.geom(j) for j in pl]
-            # pairs are sorted by row: one [start, end) slice per hit row
-            rows, starts = np.unique(pr, return_index=True)
-            ends = np.append(starts[1:], len(pr)).astype(np.int64)
-            if is_diff:
-                newg = col.copy()
-                keep = np.ones(len(pdf), dtype=bool)
-                results = _combine_rows(
-                    [geoms[i] for i in rows],
-                    [blades[s:e] for s, e in zip(starts, ends)],
-                    mode, memo,
-                )
-                for i, res in zip(rows, results):
-                    newg[i] = res
-                    keep[i] = res is not None or keep_empty_geoms
-            else:
-                newg = np.full(len(pdf), None, dtype=object)
-                pieces = _pieces([geoms[i] for i in pr], blades)
-                for i, s, e in zip(rows, starts, ends):
-                    got = [p for p in pieces[s:e] if p is not None]
-                    if len(got) == 1:
-                        newg[i] = got[0]
-                    elif got:
-                        newg[i] = _union_wkb([W.loads(p) for p in got])
-                keep = np.array([g is not None for g in newg], dtype=bool)
-            out = pdf.copy()
-            out.iloc[:, gpos] = newg
-            yield out[keep]
+    def _step(b):
+        col = b.pdf[geom_col].to_numpy(object)
+        blades = [b.geom2(j) for j in b.pl]
+        # pairs are sorted by row: one [start, end) slice per hit row
+        rows, starts = np.unique(b.pr, return_index=True)
+        ends = np.append(starts[1:], len(b.pr)).astype(np.int64)
+        if is_diff:
+            newg = col.copy()
+            keep = np.ones(len(col), dtype=bool)
+            results = _combine_rows(
+                [b.g1s[i] for i in rows],
+                [blades[s:e] for s, e in zip(starts, ends)],
+                mode, memo,
+            )
+            for i, res in zip(rows, results):
+                newg[i] = res
+                keep[i] = res is not None or keep_empty_geoms
+        else:
+            newg = np.full(len(col), None, dtype=object)
+            pieces = _pieces([b.g1s[i] for i in b.pr], blades)
+            for i, s, e in zip(rows, starts, ends):
+                got = [p for p in pieces[s:e] if p is not None]
+                if len(got) == 1:
+                    newg[i] = got[0]
+                elif got:
+                    newg[i] = _union_wkb([W.loads(p) for p in got])
+            keep = np.array([g is not None for g in newg], dtype=bool)
+        return keep, newg[keep]
 
-    return df1.mapInPandas(_probe, schema=df1.schema)
+    return pairing.probe(
+        df1, bc, _step, geom_col, rows=True,
+        payload=StructField(geom_col, BinaryType()),
+    )
 
 
 # ---------------------------------------------------------------- operators

@@ -31,14 +31,16 @@ in polygon test is the same predicate, vectorized).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+from pyspark.sql.types import BinaryType
 
 from .. import cache
 from ..geometry import wkb as W
+from ..index import pairing
 from .celljoin import candidate_pairs
 from .join import (
     _INTERSECTS,
@@ -59,8 +61,6 @@ def _interior_points_batch(vals: list) -> list:
     choice, bit-identical midpoints. Rows the sweep cannot settle at the
     first candidate y (holes, empty crossing sets, sub-EPS spans,
     big-endian, curves) take the exact per-row path unchanged."""
-    import numpy as np
-
     from ..geometry import predicates as P
     from ..geometry.geom import Geometry
     from ..geometry.kernels import EPS
@@ -207,12 +207,13 @@ def _attach_hits_fast(
     """(face, contributor) pairs with the broadcast orientation INVERTED:
     a grid over the interior POINTS (about 70 bytes each with bbox, id
     and grid entry — ~40 MB for 561k faces) is broadcast and the
-    ORIGINAL layer streams map-side through the join family's pair
-    refine. The previously-tried parcel-grid attach was reverted twice
-    because packing+broadcasting 500k parcel geometries cost more than
-    the candidate cell shuffle; the point side is two orders of
-    magnitude lighter to build, the parcels never shuffle at all, and
-    only (id, attrs, _face_id) rows leave the probe.
+    ORIGINAL layer streams map-side through the probe driver
+    (``pairing.probe``), bbox-only: a parcel is decoded only when a
+    point falls in its bbox. The previously-tried parcel-grid attach
+    was reverted twice because packing+broadcasting 500k parcel
+    geometries cost more than the candidate cell shuffle; the point side
+    is two orders of magnitude lighter to build, the parcels never
+    shuffle at all, and only (id, attrs, _face_id) rows leave the probe.
 
     Candidates are point-in-parcel-bbox (a SUBSET of the cell join's
     shared-cover-cell candidates; any pair it drops has the point
@@ -223,10 +224,6 @@ def _attach_hits_fast(
     (``intersects``: a point on a parcel boundary counts). Returns None
     (caller falls back to the cell join) when the point side exceeds
     ``max_points`` or a point blob is not a plain little-endian POINT."""
-    import numpy as np
-
-    from ..index import pairing
-
     pdf = (
         faces.select("_face_id", "_ip")
         .where(F.col("_ip").isNotNull())
@@ -248,35 +245,17 @@ def _attach_hits_fast(
     )
 
     slim = original.select(id_col, *attr_cols, geom_col)
-    out_schema = StructType(
-        [f for f in slim.schema.fields if f.name != geom_col]
-        + [StructField("_face_id", LongType())]
+
+    def _step(b):
+        # intersects is symmetric: the points are the subjects
+        return refine_pairs(
+            _INTERSECTS, None, b.B2, b.pl, b.geom1, b.B1, b.pr, pts=b.B2[:, :2]
+        )
+
+    return pairing.probe(
+        slim, bc, _step, geom_col, load=False,
+        columns={c: c for c in (id_col, *attr_cols)}, id_col="_face_id",
     )
-
-    def _probe(batches):
-        probe = pairing.Probe(bc)
-        for pdfb in batches:
-            col = pdfb[geom_col].to_numpy(object)
-            B = W.bounds_from_wkb_batch(col.tolist())
-            row, pt = probe.pairs(B)
-            geoms: dict = {}
-
-            def geom_at(r):
-                g = geoms.get(r)
-                if g is None:
-                    g = geoms[r] = W.loads(bytes(col[r]))
-                return g
-
-            # intersects is symmetric: the points are the subjects
-            ok = refine_pairs(
-                _INTERSECTS, None, probe.bb, pt, geom_at, B, row,
-                pts=probe.bb[:, :2],
-            )
-            out = pdfb.iloc[row[ok]].drop(columns=[geom_col]).copy()
-            out["_face_id"] = probe.ids[pt[ok]]
-            yield out
-
-    return slim.mapInPandas(_probe, schema=out_schema)
 
 
 def union_full_self(

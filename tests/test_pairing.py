@@ -23,6 +23,7 @@ from geofileops_spark.geometry import wkb as W
 from geofileops_spark.index import pairing
 from geofileops_spark.operators import join as J
 from geofileops_spark.operators import overlay as O
+from geofileops_spark.operators import union_full as UF
 from tests import fixtures as FX
 
 MB = 1024 * 1024
@@ -238,7 +239,7 @@ MIXED_WKBS = [
 
 
 def row_loop_decode(col):
-    """The per-row decode ``Probe.decode`` replaced."""
+    """The per-row decode ``pairing.decode`` replaced."""
     geoms, B = [None] * len(col), np.full((len(col), 4), np.nan)
     for i, b in enumerate(col):
         if b is None:
@@ -253,7 +254,7 @@ def row_loop_decode(col):
 
 def test_build_and_decode_bounds_match_the_udf_and_the_row_loop(spark):
     """``build`` takes its bboxes on the driver: bit-identical to the
-    ``_bounds_udf`` stage it replaced; ``Probe.decode`` gives the None
+    ``_bounds_udf`` stage it replaced; ``pairing.decode`` gives the None
     mask and bboxes of the per-row loop."""
     df = spark.createDataFrame(
         list(enumerate(MIXED_WKBS)), "fid long, geom_wkb binary"
@@ -270,7 +271,7 @@ def test_build_and_decode_bounds_match_the_udf_and_the_row_loop(spark):
     assert index.bb.tobytes() == udf[index.ids].tobytes()
     cache.release_caches()
 
-    geoms, B = pairing.Probe.decode(pd.Series(MIXED_WKBS, dtype=object))
+    geoms, B = pairing.decode(pd.Series(MIXED_WKBS, dtype=object))
     old_geoms, old_B = row_loop_decode(MIXED_WKBS)
     assert [g is None for g in geoms] == [g is None for g in old_geoms]
     assert [g is None for g in geoms] == list(~valid)
@@ -286,7 +287,7 @@ def test_decode_raises_on_corrupt_wkb_like_the_cell_plan(spark):
     corrupt = good[:-5]  # truncated ring: the vectorized bounds give NaN
     assert np.isnan(W.bounds_from_wkb_batch([corrupt])).all()
     with pytest.raises(ValueError) as err:
-        pairing.Probe.decode([good, corrupt])
+        pairing.decode([good, corrupt])
     pairs = spark.createDataFrame([(corrupt, good)], "g1 binary, g2 binary")
     with pytest.raises(Exception, match=re.escape(str(err.value))):
         pairs.select(O._pair_intersection_udf(F.col("g1"), F.col("g2"))).collect()
@@ -402,6 +403,19 @@ def test_export_by_location_plans_agree(layers, monkeypatch, query, min_area):
     assert results["cell"] == results["default"]
 
 
+@pytest.mark.parametrize("query", ["intersects is False", "disjoint is True"])
+def test_min_area_with_a_for_all_query_raises(layers, monkeypatch, query):
+    """An area threshold on a query that holds for disjoint geometries
+    has no settled meaning (the broadcast probe and the cell join used
+    to keep different rows): both budgets refuse it before a plan runs."""
+    parcels, zones, _ = layers
+    for path, want in (("default", "broadcast"), ("cell", "cell")):
+        monkeypatch.setattr(pairing, "BROADCAST_BYTES", budget_for(path, zones))
+        assert pairing.choose("pairs", zones).path == want
+        with pytest.raises(ValueError, match="min_area_intersect"):
+            J.export_by_location(parcels, zones, query, min_area_intersect=1.0)
+
+
 OVER_CAP_RUNS = {
     "intersection": lambda df1, df2: O.intersection(df1, df2),
     "export_by_location": lambda df1, df2: J.export_by_location(df1, df2),
@@ -490,6 +504,67 @@ def test_join_points_in_polygons_collect_is_bounded(spark, monkeypatch):
     with pytest.raises(ValueError, match="more than 10 rows"):
         J.join_points_in_polygons(points, polys, "lon", "lat", "fid", max_polys=10)
     assert collected == [11]
+
+
+# ------------------------------------------------------- probe driver
+DRIVER_RUNS = {
+    # operator path: (call, the functions that must reach pairing.probe)
+    "join_by_location": (
+        lambda L: J.join_by_location(L["parcels"], L["zones"]),
+        {"_join_broadcast_pairs"}),
+    "export_by_location-exists": (
+        lambda L: J.export_by_location(L["parcels"], L["zones"]),
+        {"_export_broadcast"}),
+    "export_by_location-for_all": (
+        lambda L: J.export_by_location(
+            L["parcels"], L["zones"], "intersects is False"),
+        {"_export_broadcast"}),
+    "join_points_in_polygons": (
+        lambda L: J.join_points_in_polygons(
+            L["points"], L["triangles"], "lon", "lat", "fid"),
+        {"join_points_in_polygons"}),
+    "intersection": (
+        lambda L: O.intersection(L["parcels"], L["zones"]),
+        {"_broadcast_pairs_matched"}),
+    "union_full_self": (
+        lambda L: UF.union_full_self(L["parcels"].select("fid", "geom_wkb")),
+        {"_broadcast_pairs_matched", "_attach_hits_fast"}),
+    "clip-forward": (
+        lambda L: O.clip(L["parcels"], L["zones"], _plan="forward"),
+        {"_broadcast_combine"}),
+    "difference-forward": (
+        lambda L: O.difference(L["parcels"], L["zones"], _plan="forward"),
+        {"_broadcast_combine"}),
+    "difference-reverse": (
+        lambda L: O.difference(L["zones"], L["parcels"], _plan="reverse"),
+        {"_reverse_collect_candidates"}),
+}
+
+
+@pytest.mark.parametrize("path", sorted(DRIVER_RUNS))
+def test_every_broadcast_grid_path_reaches_the_driver(
+    spark, layers, monkeypatch, path
+):
+    """Every broadcast-grid operator path builds its probe through the
+    one driver, ``pairing.probe``: a spy records which function called
+    it while the plan is built."""
+    import sys
+
+    parcels, zones, _ = layers
+    points, _ = random_points(spark, 200)
+    named = dict(parcels=parcels, zones=zones, points=points,
+                 triangles=irregular_polygons(spark, 20))
+    callers = []
+    orig = pairing.probe
+
+    def spy(*a, **k):
+        callers.append(sys._getframe(1).f_code.co_name)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(pairing, "probe", spy)
+    run, want = DRIVER_RUNS[path]
+    run(named)
+    assert set(callers) == want, callers
 
 
 # ------------------------------------------------------- long session
