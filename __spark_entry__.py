@@ -28,7 +28,8 @@ def _bigint(col):
 # --------------------------------------------------------------- flagship
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: Common-Crawl-style pages -> vectorized geotag extract ->
-    point-in-polygon cell join vs zones -> per-zone rollup."""
+    point-in-polygon join vs zones (the plan ``join_by_location`` picks
+    from the zones' size) -> per-zone rollup."""
     from geofileops_spark.operators.join import join_by_location
     from geofileops_spark.sources.pages import extract_points
     from geofileops_spark.sources.tpch_geo import geo_zones, pages_from_documents
@@ -37,7 +38,7 @@ def entry(spark: SparkSession) -> DataFrame:
     pages = pages_from_documents(spark, sf)
     pts = extract_points(pages, res=12)
     zones = geo_zones(spark, sf)
-    joined = join_by_location(pts, zones, "intersects is True", res=20, broadcast_right=True)
+    joined = join_by_location(pts, zones, "intersects is True", res=20)
     return (
         joined.groupBy(F.col("l2_fid").alias("zone_fid"), F.col("l2_naam").alias("zone"))
         .agg(F.count("*").alias("n_pages"))
@@ -194,8 +195,7 @@ def _q_join_nearest_sphere(spark, sf_dir):
     out = join_nearest(
         lonlat(T.cust_points(spark, sf_dir)),
         lonlat(T.supp_points(spark, sf_dir)),
-        nb_nearest=2, distance=1000.0, expand=True,
-        broadcast=True, metric="sphere",
+        nb_nearest=2, distance=1000.0, expand=True, metric="sphere",
     )
     return out.select(
         F.col("l1_fid").alias("cust_fid"),
@@ -1066,7 +1066,6 @@ def _q_pages_pip(spark, sf_dir):
     pts = extract_points(pages_from_documents(spark, sf_dir), res=12)
     out = join_by_location(
         pts, geo_zones(spark, sf_dir), "intersects is True", res=20,
-        broadcast_right=True,
     )
     return out.select(
         F.col("l1_url").alias("url"),

@@ -25,6 +25,10 @@ through this module:
   kernel, a row combine) over a :class:`Batch`;
 - :func:`choose` decides between the broadcast shapes and the
   distributed cell join from one byte budget, ``GFO_BROADCAST_BYTES``.
+  It runs no Spark job; a broadcast side's row cap, ``MAX_ROWS``, is
+  enforced by the collect that builds it (:func:`build`, or the kNN
+  probe's own collect), which answers "over the cap" past it. No
+  operator takes an argument that overrides the two.
 
 A broadcast-probe job thus runs one Python stage, the probe: the build
 side crosses no Python UDF and is not counted first. Each Python task
@@ -60,7 +64,8 @@ _log = logging.getLogger(__name__)
 BROADCAST_BYTES = int(os.environ.get("GFO_BROADCAST_BYTES", str(256 << 20)))
 # Rows of a broadcast side: a byte budget alone under-guards point
 # layers (tiny rows), and the driver-side grid build is O(rows). build()
-# bounds its collect by it; choose() guards the knn/sphere collects.
+# bounds its collect at MAX_ROWS + 1 rows, the kNN probe at
+# MAX_ROWS // 2 + 1 (every kNN task scans all of layer 2).
 MAX_ROWS = 4_000_000
 # Partitions per core for the reverse combine's kernel rows (see
 # overlay.difference).
@@ -76,10 +81,9 @@ class Decision:
     ``forward`` / ``reverse`` (the blade-combine broadcast of layer 2 /
     of the subjects' bboxes) or ``cell`` (the distributed cell join).
     ``scan_bytes`` and ``rows`` describe the side the path broadcasts.
-    ``rows`` is the count of ``knn`` / ``sphere``; :func:`build`'s
-    over-cap record gives the rows its bounded collect returned,
-    ``MAX_ROWS + 1``, a lower bound; it is None everywhere else (no
-    count is run)."""
+    No count is ever run: ``rows`` is None except in :func:`build`'s
+    over-cap record, where it is the rows its bounded collect returned,
+    ``MAX_ROWS + 1``, a lower bound."""
 
     path: str
     scan_bytes: int | None
@@ -106,33 +110,23 @@ def choose(shape: str, build: DataFrame, stream: DataFrame | None = None) -> Dec
 
     - ``pairs``: layer 2 is grid-indexed and probed by layer 1 (the
       location joins, the overlay pairs). Broadcast when it scans within
-      the budget; the ``MAX_ROWS`` cap is enforced by :func:`build`'s
-      bounded collect, which answers :data:`OVER_CAP` past it.
+      the budget.
     - ``knn``: every task scans all of layer 2 (join_nearest), so it
-      gets an eighth of the budget and half the rows.
-    - ``sphere``: the haversine probe of export_by_distance has no cell
-      path; only the row count guards the driver collect, and ``cell``
-      means the caller must refuse.
+      gets an eighth of the budget.
     - ``combine``: difference/clip. ``reverse`` broadcasts the subjects'
       bboxes when they scan at most a quarter of the blades and within
       the budget; ``forward`` broadcasts the blades when they fit a
       quarter of the budget and scan at most a quarter of the subjects
       (or fit a sixteenth of it outright); otherwise ``cell``.
 
-    Only ``knn`` (once the bytes fit) and ``sphere`` count rows: they
-    do not collect through :func:`build`, and Catalyst sizes UDF-built
-    binary columns at ~100 B/row, so the count keeps a byte misestimate
-    from collecting a huge layer. ``pairs`` runs no Spark job."""
+    It runs no Spark job. The row caps are the collects': :func:`build`
+    (``pairs``, ``forward``) answers :data:`OVER_CAP` past ``MAX_ROWS``
+    rows and the kNN probe returns None past ``MAX_ROWS // 2``, so a
+    byte misestimate (Catalyst sizes UDF-built binary columns at ~100
+    B/row) never collects a huge layer."""
     budget = BROADCAST_BYTES
     s2 = scan_size_bytes(build)
-    if shape == "sphere":
-        rows = build.count()
-        ok = rows <= MAX_ROWS // 2
-        d = Decision(
-            "broadcast" if ok else "cell", s2, rows, budget,
-            f"{rows} rows {'<=' if ok else '>'} {MAX_ROWS // 2}",
-        )
-    elif shape == "combine":
+    if shape == "combine":
         s1 = scan_size_bytes(stream)
         sizes = f"subjects {s1} B, blades {s2} B"
         if s1 is None or s2 is None or s1 <= 0 or s2 <= 0:
@@ -149,17 +143,8 @@ def choose(shape: str, build: DataFrame, stream: DataFrame | None = None) -> Dec
             d = Decision("cell", s2, None, budget, "no size estimate")
         elif s2 > byte_cap:
             d = Decision("cell", s2, None, budget, f"{s2} B > {byte_cap} B")
-        elif shape == "pairs":
-            d = Decision("broadcast", s2, None, budget, f"{s2} B <= {byte_cap} B")
         else:
-            row_cap = MAX_ROWS // 2
-            rows = build.count()
-            if rows > row_cap:
-                d = Decision("cell", s2, rows, budget, f"{rows} rows > {row_cap}")
-            else:
-                d = Decision(
-                    "broadcast", s2, rows, budget, f"{s2} B <= {byte_cap} B"
-                )
+            d = Decision("broadcast", s2, None, budget, f"{s2} B <= {byte_cap} B")
     else:
         raise ValueError(f"unknown pairing shape: {shape!r}")
     _log.debug("pairing %s: %s", shape, d)

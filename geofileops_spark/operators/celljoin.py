@@ -258,12 +258,9 @@ def with_cover(
 
 def prefix_columns(df: DataFrame, prefix: str, exclude: tuple = ()) -> DataFrame:
     """l1_/l2_ column prefixing (ColumnFormatter analogue,
-    geofileops ``util/_ogr_sql_util.py:7-229``)."""
-    cols = [
-        F.col(c).alias(f"{prefix}{c}") if c not in exclude else F.col(c)
-        for c in df.columns
-    ]
-    return df.select(*cols)
+    geofileops ``util/_ogr_sql_util.py:7-229``): one ``toDF``, the
+    ``exclude`` names kept as they are."""
+    return df.toDF(*[c if c in exclude else f"{prefix}{c}" for c in df.columns])
 
 
 def sample_rows_spread(df: DataFrame, col: str, sample: int = 2000):
@@ -457,22 +454,21 @@ def candidate_pairs(
     geom_col2: str = "geom_wkb",
     prefix1: str = "l1_",
     prefix2: str = "l2_",
-    bbox_margin: float = 0.0,
-    broadcast_right: bool | None = None,
     adaptive: bool = False,
     hot_threshold: int = 100_000,
     split_levels: int = 3,
 ) -> tuple[DataFrame, int]:
-    """Candidate pairs whose bboxes overlap (within ``bbox_margin``).
+    """Candidate pairs whose bboxes overlap.
 
     Output columns: every column of df1 prefixed ``l1_``, every column of
     df2 prefixed ``l2_`` (bbox helper columns ``{p}_minx``.. retained for
     downstream refine). Returns (pairs, res).
 
     This is the distributed plan: each side's cover explodes and
-    shuffles on the cell id, payload included. Operators take it when
-    the broadcast-grid probe does not fit ``GFO_BROADCAST_BYTES``
-    (``index.pairing.choose``).
+    shuffles on the cell id, payload included, through a forced
+    shuffled hash join. Operators take it when the broadcast-grid probe
+    does not fit ``GFO_BROADCAST_BYTES`` (``index.pairing.choose``) or
+    its row cap.
     """
     if res is None:
         res = pick_join_res(df1, df2, geom_col1, geom_col2)
@@ -489,26 +485,14 @@ def candidate_pairs(
             c2 = _split_hot(c2, hot, res, fine_res, geom_col2)
     e1 = prefix_columns(c1, prefix1)
     e2 = prefix_columns(c2, prefix2)
-    if bbox_margin > 0.0:
-        # margin is applied by expanding side-2 bboxes before covering:
-        # simpler to re-cover with margin via SQL on the exploded side is
-        # not possible, so margin>0 callers should pre-buffer bboxes; the
-        # ring-expansion join in join_nearest handles distance joins.
-        raise NotImplementedError("use ring-expansion join for distance joins")
-    if broadcast_right:
-        right = F.broadcast(e2)
-        joined = e1.join(right, e1[f"{prefix1}_cell"] == right[f"{prefix2}_cell"])
-    else:
-        # force a SHUFFLED hash join: Catalyst cannot size the cover
-        # UDF + explode output (it reuses the scan estimate), so it
-        # happily broadcasts a multi-hundred-MB exploded polygon side —
-        # a serial build that flatlines the whole join (measured: the
-        # 100k-parcel join ran at the same speed on 4 and 32 cores).
-        # Callers with a genuinely small side pass broadcast_right=True.
-        right = e2
-        joined = e1.hint("shuffle_hash").join(
-            right, e1[f"{prefix1}_cell"] == right[f"{prefix2}_cell"]
-        )
+    # force a SHUFFLED hash join: Catalyst cannot size the cover UDF +
+    # explode output (it reuses the scan estimate), so it happily
+    # broadcasts a multi-hundred-MB exploded polygon side — a serial
+    # build that flatlines the whole join (measured: the 100k-parcel
+    # join ran at the same speed on 4 and 32 cores)
+    joined = e1.hint("shuffle_hash").join(
+        e2, e1[f"{prefix1}_cell"] == e2[f"{prefix2}_cell"]
+    )
     # bbox overlap test (cheap prefilter)
     joined = joined.where(
         (F.col(f"{prefix1}_minx") <= F.col(f"{prefix2}_maxx"))

@@ -21,7 +21,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, DoubleType
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from ..functions.st import _EARTH_RADIUS_M
 from ..geometry import geom as G
@@ -419,7 +425,6 @@ def join_by_location(
     res: int | None = None,
     geom_col: str = "geom_wkb",
     id_col: str = "fid",
-    broadcast_right: bool | None = None,
 ) -> DataFrame:
     """Spatial theta-join (geofileops ``geoops.py:3051`` →
     ``_geoops_sql.py:2185-2342``). Output: layer1 geometry + l1_/l2_
@@ -430,14 +435,13 @@ def join_by_location(
     (``GFO_BROADCAST_BYTES``, see ``pairing.choose``) and no
     intersection-area column is asked for, pairs generate map-side
     against a broadcast grid index — zero shuffles (the reference's
-    per-worker rtree shape). Otherwise (or with ``broadcast_right`` set,
-    which keeps its cell-join meaning): the distributed cell join — the
-    100-TB default."""
+    per-worker rtree shape). Otherwise, or when layer 2 is over
+    ``pairing.MAX_ROWS`` rows: the distributed cell join — the 100-TB
+    default. No argument overrides the choice."""
     sq = SpatialQuery(spatial_relations_query).avoid_disjoint()
     matched = None
     if (
-        broadcast_right is None
-        and min_area_intersect is None
+        min_area_intersect is None
         and area_inters_column_name is None
         and pairing.choose("pairs", df2).path == "broadcast"
     ):
@@ -445,7 +449,6 @@ def join_by_location(
     if matched is None:
         pairs, res = candidate_pairs(
             df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
-            broadcast_right=broadcast_right,
         )
         g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
         matched = pairs.where(query_match_udf(sq)(F.col(g1), F.col(g2)))
@@ -692,7 +695,6 @@ def export_by_location(
     res: int | None = None,
     geom_col: str = "geom_wkb",
     id_col: str = "fid",
-    broadcast: bool | None = None,
     subdivide_coords: int | None = None,
 ) -> DataFrame:
     """Spatial semi-join (or anti-join for disjoint-style queries): keep
@@ -720,13 +722,13 @@ def export_by_location(
     the rows for which it holds against ALL of layer 2, and what an area
     threshold would mean there is not settled.
 
-    Two physical plans:
+    Two physical plans, picked by layer 2's size alone (no argument
+    overrides the choice):
 
-    - **broadcast probe** (default when layer 2 fits
-      ``GFO_BROADCAST_BYTES``, see ``pairing.choose``, and has at most
-      ``pairing.MAX_ROWS`` rows): layer 2 grid-indexed in RAM, layer 1
-      streamed map-side, zero shuffles — the reference's
-      in-process-rtree shape.
+    - **broadcast probe** (when layer 2 fits ``GFO_BROADCAST_BYTES``,
+      see ``pairing.choose``, and has at most ``pairing.MAX_ROWS``
+      rows): layer 2 grid-indexed in RAM, layer 1 streamed map-side,
+      zero shuffles — the reference's in-process-rtree shape.
     - **distributed cell join** (the 100-TB shape): payload-trimmed
       cover explode → cell hash join → per-(cell, l1) early-exit EXISTS
       aggregate (no re-shuffle: the aggregate reuses the join's hash
@@ -738,10 +740,9 @@ def export_by_location(
             "min_area_intersect needs a query that fails for disjoint "
             f"geometries, not {spatial_relations_query!r}"
         )
-    if broadcast is None:
-        # decide on the RAW layer-2 scan — subdivision rewrites the plan
-        # and would hide the scan-size statistic from the sizer
-        broadcast = pairing.choose("pairs", df2).path == "broadcast"
+    # decide on the RAW layer-2 scan — subdivision rewrites the plan and
+    # would hide the scan-size statistic from the sizer
+    fits = pairing.choose("pairs", df2).path == "broadcast"
     if subdivide_coords is not None and subdivide_coords > 0:
         if sq.simple is not None and sq.simple[0] in ("intersects", "disjoint"):
             from .overlay import subdivide_layer
@@ -749,7 +750,7 @@ def export_by_location(
             df2 = subdivide_layer(
                 df2.select(geom_col), subdivide_coords, geom_col
             )
-    if broadcast:
+    if fits:
         out = _export_broadcast(df1, df2, sq, min_area_intersect, geom_col)
         if out is not None:
             return out
@@ -899,22 +900,22 @@ def export_by_distance(
     ``metric="sphere"``: ``max_distance`` is haversine METERS over lon/lat
     point layers (the reference's geographic-CRS distance mode,
     ``geoops.py:3216-3224``) — composed as a 1-nearest sphere probe
-    against a broadcast-small layer 2, so the same plan constraints as
-    ``join_nearest(metric="sphere")`` apply."""
+    against a broadcast-small layer 2. It raises ``ValueError`` when
+    layer 2 has more than ``pairing.MAX_ROWS // 2`` rows."""
     if metric == "sphere":
-        if pairing.choose("sphere", df2).path != "broadcast":
-            # the sphere probe collects layer 2 onto the driver; refuse a
-            # layer that would not broadcast rather than OOM silently
-            raise ValueError(
-                "export_by_distance(metric='sphere') requires a "
-                "broadcast-small layer 2; pre-project to a planar CRS "
-                "for the distributed path"
-            )
         near = _broadcast_knn(
             df1.select(id_col, geom_col), df2.select(id_col, geom_col),
             nb_nearest=1, distance=max_distance, expand=False,
             geom_col=geom_col, id_col=id_col, metric="sphere",
         )
+        if near is None:
+            # layer 2 is over the kNN probe's row cap: refuse it rather
+            # than collect it onto the driver
+            raise ValueError(
+                "export_by_distance(metric='sphere') requires a "
+                "broadcast-small layer 2; pre-project to a planar CRS "
+                "for the distributed path"
+            )
         key = near.select(F.col(f"l1_{id_col}").alias(id_col)).distinct()
         return df1.join(key, on=id_col, how="left_semi")
     if res is None:
@@ -958,7 +959,7 @@ def _broadcast_knn(
     geom_col: str,
     id_col: str,
     metric: str = "planar",
-) -> DataFrame:
+) -> DataFrame | None:
     """kNN against a broadcast-small layer 2: collect l2 once, ship it to
     every task, and resolve each l1 row's k nearest INSIDE one
     mapInPandas pass — no candidate join, no dedup shuffle, no window
@@ -968,6 +969,11 @@ def _broadcast_knn(
     and refinement stops once the k-th exact distance <= the next lower
     bound. Ties rank by (distance, l2 id) like the ring path.
 
+    Every task scans all of layer 2, so its one collect is bounded at
+    ``pairing.MAX_ROWS // 2 + 1`` rows: past that cap this returns None
+    (the row cap costs no count) and the caller takes the ring path, or
+    refuses a sphere call.
+
     ``metric="sphere"``: both layers must be lon/lat POINT layers;
     ``distance`` is in meters and the output ``distance`` column is the
     haversine great-circle distance (same IUGG radius as
@@ -975,33 +981,24 @@ def _broadcast_knn(
     distance — the reference's geographic-CRS split
     (``geoops.py:3216-3224``: meters via geodesic formulas, CRS units in
     ``distance_crs``)."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
-    spark = df1.sparkSession
-    l2_prefixed = prefix_columns(df2, "l2_")
-    l2_cols = l2_prefixed.columns
-    l2_rows = l2_prefixed.collect()
+    row_cap = pairing.MAX_ROWS // 2
+    l2 = prefix_columns(df2, "l2_")
+    l2_rows = l2.limit(row_cap + 1).collect()
+    if len(l2_rows) > row_cap:
+        return None
+    bc = pairing.broadcast(df1.sparkSession, [tuple(r) for r in l2_rows])
+    l2_cols = l2.columns
     l2_geom = f"l2_{geom_col}"
-    l2_id = f"l2_{id_col}"
-    bc = pairing.broadcast(
-        spark, [tuple(r[c] for c in l2_cols) for r in l2_rows]
-    )
     c1 = prefix_columns(df1, "l1_")
     out_schema = StructType(
-        list(c1.schema.fields)
-        + [f for f in l2_prefixed.schema.fields if f.name != l2_geom]
+        c1.schema.fields
+        + [f for f in l2.schema.fields if f.name != l2_geom]
+        + [StructField("pos", IntegerType()), StructField("distance", DoubleType())]
+        + ([StructField("distance_crs", DoubleType())] if metric == "sphere" else [])
     )
-    from pyspark.sql.types import DoubleType as _D, IntegerType as _I, StructField as _SF
-
-    out_schema = StructType(
-        out_schema.fields + [_SF("pos", _I()), _SF("distance", _D())]
-    )
-    if metric == "sphere":
-        out_schema = StructType(out_schema.fields + [_SF("distance_crs", _D())])
+    out_names = [f.name for f in out_schema.fields]
     g_idx = l2_cols.index(l2_geom)
-    id_idx = l2_cols.index(l2_id)
+    id_idx = l2_cols.index(f"l2_{id_col}")
     attr_cols = [c for c in l2_cols if c != l2_geom]
     l1_geom = f"l1_{geom_col}"
 
@@ -1036,7 +1033,6 @@ def _broadcast_knn(
             [[r[l2_cols.index(c)] for c in attr_cols] for r in rows],
             columns=attr_cols,
         )
-        out_names = [f.name for f in out_schema.fields]
         for pdf in batches:
             nrows = len(pdf)
             if m == 0 or nrows == 0:
@@ -1063,7 +1059,7 @@ def _broadcast_knn(
                         continue
                     g1s[i] = g
                     b1[i] = K.bounds(g)
-            # exact path: point x point distances ARE the bbox distances
+            # exact path: point x point lower bounds ARE the distances
             exact = pts1 is not None and all_l2_points
             if metric == "sphere" and not exact:
                 raise ValueError(
@@ -1075,7 +1071,6 @@ def _broadcast_knn(
             emit_l2: list[int] = []
             emit_pos: list[int] = []
             emit_d: list[float] = []
-            emit_dcrs: list[float] = []
             # the (batch x l2) lower-bound matrix is built in row chunks
             # bounded to ~4M cells (32 MB of float64 temporaries)
             chunk = max(1, 4_000_000 // m)
@@ -1098,53 +1093,23 @@ def _broadcast_knn(
                         lb = 2.0 * _EARTH_RADIUS_M * np.arcsin(
                             np.sqrt(np.minimum(h, 1.0))
                         )
-                    lb[:, ~valid] = np.inf
-                    lb[~np.isfinite(cb[:, 0])] = np.inf
-                    lb = np.where(np.isnan(lb), np.inf, lb)
-                    kk = min(nb_nearest, int(valid.sum()))
-                    if kk == 0:
-                        continue
-                    kth = np.partition(lb, kk - 1, axis=1)[:, kk - 1]
-                    for i in range(e - s):
-                        cap = kth[i] if expand else min(kth[i], distance)
-                        cand = np.nonzero(
-                            (lb[i] <= cap) & np.isfinite(lb[i])
-                        )[0]
-                        if len(cand) == 0:
-                            continue
-                        best = sorted(
-                            ((float(lb[i][j]), ids[j], int(j)) for j in cand),
-                            key=_tiekey,
-                        )[:nb_nearest]
-                        for pos, (d, _lid, oi) in enumerate(best, start=1):
-                            emit_l1.append(s + i)
-                            emit_l2.append(oi)
-                            emit_pos.append(pos)
-                            emit_d.append(d)
-                            emit_dcrs.append(
-                                float(
-                                    np.hypot(
-                                        cb[i, 0] - bbs[oi, 0],
-                                        cb[i, 1] - bbs[oi, 1],
-                                    )
-                                )
-                            )
-                    continue
-                dx = np.maximum(
-                    np.maximum(
-                        bbs[None, :, 0] - cb[:, None, 2],
-                        cb[:, None, 0] - bbs[None, :, 2],
-                    ),
-                    0.0,
-                )
-                dy = np.maximum(
-                    np.maximum(
-                        bbs[None, :, 1] - cb[:, None, 3],
-                        cb[:, None, 1] - bbs[None, :, 3],
-                    ),
-                    0.0,
-                )
-                lb = np.hypot(dx, dy)
+                    lb[np.isnan(lb)] = np.inf
+                else:
+                    dx = np.maximum(
+                        np.maximum(
+                            bbs[None, :, 0] - cb[:, None, 2],
+                            cb[:, None, 0] - bbs[None, :, 2],
+                        ),
+                        0.0,
+                    )
+                    dy = np.maximum(
+                        np.maximum(
+                            bbs[None, :, 1] - cb[:, None, 3],
+                            cb[:, None, 1] - bbs[None, :, 3],
+                        ),
+                        0.0,
+                    )
+                    lb = np.hypot(dx, dy)
                 lb[:, ~valid] = np.inf
                 lb[~np.isfinite(cb[:, 0])] = np.inf
                 if exact:
@@ -1176,8 +1141,6 @@ def _broadcast_knn(
                     if g1 is None:
                         if pts1 is None:
                             continue
-                        from ..geometry import geom as G
-
                         g1 = G.Geometry(G.POINT, pts1[gi].copy())
                         g1s[gi] = g1
                     row_lb = lb[i]
@@ -1214,7 +1177,9 @@ def _broadcast_knn(
             outdf["pos"] = np.asarray(emit_pos, dtype=np.int32)
             outdf["distance"] = np.asarray(emit_d, dtype=np.float64)
             if metric == "sphere":
-                outdf["distance_crs"] = np.asarray(emit_dcrs, dtype=np.float64)
+                # the planar degree distance of each emitted pair
+                p, q = b1[emit_l1], bbs[emit_l2]
+                outdf["distance_crs"] = np.hypot(p[:, 0] - q[:, 0], p[:, 1] - q[:, 1])
             yield outdf[out_names]
 
     res = c1.mapInPandas(_knn, schema=out_schema)
@@ -1235,7 +1200,6 @@ def join_nearest(
     geom_col: str = "geom_wkb",
     id_col: str = "fid",
     max_expand_rounds: int = 4,
-    broadcast: bool | None = None,
     metric: str = "planar",
 ) -> DataFrame:
     """k-nearest join (geofileops ``geoops.py:3190`` →
@@ -1257,28 +1221,29 @@ def join_nearest(
     side (which shrinks every round); layer 2 keeps its one-time cover
     cells. When the un-exploded layer 2 scan fits an eighth of
     ``GFO_BROADCAST_BYTES`` (32 MB by default; see ``pairing.choose``)
-    layer 2 is broadcast whole and no candidate join runs at all — a
-    dimension-sized l2 must not pay a shuffle per round; big l2 sides
-    get a forced shuffle-hash join (never an implicit broadcast of a
-    UDF-exploded plan, whose size Catalyst misestimates).
+    and has at most ``pairing.MAX_ROWS // 2`` rows (the cap of its one
+    bounded collect), layer 2 is broadcast whole and no candidate join
+    runs at all — a dimension-sized l2 must not pay a shuffle per round;
+    big l2 sides get a forced shuffle-hash join (never an implicit
+    broadcast of a UDF-exploded plan, whose size Catalyst misestimates).
+    No argument overrides the choice. ``metric="sphere"`` has only the
+    broadcast plan and raises ``ValueError`` on a bigger layer 2.
     """
     if distance is None:
         raise ValueError("join_nearest requires a search `distance`")
     if metric not in ("planar", "sphere"):
         raise ValueError(f"metric must be 'planar' or 'sphere', got {metric!r}")
-    if broadcast is None:
-        bcast = pairing.choose("knn", df2).path == "broadcast"
-    else:
-        bcast = broadcast
-    if bcast:
+    if pairing.choose("knn", df2).path == "broadcast":
         # dimension-sized l2: no join at all (see _broadcast_knn). The
         # ring machinery below is the big-x-big shape; for a small l2 its
         # per-round shuffles and ring explosion dominate runtime (the r2
         # bench regression: rings grow to 1089 cells/row by round 3).
-        return _broadcast_knn(
+        near = _broadcast_knn(
             df1, df2, nb_nearest, distance, expand, geom_col, id_col,
             metric=metric,
         )
+        if near is not None:
+            return near
     if metric == "sphere":
         # the ring machinery below generates candidates on a PLANAR cell
         # grid; a meters-radius search over lon/lat degrees would need a
@@ -1286,9 +1251,10 @@ def join_nearest(
         # nearest-city / geocoding shape — layer 2 is a dimension table —
         # so the broadcast path is the supported plan.
         raise ValueError(
-            "metric='sphere' requires a broadcast-small layer 2 "
-            "(pass broadcast=True or shrink layer 2); the distributed "
-            "ring path is planar-only — pre-project to a planar CRS"
+            "metric='sphere' requires a broadcast-small layer 2 (within "
+            "an eighth of GFO_BROADCAST_BYTES and pairing.MAX_ROWS // 2 "
+            "rows); the distributed ring path is planar-only — "
+            "pre-project to a planar CRS"
         )
     if res is None:
         # coarse bound: cell >= distance (1-ring covers the initial

@@ -710,7 +710,6 @@ def difference(
     subdivide_coords: int | None = None,
     keep_empty_geoms: bool = False,
     blade_union: bool = False,
-    broadcast: bool | None = None,
     _plan: str | None = None,
 ) -> DataFrame:
     """g1 minus the union of all intersecting layer-2 geometries
@@ -727,16 +726,15 @@ def difference(
     cost stays bounded. Layer-2 parts are independent subtrahend rows:
     g1 − (p1 ∪ p2 ∪ …) subtracts each part in turn, and bbox pruning
     then ships a parcel only the ~nearby slice of a 300k-coord blade
-    instead of the whole blob."""
+    instead of the whole blob.
+
+    The plan (forward or reverse broadcast, or the cell join) is
+    ``pairing.choose("combine", df2, df1)``'s; ``_plan`` only carries
+    that decision, made on the raw scans, into the subdivided parts."""
     if _plan is None:
         # decide on the RAW layer scans (post-subdivide plans hide the
         # size statistics from Catalyst's estimator)
-        if broadcast is True:
-            _plan = "forward"
-        elif broadcast is False:
-            _plan = "cell"
-        else:
-            _plan = pairing.choose("combine", df2, df1).path
+        _plan = pairing.choose("combine", df2, df1).path
     if subdivide_coords is not None:
         s1 = _subdivide_subject(df1, subdivide_coords, geom_col, id_col)
         if _plan == "reverse":
@@ -836,23 +834,21 @@ def clip(
     explodecollections: bool = False,
     where_post: str | None = None,
     subdivide_coords: int | None = None,
-    broadcast: bool | None = None,
     _plan: str | None = None,
 ) -> DataFrame:
     """g1 intersected with the union of intersecting clip geometries;
     clip layer contributes no attributes, non-intersecting rows dropped
-    (geofileops ``geoops.py:1908`` -> ``_geoops_sql.py:942-1055``)."""
+    (geofileops ``geoops.py:1908`` -> ``_geoops_sql.py:942-1055``).
+
+    The plan is ``pairing.choose("combine", df2, df1)``'s (forward
+    broadcast or the cell join); ``_plan`` only carries it into the
+    subdivided parts."""
     if _plan is None:
-        if broadcast is True:
-            _plan = "forward"
-        elif broadcast is False:
+        # clip has no reverse kernel shape: few-subjects-vs-many-blades
+        # still runs the pairwise cell join
+        _plan = pairing.choose("combine", df2, df1).path
+        if _plan == "reverse":
             _plan = "cell"
-        else:
-            # clip has no reverse kernel shape: few-subjects-vs-many-
-            # blades still runs the pairwise cell join
-            _plan = pairing.choose("combine", df2, df1).path
-            if _plan == "reverse":
-                _plan = "cell"
     out = None
     if subdivide_coords is not None:
         s1 = _subdivide_subject(df1, subdivide_coords, geom_col, id_col)

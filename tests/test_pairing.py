@@ -99,17 +99,17 @@ def random_points(spark, n: int, seed: int = 6):
 
 
 # ------------------------------------------------------------- decision
-def expected_path(shape, budget, max_rows, s2, rows2, s1=None):
+def expected_path(shape, budget, s2, s1=None):
     """The per-shape rules and limits each operator applied on its own
     before ``choose()`` existed, as shares of the default 256 MB budget:
     pairs 256 MB / 4M rows, kNN 32 MB / 2M rows, combine-forward 64 MB
-    (16 MB outright), reverse 256 MB. The pairs row cap is ``build``'s
-    (its bounded collect), so ``choose`` applies only the bytes."""
+    (16 MB outright), reverse 256 MB. The row caps are the bounded
+    collects' (``build``'s for pairs, ``_broadcast_knn``'s for kNN), so
+    ``choose`` applies only the bytes, whatever ``MAX_ROWS`` is."""
     if shape == "pairs":
         return "broadcast" if 0 < s2 <= budget else "cell"
     if shape == "knn":
-        ok = 0 < s2 <= budget // 8 and rows2 <= max_rows // 2
-        return "broadcast" if ok else "cell"
+        return "broadcast" if 0 < s2 <= budget // 8 else "cell"
     if shape == "combine":
         if s1 * 4 <= s2 and s1 <= budget:
             return "reverse"
@@ -142,16 +142,16 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch, caplog):
             monkeypatch.setattr(pairing, "MAX_ROWS", max_rows)
             for shape in ("pairs", "knn"):
                 d = pairing.choose(shape, zones)
-                assert d.path == expected_path(shape, budget, max_rows, sz, 5), (
+                assert d.path == expected_path(shape, budget, sz), (
                     shape, budget, max_rows, d)
                 assert d.budget == budget and d.scan_bytes == sz
                 seen.add((shape, d.path))
-            assert pairing.choose("pairs", zones).rows is None  # no count
+            assert pairing.choose(shape, zones).rows is None  # no count
         for build, stream in ((zones, parcels), (parcels, zones)):
             d = pairing.choose("combine", build, stream)
             s2 = sz if build is zones else sp
             s1 = sp if build is zones else sz
-            assert d.path == expected_path("combine", budget, 0, s2, 0, s1), (budget, d)
+            assert d.path == expected_path("combine", budget, s2, s1), (budget, d)
             assert d.rows is None  # the combine decision never counts
             seen.add(("combine", d.path))
     # every path of every shape was reached across the boundaries
@@ -180,11 +180,8 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch, caplog):
         else:
             assert logged == []
     cache.release_caches()
-    monkeypatch.setattr(pairing, "MAX_ROWS", 9)
-    assert pairing.choose("sphere", zones).path == "cell"
-    monkeypatch.setattr(pairing, "MAX_ROWS", 10)
-    d = pairing.choose("sphere", zones)
-    assert d.path == "broadcast" and d.rows == 5
+    with pytest.raises(ValueError, match="unknown pairing shape"):
+        pairing.choose("sphere", zones)
 
 
 def test_intersection_plan_runs_one_jvm_only_job(spark, layers):
@@ -214,6 +211,104 @@ def test_intersection_plan_runs_one_jvm_only_job(spark, layers):
     assert counted == []
     bounds_udf.assert_not_called()
     assert len(sc.statusTracker().getJobIdsForGroup("intersection-plan")) == 1
+
+
+def lonlat_points(spark, rows):
+    """A cached lon/lat POINT layer of ``(fid, lon, lat)`` rows: a
+    materialized cache gives the planner its real size, as a parquet
+    scan would (a frame built from a Python list is sized at
+    ``Long.MaxValue`` bytes)."""
+    from geofileops_spark.functions.st import st_point
+
+    df = spark.createDataFrame(rows, "fid long, lon double, lat double").select(
+        "fid", st_point(F.col("lon"), F.col("lat")).alias("geom_wkb")).cache()
+    df.count()
+    return df
+
+
+CITIES = [(1, 4.35, 50.85), (2, 2.35, 48.86)]  # Brussels, Paris
+TOWNS = [(10, 4.40, 51.22), (11, 5.57, 50.63), (12, 3.72, 51.05)]
+
+KNN_CALLS = {
+    "join_nearest": lambda L: J.join_nearest(
+        L["points"], L["zones"], nb_nearest=2, distance=3000.0),
+    "join_nearest-sphere": lambda L: J.join_nearest(
+        L["cities"], L["towns"], nb_nearest=2, distance=1000.0, metric="sphere"),
+    "export_by_distance-sphere": lambda L: J.export_by_distance(
+        L["cities"], L["towns"], max_distance=60_000.0, metric="sphere"),
+}
+
+
+@pytest.fixture(scope="module")
+def knn_layers(spark, layers):
+    _, zones, points = layers
+    cities, towns = lonlat_points(spark, CITIES), lonlat_points(spark, TOWNS)
+    yield dict(zones=zones, points=points, cities=cities, towns=towns)
+    for df in (cities, towns):
+        df.unpersist(blocking=True)
+
+
+@pytest.mark.parametrize("op", sorted(KNN_CALLS))
+def test_knn_plans_run_no_count(knn_layers, op):
+    """Building a kNN plan counts no frame: ``choose("knn")`` decides on
+    bytes alone, and the broadcast probe's bounded collect enforces the
+    row cap (a count would scan layer 2 a second time)."""
+    from unittest import mock
+
+    counted = []
+    frame = type(knn_layers["zones"])
+    orig = frame.count
+
+    def spy(self):
+        counted.append(self)
+        return orig(self)
+
+    with mock.patch.object(frame, "count", spy):
+        out = KNN_CALLS[op](knn_layers)
+    assert counted == []
+    assert len(out.collect()) > 0
+
+
+def test_knn_row_cap_is_the_collects(knn_layers, monkeypatch):
+    """A layer 2 within the kNN byte share but over ``MAX_ROWS // 2``
+    rows: ``_broadcast_knn``'s bounded collect answers None, planar
+    ``join_nearest`` returns the ring path's rows and both sphere entry
+    points refuse. At the cap itself the probe still runs."""
+    zones, towns = knn_layers["zones"], knn_layers["towns"]
+
+    def rows(df):
+        return sorted(
+            (r["l1_fid"], r["pos"], r["l2_fid"], round(r["distance"], 9))
+            for r in df.select("l1_fid", "pos", "l2_fid", "distance").collect()
+        )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    call = KNN_CALLS["join_nearest"]
+    fast = call(knn_layers)
+    monkeypatch.setattr(pairing, "BROADCAST_BYTES", 0)
+    ring = rows(call(knn_layers))
+    monkeypatch.undo()
+    assert rows(fast) == ring and ring
+    assert "Exchange hashpartitioning" not in plan(fast)
+
+    monkeypatch.setattr(pairing, "MAX_ROWS", 9)  # zones has 5 rows > 9 // 2
+    assert pairing.choose("knn", zones).path == "broadcast"
+    assert J._broadcast_knn(
+        knn_layers["points"], zones, 2, 3000.0, True, "geom_wkb", "fid") is None
+    capped = call(knn_layers)
+    assert "Exchange hashpartitioning" in plan(capped)  # the ring path
+    assert rows(capped) == ring
+
+    monkeypatch.setattr(pairing, "MAX_ROWS", 5)  # towns has 3 rows > 5 // 2
+    assert pairing.choose("knn", towns).path == "broadcast"
+    for op in ("join_nearest-sphere", "export_by_distance-sphere"):
+        with pytest.raises(ValueError, match="sphere"):
+            KNN_CALLS[op](knn_layers)
+    monkeypatch.setattr(pairing, "MAX_ROWS", 6)  # 3 rows == 6 // 2
+    for op in ("join_nearest-sphere", "export_by_distance-sphere"):
+        assert len(KNN_CALLS[op](knn_layers).collect()) > 0
 
 
 # ------------------------------------------------ build / decode bounds

@@ -40,7 +40,7 @@ def test_join_by_location_broadcasts_small_side(spark):
 
     out = join_by_location(
         T.cust_points(spark, SF), T.nation_boxes(spark, SF),
-        "intersects is True", res=18, broadcast_right=True,
+        "intersects is True", res=18,
     )
     assert "BroadcastHashJoin" in plan_of(out)
 
@@ -90,7 +90,7 @@ def test_wholestage_codegen_present(spark):
 def test_cell_join_never_broadcasts_implicitly(spark):
     """Catalyst sizes UDF+explode output from the scan estimate, so it
     would happily broadcast a huge exploded polygon cover; candidate_pairs
-    must force a shuffled hash join unless broadcast_right is explicit."""
+    must force a shuffled hash join."""
     from geofileops_spark.operators.celljoin import candidate_pairs
     from geofileops_spark.sources import tpch_geo as T
 
@@ -99,14 +99,6 @@ def test_cell_join_never_broadcasts_implicitly(spark):
     )
     p = plan_of(pairs)
     assert "ShuffledHashJoin" in p
-    # the CELL join itself is never a broadcast; (the payload-light
-    # variant may add broadcast attach joins, so assert on the cell join
-    # being SHJ rather than on the absence of any broadcast)
-    bc, _ = candidate_pairs(
-        T.supp_boxes(spark, SF), T.nation_boxes(spark, SF), res=18,
-        broadcast_right=True,
-    )
-    assert "BroadcastHashJoin" in plan_of(bc)
 
 
 def test_dissolve_triggers_no_full_input_count(spark):

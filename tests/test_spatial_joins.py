@@ -36,6 +36,28 @@ def spark_pairs(df, id1="l1_fid", id2="l2_fid"):
     return sorted((r[0], r[1]) for r in df.select(id1, id2).collect())
 
 
+def wkt_layer(spark, rows):
+    """A ``(fid, geom_wkb)`` layer of ``(fid, wkt)`` rows, cached and
+    materialized: the planner sees its real size, as it sees a parquet
+    scan's (a frame built from a Python list is sized at
+    ``Long.MaxValue`` bytes and never fits a broadcast budget)."""
+    from geofileops_spark.functions.st import st_geomfromtext
+
+    df = spark.createDataFrame(rows, "fid long, wkt string").select(
+        "fid", st_geomfromtext(F.col("wkt")).alias("geom_wkb")
+    ).cache()
+    df.count()
+    return df
+
+
+def on_budget(monkeypatch, budget, call):
+    """``call()`` with ``pairing.BROADCAST_BYTES`` set to ``budget``
+    (0: every pairing plan takes its distributed path)."""
+    with monkeypatch.context() as m:
+        m.setattr(pairing, "BROADCAST_BYTES", budget)
+        return call()
+
+
 def test_join_by_location_intersects(layers):
     parcels, zones, points = layers
     out = J.join_by_location(parcels, zones, "intersects is True")
@@ -130,15 +152,16 @@ def test_export_grid_cache_reuse_and_release(layers):
     parcels, zones, _ = layers
     gfo_cache.release_caches()
     pairing._GRID_CACHE.clear()
+    assert pairing.choose("pairs", zones).path == "broadcast"
     a = {r[0] for r in
-         J.export_by_location(parcels, zones, "intersects is True",
-                              broadcast=True).select("fid").collect()}
+         J.export_by_location(parcels, zones, "intersects is True")
+         .select("fid").collect()}
     assert len(pairing._GRID_CACHE) == 1
     key = next(iter(pairing._GRID_CACHE))
     # same layer again: the built grid broadcast is reused (same entry)
     b = {r[0] for r in
-         J.export_by_location(parcels, zones, "disjoint is True",
-                              broadcast=True).select("fid").collect()}
+         J.export_by_location(parcels, zones, "disjoint is True")
+         .select("fid").collect()}
     assert next(iter(pairing._GRID_CACHE)) == key
     assert not (a & b)
     gfo_cache.release_caches()
@@ -161,9 +184,10 @@ def test_export_by_distance(layers):
     assert got == expected
 
 
-def test_join_nearest_ring_path_matches_broadcast(layers):
-    # the ring-expansion plan (big-x-big shape) and the broadcast kNN
-    # kernel (dimension-sized l2 shape) must produce identical results
+def test_join_nearest_ring_path_matches_broadcast(layers, monkeypatch):
+    # the ring-expansion plan (big-x-big shape, no budget) and the
+    # broadcast kNN kernel (dimension-sized l2 shape, the default
+    # budget) must produce identical results
     _, zones, points = layers
 
     def norm(df):
@@ -173,34 +197,29 @@ def test_join_nearest_ring_path_matches_broadcast(layers):
         )
 
     for expand in (True, False):
-        out_b = J.join_nearest(
-            points, zones, nb_nearest=2, distance=3000.0,
-            expand=expand, broadcast=True,
-        )
-        out_r = J.join_nearest(
-            points, zones, nb_nearest=2, distance=3000.0,
-            expand=expand, broadcast=False,
-        )
-        assert norm(out_b) == norm(out_r), f"expand={expand}"
+        out = {}
+        for budget, want in ((pairing.BROADCAST_BYTES, "broadcast"), (0, "cell")):
+            with monkeypatch.context() as m:
+                m.setattr(pairing, "BROADCAST_BYTES", budget)
+                assert pairing.choose("knn", zones).path == want
+                out[want] = norm(J.join_nearest(
+                    points, zones, nb_nearest=2, distance=3000.0, expand=expand))
+        assert out["broadcast"], f"expand={expand}"
+        assert out["broadcast"] == out["cell"], f"expand={expand}"
 
 
-def test_join_nearest_expand_past_initial_distance(spark):
+def test_join_nearest_expand_past_initial_distance(spark, monkeypatch):
     # reference semantics (geoops.py:3190): `distance` is only the
     # INITIAL radius when expand=True — a far row still gets k results;
     # expand=False caps hard and the far row gets nothing
-    from geofileops_spark.functions.st import st_geomfromtext
-
-    def layer(rows):
-        df = spark.createDataFrame(rows, "fid long, wkt string")
-        return df.select(
-            "fid", st_geomfromtext(F.col("wkt")).alias("geom_wkb")
-        )
-
-    l1 = layer([(1, "POINT (0 0)"), (2, "POINT (100000 100000)")])
-    l2 = layer([(10, "POINT (1 0)"), (11, "POINT (2 0)"), (12, "POINT (3 0)")])
-    for broadcast in (True, False):
+    l1 = wkt_layer(spark, [(1, "POINT (0 0)"), (2, "POINT (100000 100000)")])
+    l2 = wkt_layer(
+        spark, [(10, "POINT (1 0)"), (11, "POINT (2 0)"), (12, "POINT (3 0)")])
+    for budget, want in ((pairing.BROADCAST_BYTES, "broadcast"), (0, "cell")):
+        monkeypatch.setattr(pairing, "BROADCAST_BYTES", budget)
+        assert pairing.choose("knn", l2).path == want
         out = J.join_nearest(
-            l1, l2, nb_nearest=2, distance=5.0, expand=True, broadcast=broadcast
+            l1, l2, nb_nearest=2, distance=5.0, expand=True
         ).collect()
         by_fid = {}
         for r in out:
@@ -209,7 +228,7 @@ def test_join_nearest_expand_past_initial_distance(spark):
         # far row found its 2 nearest despite initial radius 5
         assert sorted(by_fid[2]) == [(1, 12), (2, 11)]
         out_capped = J.join_nearest(
-            l1, l2, nb_nearest=2, distance=5.0, expand=False, broadcast=broadcast
+            l1, l2, nb_nearest=2, distance=5.0, expand=False
         ).collect()
         fids = {r["l1_fid"] for r in out_capped}
         assert fids == {1}
@@ -268,24 +287,16 @@ def test_delete_duplicate_geometries(spark):
     assert got == [4, 5]  # fid 5 has prio 0 -> kept over 1..3
 
 
-def test_join_nearest_sphere(spark):
+def test_join_nearest_sphere(spark, monkeypatch):
     # geodesic kNN (metric="sphere"): distance is haversine METERS,
     # distance_crs the planar degree distance — the reference's
     # geographic-CRS split (geoops.py:3216-3224)
     import math
 
-    from geofileops_spark.functions.st import st_geomfromtext
-
-    def layer(rows):
-        df = spark.createDataFrame(rows, "fid long, wkt string")
-        return df.select(
-            "fid", st_geomfromtext(F.col("wkt")).alias("geom_wkb")
-        )
-
     pts1 = {1: (4.35, 50.85), 2: (2.35, 48.86)}  # Brussels, Paris
     pts2 = {10: (4.40, 51.22), 11: (5.57, 50.63), 12: (3.72, 51.05)}
-    l1 = layer([(f, f"POINT ({lo} {la})") for f, (lo, la) in pts1.items()])
-    l2 = layer([(f, f"POINT ({lo} {la})") for f, (lo, la) in pts2.items()])
+    l1 = wkt_layer(spark, [(f, f"POINT ({lo} {la})") for f, (lo, la) in pts1.items()])
+    l2 = wkt_layer(spark, [(f, f"POINT ({lo} {la})") for f, (lo, la) in pts2.items()])
 
     def hav(lon1, lat1, lon2, lat2):
         R = 6_371_008.8
@@ -297,9 +308,9 @@ def test_join_nearest_sphere(spark):
         )
         return 2 * R * math.asin(math.sqrt(min(h, 1.0)))
 
+    assert pairing.choose("knn", l2).path == "broadcast"
     out = J.join_nearest(
-        l1, l2, nb_nearest=2, distance=1000.0, expand=True,
-        broadcast=True, metric="sphere",
+        l1, l2, nb_nearest=2, distance=1000.0, expand=True, metric="sphere",
     ).collect()
     exp = {
         f1: sorted((hav(lo, la, *pts2[f2]), f2) for f2 in pts2)[:2]
@@ -323,43 +334,32 @@ def test_join_nearest_sphere(spark):
     # expand=False: `distance` caps in METERS (60 km keeps only
     # Brussels->Antwerp/Ghent; Paris is >200 km from every l2 point)
     out_cap = J.join_nearest(
-        l1, l2, nb_nearest=2, distance=60_000.0, expand=False,
-        broadcast=True, metric="sphere",
+        l1, l2, nb_nearest=2, distance=60_000.0, expand=False, metric="sphere",
     ).collect()
     assert {r["l1_fid"] for r in out_cap} == {1}
     assert all(r["distance"] <= 60_000.0 for r in out_cap)
 
     # the distributed ring path is planar-only: sphere must refuse
     with pytest.raises(ValueError, match="sphere"):
-        J.join_nearest(
-            l1, l2, nb_nearest=1, distance=10.0, broadcast=False,
-            metric="sphere",
-        )
+        on_budget(monkeypatch, 0, lambda: J.join_nearest(
+            l1, l2, nb_nearest=1, distance=10.0, metric="sphere",
+        ))
 
     # non-point geometries refuse loudly inside the kernel
-    poly = layer([(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")])
+    poly = wkt_layer(spark, [(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")])
     with pytest.raises(Exception, match="POINT"):
         J.join_nearest(
-            poly, l2, nb_nearest=1, distance=10.0, broadcast=True,
-            metric="sphere",
+            poly, l2, nb_nearest=1, distance=10.0, metric="sphere",
         ).collect()
 
 
 def test_export_by_distance_sphere(spark):
     # range semi-join in haversine METERS over lon/lat points
-    from geofileops_spark.functions.st import st_geomfromtext
-
-    def layer(rows):
-        df = spark.createDataFrame(rows, "fid long, wkt string")
-        return df.select(
-            "fid", st_geomfromtext(F.col("wkt")).alias("geom_wkb")
-        )
-
-    l1 = layer([
+    l1 = wkt_layer(spark, [
         (1, "POINT (4.35 50.85)"),   # Brussels: ~41 km to Antwerp
         (2, "POINT (2.35 48.86)"),   # Paris: >200 km to every l2 point
     ])
-    l2 = layer([(10, "POINT (4.40 51.22)"), (11, "POINT (5.57 50.63)")])
+    l2 = wkt_layer(spark, [(10, "POINT (4.40 51.22)"), (11, "POINT (5.57 50.63)")])
     out = J.export_by_distance(l1, l2, max_distance=60_000.0, metric="sphere")
     assert sorted(r["fid"] for r in out.collect()) == [1]
     # schema is layer 1 verbatim (semi-join contract)
@@ -426,10 +426,10 @@ def test_join_broadcast_pairs_row_cap_falls_back(layers, monkeypatch):
     assert spark_pairs(capped) == spark_pairs(fast)
 
 
-def test_join_broadcast_pairs_matches_distributed(layers):
+def test_join_broadcast_pairs_matches_distributed(layers, monkeypatch):
     """The zero-shuffle broadcast-grid pairs plan (auto for a small
     layer 2) must produce the exact row set of the distributed cell
-    join (broadcast_right=False pins the old plan) across simple,
+    join (no broadcast budget pins the old plan) across simple,
     negated, DE-9IM and left-join queries, and its physical plan must
     contain no shuffle before the attribute attach."""
     parcels, zones, _ = layers
@@ -441,17 +441,17 @@ def test_join_broadcast_pairs_matches_distributed(layers):
         "intersects is True or touches is True",
     ):
         fast = J.join_by_location(parcels, zones, query)
-        slow = J.join_by_location(parcels, zones, query, broadcast_right=False)
+        slow = on_budget(
+            monkeypatch, 0, lambda: J.join_by_location(parcels, zones, query))
         assert spark_pairs(fast) == spark_pairs(slow), query
         assert sorted(fast.columns) == sorted(slow.columns), query
     # left-join variant keeps unmatched l1 rows on both plans
     fast = J.join_by_location(
         parcels, zones, "within is True", discard_nonmatching=False
     )
-    slow = J.join_by_location(
+    slow = on_budget(monkeypatch, 0, lambda: J.join_by_location(
         parcels, zones, "within is True", discard_nonmatching=False,
-        broadcast_right=False,
-    )
+    ))
     assert spark_pairs(fast) == spark_pairs(slow)
     # plan shape: one mapInPandas + BroadcastHashJoin, no Exchange in
     # the matched branch (the left-anti union adds its own)
@@ -463,7 +463,7 @@ def test_join_broadcast_pairs_matches_distributed(layers):
     assert "Exchange hashpartitioning" not in p
 
 
-def test_join_broadcast_pairs_point_subjects(layers, spark):
+def test_join_broadcast_pairs_point_subjects(layers, spark, monkeypatch):
     """POINT subjects route through the vectorized per-blade PIP path
     inside the broadcast-pairs probe; results must equal the distributed
     cell join exactly — including points ON zone boundaries/corners,
@@ -493,11 +493,12 @@ def test_join_broadcast_pairs_point_subjects(layers, spark):
         "intersects is False",
     ):
         fast = J.join_by_location(pts, zones, query)
-        slow = J.join_by_location(pts, zones, query, broadcast_right=False)
+        slow = on_budget(
+            monkeypatch, 0, lambda: J.join_by_location(pts, zones, query))
         assert spark_pairs(fast) == spark_pairs(slow), query
 
 
-def test_join_mixed_subject_batch_plans_agree(layers, spark):
+def test_join_mixed_subject_batch_plans_agree(layers, spark, monkeypatch):
     """One Arrow batch of layer 1 mixing POINT, POLYGON and NULL rows:
     the broadcast probe and the cell join give the same pairs, point
     rows settled by the PIP step and polygon rows by the predicate."""
@@ -519,9 +520,8 @@ def test_join_mixed_subject_batch_plans_agree(layers, spark):
     assert mixed.count() < 2048  # the tests' maxRecordsPerBatch
     for query in ("intersects is True", "within is True", "touches is True"):
         fast = spark_pairs(J.join_by_location(mixed, zones, query))
-        slow = spark_pairs(
-            J.join_by_location(mixed, zones, query, broadcast_right=False)
-        )
+        slow = spark_pairs(on_budget(
+            monkeypatch, 0, lambda: J.join_by_location(mixed, zones, query)))
         assert fast == slow, query
         fids = {f for f, _ in fast}
         if query == "touches is True":
@@ -556,9 +556,9 @@ def test_every_join_plan_reaches_the_one_kernel(layers, monkeypatch):
         monkeypatch.setattr(J, name, factory_spy)
 
     J.join_by_location(parcels, zones)
-    J.join_by_location(parcels, zones, broadcast_right=False)
     J.export_by_location(parcels, zones)
     monkeypatch.setattr(pairing, "BROADCAST_BYTES", 0)
+    J.join_by_location(parcels, zones)
     J.export_by_location(parcels, zones)
     drivers = [f for f in probes if f.__qualname__ == "probe.<locals>._run"]
     by_name = dict(zip(("_join_broadcast_pairs", "_export_broadcast"), drivers))
