@@ -111,8 +111,9 @@ def choose(shape: str, build: DataFrame, stream: DataFrame | None = None) -> Dec
     - ``pairs``: layer 2 is grid-indexed and probed by layer 1 (the
       location joins, the overlay pairs). Broadcast when it scans within
       the budget.
-    - ``knn``: every task scans all of layer 2 (join_nearest), so it
-      gets an eighth of the budget.
+    - ``knn``: every task scans all of layer 2 (planar join_nearest),
+      so it gets an eighth of the budget. A sphere kNN has no other plan
+      and does not ask.
     - ``combine``: difference/clip. ``reverse`` broadcasts the subjects'
       bboxes when they scan at most a quarter of the blades and within
       the budget; ``forward`` broadcasts the blades when they fit a

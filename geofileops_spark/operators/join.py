@@ -1227,13 +1227,14 @@ def join_nearest(
     big l2 sides get a forced shuffle-hash join (never an implicit
     broadcast of a UDF-exploded plan, whose size Catalyst misestimates).
     No argument overrides the choice. ``metric="sphere"`` has only the
-    broadcast plan and raises ``ValueError`` on a bigger layer 2.
+    broadcast plan, so it skips the byte check and raises ``ValueError``
+    only when layer 2 has more than ``pairing.MAX_ROWS // 2`` rows.
     """
     if distance is None:
         raise ValueError("join_nearest requires a search `distance`")
     if metric not in ("planar", "sphere"):
         raise ValueError(f"metric must be 'planar' or 'sphere', got {metric!r}")
-    if pairing.choose("knn", df2).path == "broadcast":
+    if metric == "sphere" or pairing.choose("knn", df2).path == "broadcast":
         # dimension-sized l2: no join at all (see _broadcast_knn). The
         # ring machinery below is the big-x-big shape; for a small l2 its
         # per-round shuffles and ring explosion dominate runtime (the r2
@@ -1251,10 +1252,9 @@ def join_nearest(
         # nearest-city / geocoding shape — layer 2 is a dimension table —
         # so the broadcast path is the supported plan.
         raise ValueError(
-            "metric='sphere' requires a broadcast-small layer 2 (within "
-            "an eighth of GFO_BROADCAST_BYTES and pairing.MAX_ROWS // 2 "
-            "rows); the distributed ring path is planar-only — "
-            "pre-project to a planar CRS"
+            "metric='sphere' requires a broadcast-small layer 2 (at "
+            "most pairing.MAX_ROWS // 2 rows); the distributed ring path "
+            "is planar-only — pre-project to a planar CRS"
         )
     if res is None:
         # coarse bound: cell >= distance (1-ring covers the initial

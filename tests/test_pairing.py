@@ -145,8 +145,8 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch, caplog):
                 assert d.path == expected_path(shape, budget, sz), (
                     shape, budget, max_rows, d)
                 assert d.budget == budget and d.scan_bytes == sz
+                assert d.rows is None  # no count
                 seen.add((shape, d.path))
-            assert pairing.choose(shape, zones).rows is None  # no count
         for build, stream in ((zones, parcels), (parcels, zones)):
             d = pairing.choose("combine", build, stream)
             s2 = sz if build is zones else sp
@@ -213,21 +213,8 @@ def test_intersection_plan_runs_one_jvm_only_job(spark, layers):
     assert len(sc.statusTracker().getJobIdsForGroup("intersection-plan")) == 1
 
 
-def lonlat_points(spark, rows):
-    """A cached lon/lat POINT layer of ``(fid, lon, lat)`` rows: a
-    materialized cache gives the planner its real size, as a parquet
-    scan would (a frame built from a Python list is sized at
-    ``Long.MaxValue`` bytes)."""
-    from geofileops_spark.functions.st import st_point
-
-    df = spark.createDataFrame(rows, "fid long, lon double, lat double").select(
-        "fid", st_point(F.col("lon"), F.col("lat")).alias("geom_wkb")).cache()
-    df.count()
-    return df
-
-
-CITIES = [(1, 4.35, 50.85), (2, 2.35, 48.86)]  # Brussels, Paris
-TOWNS = [(10, 4.40, 51.22), (11, 5.57, 50.63), (12, 3.72, 51.05)]
+CITIES = [(1, "POINT (4.35 50.85)"), (2, "POINT (2.35 48.86)")]  # Brussels, Paris
+TOWNS = [(10, "POINT (4.40 51.22)"), (11, "POINT (5.57 50.63)"), (12, "POINT (3.72 51.05)")]
 
 KNN_CALLS = {
     "join_nearest": lambda L: J.join_nearest(
@@ -240,19 +227,23 @@ KNN_CALLS = {
 
 
 @pytest.fixture(scope="module")
-def knn_layers(spark, layers):
+def knn_layers(layers, wkt_layer):
+    """The planar kNN runs on the cached fixtures; the lon/lat sphere
+    layers stay unsized (no cache), as the sphere plan reads no byte
+    estimate."""
     _, zones, points = layers
-    cities, towns = lonlat_points(spark, CITIES), lonlat_points(spark, TOWNS)
-    yield dict(zones=zones, points=points, cities=cities, towns=towns)
-    for df in (cities, towns):
-        df.unpersist(blocking=True)
+    return dict(
+        zones=zones, points=points,
+        cities=wkt_layer(CITIES, cached=False), towns=wkt_layer(TOWNS, cached=False),
+    )
 
 
 @pytest.mark.parametrize("op", sorted(KNN_CALLS))
 def test_knn_plans_run_no_count(knn_layers, op):
     """Building a kNN plan counts no frame: ``choose("knn")`` decides on
-    bytes alone, and the broadcast probe's bounded collect enforces the
-    row cap (a count would scan layer 2 a second time)."""
+    bytes alone (a sphere call does not ask it), and the broadcast
+    probe's bounded collect enforces the row cap (a count would scan
+    layer 2 a second time)."""
     from unittest import mock
 
     counted = []
@@ -273,7 +264,9 @@ def test_knn_row_cap_is_the_collects(knn_layers, monkeypatch):
     """A layer 2 within the kNN byte share but over ``MAX_ROWS // 2``
     rows: ``_broadcast_knn``'s bounded collect answers None, planar
     ``join_nearest`` returns the ring path's rows and both sphere entry
-    points refuse. At the cap itself the probe still runs."""
+    points refuse. At the cap itself the sphere probe still runs, on a
+    layer 2 whose size Catalyst cannot estimate (``choose`` says cell):
+    the row cap alone gates the sphere plan."""
     zones, towns = knn_layers["zones"], knn_layers["towns"]
 
     def rows(df):
@@ -302,7 +295,7 @@ def test_knn_row_cap_is_the_collects(knn_layers, monkeypatch):
     assert rows(capped) == ring
 
     monkeypatch.setattr(pairing, "MAX_ROWS", 5)  # towns has 3 rows > 5 // 2
-    assert pairing.choose("knn", towns).path == "broadcast"
+    assert pairing.choose("knn", towns).path == "cell"  # unsized
     for op in ("join_nearest-sphere", "export_by_distance-sphere"):
         with pytest.raises(ValueError, match="sphere"):
             KNN_CALLS[op](knn_layers)

@@ -36,20 +36,6 @@ def spark_pairs(df, id1="l1_fid", id2="l2_fid"):
     return sorted((r[0], r[1]) for r in df.select(id1, id2).collect())
 
 
-def wkt_layer(spark, rows):
-    """A ``(fid, geom_wkb)`` layer of ``(fid, wkt)`` rows, cached and
-    materialized: the planner sees its real size, as it sees a parquet
-    scan's (a frame built from a Python list is sized at
-    ``Long.MaxValue`` bytes and never fits a broadcast budget)."""
-    from geofileops_spark.functions.st import st_geomfromtext
-
-    df = spark.createDataFrame(rows, "fid long, wkt string").select(
-        "fid", st_geomfromtext(F.col("wkt")).alias("geom_wkb")
-    ).cache()
-    df.count()
-    return df
-
-
 def on_budget(monkeypatch, budget, call):
     """``call()`` with ``pairing.BROADCAST_BYTES`` set to ``budget``
     (0: every pairing plan takes its distributed path)."""
@@ -208,13 +194,12 @@ def test_join_nearest_ring_path_matches_broadcast(layers, monkeypatch):
         assert out["broadcast"] == out["cell"], f"expand={expand}"
 
 
-def test_join_nearest_expand_past_initial_distance(spark, monkeypatch):
+def test_join_nearest_expand_past_initial_distance(wkt_layer, monkeypatch):
     # reference semantics (geoops.py:3190): `distance` is only the
     # INITIAL radius when expand=True — a far row still gets k results;
     # expand=False caps hard and the far row gets nothing
-    l1 = wkt_layer(spark, [(1, "POINT (0 0)"), (2, "POINT (100000 100000)")])
-    l2 = wkt_layer(
-        spark, [(10, "POINT (1 0)"), (11, "POINT (2 0)"), (12, "POINT (3 0)")])
+    l1 = wkt_layer([(1, "POINT (0 0)"), (2, "POINT (100000 100000)")])
+    l2 = wkt_layer([(10, "POINT (1 0)"), (11, "POINT (2 0)"), (12, "POINT (3 0)")])
     for budget, want in ((pairing.BROADCAST_BYTES, "broadcast"), (0, "cell")):
         monkeypatch.setattr(pairing, "BROADCAST_BYTES", budget)
         assert pairing.choose("knn", l2).path == want
@@ -287,7 +272,7 @@ def test_delete_duplicate_geometries(spark):
     assert got == [4, 5]  # fid 5 has prio 0 -> kept over 1..3
 
 
-def test_join_nearest_sphere(spark, monkeypatch):
+def test_join_nearest_sphere(wkt_layer, monkeypatch):
     # geodesic kNN (metric="sphere"): distance is haversine METERS,
     # distance_crs the planar degree distance — the reference's
     # geographic-CRS split (geoops.py:3216-3224)
@@ -295,8 +280,11 @@ def test_join_nearest_sphere(spark, monkeypatch):
 
     pts1 = {1: (4.35, 50.85), 2: (2.35, 48.86)}  # Brussels, Paris
     pts2 = {10: (4.40, 51.22), 11: (5.57, 50.63), 12: (3.72, 51.05)}
-    l1 = wkt_layer(spark, [(f, f"POINT ({lo} {la})") for f, (lo, la) in pts1.items()])
-    l2 = wkt_layer(spark, [(f, f"POINT ({lo} {la})") for f, (lo, la) in pts2.items()])
+    # unsized layers (no cache): the sphere plan reads no byte estimate
+    l1 = wkt_layer(
+        [(f, f"POINT ({lo} {la})") for f, (lo, la) in pts1.items()], cached=False)
+    l2 = wkt_layer(
+        [(f, f"POINT ({lo} {la})") for f, (lo, la) in pts2.items()], cached=False)
 
     def hav(lon1, lat1, lon2, lat2):
         R = 6_371_008.8
@@ -308,7 +296,7 @@ def test_join_nearest_sphere(spark, monkeypatch):
         )
         return 2 * R * math.asin(math.sqrt(min(h, 1.0)))
 
-    assert pairing.choose("knn", l2).path == "broadcast"
+    assert pairing.choose("knn", l2).path == "cell"
     out = J.join_nearest(
         l1, l2, nb_nearest=2, distance=1000.0, expand=True, metric="sphere",
     ).collect()
@@ -339,27 +327,29 @@ def test_join_nearest_sphere(spark, monkeypatch):
     assert {r["l1_fid"] for r in out_cap} == {1}
     assert all(r["distance"] <= 60_000.0 for r in out_cap)
 
-    # the distributed ring path is planar-only: sphere must refuse
-    with pytest.raises(ValueError, match="sphere"):
-        on_budget(monkeypatch, 0, lambda: J.join_nearest(
-            l1, l2, nb_nearest=1, distance=10.0, metric="sphere",
-        ))
+    # the distributed ring path is planar-only: past the broadcast
+    # probe's row cap sphere must refuse
+    with monkeypatch.context() as m:
+        m.setattr(pairing, "MAX_ROWS", 5)  # 3 rows > 5 // 2
+        with pytest.raises(ValueError, match="sphere"):
+            J.join_nearest(l1, l2, nb_nearest=1, distance=10.0, metric="sphere")
 
     # non-point geometries refuse loudly inside the kernel
-    poly = wkt_layer(spark, [(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")])
+    poly = wkt_layer([(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")], cached=False)
     with pytest.raises(Exception, match="POINT"):
         J.join_nearest(
             poly, l2, nb_nearest=1, distance=10.0, metric="sphere",
         ).collect()
 
 
-def test_export_by_distance_sphere(spark):
+def test_export_by_distance_sphere(wkt_layer):
     # range semi-join in haversine METERS over lon/lat points
-    l1 = wkt_layer(spark, [
+    l1 = wkt_layer([
         (1, "POINT (4.35 50.85)"),   # Brussels: ~41 km to Antwerp
         (2, "POINT (2.35 48.86)"),   # Paris: >200 km to every l2 point
-    ])
-    l2 = wkt_layer(spark, [(10, "POINT (4.40 51.22)"), (11, "POINT (5.57 50.63)")])
+    ], cached=False)
+    l2 = wkt_layer(
+        [(10, "POINT (4.40 51.22)"), (11, "POINT (5.57 50.63)")], cached=False)
     out = J.export_by_distance(l1, l2, max_distance=60_000.0, metric="sphere")
     assert sorted(r["fid"] for r in out.collect()) == [1]
     # schema is layer 1 verbatim (semi-join contract)
