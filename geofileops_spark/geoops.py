@@ -184,12 +184,24 @@ def remove_slivers(df: DataFrame, tolerance: float, geom_col: str = GEOM) -> Dat
     return df.where(~F.coalesce(st.st_issliver(F.col(geom_col), tolerance), F.lit(False)))
 
 
+def _literal_layer(spark, wkt: str, geom_col: str) -> DataFrame:
+    """One-row ``(fid, geom_col)`` layer of a literal WKT, parsed on the
+    driver into a LocalRelation: Catalyst sizes it, so ``pairing.choose``
+    can broadcast it."""
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    from .geometry import wkb as W
+    from .session import local_frame
+
+    schema = StructType(
+        [StructField("fid", LongType()), StructField(geom_col, BinaryType())]
+    )
+    return local_frame(spark, [(1, W.dumps(W.from_wkt(wkt)))], schema)
+
+
 def clip_by_geometry(df: DataFrame, clip_wkt: str, geom_col: str = GEOM, **kw) -> DataFrame:
     """Clip against one literal WKT geometry (geofileops ``geoops.py:857``)."""
-    spark = df.sparkSession
-    blade = spark.createDataFrame([(1, clip_wkt)], "fid long, wkt string").withColumn(
-        geom_col, st.st_geomfromtext(F.col("wkt"))
-    ).drop("wkt")
+    blade = _literal_layer(df.sparkSession, clip_wkt, geom_col)
     return clip(df, blade, geom_col=geom_col, **kw)
 
 
@@ -200,10 +212,7 @@ def export_by_bounds(df: DataFrame, bounds, geom_col: str = GEOM) -> DataFrame:
         f"POLYGON (({minx} {miny}, {maxx} {miny}, {maxx} {maxy}, "
         f"{minx} {maxy}, {minx} {miny}))"
     )
-    spark = df.sparkSession
-    blade = spark.createDataFrame([(1, wkt)], "fid long, wkt string").withColumn(
-        geom_col, st.st_geomfromtext(F.col("wkt"))
-    ).drop("wkt")
+    blade = _literal_layer(df.sparkSession, wkt, geom_col)
     return export_by_location(df, blade, "intersects is True", geom_col=geom_col)
 
 

@@ -124,7 +124,13 @@ def choose(shape: str, build: DataFrame, stream: DataFrame | None = None) -> Dec
     (``pairs``, ``forward``) answers :data:`OVER_CAP` past ``MAX_ROWS``
     rows and the kNN probe returns None past ``MAX_ROWS // 2``, so a
     byte misestimate (Catalyst sizes UDF-built binary columns at ~100
-    B/row) never collects a huge layer."""
+    B/row) never collects a huge layer.
+
+    A frame built by ``createDataFrame`` from a Python list is an RDD
+    scan with no size estimate (``Long.MaxValue`` bytes): as ``build``
+    it always takes the cell plan, until it is cached and materialized.
+    A frame built from a pandas frame (``session.local_frame``) is a
+    LocalRelation, sized from its real bytes."""
     budget = BROADCAST_BYTES
     s2 = scan_size_bytes(build)
     if shape == "combine":

@@ -337,35 +337,19 @@ def estimate_res(
     typical geometry spans ~2 cells/axis (planning step, like the
     reference's featurecount probe, ``_geoops_sql.py:4376-4515``)."""
     rows = sample_rows_spread(df, geom_col, sample)
-    extents = []
-    xs: list[float] = []
-    ys: list[float] = []
-    for r in rows:
-        b = r[0]
-        if b is None:
-            continue
-        try:
-            g = W.loads(bytes(b))
-        except ValueError:
-            continue  # corrupt/unsupported blob: planning just skips it
-        from ..geometry.kernels import bounds as g_bounds
-
-        b0, b1, b2, b3 = g_bounds(g)
-        if np.isfinite(b0):
-            extents.append(max(b2 - b0, b3 - b1))
-            xs += [b0, b2]
-            ys += [b1, b3]
-    if not extents:
+    bb = W.bounds_from_wkb_batch([r[0] for r in rows])
+    bb = bb[np.isfinite(bb[:, 0])]  # NULL, EMPTY or corrupt: skipped
+    if not len(bb):
         return 20
-    med = float(np.median(extents))
+    med = float(np.median(np.maximum(bb[:, 2] - bb[:, 0], bb[:, 3] - bb[:, 1])))
     if med <= 0:
         # point layer: pick a density-derived resolution — roughly one
         # sampled point per cell over the sampled bbox (a fixed fallback
         # would put unit-scale planes into one giant cell: skew disaster)
-        ext = max(max(xs) - min(xs), max(ys) - min(ys))
+        ext = max(bb[:, 2].max() - bb[:, 0].min(), bb[:, 3].max() - bb[:, 1].min())
         if ext <= 0:
             return 20
-        cells_axis = max(4.0, float(np.sqrt(len(extents))))
+        cells_axis = max(4.0, float(np.sqrt(len(bb))))
         size = ext / cells_axis
         return int(np.clip(np.floor(np.log2(2.0 * X.WORLD / size)), 0, X.MAX_RES))
     return X.res_for_extent(med, target_cells_per_geom)

@@ -98,23 +98,11 @@ def _pick_res(df: DataFrame, geom_col: str, sample: int = 2000) -> int:
     from .celljoin import sample_rows_spread
 
     rows = sample_rows_spread(df, geom_col, sample)
-    xs, ys = [], []
-    from ..geometry.kernels import bounds as g_bounds
-
-    for r in rows:
-        if r[0] is None:
-            continue
-        try:
-            g = W.loads(bytes(r[0]))
-        except ValueError:
-            continue
-        b0, b1, b2, b3 = g_bounds(g)
-        if np.isfinite(b0):
-            xs += [b0, b2]
-            ys += [b1, b3]
-    if not xs:
+    bb = W.bounds_from_wkb_batch([r[0] for r in rows])
+    bb = bb[np.isfinite(bb[:, 0])]  # NULL, EMPTY or corrupt: skipped
+    if not len(bb):
         return 8
-    extent = max(max(xs) - min(xs), max(ys) - min(ys))
+    extent = max(bb[:, 2].max() - bb[:, 0].min(), bb[:, 3].max() - bb[:, 1].min())
     if extent <= 0:
         return 8
     # ~16x16 cells over the data extent as the starting grid
@@ -329,6 +317,23 @@ def _squarish_grid(
     ]
 
 
+def _tile_table(spark, tiles) -> DataFrame:
+    """``(tile_id, _tx0, _ty0, _tx1, _ty1, _tile_geom)``: one row per
+    tile, its rectangle's WKB written on the driver, as a LocalRelation
+    (no job to broadcast it)."""
+    from ..session import local_frame
+
+    rows = []
+    for i, t in enumerate(tiles):
+        x0, y0, x1, y1 = map(float, t)
+        rows.append((i, x0, y0, x1, y1, W.dumps(G.Geometry.box(x0, y0, x1, y1))))
+    return local_frame(
+        spark, rows,
+        "tile_id long, _tx0 double, _ty0 double, _tx1 double, _ty1 double,"
+        " _tile_geom binary",
+    )
+
+
 def _clip_to_tiles(
     final: DataFrame,
     tiles: list[tuple[float, float, float, float]] | None,
@@ -337,7 +342,7 @@ def _clip_to_tiles(
 ) -> DataFrame:
     """Clip the dissolved result to the tile grid (broadcast: the grid is
     driver-sized by construction), adding ``tile_id``."""
-    from ..functions.st import st_bbox, st_geomfromtext
+    from ..functions.st import st_bbox
     from .overlay import _pair_intersection_udf
 
     spark = final.sparkSession
@@ -353,27 +358,7 @@ def _clip_to_tiles(
             F.max("_bb.maxy").alias("y1"),
         ).collect()[0]
         tiles = _squarish_grid((b["x0"], b["y0"], b["x1"], b["y1"]), nb_squarish_tiles)
-    rows = [
-        (i, float(t[0]), float(t[1]), float(t[2]), float(t[3]))
-        for i, t in enumerate(tiles)
-    ]
-    tdf = spark.createDataFrame(
-        rows, "tile_id long, _tx0 double, _ty0 double, _tx1 double, _ty1 double"
-    )
-    s = lambda c: F.col(c).cast("string")
-    tdf = tdf.withColumn(
-        "_tile_geom",
-        st_geomfromtext(
-            F.concat(
-                F.lit("POLYGON (("),
-                s("_tx0"), F.lit(" "), s("_ty0"), F.lit(", "),
-                s("_tx1"), F.lit(" "), s("_ty0"), F.lit(", "),
-                s("_tx1"), F.lit(" "), s("_ty1"), F.lit(", "),
-                s("_tx0"), F.lit(" "), s("_ty1"), F.lit(", "),
-                s("_tx0"), F.lit(" "), s("_ty0"), F.lit("))"),
-            )
-        ),
-    )
+    tdf = _tile_table(spark, tiles)
     tagged = (
         final.withColumn("_gx0", F.col("_bb.minx"))
         .withColumn("_gy0", F.col("_bb.miny"))

@@ -45,6 +45,7 @@ from .celljoin import (
 )
 from .relation import SpatialQuery
 from .. import cache
+from ..session import local_frame
 
 
 # ------------------------------------------------------------ refine UDFs
@@ -480,24 +481,6 @@ def join_by_location(
 
 
 # -------------------------------------------------- broadcast PIP join
-def _sql_id_literal(v) -> str | None:
-    """SQL literal for a polygon id in the inline-VALUES rect table —
-    typed to match what createDataFrame's inference would produce
-    (int -> BIGINT, float -> DOUBLE, str quoted; Spark's parser treats a
-    backslash as an escape, so it is escaped too). None = not
-    expressible (bool, ints outside int64, other types); the caller
-    falls back to the Row-list path."""
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, int):
-        return f"CAST({v} AS BIGINT)" if -(2**63) <= v < 2**63 else None
-    if isinstance(v, float):
-        return f"CAST('{v!r}' AS DOUBLE)"
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-    return None
-
-
 def join_points_in_polygons(
     points: DataFrame,
     polys: DataFrame,
@@ -560,45 +543,18 @@ def join_points_in_polygons(
             rects = None
             break
         rects.append((pid, r4))
+    id_type = polys.schema[poly_id_col].dataType
     if rects is not None and 0 < len(rects) <= 10_000:
-        spark = points.sparkSession
-        # inline VALUES table (LocalRelation), not createDataFrame: the
-        # latter materializes through applySchemaToPythonRDD — a
-        # Python-RDD job inside every broadcast build, ~0.3 s of
-        # width-independent fixed cost per call. A literal-only inline
-        # table folds to a LocalRelation, so the broadcast builds from
-        # driver-resident rows with no job at all. repr(float) is the
-        # shortest round-trip decimal, and Spark's DOUBLE cast parses it
-        # back to the identical IEEE-754 value.
-        id_lits = [_sql_id_literal(pid) for pid, _ in rects]
-        if all(lit is not None for lit in id_lits):
-            vals = ", ".join(
-                f"({lit}, CAST('{float(x0)!r}' AS DOUBLE),"
-                f" CAST('{float(y0)!r}' AS DOUBLE),"
-                f" CAST('{float(x1)!r}' AS DOUBLE),"
-                f" CAST('{float(y1)!r}' AS DOUBLE))"
-                for lit, (_pid, (x0, y0, x1, y1)) in zip(id_lits, rects)
-            )
-            rdf = spark.sql(
-                f"SELECT * FROM VALUES {vals} AS rects"
-                f"(`{poly_id_col}`, _rx0, _ry0, _rx1, _ry1)"
-            )
-        else:
-            # exotic id types: the original Row-list path
-            from pyspark.sql import Row
-
-            rdf = spark.createDataFrame(
-                [
-                    Row(
-                        **{
-                            poly_id_col: pid,
-                            "_rx0": float(x0), "_ry0": float(y0),
-                            "_rx1": float(x1), "_ry1": float(y1),
-                        }
-                    )
-                    for pid, (x0, y0, x1, y1) in rects
-                ]
-            )
+        # a driver-built LocalRelation: the broadcast builds from
+        # driver-resident rows with no job, and the ids keep their type
+        rdf = local_frame(
+            points.sparkSession,
+            [(pid, *map(float, r4)) for pid, r4 in rects],
+            StructType(
+                [StructField(poly_id_col, id_type)]
+                + [StructField(c, DoubleType()) for c in ("_rx0", "_ry0", "_rx1", "_ry1")]
+            ),
+        )
         x, y = F.col(x_col), F.col(y_col)
         out = points.join(
             F.broadcast(rdf),
@@ -609,7 +565,6 @@ def join_points_in_polygons(
 
     # any other polygon side: the bbox grid of the pairing module, and
     # per batch one vectorized probe and one refine of its candidates
-    id_type = polys.schema[poly_id_col].dataType
     bbs = np.asarray([K.bounds(g) for g in geoms], dtype=np.float64).reshape(-1, 4)
     valid = np.isfinite(bbs[:, 0])
     if not valid.any():  # no polygon or only EMPTY ones: nothing matches

@@ -202,7 +202,6 @@ def _attach_hits_fast(
     geom_col: str,
     id_col: str,
     attr_cols: list,
-    max_points: int = 4_000_000,
 ) -> DataFrame | None:
     """(face, contributor) pairs with the broadcast orientation INVERTED:
     a grid over the interior POINTS (about 70 bytes each with bbox, id
@@ -222,14 +221,16 @@ def _attach_hits_fast(
     ``join.refine_pairs`` with the points as subjects, the kernel the
     cell join's refine runs, so both plans give the same contributors
     (``intersects``: a point on a parcel boundary counts). Returns None
-    (caller falls back to the cell join) when the point side exceeds
-    ``max_points`` or a point blob is not a plain little-endian POINT."""
+    (caller falls back to the cell join) when the point side has more
+    than ``pairing.MAX_ROWS`` rows (its collect is bounded at one row
+    more) or a point blob is not a plain little-endian POINT."""
     pdf = (
         faces.select("_face_id", "_ip")
         .where(F.col("_ip").isNotNull())
+        .limit(pairing.MAX_ROWS + 1)
         .toPandas()
     )
-    if not (0 < len(pdf) <= max_points):
+    if not (0 < len(pdf) <= pairing.MAX_ROWS):
         return None
     pts = W.points_from_wkb_list([bytes(b) for b in pdf["_ip"]])
     if pts is None or not np.isfinite(pts).all():

@@ -13,7 +13,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -66,3 +67,22 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """A small driver-built table: ``rows`` typed by ``schema`` (a
+    StructType or DDL string, matched by position), through the Arrow
+    ``createDataFrame`` of a pandas frame that :func:`get_spark` enables.
+
+    The result is a LocalRelation, whose rows stay on the driver:
+    collecting or broadcasting it runs no Spark job, and Catalyst sizes
+    it from its real bytes, so ``pairing.choose`` can broadcast it. A
+    frame built from a Python list is an RDD scan instead, which runs a
+    job on every collect and has no size estimate. The values are never
+    rendered into SQL text, so no id, name or WKB can change the plan.
+    The columns are object-typed, so ints past 2**53, Decimals and
+    NULLs reach Arrow as they are. An empty ``rows`` gives an empty
+    RDD-backed frame."""
+    if not rows:
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)

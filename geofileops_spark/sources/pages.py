@@ -211,28 +211,20 @@ def zones_wkt() -> list[tuple[int, str, str]]:
 
 
 def synth_zones(spark: SparkSession) -> DataFrame:
-    """5-row zone dim table as an inline ``VALUES`` table, WKB built
-    driver-side.
+    """5-row zone dim table, WKB built driver-side.
 
-    Deliberately NOT a pandas-UDF parse of the WKT, and NOT a
-    ``createDataFrame(rows)`` either: the former paid a Python-worker
-    Spark job on every ``collect()`` of the zone geometries
-    (join_points_in_polygons collects them to build its broadcast
-    payload), and the latter still materializes through
-    ``applySchemaToPythonRDD`` — a Python-RDD job (~0.28 s measured at
-    width 8) on every collect. A literal-only inline table folds to a
-    LocalRelation at analysis time, so collecting it is a pure
-    driver-side read: no job, no task, no Python worker."""
+    A driver-built LocalRelation (``session.local_frame``), not a
+    pandas-UDF parse of the WKT: join_points_in_polygons collects the
+    zone geometries to build its broadcast payload, and a UDF stage
+    would run a Python-worker Spark job on every such collect. Here the
+    collect is a driver-side read: no job, no task, no Python worker."""
     from ..geometry import wkb as _wkb
     from ..geometry.geom import Geometry
+    from ..session import local_frame
 
-    vals = []
+    rows = []
     for i, (clon, clat, spread, _w) in enumerate(CLUSTERS, start=1):
         s = spread * 1.2
         blob = _wkb.dumps(Geometry.box(clon - s, clat - s, clon + s, clat + s))
-        vals.append(f"(CAST({i} AS BIGINT), 'zone_{i}', X'{blob.hex()}')")
-    return spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(vals)
-        + " AS zones(fid, naam, geom_wkb)"
-    )
+        rows.append((i, f"zone_{i}", blob))
+    return local_frame(spark, rows, "fid long, naam string, geom_wkb binary")

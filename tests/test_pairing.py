@@ -1,6 +1,7 @@
 """The broadcast-grid pairing module (index/pairing.py): the plan
 decision, path equivalence of every pairwise operator, broadcast release
-in a long session, and the id-literal / argument guards of the probes.
+in a long session, the id and argument guards of the probes, and the
+small tables the library builds on the driver.
 
 Paths are forced the way an operator call would see them: by
 monkeypatching the one budget (``pairing.BROADCAST_BYTES``) or the row
@@ -11,6 +12,7 @@ from __future__ import annotations
 import logging
 import re
 import struct
+from decimal import Decimal
 
 import numpy as np
 import pandas as pd
@@ -18,12 +20,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from geofileops_spark import cache
+from geofileops_spark import geoops as G
 from geofileops_spark.geometry import kernels as K
 from geofileops_spark.geometry import wkb as W
 from geofileops_spark.index import pairing
+from geofileops_spark.operators import dissolve as D
 from geofileops_spark.operators import join as J
 from geofileops_spark.operators import overlay as O
 from geofileops_spark.operators import union_full as UF
+from geofileops_spark.sources.pages import synth_zones
 from tests import fixtures as FX
 
 MB = 1024 * 1024
@@ -184,7 +189,7 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch, caplog):
         pairing.choose("sphere", zones)
 
 
-def test_intersection_plan_runs_one_jvm_only_job(spark, layers):
+def test_intersection_plan_runs_one_jvm_only_job(layers, count_jobs):
     """Building (not running) intersection runs exactly one Spark job,
     ``build``'s bounded collect of layer 2: no ``count()`` of any frame
     and no ``_bounds_udf`` Python stage."""
@@ -192,7 +197,6 @@ def test_intersection_plan_runs_one_jvm_only_job(spark, layers):
 
     parcels, zones, _ = layers
     cache.release_caches()  # no grid of zones left from earlier calls
-    sc = spark.sparkContext
     counted = []
     orig = type(zones).count
 
@@ -200,17 +204,13 @@ def test_intersection_plan_runs_one_jvm_only_job(spark, layers):
         counted.append(self)
         return orig(self)
 
-    sc.setJobGroup("intersection-plan", "building intersection")
-    try:
-        with mock.patch.object(type(zones), "count", spy), mock.patch.object(
-            pairing, "_bounds_udf", wraps=pairing._bounds_udf
-        ) as bounds_udf:
-            O.intersection(parcels, zones)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    with mock.patch.object(type(zones), "count", spy), mock.patch.object(
+        pairing, "_bounds_udf", wraps=pairing._bounds_udf
+    ) as bounds_udf:
+        n_jobs = count_jobs(lambda: O.intersection(parcels, zones))
     assert counted == []
     bounds_udf.assert_not_called()
-    assert len(sc.statusTracker().getJobIdsForGroup("intersection-plan")) == 1
+    assert n_jobs == 1
 
 
 CITIES = [(1, "POINT (4.35 50.85)"), (2, "POINT (2.35 48.86)")]  # Brussels, Paris
@@ -379,6 +379,80 @@ def test_decode_raises_on_corrupt_wkb_like_the_cell_plan(spark):
     pairs = spark.createDataFrame([(corrupt, good)], "g1 binary, g2 binary")
     with pytest.raises(Exception, match=re.escape(str(err.value))):
         pairs.select(O._pair_intersection_udf(F.col("g1"), F.col("g2"))).collect()
+
+
+def loop_bounds(blobs):
+    """The per-row loop ``estimate_res`` and ``_pick_res`` each ran
+    before one ``bounds_from_wkb_batch`` call replaced it."""
+    out = []
+    for b in blobs:
+        if b is None:
+            continue
+        try:
+            g = W.loads(bytes(b))
+        except ValueError:
+            continue
+        b0, b1, b2, b3 = K.bounds(g)
+        if np.isfinite(b0):
+            out.append((b0, b1, b2, b3))
+    return out
+
+
+def loop_estimate_res(blobs):
+    from geofileops_spark.index import cells as X
+
+    bbs = loop_bounds(blobs)
+    if not bbs:
+        return 20
+    med = float(np.median([max(b2 - b0, b3 - b1) for b0, b1, b2, b3 in bbs]))
+    if med <= 0:
+        xs = [v for b in bbs for v in (b[0], b[2])]
+        ys = [v for b in bbs for v in (b[1], b[3])]
+        ext = max(max(xs) - min(xs), max(ys) - min(ys))
+        if ext <= 0:
+            return 20
+        size = ext / max(4.0, float(np.sqrt(len(bbs))))
+        return int(np.clip(np.floor(np.log2(2.0 * X.WORLD / size)), 0, X.MAX_RES))
+    return X.res_for_extent(med, 2.0)
+
+
+def loop_pick_res(blobs):
+    from geofileops_spark.index import cells as X
+
+    bbs = loop_bounds(blobs)
+    if not bbs:
+        return 8
+    xs = [v for b in bbs for v in (b[0], b[2])]
+    ys = [v for b in bbs for v in (b[1], b[3])]
+    extent = max(max(xs) - min(xs), max(ys) - min(ys))
+    if extent <= 0:
+        return 8
+    return int(np.clip(np.ceil(np.log2(2.0 * X.WORLD / (extent / 16.0))), 2, X.MAX_RES))
+
+
+SAMPLES = {
+    "mixed": MIXED_WKBS + [MIXED_WKBS[3][:-5]],
+    "points": [
+        W.dumps(W.from_wkt("POINT (1.5 -2.5)")), None,
+        W.dumps(W.from_wkt("POINT (100 40)")),
+        MIXED_WKBS[3][:-5], W.dumps(W.from_wkt("POINT EMPTY")),
+    ],
+    "none-valid": [None, MIXED_WKBS[3][:-5]],
+}
+
+
+@pytest.mark.parametrize("sample", sorted(SAMPLES))
+def test_planning_resolutions_match_the_row_loop(spark, sample):
+    """``celljoin.estimate_res`` and ``dissolve._pick_res`` take their
+    sample's bboxes in one vectorized pass and skip its NaN rows (NULL,
+    EMPTY, truncated): the same resolutions as the per-row loop."""
+    from geofileops_spark.operators.celljoin import estimate_res
+    from geofileops_spark.operators.dissolve import _pick_res
+
+    blobs = SAMPLES[sample]
+    df = spark.createDataFrame(list(enumerate(blobs)), "fid long, geom_wkb binary")
+    assert estimate_res(df) == loop_estimate_res(blobs)
+    assert _pick_res(df, "geom_wkb") == loop_pick_res(blobs)
 
 
 # ------------------------------------------------------ path equivalence
@@ -724,8 +798,9 @@ def test_long_session_releases_every_broadcast(spark, layers, blobs, monkeypatch
 # --------------------------------------------- data and argument guards
 @pytest.mark.parametrize("pid", ["a\\nb", "x\\"])
 def test_rect_path_keeps_backslash_ids(spark, pid):
-    """String ids with backslashes survive the inline-VALUES rect table
-    verbatim: Spark's parser reads a backslash as an escape."""
+    """String ids with backslashes survive the rect table verbatim (they
+    once went through SQL text, whose parser reads a backslash as an
+    escape)."""
     from geofileops_spark.functions.st import st_geomfromtext
 
     polys = spark.createDataFrame(
@@ -741,11 +816,40 @@ def test_rect_path_keeps_backslash_ids(spark, pid):
         (1, pid), (2, "it's")]
 
 
-def test_sql_id_literal_out_of_int64_takes_row_fallback():
-    assert J._sql_id_literal(7) == "CAST(7 AS BIGINT)"
-    assert J._sql_id_literal(-(2**63)) == f"CAST({-(2**63)} AS BIGINT)"
-    assert J._sql_id_literal(2**63) is None
-    assert J._sql_id_literal(-(2**63) - 1) is None
+PIP_IDS = {
+    "int": [7, -3, None],
+    "decimal(38,0)": [Decimal(2**70), Decimal(-(2**63) - 1), None],
+    "string": ["a\\nb", "it's", None],
+}
+
+
+@pytest.mark.parametrize("id_type", sorted(PIP_IDS))
+def test_pip_ids_keep_their_type_on_both_branches(spark, id_type):
+    """Rect side (BNLJ) and triangle side (grid probe) return the polygon
+    id column's own type and values: ints past int64, quotes,
+    backslashes and a NULL id included."""
+    from geofileops_spark.functions.st import st_geomfromtext
+
+    ids = PIP_IDS[id_type]
+    points = spark.createDataFrame(
+        [(i, 20.0 * i + 3, 3.0) for i in range(len(ids))],
+        "pt long, lon double, lat double",
+    )
+    shapes = {
+        "rect": "POLYGON (({0} 0, {1} 0, {1} 10, {0} 10, {0} 0))",
+        "triangle": "POLYGON (({0} 0, {1} 0, {0} 10, {0} 0))",
+    }
+    for side, shape in shapes.items():
+        polys = spark.createDataFrame(
+            [(pid, shape.format(20 * i, 20 * i + 10)) for i, pid in enumerate(ids)],
+            f"zid {id_type}, wkt string",
+        ).withColumn("geom_wkb", st_geomfromtext(F.col("wkt"))).drop("wkt")
+        out = J.join_points_in_polygons(points, polys, "lon", "lat", "zid")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastNestedLoopJoin" in plan) == (side == "rect"), side
+        assert out.schema["zid"].dataType == polys.schema["zid"].dataType, side
+        got = sorted(((r["pt"], r["zid"]) for r in out.collect()), key=repr)
+        assert got == sorted(enumerate(ids), key=repr), side
 
 
 def test_self_half_uid_needs_layer2_ids(layers):
@@ -755,3 +859,126 @@ def test_self_half_uid_needs_layer2_ids(layers):
             parcels, parcels, "geom_wkb", "fid", with_l2=False,
             self_half_uid="fid",
         )
+
+
+# ------------------------------------------------- driver-built tables
+def tile_grid():
+    from geofileops_spark.operators.dissolve import _squarish_grid
+
+    return _squarish_grid((0.1, 0.2, 1234.5678, 98.7654321), 7) + [
+        (1e-7, -1e22, 3.3e21, 5e-324)]
+
+
+DRIVER_TABLES = {
+    # each builds (and, but for the PIP join, collects) a table the
+    # library writes on the driver
+    "join_points_in_polygons-rect": lambda spark: J.join_points_in_polygons(
+        spark.range(10).select(F.col("id").cast("double").alias("lon"),
+                               F.col("id").cast("double").alias("lat")),
+        synth_zones(spark), "lon", "lat", "fid"),
+    "synth_zones": lambda spark: synth_zones(spark).collect(),
+    "clip_by_geometry-blade": lambda spark: G._literal_layer(
+        spark, "POLYGON ((0 0, 1 0, 0 1, 0 0))", "geom_wkb").collect(),
+    "dissolve-tiles": lambda spark: D._tile_table(spark, tile_grid()).collect(),
+}
+
+
+@pytest.mark.parametrize("table", sorted(DRIVER_TABLES))
+def test_driver_built_tables_run_no_job(spark, count_jobs, table):
+    """Driver-built tables are LocalRelations: building them, and
+    collecting them, launches no Spark job."""
+    DRIVER_TABLES[table](spark)  # the first pandas build of a fresh JVM
+    assert count_jobs(lambda: DRIVER_TABLES[table](spark)) == 0
+
+
+def test_tile_wkb_is_the_wkt_parse_it_replaced(spark):
+    """The tile rectangles written on the driver are byte-identical to
+    the Spark-side parse of the tiles' WKT (doubles cast to text and
+    read by ``st_geomfromtext``) that built them before."""
+    from geofileops_spark.functions.st import st_geomfromtext
+
+    tiles = tile_grid()
+    tdf = spark.createDataFrame(
+        [(i, *map(float, t)) for i, t in enumerate(tiles)],
+        "tile_id long, _tx0 double, _ty0 double, _tx1 double, _ty1 double",
+    )
+    s = lambda c: F.col(c).cast("string")  # noqa: E731
+    wkt = F.concat(
+        F.lit("POLYGON (("),
+        s("_tx0"), F.lit(" "), s("_ty0"), F.lit(", "),
+        s("_tx1"), F.lit(" "), s("_ty0"), F.lit(", "),
+        s("_tx1"), F.lit(" "), s("_ty1"), F.lit(", "),
+        s("_tx0"), F.lit(" "), s("_ty1"), F.lit(", "),
+        s("_tx0"), F.lit(" "), s("_ty0"), F.lit("))"),
+    )
+    parsed = {r[0]: bytes(r[1]) for r in tdf.select(
+        "tile_id", st_geomfromtext(wkt)).collect()}
+    written = {r["tile_id"]: bytes(r["_tile_geom"])
+               for r in D._tile_table(spark, tiles).collect()}
+    assert len(written) == len(tiles) and written == parsed
+    assert D._tile_table(spark, []).collect() == []  # dissolve(tiles=[])
+
+
+def test_literal_blades_are_sized_and_every_plan_agrees(wkt_layer, monkeypatch):
+    """A one-geometry blade is a sized LocalRelation: ``choose`` picks
+    ``forward`` for the clip_by_geometry blade and ``broadcast`` for the
+    export_by_bounds one, and both give the rows of the cell plan."""
+    boxes = wkt_layer([
+        (i, f"POLYGON (({x} 0, {x + 120} 0, {x + 120} 150, {x} 150, {x} 0))")
+        for i, x in enumerate(range(0, 1200, 200))])
+    calls = {
+        "clip_by_geometry": (lambda: G.clip_by_geometry(
+            boxes, "POLYGON ((100 0, 500 0, 500 150, 100 150, 100 0))"), "forward"),
+        "export_by_bounds": (lambda: G.export_by_bounds(
+            boxes, (100, 0, 500, 150)), "broadcast"),
+    }
+    paths = []
+    orig = pairing.choose
+
+    def spy(*a, **k):
+        d = orig(*a, **k)
+        paths.append(d.path)
+        return d
+
+    monkeypatch.setattr(pairing, "choose", spy)
+    for name, (call, want) in calls.items():
+        results = {}
+        for budget, path in ((DEFAULT_BUDGET, want), (0, "cell")):
+            monkeypatch.setattr(pairing, "BROADCAST_BYTES", budget)
+            paths.clear()
+            results[path] = norm(call())
+            assert set(paths) == {path}, (name, paths)
+        assert results[want] == results["cell"] and results["cell"], name
+
+
+def test_union_full_attach_collect_is_bounded(layers, monkeypatch):
+    """Past ``MAX_ROWS`` face points the attach collects ``MAX_ROWS + 1``
+    rows at most and hands over to the cell join, which gives the rows
+    of the budget-0 plan."""
+    from pyspark.sql import DataFrame
+
+    layer = layers[0].select("fid", "geom_wkb")
+    monkeypatch.setattr(pairing, "BROADCAST_BYTES", 0)
+    want = norm(UF.union_full_self(layer))
+    monkeypatch.undo()
+
+    attached, collected = [], []
+    frame = type(layer)
+    orig_attach, orig_to_pandas = UF._attach_hits_fast, frame.toPandas
+
+    def attach(*a, **k):
+        attached.append(orig_attach(*a, **k))
+        return attached[-1]
+
+    def to_pandas(self):
+        pdf = orig_to_pandas(self)
+        collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(UF, "_attach_hits_fast", attach)
+    monkeypatch.setattr(frame, "toPandas", to_pandas)
+    monkeypatch.setattr(pairing, "MAX_ROWS", 5)
+    got = norm(UF.union_full_self(layer))
+    assert attached == [None]
+    assert collected and max(collected) == pairing.MAX_ROWS + 1
+    assert got == want and len(want) > pairing.MAX_ROWS
