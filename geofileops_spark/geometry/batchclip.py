@@ -57,11 +57,23 @@ from .kernels import EPS
 
 _MIN_AREA = C._MIN_AREA
 
-# max flattened (subject edge x clip edge) combos processed per numpy
-# sweep. Keep sweeps CACHE-sized, not merely RAM-sized: on the target VM
-# a 2.5M-element sweep runs 6-20x slower than the same work in 50k-element
-# chunks (fresh multi-MB temporaries page-fault; L2-resident chunks don't).
+# max (subject edge x clip edge) combos of one pair, before the window
+# prune, that the batched intersection sweep takes; a bigger pair takes
+# the per-pair path, which chunks its subject-edge axis itself
 _MAX_COMBOS = 60_000
+
+# max flattened combos, after the window prune, of one numpy sweep, for
+# the intersection kernel and the difference stepper alike. Keep sweeps
+# CACHE-sized, not merely RAM-sized: on the target VM a 2.5M-element
+# sweep runs 6-20x slower than the same work in 50k-element chunks
+# (fresh multi-MB temporaries page-fault; L2-resident chunks don't).
+# Inside long-lived Spark Python workers bigger sweeps' multi-MB
+# temporaries also bloat the allocator arenas and measurably slow every
+# LATER stage run by the same workers (observed: the d21 branch of
+# symmetric_difference going 13 s -> 60 s in the same session after a
+# 60k-sweep d12). 12k keeps temporaries ~100 KB while still amortizing
+# tens of pairs per sweep.
+_SWEEP_CAP = 12_000
 
 # how far outside a ring's bbox kernels._pir_single can still answer
 # "on the boundary" (code 1) for a ring whose edges are all >= 1e-6
@@ -193,13 +205,21 @@ def intersection_parts(gs1: list, gs2: list) -> list:
         out[i] = C.intersection(gs1[i], gs2[i])
 
     idxs = cand[batch]
-    ga, gb, win = ga[batch], gb[batch], win[batch]
-    for lo, hi in _sweep_groups((na[batch] * nb[batch]).tolist(), _MAX_COMBOS):
-        a, b = ga[lo:hi], gb[lo:hi]
+    ga, gb = ga[batch], gb[batch]
+    na, nb = cnt[ga], cnt[gb]
+    A = O[_gather_ranges(off[ga], na)]
+    B = O[_gather_ranges(off[gb], nb)]
+    keptA, ka, keptB, kb = _window_prune(A, na, B, nb, win[batch])
+    a_at, b_at = np.cumsum(np.r_[0, na]), np.cumsum(np.r_[0, nb])
+    ka_at, kb_at = np.cumsum(np.r_[0, ka]), np.cumsum(np.r_[0, kb])
+    for lo, hi in _sweep_groups((ka * kb).tolist(), _SWEEP_CAP):
+        kept = (
+            keptA[ka_at[lo]:ka_at[hi]] - a_at[lo], ka[lo:hi],
+            keptB[kb_at[lo]:kb_at[hi]] - b_at[lo], kb[lo:hi],
+        )
         res, areas = _ring_ops(
-            O[_gather_ranges(off[a], cnt[a])], cnt[a],
-            O[_gather_ranges(off[b], cnt[b])], cnt[b],
-            win[lo:hi], "intersection",
+            A[a_at[lo]:a_at[hi]], na[lo:hi], B[b_at[lo]:b_at[hi]], nb[lo:hi],
+            kept, "intersection",
         )
         done = [k for k, r in enumerate(res) if r is not None]
         polys = _assemble([res[k] for k in done], [areas[k] for k in done])
@@ -326,15 +346,70 @@ def batch_ring_differences(pairs, windows=None):
 
 def _batch_ring_ops(pairs, windows=None, op="intersection"):
     """:func:`_ring_ops` over a list of (open subject ring, open clip
-    ring) pairs."""
+    ring) pairs, pruned to ``windows`` (see :func:`_window_prune`) when
+    given."""
     n = np.fromiter((len(p[0]) for p in pairs), dtype=np.int64, count=len(pairs))
     m = np.fromiter((len(p[1]) for p in pairs), dtype=np.int64, count=len(pairs))
     A = np.concatenate([p[0] for p in pairs])
     B = np.concatenate([p[1] for p in pairs])
-    return _ring_ops(A, n, B, m, windows, op)
+    kept = None if windows is None else _window_prune(A, n, B, m, windows)
+    return _ring_ops(A, n, B, m, kept, op)
 
 
-def _ring_ops(A, n, B, m, windows=None, op="intersection"):
+def _next_edges(V, counts):
+    """Per-ring "next vertex" (circular) indices and edge vectors of the
+    open rings given flat in ``V``, ``counts[p]`` rows each."""
+    start = np.cumsum(counts) - counts
+    nxt = np.arange(1, len(V) + 1)
+    nxt[start + counts - 1] = start
+    return nxt, V[nxt] - V
+
+
+def _window_prune(A, n, B, m, windows):
+    """The edges of each pair's rings (given flat, as in
+    :func:`_ring_ops`) whose own bbox meets the pair's (slightly grown)
+    bbox-overlap window ``windows[p]``: every boundary contact (proper
+    crossing, touch, collinear overlap) lies inside both rings' bboxes,
+    so the other edges are pruned before the cartesian combos are built
+    — on parcel-shaped rings this cuts combos ~5-15x. (Valid for every
+    op: a contact point lies on BOTH boundaries, hence inside both
+    bboxes, hence inside their overlap window; difference/union result
+    portions outside the window are copied from the full rings during
+    traversal, never from the pruned edge set.) Returns ``(keptA, ka,
+    keptB, kb)``: the kept edges' flat indices into ``A``/``B``, pair
+    by pair, and how many each pair keeps."""
+    P = len(n)
+    grow = 1e-7 * np.maximum(1.0, np.abs(windows).max(axis=1))
+    w0 = windows[:, 0] - grow
+    w1 = windows[:, 1] - grow
+    w2 = windows[:, 2] + grow
+    w3 = windows[:, 3] + grow
+
+    def _kept(V, counts):
+        dV = _next_edges(V, counts)[1]
+        p_of = np.repeat(np.arange(P), counts)
+        x0 = np.minimum(V[:, 0], V[:, 0] + dV[:, 0])
+        x1 = np.maximum(V[:, 0], V[:, 0] + dV[:, 0])
+        y0 = np.minimum(V[:, 1], V[:, 1] + dV[:, 1])
+        y1 = np.maximum(V[:, 1], V[:, 1] + dV[:, 1])
+        keep = (
+            (x0 <= w2[p_of])
+            & (x1 >= w0[p_of])
+            & (y0 <= w3[p_of])
+            & (y1 >= w1[p_of])
+        )
+        kept = np.nonzero(keep)[0]
+        kcnt = np.zeros(P, dtype=np.int64)
+        nz = np.nonzero(counts > 0)[0]
+        if len(nz):
+            offs = np.concatenate(([0], np.cumsum(counts)))[:-1]
+            kcnt[nz] = np.add.reduceat(keep.astype(np.int64), offs[nz])
+        return kept, kcnt
+
+    return (*_kept(A, n), *_kept(B, m))
+
+
+def _ring_ops(A, n, B, m, kept=None, op="intersection"):
     """Boolean op over many (open subject ring, open clip ring) pairs,
     given flat: pair p's subject ring is the ``n[p]`` rows of ``A`` after
     those of the pairs before it, its clip ring likewise in ``B``/``m``.
@@ -342,15 +417,8 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     rings — or None when that pair hit a degeneracy and must take the
     per-pair fallback — and, for a ring list, the rings' signed areas.
 
-    ``windows`` (P, 4), when given, is each pair's bbox-overlap window:
-    every boundary contact (proper crossing, touch, collinear overlap)
-    lies inside both rings' bboxes, so edges whose own bbox misses the
-    (slightly grown) window are pruned before the cartesian combos are
-    built — on parcel-shaped rings this cuts combos ~5-15x. (Valid for
-    every op: a contact point lies on BOTH boundaries, hence inside both
-    bboxes, hence inside their overlap window; difference/union result
-    portions outside the window are copied from the full rings during
-    traversal, never from the pruned edge set.)
+    ``kept``, when given, is :func:`_window_prune`'s answer for these
+    pairs: only the kept edges enter the cartesian combos.
 
     ``op``: "intersection" (GH flags True,True) or "difference"
     (False,True — subject minus clip), mirroring ``clip._ring_op``.
@@ -370,45 +438,14 @@ def _ring_ops(A, n, B, m, windows=None, op="intersection"):
     boff = np.cumsum(m) - m
 
     # per-ring "next vertex" (circular) edge vectors, flattened
-    nxt_a = np.arange(1, len(A) + 1)
-    nxt_a[aoff + n - 1] = aoff
-    d1 = A[nxt_a] - A
-    nxt_b = np.arange(1, len(B) + 1)
-    nxt_b[boff + m - 1] = boff
+    d1 = _next_edges(A, n)[1]
+    nxt_b, d2 = _next_edges(B, m)
     B_end = B[nxt_b]
-    d2 = B_end - B
     s1len = np.maximum(np.abs(d1).sum(axis=1), EPS)
     s2len = np.maximum(np.abs(d2).sum(axis=1), EPS)
 
-    if windows is not None:
-        grow = 1e-7 * np.maximum(1.0, np.abs(windows).max(axis=1))
-        w0 = windows[:, 0] - grow
-        w1 = windows[:, 1] - grow
-        w2 = windows[:, 2] + grow
-        w3 = windows[:, 3] + grow
-
-        def _kept(V, dV, counts):
-            p_of = np.repeat(np.arange(P), counts)
-            x0 = np.minimum(V[:, 0], V[:, 0] + dV[:, 0])
-            x1 = np.maximum(V[:, 0], V[:, 0] + dV[:, 0])
-            y0 = np.minimum(V[:, 1], V[:, 1] + dV[:, 1])
-            y1 = np.maximum(V[:, 1], V[:, 1] + dV[:, 1])
-            keep = (
-                (x0 <= w2[p_of])
-                & (x1 >= w0[p_of])
-                & (y0 <= w3[p_of])
-                & (y1 >= w1[p_of])
-            )
-            kept = np.nonzero(keep)[0]
-            kcnt = np.zeros(P, dtype=np.int64)
-            nz = np.nonzero(counts > 0)[0]
-            if len(nz):
-                offs = np.concatenate(([0], np.cumsum(counts)))[:-1]
-                kcnt[nz] = np.add.reduceat(keep.astype(np.int64), offs[nz])
-            return kept, kcnt
-
-        keptA, ka = _kept(A, d1, n)
-        keptB, kb = _kept(B, d2, m)
+    if kept is not None:
+        keptA, ka, keptB, kb = kept
     else:
         keptA = np.arange(len(A))
         keptB = np.arange(len(B))
@@ -668,16 +705,6 @@ def _batch_point_in_ring(pts, V, dV, off, cnt):
     return inside, on_boundary
 
 
-# combo cap of the difference sweeps. Smaller than _MAX_COMBOS: inside
-# long-lived Spark Python workers the bigger sweeps' multi-MB temporaries
-# bloat the allocator arenas and measurably slow every LATER stage run by
-# the same workers (observed: the d21 branch of symmetric_difference
-# going 13 s -> 60 s in the same session after a 60k-sweep d12). 12k
-# keeps temporaries ~100 KB while still amortizing tens of pairs per
-# sweep.
-_DIFF_SWEEP_CAP = 12_000
-
-
 class _Blade:
     """One entry of a lane's blade list: a polygon ``poly`` (closed
     rings), its exterior bbox, its open exterior ring when the sweep can
@@ -801,7 +828,7 @@ def _subtract(lanes: list) -> list:
     - a piece whose bbox misses the blade's, or meets it only in a
       measure-zero strip, is unchanged (``clip._ring_op``'s strip exit);
     - a piece with holes of its own, a holed blade, a rect x rect pair
-      (exact rect algebra), a pair over :data:`_DIFF_SWEEP_CAP` and a
+      (exact rect algebra), a pair over :data:`_SWEEP_CAP` and a
       degenerate pair take the exact per-pair path
       (``clip.poly_difference``); a whole blade takes
       ``clip.mp_difference`` for all of the lane's pieces;
@@ -861,14 +888,14 @@ def _subtract(lanes: list) -> list:
                             rmap[i] = _defer(p, res[1], b, blades[k][r + 1 :])
                         continue
                     weight = ka * len(b.ring)
-                if weight > _DIFF_SWEEP_CAP:
+                if weight > _SWEEP_CAP:
                     rmap[i] = _cut(p, b)
                     continue
                 pairs.append((a, b.ring))
                 windows.append(w)
                 weights.append(weight)
                 refs.append((k, i))
-        for lo, hi in _sweep_groups(weights, _DIFF_SWEEP_CAP):
+        for lo, hi in _sweep_groups(weights, _SWEEP_CAP):
             res = batch_ring_differences(
                 pairs[lo:hi], np.asarray(windows[lo:hi], dtype=np.float64)
             )

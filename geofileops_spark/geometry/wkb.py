@@ -246,10 +246,14 @@ def _write_coords(arr, out: bytearray) -> None:
 
 # --------------------------------------------------------------------- loads
 def loads(buf: bytes) -> Geometry:
-    """WKB bytes -> Geometry. Returns None for None input."""
+    """WKB bytes -> Geometry. Returns None for None input; raises
+    ``ValueError`` for a blob that is not WKB or is cut short."""
     if buf is None:
         return None
-    geom, _ = _read(memoryview(buf), 0)
+    try:
+        geom, _ = _read(memoryview(buf), 0)
+    except (struct.error, IndexError) as e:
+        raise ValueError(f"truncated wkb: {e}") from e
     return geom
 
 

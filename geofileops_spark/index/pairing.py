@@ -2,15 +2,16 @@
 rtree, and the one place that decides when to use it.
 
 geofileops pairs two layers by letting every worker process hold layer
-2's rtree and probe it (``_geoops_sql.py:2185-2342``). Here the small
-side is collected once, grid-indexed on the driver and broadcast; the
-other side streams through one ``mapInPandas`` that asks the grid for
-bbox-overlap candidates. Every operator that pairs this way goes
-through this module:
+2's rtree and probe it, one SELECT per batch writing finished rows
+with both layers' attributes (``_geoops_sql.py:2185-2342``). Here the
+small side is collected once, grid-indexed on the driver and
+broadcast; the other side streams through one ``mapInArrow`` that asks
+the grid for bbox-overlap candidates and emits finished rows. Every
+operator that pairs this way goes through this module:
 
 - :class:`Index` is the broadcast value: a flat sorted grid over the
-  build rows' bboxes, optionally with their WKBs packed into one buffer
-  and their ids;
+  build rows' bboxes and, optionally, the build rows as one Arrow
+  record batch (geometry and attributes);
 - :func:`build` collects layer 2 of a pairwise operator in one
   JVM-only Arrow collect bounded at ``MAX_ROWS + 1`` rows, computes its
   bboxes on the driver, indexes and broadcasts it (or answers
@@ -20,9 +21,10 @@ through this module:
   pairing paths; ``cache.release_caches()`` releases everything it made;
 - :func:`probe` is the one probe driver. It streams a frame against a
   broadcast index and owns the stream decode, the candidates, the
-  self-half filter, the output frame and the layer-2 attribute attach.
-  Each operator passes only its per-batch step (a refine, a piece
-  kernel, a row combine) over a :class:`Batch`;
+  self-half filter and the output batches, whose layer-2 columns it
+  takes from the index rows by position. Each operator passes only its
+  per-batch step (a refine, a piece kernel, a row combine) over a
+  :class:`Batch`;
 - :func:`choose` decides between the broadcast shapes and the
   distributed cell join from one byte budget, ``GFO_BROADCAST_BYTES``.
   It runs no Spark job; a broadcast side's row cap, ``MAX_ROWS``, is
@@ -48,10 +50,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .. import cache
 from ..geometry import wkb as W
@@ -279,17 +282,21 @@ def _batch_candidates(B: np.ndarray, ukey, starts, ends, srow, big_rows,
 
 
 class Index:
-    """The broadcast value: a grid over ``bb`` (n, 4 finite bboxes), the
-    build rows' WKBs packed into one buffer (optional) and their ids
-    (optional, aligned to ``bb``).
+    """The broadcast value: a grid over ``bb`` (n, 4 finite bboxes) and
+    the build rows themselves, ``rows``: one Arrow record batch aligned
+    to ``bb`` (optional), as the JVM collected it. Its column ``geom``
+    (one value buffer plus offsets) is what :meth:`Batch.geom2` decodes;
+    any of its columns is what :func:`probe` emits for a pair's build
+    row, by position.
 
     The grid cell is ``per_extent`` median bbox extents (``span /
     point_cells`` for point sides), floored so an axis has at most ~4k
-    cells. WKBs travel as ONE bytes buffer + offsets: unpickling a
-    single blob is a memcpy, while 500k separate bytes objects cost
-    seconds per Python worker (measured 55 s cold vs 13 s warm)."""
+    cells. Arrow arrays unpickle as a few buffers, while 500k separate
+    bytes objects cost seconds per Python worker (measured 55 s cold vs
+    13 s warm)."""
 
-    def __init__(self, bb: np.ndarray, wkbs=None, ids=None,
+    def __init__(self, bb: np.ndarray, rows: pa.Table | None = None,
+                 geom: str | None = None,
                  per_extent: float = 2.0, point_cells: int = 4096):
         bb = np.ascontiguousarray(bb, dtype=np.float64)
         ext = np.maximum(bb[:, 2] - bb[:, 0], bb[:, 3] - bb[:, 1])
@@ -306,14 +313,18 @@ class Index:
         self.y0 = float(bb[:, 1].min())
         self.grid = _grid_index(bb, self.cellsz, self.x0, self.y0)
         self.bb = bb
-        self.ids = None if ids is None else np.asarray(ids)
-        self.buf = self.offs = None
-        if wkbs is not None:
-            lens = np.fromiter(
-                (len(w) for w in wkbs), dtype=np.int64, count=len(wkbs)
+        self.geom = geom
+        self.rows = None
+        if rows is not None:
+            # one chunk per column, for take(); 64-bit geometry offsets,
+            # so a layer past 2 GiB of WKB still concatenates
+            cols = [
+                c.cast(pa.large_binary()) if n == geom else c
+                for n, c in zip(rows.column_names, rows.columns)
+            ]
+            self.rows = pa.RecordBatch.from_arrays(
+                [c.combine_chunks() for c in cols], names=rows.column_names
             )
-            self.offs = np.concatenate(([0], np.cumsum(lens)))
-            self.buf = b"".join(bytes(w) for w in wkbs)
 
 
 # ------------------------------------------------------------ broadcasts
@@ -328,62 +339,48 @@ def broadcast(spark, value):
 # caller takes the distributed cell plan
 OVER_CAP = object()
 
-# one (layer-2 plan, geom col, id col, row cap) -> build() result;
-# repeat probes of the same layer (common: several export/extract calls
+# one (layer-2 plan, geom col, row cap) -> build() result; repeat
+# probes of the same layer (common: several export/extract calls
 # against one registry) skip the collect+index+broadcast build (~60% of
 # a warm call at 500k rows). Released via cache.release_caches().
 _GRID_CACHE: dict = {}
 
 
-def build(df: DataFrame, geom_col: str, id_col: str | None = None):
+def build(df: DataFrame, geom_col: str):
     """Collect, grid-index and broadcast layer 2 (or reuse the result of
-    the same plan). Returns the Broadcast of an :class:`Index` with
-    WKBs, :data:`OVER_CAP` when layer 2 has more than ``MAX_ROWS`` rows,
-    or None when it has no valid geometry. With ``id_col`` the index
-    carries the int64 ids (the pairs paths attach layer-2 attributes by
-    them); a missing, non-integral or NULL id also returns None, so the
-    caller takes the distributed plan.
+    the same plan). Returns the Broadcast of an :class:`Index` whose
+    ``rows`` are ``df``'s rows with a valid geometry, every column of
+    ``df`` (the caller selects what its probe emits),
+    :data:`OVER_CAP` when layer 2 has more than ``MAX_ROWS`` rows, or
+    None when it has no valid geometry.
 
-    The collect is ONE JVM-only Arrow collect of ``(geom[, id])``
-    bounded at ``MAX_ROWS + 1`` rows, so the row cap costs no count.
-    The bboxes come from the driver-side whole-batch decode
-    (``W.bounds_from_wkb_batch``, the same function :func:`_bounds_udf`
-    runs), so no Python stage runs before the probe. An over-cap result
-    is logged as a ``cell`` :class:`Decision`."""
+    The collect is ONE JVM-only Arrow collect (``toArrow``) bounded at
+    ``MAX_ROWS + 1`` rows, so the row cap costs no count and the
+    attributes keep their Spark types as Arrow types. The bboxes come
+    from the driver-side whole-batch decode (``W.bounds_from_wkb_batch``,
+    the same function :func:`_bounds_udf` runs), so no Python stage runs
+    before the probe. An over-cap result is logged as a ``cell``
+    :class:`Decision`."""
     try:
-        key = (df.semanticHash(), geom_col, id_col, MAX_ROWS)
+        key = (df.semanticHash(), geom_col, MAX_ROWS)
     except Exception:  # pragma: no cover - exotic plans
         key = None
     if key is not None and key in _GRID_CACHE:
         return _GRID_CACHE[key]
-    if id_col is not None and not isinstance(
-        {f.name: f.dataType for f in df.schema.fields}.get(id_col),
-        (IntegerType, LongType),
-    ):
-        return None
-    sel = [F.col(geom_col).alias("_wkb")]
-    if id_col is not None:
-        sel.append(F.col(id_col).cast("long").alias("_id"))
-    pdf = df.select(*sel).limit(MAX_ROWS + 1).toPandas()
-    if len(pdf) > MAX_ROWS:
+    table = df.limit(MAX_ROWS + 1).toArrow()
+    if table.num_rows > MAX_ROWS:
         d = Decision(
-            "cell", scan_size_bytes(df), len(pdf), BROADCAST_BYTES,
+            "cell", scan_size_bytes(df), table.num_rows, BROADCAST_BYTES,
             f"more than {MAX_ROWS} rows",
         )
         _log.debug("pairing build: %s", d)
         bc = OVER_CAP
     else:
-        wkbs = pdf["_wkb"].to_numpy(object)
-        bb = W.bounds_from_wkb_batch(wkbs)
+        bb = W.bounds_from_wkb_batch(table.column(geom_col).to_pylist())
         valid = np.isfinite(bb[:, 0])
-        ids = pdf["_id"][valid] if id_col is not None else None
-        if not valid.any() or (ids is not None and ids.isna().any()):
-            bc = None
-        else:
-            index = Index(
-                bb[valid], wkbs=wkbs[valid],
-                ids=None if ids is None else ids.to_numpy(np.int64),
-            )
+        bc = None
+        if valid.any():
+            index = Index(bb[valid], table.filter(valid), geom=geom_col)
             bc = broadcast(df.sparkSession, index)
     if key is not None:
         _GRID_CACHE.clear()
@@ -405,18 +402,33 @@ def decode(col) -> tuple[list, np.ndarray]:
     return [g if ok else None for g, ok in zip(geoms, alive)], B
 
 
-class Batch:
-    """One Arrow batch of the stream as a probe step sees it: the rows
-    ``pdf``, their geometries ``g1s`` (None on a bbox-only or
-    point-column probe), bboxes ``B1`` and points ``pts`` (point-column
-    probe only), the bbox-overlap (stream row, build row) pairs
-    ``pr``/``pl`` sorted by row, and the build rows' bboxes ``B2``.
-    :meth:`geom1`/:meth:`geom2` decode a stream/build geometry once."""
+def _wkb_reader(arr: pa.Array):
+    """``j -> WKB of row j`` over a (large) binary Arrow array, reading
+    its offsets and value buffer in place."""
+    _, offs, data = arr.buffers()
+    dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offs, dt)[arr.offset:arr.offset + len(arr) + 1]
+    mv = memoryview(data if data is not None else b"")
+    return lambda j: mv[offs[j]:offs[j + 1]]
 
-    def __init__(self, pdf, g1s, B1, pts, pr, pl, index, col, built):
-        self.pdf, self.g1s, self.B1, self.pts = pdf, g1s, B1, pts
-        self.pr, self.pl, self.B2 = pr, pl, index.bb
-        self._ix, self._col, self._g1, self._g2 = index, col, {}, built
+
+class Batch:
+    """One Arrow batch of the stream as a probe step sees it: its row
+    count ``n``, geometries ``g1s`` (None on a bbox-only or point-column
+    probe), bboxes ``B1`` and points ``pts`` (point-column probe only),
+    the bbox-overlap (stream row, build row) pairs ``pr``/``pl`` sorted
+    by row, and the build rows' bboxes ``B2``. :meth:`column` is a
+    stream column as numpy; :meth:`geom1`/:meth:`geom2` decode a
+    stream/build geometry once."""
+
+    def __init__(self, rb, g1s, B1, pts, pr, pl, B2, col, wkb2, built):
+        self.n, self.g1s, self.B1, self.pts = rb.num_rows, g1s, B1, pts
+        self.pr, self.pl, self.B2 = pr, pl, B2
+        self._rb, self._col, self._g1 = rb, col, {}
+        self._wkb2, self._g2 = wkb2, built
+
+    def column(self, name):
+        return self._rb.column(name).to_numpy(zero_copy_only=False)
 
     def geom1(self, i):
         if self.g1s is not None:
@@ -426,43 +438,40 @@ class Batch:
         return self._g1[i]
 
     def geom2(self, j):
-        j, ix = int(j), self._ix
+        j = int(j)
         if j not in self._g2:
-            self._g2[j] = W.loads(ix.buf[ix.offs[j]:ix.offs[j + 1]])
+            self._g2[j] = W.loads(self._wkb2(j))
         return self._g2[j]
 
 
 def probe(
     stream: DataFrame, bc, step, geom, *, load: bool = True,
-    rows: bool = False, columns: dict | None = None,
-    id_col: str | None = "_l2id", id_type=None, payload=None,
-    self_half_uid: str | None = None,
-    l2: DataFrame | None = None, l2_id_col: str | None = None,
+    rows: bool = False, columns: dict | None = None, l2: dict | None = None,
+    payload: StructField | None = None, self_half_uid: str | None = None,
 ) -> DataFrame:
-    """The one probe driver: ``stream`` flows through ONE mapInPandas
+    """The one probe driver: ``stream`` flows through ONE mapInArrow
     against the broadcast :class:`Index` ``bc``, and ``step(batch)``
-    settles each :class:`Batch`. Each task keeps one decode cache over
-    the build geometries (a worker-lifetime cache measured SLOWER at
-    500k rows: allocator/GC pressure beat the saved decodes).
+    settles each :class:`Batch`. Each output batch is built with Arrow
+    ``take``: what leaves the probe is finished rows, with no join
+    after it. Each task keeps one decode cache over the build
+    geometries (a worker-lifetime cache measured SLOWER at 500k rows:
+    allocator/GC pressure beat the saved decodes).
 
     - ``geom`` is a WKB column, decoded by :func:`decode` or, with
       ``load=False``, only bboxed; or an ``(x, y)`` pair of point
       columns.
-    - ``self_half_uid`` (int64 stream row ids, matched against the index
-      ids) keeps only the ``uid1 < uid2`` pairs of a self-pairing,
-      before the step runs.
+    - ``self_half_uid`` (an int64 column of both the stream and the
+      index rows) keeps only the ``uid1 < uid2`` pairs of a
+      self-pairing, before the step runs.
     - ``step`` returns a selection ``sel`` (None: all) or ``(sel,
-      values)``. ``sel`` picks pairs: the frame holds stream rows
-      ``pr[sel]`` and, unless ``id_col`` is None, the index ids of
-      ``pl[sel]`` as ``id_col`` (``id_type``, default long). With
+      values)``. ``sel`` picks pairs: the output holds the stream rows
+      ``pr[sel]`` and, for each ``name: field`` of ``l2``, the index
+      rows' column ``field.name`` at ``pl[sel]`` as ``name``. With
       ``rows=True`` it picks stream rows. ``values`` fill the
       ``payload`` field, which replaces a stream column of its name.
     - ``columns`` maps the stream columns to keep to their output names
-      (default all, unrenamed).
-    - ``l2`` attaches layer 2's attributes, all ``l2_``-prefixed by one
-      ``toDF``, by broadcast hash join of ``id_col`` on ``l2_id_col``.
-      The stream's renames cost no Spark call: they are the output
-      schema's names."""
+      (default all, unrenamed). Renames cost no Spark call: they are the
+      output schema's names."""
     fields = stream.schema.fields
     at = {f.name: i for i, f in enumerate(fields)}
     columns = columns if columns is not None else dict(zip(at, at))
@@ -471,50 +480,55 @@ def probe(
         StructField(n, fields[at[c]].dataType, fields[at[c]].nullable)
         for c, n in columns.items()
     ]
-    if not rows and id_col is not None:
-        out_fields.append(StructField(id_col, id_type or LongType()))
+    l2 = {} if rows or l2 is None else l2
+    out_fields += [StructField(n, f.dataType, f.nullable) for n, f in l2.items()]
+    put = None  # the payload's output position
     if payload is not None:
-        i = next((k for k, f in enumerate(out_fields) if f.name == payload.name),
-                 len(out_fields))
-        out_fields[i:i + 1] = [payload]
-    names = list(columns.values())
+        put = next((k for k, f in enumerate(out_fields) if f.name == payload.name),
+                   len(out_fields))
+        out_fields[put:put + 1] = [payload]
+    names = [f.name for f in out_fields]
+    src2 = [f.name for f in l2.values()]
     xy = geom if isinstance(geom, tuple) else None
 
     def _run(batches):
         ix, built = bc.value, {}  # one build-geometry cache per task
-        for pdf in batches:
-            if len(pdf) == 0:
+        wkb2 = None if ix.geom is None else _wkb_reader(ix.rows.column(ix.geom))
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
             g1s = pts = col = None
             if xy is not None:
-                pts = np.column_stack(
-                    [pdf[xy[0]].to_numpy(np.float64), pdf[xy[1]].to_numpy(np.float64)]
-                )
+                pts = np.column_stack([
+                    np.asarray(rb.column(c).to_numpy(zero_copy_only=False), np.float64)
+                    for c in xy
+                ])
                 B = np.column_stack([pts, pts])  # degenerate point bboxes
             elif load:
-                g1s, B = decode(pdf[geom])
+                g1s, B = decode(rb.column(geom).to_pylist())
             else:
-                col = pdf[geom].to_numpy(object)
+                col = rb.column(geom).to_numpy(zero_copy_only=False)
                 B = W.bounds_from_wkb_batch(col.tolist())
             pr, pl = _batch_candidates(B, *ix.grid, ix.cellsz, ix.x0, ix.y0, ix.bb)
             if self_half_uid is not None and len(pr):
-                m = pdf[self_half_uid].to_numpy(np.int64)[pr] < ix.ids[pl]
+                uid1 = rb.column(self_half_uid).to_numpy()
+                m = uid1[pr] < ix.rows.column(self_half_uid).to_numpy()[pl]
                 pr, pl = pr[m], pl[m]
-            got = step and step(Batch(pdf, g1s, B, pts, pr, pl, ix, col, built))
+            got = step and step(Batch(rb, g1s, B, pts, pr, pl, ix.bb, col, wkb2, built))
             sel, values = got if isinstance(got, tuple) else (got, None)
             if sel is None:
                 sel = slice(None)
-            out = pdf.iloc[sel if rows else pr[sel], pos].set_axis(names, axis=1)
-            if not rows and id_col is not None:
-                out[id_col] = ix.ids[pl[sel]]
-            if payload is not None:
-                out[payload.name] = values
-            yield out
+            take1 = np.arange(rb.num_rows)[sel] if rows else pr[sel]
+            if len(take1) == 0:
+                continue
+            out = [None if k == put else rb.column(p).take(take1)
+                   for k, p in enumerate(pos)]
+            if l2:
+                take2 = pl[sel]
+                out += [ix.rows.column(c).take(take2) for c in src2]
+            if put is not None:
+                out[put:put + 1] = [pa.array(values, payload_type)]
+            yield pa.RecordBatch.from_arrays(out, names=names)
 
-    out = stream.mapInPandas(_run, schema=StructType(out_fields))
-    if l2 is not None:
-        l2a = l2.toDF(*[f"l2_{c}" for c in l2.columns])
-        out = out.join(
-            F.broadcast(l2a), out[id_col] == l2a[f"l2_{l2_id_col}"], "inner"
-        ).drop(id_col)
-    return out
+    payload_type = None if payload is None else to_arrow_type(payload.dataType)
+    return stream.mapInArrow(_run, schema=StructType(out_fields))

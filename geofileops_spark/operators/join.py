@@ -18,9 +18,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -388,21 +390,20 @@ def _join_broadcast_pairs(
     df2: DataFrame,
     sq: SpatialQuery,
     geom_col: str,
-    id_col: str,
 ) -> DataFrame | None:
     """Map-side pair generation for :func:`join_by_location`: layer 2
-    is grid-indexed and broadcast (geometry + int64 ids), layer 1
-    streams through the probe driver (``pairing.probe``), which emits a
-    row per (l1, l2) pair :func:`refine_pairs` accepts and attaches the
-    l2 attributes by a broadcast hash join on the l2 id — zero shuffles
-    end to end (the reference holds layer 2's rtree in every worker
-    process, ``_geoops_sql.py:2185-2342``). Returns the ``matched``
-    frame in the standard output shape (l1_-prefixed columns,
-    ``geom_col``, l2_-prefixed attributes), or None when the broadcast
-    cannot be built (empty layer 2 / missing, non-integral or NULL join
-    keys / more than ``pairing.MAX_ROWS`` rows) and the caller must use
-    the distributed plan."""
-    bc = pairing.build(df2, geom_col, id_col=id_col)
+    is collected once with its attributes, grid-indexed and broadcast;
+    layer 1 streams through the probe driver (``pairing.probe``), which
+    emits a finished row per (l1, l2) pair :func:`refine_pairs` accepts,
+    the l2 attributes taken from the index rows by position — zero
+    shuffles and no join end to end (the reference holds layer 2's rtree
+    in every worker process, ``_geoops_sql.py:2185-2342``). Returns the
+    ``matched`` frame in the standard output shape (l1_-prefixed
+    columns, ``geom_col``, l2_-prefixed attributes), or None when the
+    broadcast cannot be built (no valid layer-2 geometry / more than
+    ``pairing.MAX_ROWS`` rows) and the caller must use the distributed
+    plan."""
+    bc = pairing.build(df2, geom_col)
     if bc is None or bc is pairing.OVER_CAP:
         return None
 
@@ -412,7 +413,7 @@ def _join_broadcast_pairs(
     return pairing.probe(
         df1, bc, _step, geom_col,
         columns={c: c if c == geom_col else f"l1_{c}" for c in df1.columns},
-        l2=df2.drop(geom_col), l2_id_col=id_col,
+        l2={f"l2_{f.name}": f for f in df2.schema.fields if f.name != geom_col},
     )
 
 
@@ -446,7 +447,7 @@ def join_by_location(
         and area_inters_column_name is None
         and pairing.choose("pairs", df2).path == "broadcast"
     ):
-        matched = _join_broadcast_pairs(df1, df2, sq, geom_col, id_col)
+        matched = _join_broadcast_pairs(df1, df2, sq, geom_col)
     if matched is None:
         pairs, res = candidate_pairs(
             df1, df2, res=res, geom_col1=geom_col, geom_col2=geom_col,
@@ -573,9 +574,14 @@ def join_points_in_polygons(
         points.sparkSession,
         pairing.Index(
             bbs[valid],
-            wkbs=[b for (_, b), v in zip(payload, valid) if v],
-            ids=[pid for (pid, _), v in zip(payload, valid) if v],
-            point_cells=256,
+            pa.table({
+                poly_id_col: pa.array(
+                    [pid for (pid, _), v in zip(payload, valid) if v],
+                    to_arrow_type(id_type),
+                ),
+                geom_col: [b for (_, b), v in zip(payload, valid) if v],
+            }),
+            geom=geom_col, point_cells=256,
         ),
     )
 
@@ -585,7 +591,7 @@ def join_points_in_polygons(
         )
 
     return pairing.probe(
-        points, bc, _step, (x_col, y_col), id_col=poly_id_col, id_type=id_type
+        points, bc, _step, (x_col, y_col), l2={poly_id_col: polys.schema[poly_id_col]}
     )
 
 
@@ -608,7 +614,7 @@ def _export_broadcast(
     distributed cell join.
     """
     anti = sq.true_for_disjoint
-    bc = pairing.build(df2, geom_col)
+    bc = pairing.build(df2.select(geom_col), geom_col)
     if bc is pairing.OVER_CAP:
         return None
     if bc is None:
@@ -626,16 +632,16 @@ def _export_broadcast(
             ok = refine_pairs(
                 sq, b.g1s, b.B1, b.pr, b.geom2, b.B2, b.pl, stop=not anti
             )
-            return _rows_any(ok, b.pr, not anti, len(b.pdf)) != anti
+            return _rows_any(ok, b.pr, not anti, b.n) != anti
         from ..geometry import clip as C
 
         ok = refine_pairs(sq, b.g1s, b.B1, b.pr, b.geom2, b.B2, b.pl)
-        total = np.zeros(len(b.pdf))
+        total = np.zeros(b.n)
         for i, j in zip(b.pr[ok].tolist(), b.pl[ok].tolist()):
             if total[i] < min_area_intersect:
                 total[i] += K.area(C.intersection(b.g1s[i], b.geom2(j)))
         # like the cell plan's area sum, only rows with a matching pair
-        keep = np.zeros(len(b.pdf), dtype=bool)
+        keep = np.zeros(b.n, dtype=bool)
         keep[b.pr[ok]] = total[b.pr[ok]] >= min_area_intersect
         return keep
 

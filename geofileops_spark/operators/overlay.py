@@ -414,38 +414,33 @@ def _subdivide_subject(
 
 # ------------------------------------------------------------------ pairing
 def _broadcast_pairs_matched(
-    df1: DataFrame, df2: DataFrame, geom_col: str, id_col: str,
-    with_l2: bool = True,
+    df1: DataFrame, df2: DataFrame, geom_col: str, geoms: bool = True,
     self_half_uid: str | None = None,
 ) -> DataFrame | None:
-    """Broadcast plan of :func:`_pair_pieces`: layer 2 is grid-indexed
-    and broadcast, layer 1 streams through the probe driver
-    (``pairing.probe``), whose step runs the pair piece kernel over every
-    bbox candidate of a batch, and l2 attributes attach via a broadcast
-    hash join on the l2 id. No cover explode and no cell shuffle; the
-    probe is the job's only Python stage (``pairing.build`` collects
-    layer 2 JVM-only, uncounted).
+    """Broadcast plan of :func:`_pair_pieces`: layer 2 (the columns the
+    caller keeps) is collected once, grid-indexed and broadcast; layer 1
+    streams through the probe driver (``pairing.probe``), whose step
+    runs the pair piece kernel over every bbox candidate of a batch and
+    emits finished rows, layer-2 attributes taken by position. No cover
+    explode, no cell shuffle and no attribute join; the probe is the
+    job's only Python stage (``pairing.build`` collects layer 2
+    JVM-only, uncounted).
 
-    Output: l1_-prefixed df1 columns (geometry included), l2_-prefixed
-    df2 columns (geometry included), and ``_piece``. ``with_l2=False``
-    skips the attribute join and emits only df1 columns + ``_piece``
-    (the clip shape — the clip layer contributes no attributes).
-    Returns None, and the caller takes the cell join, when layer 2 is
-    over the byte budget (``pairing.choose``), over the row cap
-    (``pairing.OVER_CAP`` from ``pairing.build``), has no valid
-    geometry or has no usable int id.
+    Output: l1_-prefixed df1 columns, l2_-prefixed df2 columns and
+    ``_piece``; the two geometry columns only with ``geoms``. Returns
+    None, and the caller takes the cell join, when layer 2 is over the
+    byte budget (``pairing.choose``), over the row cap
+    (``pairing.OVER_CAP`` from ``pairing.build``) or has no valid
+    geometry.
 
     ``self_half_uid``: for SELF-pairings (df1 is df2), name of the
     int64 row-id column; the driver keeps only the ``uid1 < uid2``
     candidate pairs, before the intersection kernel — a post-hoc
     ``where(l1_uid < l2_uid)`` would compute every unordered pair's
-    intersection twice and throw one away (requires ``with_l2=True`` so
-    the broadcast carries the ids)."""
-    if self_half_uid is not None and not with_l2:
-        raise ValueError("self_half_uid needs with_l2=True (the layer-2 ids)")
+    intersection twice and throw one away."""
     if pairing.choose("pairs", df2).path != "broadcast":
         return None
-    bc = pairing.build(df2, geom_col, id_col=id_col if with_l2 else None)
+    bc = pairing.build(df2, geom_col)
     if bc is None or bc is pairing.OVER_CAP:
         return None
 
@@ -456,11 +451,11 @@ def _broadcast_pairs_matched(
 
     return pairing.probe(
         df1, bc, _step, geom_col,
-        columns={c: f"l1_{c}" for c in df1.columns},
-        id_col="_l2id" if with_l2 else None,
+        columns={c: f"l1_{c}" for c in df1.columns if geoms or c != geom_col},
+        l2={f"l2_{f.name}": f for f in df2.schema.fields
+            if geoms or f.name != geom_col},
         payload=StructField("_piece", BinaryType()),
         self_half_uid=self_half_uid,
-        l2=df2 if with_l2 else None, l2_id_col=id_col,
     )
 
 
@@ -469,8 +464,7 @@ def _pair_pieces(
     df2: DataFrame,
     res: int | None,
     geom_col: str,
-    id_col: str,
-    with_l2: bool = True,
+    geoms: bool = True,
     self_half_uid: str | None = None,
     broadcast: bool = True,
     keep_empty: bool = False,
@@ -480,9 +474,10 @@ def _pair_pieces(
     ``pairing.build``'s row cap pick: the broadcast-grid probe
     (:func:`_broadcast_pairs_matched`) or the distributed cell join +
     :func:`_pair_intersection_udf`. Both plans return the l1_-prefixed
-    df1 columns, the l2_-prefixed df2 columns (none with
-    ``with_l2=False``) and ``_piece``; pairs whose piece is empty are
-    dropped.
+    df1 columns, the l2_-prefixed df2 columns and ``_piece``;
+    ``geoms=False`` leaves out the two geometry columns, so a caller
+    that keeps only the piece does not ship them. Pairs whose piece is
+    empty are dropped.
 
     ``self_half_uid`` keeps each unordered self-pair once (uid1 < uid2),
     before the kernel runs. ``broadcast=False`` forces the cell join.
@@ -491,12 +486,9 @@ def _pair_pieces(
     reference's candidate SQL carries an ST_Intersects prefilter
     (``_geoops_sql.py:1964-2006``), so bbox-only candidates are refined
     away first. The predicate cost is only paid on that path."""
-    if not with_l2:
-        df2 = df2.select(geom_col)
     if broadcast and not keep_empty:
         matched = _broadcast_pairs_matched(
-            df1, df2, geom_col, id_col, with_l2=with_l2,
-            self_half_uid=self_half_uid,
+            df1, df2, geom_col, geoms=geoms, self_half_uid=self_half_uid,
         )
         if matched is not None:
             return matched
@@ -514,7 +506,7 @@ def _pair_pieces(
     if not keep_empty:
         out = out.where(F.col("_piece").isNotNull())
     out = drop_helper_columns(out)
-    return out if with_l2 else out.drop(g2)
+    return out if geoms else out.drop(g1, g2)
 
 
 def _reverse_collect_candidates(
@@ -526,30 +518,33 @@ def _reverse_collect_candidates(
     subject); the blade layer streams bbox-only through the probe driver
     emitting its matches, and only matching blades enter the (small)
     groupBy shuffle."""
-    pdf = (
+    sub = (
         df1.select(F.col(id_col).alias("_sid"), geom_col)
         .withColumn("_b", pairing._bounds_udf(F.col(geom_col)))
         .select("_sid", "_b.minx", "_b.miny", "_b.maxx", "_b.maxy")
-        .toPandas()
     )
-    id_type = df1.schema[id_col].dataType
-    bb = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
+    t = sub.toArrow()
+    bb = np.column_stack([
+        t.column(c).to_numpy(zero_copy_only=False)
+        for c in ("minx", "miny", "maxx", "maxy")
+    ]).astype(np.float64).reshape(-1, 4)
     valid = np.isfinite(bb[:, 0])
     if valid.any():
         bc = pairing.broadcast(
             df1.sparkSession,
             pairing.Index(
-                bb[valid], ids=pdf["_sid"].to_numpy()[valid],
+                bb[valid], t.select(["_sid"]).filter(valid),
                 per_extent=0.5, point_cells=256,
             ),
         )
         hits = pairing.probe(
             df2.select(geom_col), bc, None, geom_col, load=False,
-            columns={geom_col: "_blade"}, id_col="_sid", id_type=id_type,
+            columns={geom_col: "_blade"}, l2={"_sid": sub.schema["_sid"]},
         )
     else:  # no subject has a bbox: no blade can match
         hits = df2.select(
-            F.lit(None).cast(id_type).alias("_sid"), F.col(geom_col).alias("_blade")
+            F.lit(None).cast(sub.schema["_sid"].dataType).alias("_sid"),
+            F.col(geom_col).alias("_blade"),
         ).limit(0)
     return _blade_lists(hits, "_sid", "_blade", id_col)
 
@@ -579,13 +574,13 @@ def _broadcast_combine(
     dropping rows without any. Returns None when the blade layer is
     over ``pairing.build``'s row cap: the caller takes the cell plan."""
     spark = df1.sparkSession
-    bc = pairing.build(df2, geom_col)
+    bc = pairing.build(df2.select(geom_col), geom_col)
     is_diff = mode.startswith("difference")
     if bc is pairing.OVER_CAP:
         return None
     if bc is None:  # empty blade layer
         return df1 if is_diff else df1.limit(0)
-    # mapInPandas inherits the input partitioning: subjects that descend
+    # mapInArrow inherits the input partitioning: subjects that descend
     # from a few huge rows (a subdivided 3-row complex layer explodes to
     # hundreds of parts but keeps 3 partitions) would run on 3 cores —
     # rebalance cheap subject rows across the executor width first
@@ -595,7 +590,7 @@ def _broadcast_combine(
     memo: dict = {}  # unpickled with the step: one per task
 
     def _step(b):
-        col = b.pdf[geom_col].to_numpy(object)
+        col = b.column(geom_col)
         blades = [b.geom2(j) for j in b.pl]
         # pairs are sorted by row: one [start, end) slice per hit row
         rows, starts = np.unique(b.pr, return_index=True)
@@ -656,12 +651,10 @@ def intersection(
         df1 = subdivide_layer(df1, subdivide_coords, geom_col)
         df2 = subdivide_layer(df2, subdivide_coords, geom_col)
     out = _pair_pieces(
-        df1, df2, res, geom_col, id_col, broadcast=not sub,
+        df1, df2, res, geom_col, geoms=False, broadcast=not sub,
         keep_empty=keep_empty_geoms,
     )
-    out = out.withColumn(geom_col, F.col("_piece")).drop(
-        "_piece", f"l1_{geom_col}", f"l2_{geom_col}"
-    )
+    out = out.withColumn(geom_col, F.col("_piece")).drop("_piece")
     if sub:
         # under subdivide, an all-empty pair survives as one NULL-geom row
         out = _reunion(out, [f"l1_{id_col}", f"l2_{id_col}"], geom_col)
@@ -867,8 +860,8 @@ def clip(
         # 500k parcels); pieces are ~10-vertex clips. Single-piece rows
         # (the majority for parcel-scale inputs) skip the union kernel.
         pieces = _pair_pieces(
-            df1.select(id_col, geom_col), df2, res, geom_col, id_col,
-            with_l2=False,
+            df1.select(id_col, geom_col), df2.select(geom_col), res, geom_col,
+            geoms=False,
         ).select(
             F.col(f"l1_{id_col}").alias(id_col), F.col("_piece").alias(geom_col)
         )
@@ -917,7 +910,7 @@ def _compose(
     attributes and re-union per pair, a different shape)."""
     inter = d12 = d21 = None
     if subdivide_coords is None:
-        matched = cache.track(_pair_pieces(df1, df2, res, geom_col, id_col).persist())
+        matched = cache.track(_pair_pieces(df1, df2, res, geom_col).persist())
         g1, g2 = f"l1_{geom_col}", f"l2_{geom_col}"
         if need[0]:
             inter = matched.withColumn(geom_col, F.col("_piece")).drop(g1, g2, "_piece")

@@ -196,6 +196,11 @@ def _interior_point_udf(wkb: pd.Series) -> pd.Series:
     return pd.Series(_interior_points_batch(list(wkb)))
 
 
+# driver and broadcast bytes per face point of the attach grid: the
+# point's bbox, its id and its grid entry
+_POINT_BYTES = 70
+
+
 def _attach_hits_fast(
     faces: DataFrame,
     original: DataFrame,
@@ -222,26 +227,25 @@ def _attach_hits_fast(
     cell join's refine runs, so both plans give the same contributors
     (``intersects``: a point on a parcel boundary counts). Returns None
     (caller falls back to the cell join) when the point side has more
-    than ``pairing.MAX_ROWS`` rows (its collect is bounded at one row
-    more) or a point blob is not a plain little-endian POINT."""
-    pdf = (
-        faces.select("_face_id", "_ip")
-        .where(F.col("_ip").isNotNull())
-        .limit(pairing.MAX_ROWS + 1)
-        .toPandas()
-    )
-    if not (0 < len(pdf) <= pairing.MAX_ROWS):
+    rows than the byte budget holds at ``_POINT_BYTES`` each
+    (``GFO_BROADCAST_BYTES=0`` thus runs no collect) or than
+    ``pairing.MAX_ROWS`` (its collect is bounded at one row more), or a
+    point blob is not a plain little-endian POINT."""
+    cap = min(pairing.MAX_ROWS, pairing.BROADCAST_BYTES // _POINT_BYTES)
+    if cap == 0:
         return None
-    pts = W.points_from_wkb_list([bytes(b) for b in pdf["_ip"]])
+    ips = faces.select("_face_id", "_ip").where(F.col("_ip").isNotNull())
+    t = ips.limit(cap + 1).toArrow()
+    if not (0 < t.num_rows <= cap):
+        return None
+    pts = W.points_from_wkb_list(t.column("_ip").to_pylist())
     if pts is None or not np.isfinite(pts).all():
         return None
     # degenerate point bboxes; ~1024 cells per axis
     bc = pairing.broadcast(
         faces.sparkSession,
         pairing.Index(
-            np.column_stack([pts, pts]),
-            ids=pdf["_face_id"].to_numpy(np.int64),
-            point_cells=1024,
+            np.column_stack([pts, pts]), t.select(["_face_id"]), point_cells=1024
         ),
     )
 
@@ -255,7 +259,8 @@ def _attach_hits_fast(
 
     return pairing.probe(
         slim, bc, _step, geom_col, load=False,
-        columns={c: c for c in (id_col, *attr_cols)}, id_col="_face_id",
+        columns={c: c for c in (id_col, *attr_cols)},
+        l2={"_face_id": ips.schema["_face_id"]},
     )
 
 
@@ -322,7 +327,7 @@ def union_full_self(
         # no area — and is consumed by BOTH the partner lists and the
         # next-pass input
         half = cache.local_checkpoint(
-            _pair_pieces(cur, cur, res, geom_col, "_uid", self_half_uid="_uid")
+            _pair_pieces(cur, cur, res, geom_col, self_half_uid="_uid")
         )
         partners = (
             half.select(

@@ -168,20 +168,21 @@ def test_choose_keeps_the_per_shape_limits(layers, monkeypatch, caplog):
     # the pairs row cap: build's bounded collect answers OVER_CAP past
     # MAX_ROWS rows (5 zone rows), logged as a cell Decision
     monkeypatch.setattr(pairing, "BROADCAST_BYTES", default)
+    builds = (zones.select("geom_wkb"), zones)
     for max_rows in (4, 5, 9, 10, 4_000_000):
         monkeypatch.setattr(pairing, "MAX_ROWS", max_rows)
         with caplog.at_level(logging.DEBUG, logger=pairing.__name__):
             caplog.clear()
-            for id_col in (None, "fid"):
-                bc = pairing.build(zones, "geom_wkb", id_col=id_col)
+            for layer in builds:
+                bc = pairing.build(layer, "geom_wkb")
                 over = 5 > max_rows
-                assert (bc is pairing.OVER_CAP) == over, (max_rows, id_col)
+                assert (bc is pairing.OVER_CAP) == over, (max_rows, layer.columns)
                 if not over:
                     assert len(bc.value.bb) == 5
         logged = [r.args[0] for r in caplog.records if r.name == pairing.__name__]
         if over:
             assert [(d.path, d.rows, d.scan_bytes) for d in logged] == [
-                ("cell", max_rows + 1, sz)] * 2
+                ("cell", max_rows + 1, pairing.scan_size_bytes(b)) for b in builds]
         else:
             assert logged == []
     cache.release_caches()
@@ -354,9 +355,10 @@ def test_build_and_decode_bounds_match_the_udf_and_the_row_loop(spark):
     )
     valid = np.isfinite(udf[:, 0])
     assert valid.sum() == 6
-    index = pairing.build(df, "geom_wkb", id_col="fid").value
-    assert sorted(index.ids) == list(np.nonzero(valid)[0])
-    assert index.bb.tobytes() == udf[index.ids].tobytes()
+    index = pairing.build(df, "geom_wkb").value
+    ids = index.rows.column("fid").to_numpy()
+    assert sorted(ids) == list(np.nonzero(valid)[0])
+    assert index.bb.tobytes() == udf[ids].tobytes()
     cache.release_caches()
 
     geoms, B = pairing.decode(pd.Series(MIXED_WKBS, dtype=object))
@@ -852,15 +854,6 @@ def test_pip_ids_keep_their_type_on_both_branches(spark, id_type):
         assert got == sorted(enumerate(ids), key=repr), side
 
 
-def test_self_half_uid_needs_layer2_ids(layers):
-    parcels, _, _ = layers
-    with pytest.raises(ValueError, match="with_l2"):
-        O._broadcast_pairs_matched(
-            parcels, parcels, "geom_wkb", "fid", with_l2=False,
-            self_half_uid="fid",
-        )
-
-
 # ------------------------------------------------- driver-built tables
 def tile_grid():
     from geofileops_spark.operators.dissolve import _squarish_grid
@@ -964,21 +957,194 @@ def test_union_full_attach_collect_is_bounded(layers, monkeypatch):
 
     attached, collected = [], []
     frame = type(layer)
-    orig_attach, orig_to_pandas = UF._attach_hits_fast, frame.toPandas
+    orig_attach, orig_to_arrow = UF._attach_hits_fast, frame.toArrow
 
     def attach(*a, **k):
         attached.append(orig_attach(*a, **k))
         return attached[-1]
 
-    def to_pandas(self):
-        pdf = orig_to_pandas(self)
-        collected.append(len(pdf))
-        return pdf
+    def to_arrow(self):
+        table = orig_to_arrow(self)
+        collected.append(table.num_rows)
+        return table
 
     monkeypatch.setattr(UF, "_attach_hits_fast", attach)
-    monkeypatch.setattr(frame, "toPandas", to_pandas)
+    monkeypatch.setattr(frame, "toArrow", to_arrow)
     monkeypatch.setattr(pairing, "MAX_ROWS", 5)
     got = norm(UF.union_full_self(layer))
     assert attached == [None]
     assert collected and max(collected) == pairing.MAX_ROWS + 1
     assert got == want and len(want) > pairing.MAX_ROWS
+
+
+# ------------------------------------------- layer-2 rows on the probe
+def sized_layer(spark, rows, schema):
+    """A cached, materialized layer from ``(…, wkt)`` rows: the planner
+    sees its real size, so it fits the default budget."""
+    from geofileops_spark.functions.st import st_geomfromtext
+
+    df = spark.createDataFrame(rows, schema).withColumn(
+        "geom_wkb", st_geomfromtext(F.col("wkt"))).drop("wkt").cache()
+    df.count()
+    return df
+
+
+def box(x0, y0, x1, y1):
+    return f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))"
+
+
+def pair_rows(df, cols):
+    """Order-free rows of ``cols``, plus the geometry's area when there
+    is one."""
+    out = []
+    for r in df.collect():
+        g = r["geom_wkb"]
+        area = None if g is None else round(K.area(W.loads(bytes(g))), 6)
+        out.append(repr(tuple(r[c] for c in cols)) + f" {area}")
+    return sorted(out)
+
+
+PAIR_OPS = {
+    "intersection": lambda a, b: O.intersection(a, b),
+    "join_by_location": lambda a, b: J.join_by_location(a, b),
+}
+
+
+def on_both_budgets(monkeypatch, call):
+    """``call()`` at the default budget and at budget 0 (the cell plan)."""
+    fast = call()
+    with monkeypatch.context() as m:
+        m.setattr(pairing, "BROADCAST_BYTES", 0)
+        slow = call()
+    return fast, slow
+
+
+def runs_the_broadcast_probe(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "MapInArrow" in plan and "Exchange" not in plan
+
+
+@pytest.mark.parametrize("op", sorted(PAIR_OPS))
+def test_layer2_rows_attach_by_position(spark, monkeypatch, op):
+    """The probe takes each pair's layer-2 columns from the build row it
+    paired with, not by id: two layer-2 rows sharing ``fid`` 7 give one
+    row per pair, each with its own ``name``, on both budgets. String
+    and NULL ids need no key either: they take the broadcast plan, with
+    the cell plan's rows."""
+    l1 = sized_layer(spark, [(1, box(0, 0, 10, 10)), (2, box(20, 0, 30, 10))],
+                     "fid long, wkt string")
+    cols = ["l1_fid", "l2_fid", "l2_name"]
+    want = [
+        repr((1, 7, "a")) + (" 50.0" if op == "intersection" else " 100.0"),
+        repr((2, 7, "b")) + (" 50.0" if op == "intersection" else " 100.0"),
+    ]
+    for fids, fid_type in (((7, 7), "long"), (("s7", None), "string")):
+        l2 = sized_layer(
+            spark, [(fids[0], "a", box(5, 0, 15, 10)), (fids[1], "b", box(25, 0, 35, 10))],
+            f"fid {fid_type}, name string, wkt string")
+        assert pairing.choose("pairs", l2).path == "broadcast"
+        fast, slow = on_both_budgets(monkeypatch, lambda: PAIR_OPS[op](l1, l2))
+        assert pair_rows(fast, cols) == pair_rows(slow, cols), fids
+        if fid_type == "long":
+            assert pair_rows(fast, cols) == want
+        else:
+            assert [r.split(", ")[1] for r in pair_rows(fast, cols)] == ["'s7'", "None"]
+        assert runs_the_broadcast_probe(fast), fids
+        assert not runs_the_broadcast_probe(slow), fids
+        l2.unpersist()
+    l1.unpersist()
+    cache.release_caches()
+
+
+@pytest.mark.parametrize("op", sorted(PAIR_OPS))
+def test_layer2_attribute_types_survive_the_probe(spark, monkeypatch, op):
+    """Layer-2 columns of every kind, NULLs included, reach the output
+    with the same values and types on the broadcast probe (Arrow arrays
+    taken from the collected table) and on the cell plan."""
+    import datetime as dt
+
+    l1 = sized_layer(spark, [(1, box(0, 0, 10, 10)), (2, box(20, 0, 30, 10))],
+                     "fid long, wkt string")
+    l2 = sized_layer(spark, [
+        (1, "é'\\", Decimal(2**100), dt.date(2020, 2, 29),
+         dt.datetime(2021, 3, 4, 5, 6, 7, 891011), [1, None, 3], (4, "x"),
+         {"k": 5, "n": None}, box(5, 0, 15, 10)),
+        (2, None, None, None, None, None, None, None, box(25, 0, 35, 10)),
+        (3, "", Decimal(-1), dt.date(1, 1, 1), dt.datetime(1970, 1, 1), [],
+         (None, None), {}, box(8, 2, 22, 4)),
+    ], "fid long, s string, d decimal(38,0), dt date, ts timestamp, "
+       "a array<int>, st struct<a:int,b:string>, m map<string,int>, wkt string")
+    assert pairing.choose("pairs", l2).path == "broadcast"
+    fast, slow = on_both_budgets(monkeypatch, lambda: PAIR_OPS[op](l1, l2))
+    assert runs_the_broadcast_probe(fast)
+    types = {f.name: f.dataType for f in fast.schema.fields}
+    assert types == {f.name: f.dataType for f in slow.schema.fields}
+    for f in l2.schema.fields:
+        if f.name != "geom_wkb":
+            assert types[f"l2_{f.name}"] == f.dataType, f.name
+    cols = sorted(c for c in fast.columns if c != "geom_wkb")
+    got = pair_rows(fast, cols)
+    assert got == pair_rows(slow, cols) and len(got) == 4
+    l1.unpersist()
+    l2.unpersist()
+    cache.release_caches()
+
+
+def test_intersection_runs_no_attribute_job(layers, count_jobs, tmp_path):
+    """Building and writing ``intersection`` on a broadcast-size layer 2
+    runs two Spark jobs: the bounded collect of layer 2 and the write.
+    No ``BroadcastExchange`` job rescans layer 2 for its attributes."""
+    parcels, zones, _ = layers
+    assert pairing.choose("pairs", zones).path == "broadcast"
+    cache.release_caches()  # no grid of zones left from earlier calls
+    n_jobs = count_jobs(
+        lambda: O.intersection(parcels, zones).write.parquet(str(tmp_path / "out")))
+    assert n_jobs == 2
+    cache.release_caches()
+
+
+def test_truncated_point_is_a_value_error(spark):
+    """A POINT blob cut short raises ``ValueError`` in ``W.loads``, like
+    any other truncated blob: the batch bounds give it a NaN row, the
+    probe's stream decode raises ``ValueError`` and the planning sample
+    skips it."""
+    from geofileops_spark.operators.celljoin import estimate_res
+
+    pt = W.dumps(W.from_wkt("POINT (7 8)"))
+    for cut in (pt[:-3], pt[:5], pt[:1], b""):
+        with pytest.raises(ValueError):
+            W.loads(cut)
+    B = W.bounds_from_wkb_batch([pt[:-3], pt])
+    assert np.isnan(B[0]).all() and B[1].tolist() == [7.0, 8.0, 7.0, 8.0]
+    with pytest.raises(ValueError):
+        pairing.decode([pt, pt[:-3]])
+    blobs = [pt, pt[:-3], W.dumps(W.from_wkt("POINT (100 40)"))]
+    df = spark.createDataFrame(list(enumerate(blobs)), "fid long, geom_wkb binary")
+    assert estimate_res(df) == estimate_res(df.where("fid != 1")) == loop_estimate_res(blobs)
+
+
+def test_union_full_attach_follows_the_byte_budget(layers, monkeypatch):
+    """At budget 0 the face-point attach collects nothing and hands over
+    to the cell join, which gives the default budget's rows."""
+    layer = layers[0].select("fid", "geom_wkb")
+    want = norm(UF.union_full_self(layer))
+
+    attached, collected = [], []
+    frame = type(layer)
+    orig_attach, orig_to_arrow = UF._attach_hits_fast, frame.toArrow
+
+    def attach(*a, **k):
+        attached.append(orig_attach(*a, **k))
+        return attached[-1]
+
+    def to_arrow(self):
+        collected.append(self.columns)
+        return orig_to_arrow(self)
+
+    monkeypatch.setattr(UF, "_attach_hits_fast", attach)
+    monkeypatch.setattr(frame, "toArrow", to_arrow)
+    monkeypatch.setattr(pairing, "BROADCAST_BYTES", 0)
+    got = norm(UF.union_full_self(layer))
+    assert attached == [None]
+    assert not [c for c in collected if "_ip" in c]
+    assert got == want and want

@@ -42,7 +42,10 @@ def test_join_by_location_broadcasts_small_side(spark):
         T.cust_points(spark, SF), T.nation_boxes(spark, SF),
         "intersects is True", res=18,
     )
-    assert "BroadcastHashJoin" in plan_of(out)
+    # the probe emits finished rows: no attribute join, no shuffle
+    p = plan_of(out)
+    assert "MapInArrow" in p
+    assert "BroadcastHashJoin" not in p and "Exchange" not in p
 
 
 def test_flagship_pip_is_map_side(spark):

@@ -443,14 +443,15 @@ def test_join_broadcast_pairs_matches_distributed(layers, monkeypatch):
         parcels, zones, "within is True", discard_nonmatching=False,
     ))
     assert spark_pairs(fast) == spark_pairs(slow)
-    # plan shape: one mapInPandas + BroadcastHashJoin, no Exchange in
-    # the matched branch (the left-anti union adds its own)
+    # plan shape: one mapInArrow that emits finished rows: no attribute
+    # join and no Exchange in the matched branch (the left-anti union
+    # adds its own)
     p = (
         J.join_by_location(parcels, zones, "intersects is True")
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "BroadcastHashJoin" in p and "MapInPandas" in p
-    assert "Exchange hashpartitioning" not in p
+    assert "MapInArrow" in p
+    assert "BroadcastHashJoin" not in p and "Exchange" not in p
 
 
 def test_join_broadcast_pairs_point_subjects(layers, spark, monkeypatch):
@@ -527,17 +528,18 @@ def test_every_join_plan_reaches_the_one_kernel(layers, monkeypatch):
     with a spy on the kernel (worker processes import their own copy of
     the module, so a spy cannot watch them)."""
     import pandas as pd
+    import pyarrow as pa
 
     parcels, zones, _ = layers
     frame = type(parcels)
     probes, udfs = [], []
-    orig_map = frame.mapInPandas
+    orig_map = frame.mapInArrow
 
     def map_spy(self, func, schema, *a, **k):
         probes.append(func)
         return orig_map(self, func, schema, *a, **k)
 
-    monkeypatch.setattr(frame, "mapInPandas", map_spy)
+    monkeypatch.setattr(frame, "mapInArrow", map_spy)
     for name in ("query_match_udf", "_any_match_udf"):
         def factory_spy(*a, _orig=getattr(J, name), **k):
             udfs.append(_orig(*a, **k))
@@ -562,16 +564,16 @@ def test_every_join_plan_reaches_the_one_kernel(layers, monkeypatch):
         return orig_refine(*a, **k)
 
     monkeypatch.setattr(J, "refine_pairs", refine_spy)
-    pdf = parcels.toPandas()
-    l1 = list(pdf["geom_wkb"])
+    rb = parcels.toArrow().combine_chunks().to_batches()[0]
+    l1 = rb.column("geom_wkb").to_pylist()
     l2 = list(zones.toPandas()["geom_wkb"])
     replays = {
-        "join broadcast": lambda: pd.concat(
-            by_name["_join_broadcast_pairs"](iter([pdf]))),
+        "join broadcast": lambda: pa.Table.from_batches(
+            list(by_name["_join_broadcast_pairs"](iter([rb])))),
         "join cell": lambda: join_cell.func(
             pd.Series([a for a in l1 for _ in l2]), pd.Series(l2 * len(l1))),
-        "export broadcast": lambda: pd.concat(
-            by_name["_export_broadcast"](iter([pdf]))),
+        "export broadcast": lambda: pa.Table.from_batches(
+            list(by_name["_export_broadcast"](iter([rb])))),
         "export cell": lambda: export_cell.func(
             pd.Series(l1), pd.Series([l2] * len(l1))),
     }
@@ -579,4 +581,4 @@ def test_every_join_plan_reaches_the_one_kernel(layers, monkeypatch):
         calls.clear()
         out = replay()
         assert calls, plan
-        assert out.sum() > 0 if isinstance(out, pd.Series) else len(out) > 0, plan
+        assert out.sum() > 0 if isinstance(out, pd.Series) else out.num_rows > 0, plan
