@@ -403,11 +403,11 @@ def decode(col) -> tuple[list, np.ndarray]:
 
 
 def _wkb_reader(arr: pa.Array):
-    """``j -> WKB of row j`` over a (large) binary Arrow array, reading
-    its offsets and value buffer in place."""
+    """``j -> WKB of row j`` over a large_binary Arrow array (an
+    :class:`Index`'s geometry column), reading its offsets and value
+    buffer in place."""
     _, offs, data = arr.buffers()
-    dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    offs = np.frombuffer(offs, dt)[arr.offset:arr.offset + len(arr) + 1]
+    offs = np.frombuffer(offs, np.int64)[arr.offset:arr.offset + len(arr) + 1]
     mv = memoryview(data if data is not None else b"")
     return lambda j: mv[offs[j]:offs[j + 1]]
 
@@ -480,7 +480,7 @@ def probe(
         StructField(n, fields[at[c]].dataType, fields[at[c]].nullable)
         for c, n in columns.items()
     ]
-    l2 = {} if rows or l2 is None else l2
+    l2 = l2 or {}
     out_fields += [StructField(n, f.dataType, f.nullable) for n, f in l2.items()]
     put = None  # the payload's output position
     if payload is not None:
@@ -489,11 +489,13 @@ def probe(
         out_fields[put:put + 1] = [payload]
     names = [f.name for f in out_fields]
     src2 = [f.name for f in l2.values()]
+    payload_type = None if payload is None else to_arrow_type(payload.dataType)
     xy = geom if isinstance(geom, tuple) else None
 
     def _run(batches):
         ix, built = bc.value, {}  # one build-geometry cache per task
         wkb2 = None if ix.geom is None else _wkb_reader(ix.rows.column(ix.geom))
+        uid2 = None if self_half_uid is None else ix.rows.column(self_half_uid).to_numpy()
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -510,9 +512,8 @@ def probe(
                 col = rb.column(geom).to_numpy(zero_copy_only=False)
                 B = W.bounds_from_wkb_batch(col.tolist())
             pr, pl = _batch_candidates(B, *ix.grid, ix.cellsz, ix.x0, ix.y0, ix.bb)
-            if self_half_uid is not None and len(pr):
-                uid1 = rb.column(self_half_uid).to_numpy()
-                m = uid1[pr] < ix.rows.column(self_half_uid).to_numpy()[pl]
+            if uid2 is not None and len(pr):
+                m = rb.column(self_half_uid).to_numpy()[pr] < uid2[pl]
                 pr, pl = pr[m], pl[m]
             got = step and step(Batch(rb, g1s, B, pts, pr, pl, ix.bb, col, wkb2, built))
             sel, values = got if isinstance(got, tuple) else (got, None)
@@ -530,5 +531,4 @@ def probe(
                 out[put:put + 1] = [pa.array(values, payload_type)]
             yield pa.RecordBatch.from_arrays(out, names=names)
 
-    payload_type = None if payload is None else to_arrow_type(payload.dataType)
     return stream.mapInArrow(_run, schema=StructType(out_fields))

@@ -524,10 +524,7 @@ def _reverse_collect_candidates(
         .select("_sid", "_b.minx", "_b.miny", "_b.maxx", "_b.maxy")
     )
     t = sub.toArrow()
-    bb = np.column_stack([
-        t.column(c).to_numpy(zero_copy_only=False)
-        for c in ("minx", "miny", "maxx", "maxy")
-    ]).astype(np.float64).reshape(-1, 4)
+    bb = np.column_stack([t.column(c).to_numpy() for c in ("minx", "miny", "maxx", "maxy")])
     valid = np.isfinite(bb[:, 0])
     if valid.any():
         bc = pairing.broadcast(

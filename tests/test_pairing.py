@@ -945,15 +945,12 @@ def test_literal_blades_are_sized_and_every_plan_agrees(wkt_layer, monkeypatch):
 
 
 def test_union_full_attach_collect_is_bounded(layers, monkeypatch):
-    """Past ``MAX_ROWS`` face points the attach collects ``MAX_ROWS + 1``
-    rows at most and hands over to the cell join, which gives the rows
-    of the budget-0 plan."""
-    from pyspark.sql import DataFrame
-
+    """The face-point attach follows the byte budget and the row cap: at
+    budget 0 it collects nothing, and past ``MAX_ROWS`` face points it
+    collects ``MAX_ROWS + 1`` rows at most; either way it hands over to
+    the cell join, which gives the default budget's rows."""
     layer = layers[0].select("fid", "geom_wkb")
-    monkeypatch.setattr(pairing, "BROADCAST_BYTES", 0)
     want = norm(UF.union_full_self(layer))
-    monkeypatch.undo()
 
     attached, collected = [], []
     frame = type(layer)
@@ -965,15 +962,20 @@ def test_union_full_attach_collect_is_bounded(layers, monkeypatch):
 
     def to_arrow(self):
         table = orig_to_arrow(self)
-        collected.append(table.num_rows)
+        if "_ip" in self.columns:
+            collected.append(table.num_rows)
         return table
 
     monkeypatch.setattr(UF, "_attach_hits_fast", attach)
     monkeypatch.setattr(frame, "toArrow", to_arrow)
+    with monkeypatch.context() as m:
+        m.setattr(pairing, "BROADCAST_BYTES", 0)
+        assert norm(UF.union_full_self(layer)) == want
+    assert attached == [None] and collected == []
     monkeypatch.setattr(pairing, "MAX_ROWS", 5)
     got = norm(UF.union_full_self(layer))
-    assert attached == [None]
-    assert collected and max(collected) == pairing.MAX_ROWS + 1
+    assert attached == [None, None]
+    assert collected == [pairing.MAX_ROWS + 1]
     assert got == want and len(want) > pairing.MAX_ROWS
 
 
@@ -1121,30 +1123,3 @@ def test_truncated_point_is_a_value_error(spark):
     blobs = [pt, pt[:-3], W.dumps(W.from_wkt("POINT (100 40)"))]
     df = spark.createDataFrame(list(enumerate(blobs)), "fid long, geom_wkb binary")
     assert estimate_res(df) == estimate_res(df.where("fid != 1")) == loop_estimate_res(blobs)
-
-
-def test_union_full_attach_follows_the_byte_budget(layers, monkeypatch):
-    """At budget 0 the face-point attach collects nothing and hands over
-    to the cell join, which gives the default budget's rows."""
-    layer = layers[0].select("fid", "geom_wkb")
-    want = norm(UF.union_full_self(layer))
-
-    attached, collected = [], []
-    frame = type(layer)
-    orig_attach, orig_to_arrow = UF._attach_hits_fast, frame.toArrow
-
-    def attach(*a, **k):
-        attached.append(orig_attach(*a, **k))
-        return attached[-1]
-
-    def to_arrow(self):
-        collected.append(self.columns)
-        return orig_to_arrow(self)
-
-    monkeypatch.setattr(UF, "_attach_hits_fast", attach)
-    monkeypatch.setattr(frame, "toArrow", to_arrow)
-    monkeypatch.setattr(pairing, "BROADCAST_BYTES", 0)
-    got = norm(UF.union_full_self(layer))
-    assert attached == [None]
-    assert not [c for c in collected if "_ip" in c]
-    assert got == want and want
